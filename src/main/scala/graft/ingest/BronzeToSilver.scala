@@ -44,9 +44,7 @@ object BronzeToSilver {
       totalRows: Long,
       goodRows: Long,
       rejectsByReason: Map[String, Long],
-      silverDates: Seq[String]) {
-    def rejectRows: Long = rejectsByReason.values.sum
-  }
+      silverDates: Seq[String])
 
   /** File-level reject outcome of [[ingestFile]] (B3). Structural = the
     * preflight gate said no (`lambda_validator.py:60-105`); SystemFailure =

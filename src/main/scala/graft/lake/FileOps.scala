@@ -102,10 +102,6 @@ final class FileOps(conf: Configuration) {
         .flatMap(st => dateRe.findFirstMatchIn(st.getPath.getName).map(_.group(1)))
         .sorted
   }
-
-  /** A9 — cheap partition-existence probe. */
-  def partitionExists(tablePath: String, date: String): Boolean =
-    exists(s"$tablePath/date=$date")
 }
 
 object Naming {

@@ -220,7 +220,7 @@ final class SnapshotCatalog extends TableCatalog {
       SnapshotReadTable(GraftSqlBridge.parquetTable(s"${ident.name()}@v$v",
         spark, s.files.map(f => Snapshots.filePath(t, f)), opts,
         schema = Snapshots.uniformLogSchema(s, s.files),
-        sizes = Snapshots.logServedPathSizes(spark, t, s, s.files)), t, v,
+        sizes = Snapshots.logServedPathSizes(t, s, s.files)), t, v,
         logProps = s.properties)
     }
   }

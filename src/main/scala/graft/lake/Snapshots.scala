@@ -98,7 +98,10 @@ object Snapshots {
       // type). Reads surface them as null — or as their registered
       // DEFAULT — until some append materializes them; names are stored
       // CURRENT (rename/drop rewrite the entry, no chain mapping)
-      addedColumns: Seq[(String, String)] = Nil)
+      addedColumns: Seq[(String, String)] = Nil,
+      // per-file byte sizes the manifests recorded, folded at resolution
+      // like rowCounts: what the log-fed scans build their statuses from
+      sizes: Map[String, Long] = Map.empty)
 
   /** Resolve a manifest file reference to a readable path. References
     * are table-relative in the common case; a [[shallowClone]] carries
@@ -195,32 +198,45 @@ object Snapshots {
   // vacuum removes it), so version resolution caches per JVM like
   // manifests. Only present versions are cached — an absent one may be
   // published a moment later. [[vacuum]] drops its table's entries so a
-  // vacuumed version correctly resolves to None afterwards; as with the
-  // manifest cache, a vacuum run by ANOTHER process can leave this JVM
-  // serving trimmed versions until restart — stale metadata, never
-  // wrong data.
+  // vacuumed version correctly resolves to None afterwards; a vacuum
+  // run by ANOTHER process can leave this JVM serving trimmed versions
+  // until restart — stale metadata, never wrong data. This is the one
+  // cache keyed by something that can recur, (table, version): a
+  // re-created table restarts at version 1, hence [[invalidate]] in
+  // [[commitLoop]].
   private val MaxCachedSnapshots = 4096
   private val snapshotCache = scala.collection.concurrent.TrieMap
     .empty[(String, Int), Snapshot]
 
-  private[graft] def invalidateSnapshotCache(table: String): Unit = {
-    snapshotCache.keys.filter(_._1 == table)
-      .foreach(snapshotCache.remove)
-    bloomCache.keys.filter(_._1 == table).foreach(bloomCache.remove)
+  // The immutable metadata objects a resolution reads — manifests,
+  // delete-dir `_rows.json` and sketch sidecars, deserialized per-file
+  // blooms — share ONE bounded cache keyed by the object's resolved
+  // path (a bloom: its data file's path + column). Every such path is
+  // run-unique (`m-<id>.json`, `_snap/c-<runId>/…`), so an entry can
+  // never serve another object's bytes; clearing at the cap only costs
+  // re-reads. Deserialized blooms live here because deserializing per
+  // (file, key) per query copies the whole ~15 KB bit array each time —
+  // at 100k bloom-carrying files ~1.5 GB of driver-side copying PER
+  // POINT LOOKUP (VERDICT r14 note 1); their reads (mightContainLong)
+  // are mutation-free, hence thread-safe to share.
+  private val MaxCachedObjects = 65536
+  private val objectCache = scala.collection.concurrent.TrieMap
+    .empty[String, AnyRef]
+
+  private def cachedObject[T <: AnyRef](path: String)(load: => T): T = {
+    if (objectCache.size > MaxCachedObjects) objectCache.clear()
+    objectCache.getOrElseUpdate(path, load).asInstanceOf[T]
   }
 
-  // Deserialized per-file bloom filters, cached beside the snapshot
-  // cache (VERDICT r14 note 1: deserializing per (file, key) per query
-  // copies the whole ~15 KB bit array each time — at 100k bloom-carrying
-  // files that is ~1.5 GB of driver-side copying PER POINT LOOKUP).
-  // Keyed by (table, file, column): data files are immutable and
-  // run-unique once committed, carried files keep their bytes across
-  // versions, and bloom stats keys follow column renames into NEW cache
-  // entries — so an entry can never serve stale bits. Reads
-  // (mightContainLong) are mutation-free, hence thread-safe to share.
-  private val MaxCachedBlooms = 65536
-  private val bloomCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, String), org.apache.spark.util.sketch.BloomFilter]
+  /** Drop this JVM's cached resolutions of `table` — its versions and
+    * every metadata object under its root. Run when the table is
+    * re-created at a used path (version numbers restart at 1) and by
+    * [[vacuum]] (a trimmed version must resolve to None). */
+  private[graft] def invalidate(table: String): Unit = {
+    snapshotCache.keys.filter(_._1 == table).foreach(snapshotCache.remove)
+    objectCache.keys.filter(_.startsWith(s"$table/"))
+      .foreach(objectCache.remove)
+  }
 
   /** Deserialization counter — lets specs pin "one deserialization per
     * (file, column), however many lookups run". */
@@ -232,14 +248,12 @@ object Snapshots {
     * shared bit array. */
   private[graft] def deserializedBloom(table: String, file: String,
       column: String,
-      bytes: Array[Byte]): org.apache.spark.util.sketch.BloomFilter = {
-    if (bloomCache.size > MaxCachedBlooms) bloomCache.clear()
-    bloomCache.getOrElseUpdate((table, file, column), {
+      bytes: Array[Byte]): org.apache.spark.util.sketch.BloomFilter =
+    cachedObject(s"${filePath(table, file)}#bloom:$column") {
       bloomDeserializations.incrementAndGet()
       org.apache.spark.util.sketch.BloomFilter
         .readFrom(new java.io.ByteArrayInputStream(bytes))
-    })
-  }
+    }
 
   def snapshot(spark: SparkSession, table: String, v: Int): Option[Snapshot] = {
     snapshotCache.get((table, v)) match {
@@ -361,27 +375,16 @@ object Snapshots {
       v: Int): Option[Snapshot] =
     readLite(spark, table, v).map { lite =>
       val resolved = lite.manifests.map(id => readManifest(spark, table, id))
-      val files = resolved.flatMap(_._1)
       // stats/blooms live ONLY in manifests; the log object carries
       // just their per-manifest summaries
-      val rawStats = resolved.map(_._2).foldLeft(Map.empty: FileStats)(_ ++ _)
-      val stats = rawStats.map { case (f, cols) =>
-        f -> cols.map { case (c, v2) =>
-          renamedStatsKey(lite.renames, c) -> v2 }
+      def renamed[A](m: Map[String, Map[String, A]]) = m.map {
+        case (f, cols) =>
+          f -> cols.map { case (c, x) => renamedStatsKey(lite.renames, c) -> x }
       }
-      val blooms = resolved.map(_._3).foldLeft(Map.empty: FileBlooms)(_ ++ _)
-        .map { case (f, cols) =>
-          f -> cols.map { case (c, b) =>
-            renamedStatsKey(lite.renames, c) -> b }
-        }
-      val dirSchemas = resolved.map(_._4)
-        .foldLeft(Map.empty[String, StructType])(_ ++ _)
-      val rowCounts = resolved.map(_._5)
-        .foldLeft(Map.empty[String, Long])(_ ++ _)
-      Snapshot(v, files, lite.deletes, stats, lite.renames, lite.manifests,
-        blooms, lite.commitTs, dirSchemas, lite.drops, rowCounts, lite.op,
-        lite.constraints, lite.partitionSpec, lite.ref, lite.defaults,
-        lite.properties, lite.summaries, lite.addedColumns)
+      partialSnapshot(lite, resolved.flatMap(_.files), resolved).copy(
+        stats = renamed(merged(resolved)(_.stats)),
+        blooms = renamed(merged(resolved)(_.blooms)),
+        rowCounts = merged(resolved)(_.rows))
     }
 
   /** Commit history of the table as a DataFrame — the `DESCRIBE
@@ -577,11 +580,11 @@ object Snapshots {
     val s = snapshot(spark, table, v).getOrElse(
       throw new IllegalArgumentException(s"no version $v of $table"))
     val rows = s.manifests.map { id =>
-      val (files, _, _, _, rowCounts) = readManifest(spark, table, id)
+      val m = readManifest(spark, table, id)
       val n =
-        if (files.forall(rowCounts.contains)) files.map(rowCounts).sum
+        if (m.files.forall(m.rows.contains)) m.files.map(m.rows).sum
         else -1L
-      org.apache.spark.sql.Row(id, files.size, n)
+      org.apache.spark.sql.Row(id, m.files.size, n)
     }
     spark.createDataFrame(
       new java.util.ArrayList(scala.jdk.CollectionConverters
@@ -656,15 +659,13 @@ object Snapshots {
   private def liveStatsFor(spark: SparkSession, table: String,
       s: Snapshot): Option[(Long, Long)] = {
     if (s.files.isEmpty || !s.files.forall(s.rowCounts.contains)) return None
-    val sizes = s.manifests.map(manifestSizes(spark, table, _))
-      .foldLeft(Map.empty[String, Long])(_ ++ _)
-    if (!s.files.forall(sizes.contains)) return None
+    if (!s.files.forall(s.sizes.contains)) return None
     tombstoneRowCount(spark, table, s.deletes).flatMap { dead =>
       val tot = s.files.map(s.rowCounts).sum
       if (tot <= 0L) None
       else {
         val live = math.max(tot - dead, 0L)
-        val bytes = s.files.map(sizes).sum
+        val bytes = s.files.map(s.sizes).sum
         val liveBytes = math.max(
           math.ceil(bytes.toDouble * live / tot).toLong, 1L)
         Some((live, liveBytes))
@@ -711,10 +712,6 @@ object Snapshots {
       ShowStatsSchema)
   }
 
-  private val sketchCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Map[String, Map[String, Seq[Long]]],
-      Map[String, Map[String, Long]])]
-
   /** The (per-column → per-file sketches, per-column → per-file null
     * counts) one staging dir's sidecar records — BOTH halves come from
     * [[collectSketches]]' single fused pass; empty when absent (the dir
@@ -724,12 +721,11 @@ object Snapshots {
   private def sketchDir(spark: SparkSession, table: String,
       dirRel: String): (Map[String, Map[String, Seq[Long]]],
       Map[String, Map[String, Long]]) = {
-    if (sketchCache.size > MaxCachedManifests) sketchCache.clear()
-    sketchCache.getOrElseUpdate((table, dirRel), {
+    val path = s"${filePath(table, dirRel)}/$SketchSidecar"
+    cachedObject(path) {
       val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
       scala.util.Try {
-        val m = Json.parseObject(ops.readString(
-          s"${filePath(table, dirRel)}/$SketchSidecar"))
+        val m = Json.parseObject(ops.readString(path))
         val cols = m.get("cols") match {
           case Some(cm: Map[_, _]) => cm.asInstanceOf[Map[String, Any]]
             .map { case (c, fm) => c -> fm.asInstanceOf[Map[String, Any]]
@@ -745,7 +741,7 @@ object Snapshots {
         }
         (cols, nulls)
       }.getOrElse((Map.empty, Map.empty))
-    })
+    }
   }
 
   private def sketchDirCols(spark: SparkSession, table: String,
@@ -934,21 +930,32 @@ object Snapshots {
   private def manifestPath(table: String, id: String) =
     s"${logDir(table)}/m-$id.json"
 
-  // manifests are immutable once written: cache resolution per JVM.
-  // Bounded — a long-lived session over streaming-style tables would
-  // otherwise accumulate entries forever (dropped tables never evict);
-  // clearing only costs re-reads, immutability keeps it safe.
-  private val MaxCachedManifests = 4096
-  private val manifestCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String),
-      (Seq[String], FileStats, FileBlooms, Map[String, StructType],
-        Map[String, Long])]
+  /** One immutable manifest object: the file list + per-file stats,
+    * blooms, row counts and byte sizes of a single commit's delta, plus
+    * its commit dirs' schemas (the Iceberg manifest shape). Versions
+    * share manifests BY REFERENCE, so a commit writes O(delta) metadata
+    * and the log object stays O(commits-since-rewrite) — never O(table
+    * files). Manifests written before row counts or sizes were
+    * recorded lack them: [[rowCountAt]] and the log-fed scans decline. */
+  private final case class Manifest(files: Seq[String], stats: FileStats,
+      blooms: FileBlooms, dirSchemas: Map[String, StructType],
+      rows: Map[String, Long], sizes: Map[String, Long])
 
-  /** One immutable manifest object: the file list + per-file stats of a
-    * single commit's delta (the Iceberg manifest shape). Versions share
-    * manifests BY REFERENCE, so a commit writes O(delta) metadata and
-    * the log object stays O(commits-since-rewrite) — never O(table
-    * files). */
+  /** Fold one per-file part of several manifests, later entries winning. */
+  private def merged[A](ms: Seq[Manifest])(
+      part: Manifest => Map[String, A]): Map[String, A] =
+    ms.foldLeft(Map.empty[String, A])(_ ++ part(_))
+
+  /** A JSON object of numbers as `key → Long`; empty when absent. */
+  private def longMap(m: Map[String, Any], key: String): Map[String, Long] =
+    m.get(key) match {
+      case Some(lm: Map[_, _]) => lm.asInstanceOf[Map[String, Any]].map {
+        case (k, n: Long) => k -> n
+        case (k, n) => k -> n.toString.toDouble.toLong
+      }
+      case _ => Map.empty
+    }
+
   /** Commits at or under this many files count rows via DRIVER-side
     * footer reads (~1 ms/file — row counts live in the parquet footer's
     * row-group metadata, no data touched); larger commits use a
@@ -987,6 +994,16 @@ object Snapshots {
     }
   }
 
+  /** A file's byte size: the recorded one when `recorded` has it, else
+    * one FS status. */
+  private def fileSize(spark: SparkSession, table: String,
+      recorded: Map[String, Long], f: String): Long =
+    recorded.getOrElse(f, {
+      val p = new org.apache.hadoop.fs.Path(filePath(table, f))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p).getLen
+    })
+
   private def writeManifest(spark: SparkSession, table: String,
       files: Seq[String], stats: FileStats,
       blooms: FileBlooms = Map.empty,
@@ -996,30 +1013,18 @@ object Snapshots {
       // manifest — recounting would re-open O(files) footers for data
       // that never moved
       knownRows: Map[String, Long] = null,
-      // same carry discipline for BYTE sizes (r17): manifest rewrites
-      // already know every carried file's length from the source
-      // manifest — re-statting would add O(files) FS calls to paths
-      // that deliberately do zero per-file work
-      knownSizes: Map[String, Long] = null): String = {
+      // same carry discipline for BYTE sizes: the stager's one
+      // listStatus and the source manifests of carried files already
+      // know the lengths — only files neither recorded (pre-size
+      // manifests) pay an FS status
+      knownSizes: Map[String, Long] = Map.empty): String = {
     val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
     val id = Naming.newRunId()
     // recorded so byte-bounded consumers (streaming maxBytesPerTrigger)
-    // answer from the log instead of per-file FS status at read time.
-    // Staged sizes carry from the one listStatus that discovered the
-    // files ([[listFreshSized]]); only files staged outside this JVM's
-    // current run (addFiles, externally-produced paths) still status.
-    val sizes =
-      if (knownSizes != null && files.forall(knownSizes.contains))
-        files.map(f => f -> knownSizes(f)).toMap
-      else {
-        val conf = spark.sparkContext.hadoopConfiguration
-        files.map { f =>
-          f -> stagedSizeOf(f).getOrElse {
-            val p = new org.apache.hadoop.fs.Path(filePath(table, f))
-            p.getFileSystem(conf).getFileStatus(p).getLen
-          }
-        }.toMap
-      }
+    // and the log-fed scans answer from the log instead of per-file FS
+    // status at read time
+    val sizes = files.map(f => f -> fileSize(spark, table, knownSizes, f))
+      .toMap
     val rows =
       if (knownRows != null && files.forall(knownRows.contains))
         files.map(f => f -> knownRows(f)).toMap
@@ -1061,21 +1066,20 @@ object Snapshots {
       // schema-in-log discipline); absent on pre-upgrade manifests —
       // [[eraGroups]] falls back to a footer probe per unknown dir
       "dirSchemas" -> dirSchemas.map { case (d, sch) => d -> sch.json }))
-    val tmp = s"${manifestPath(table, id)}.tmp"
-    ops.writeString(tmp, json)
-    ops.move(tmp, manifestPath(table, id))
-    manifestCache.putIfAbsent((table, id),
-      (files, stats, blooms, dirSchemas, rows))
+    val path = manifestPath(table, id)
+    ops.writeString(s"$path.tmp", json)
+    ops.move(s"$path.tmp", path)
+    objectCache.putIfAbsent(path,
+      Manifest(files, stats, blooms, dirSchemas, rows, sizes))
     id
   }
 
   private def readManifest(spark: SparkSession, table: String,
-      id: String): (Seq[String], FileStats, FileBlooms,
-      Map[String, StructType], Map[String, Long]) = {
-    if (manifestCache.size > MaxCachedManifests) manifestCache.clear()
-    manifestCache.getOrElseUpdate((table, id), {
+      id: String): Manifest = {
+    val path = manifestPath(table, id)
+    cachedObject(path) {
       val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
-      val m = Json.parseObject(ops.readString(manifestPath(table, id)))
+      val m = Json.parseObject(ops.readString(path))
       val files = m.get("files").map(_.asInstanceOf[Seq[Any]].map(_.toString))
         .getOrElse(Nil)
       val schemas = m.get("dirSchemas") match {
@@ -1084,44 +1088,9 @@ object Snapshots {
             .asInstanceOf[StructType] }
         case _ => Map.empty[String, StructType]
       }
-      // absent on pre-rowcount manifests → rowCountAt conservatively
-      // declines and count(*) falls back to the scan
-      val rows = m.get("rows") match {
-        case Some(rm: Map[_, _]) => rm.asInstanceOf[Map[String, Any]]
-          .map { case (f, n) => f -> (n match {
-            case l: Long => l
-            case d: Double => d.toLong
-            case other => other.toString.toDouble.toLong
-          }) }
-        case _ => Map.empty[String, Long]
-      }
-      (files, parseStats(m), parseBlooms(m), schemas, rows)
-    })
-  }
-
-  private val sizesCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Map[String, Long]]
-
-  /** Per-file byte sizes a manifest recorded (r17, `"sizes"`): what a
-    * byte-bounded consumer (streaming `maxBytesPerTrigger`) plans from
-    * — LOG metadata, never per-file FS status at read time. Empty for
-    * pre-r17 manifests; callers fall back to one FS status per file. */
-  private[graft] def manifestSizes(spark: SparkSession, table: String,
-      id: String): Map[String, Long] = {
-    if (sizesCache.size > MaxCachedManifests) sizesCache.clear()
-    sizesCache.getOrElseUpdate((table, id), {
-      val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
-      Json.parseObject(ops.readString(manifestPath(table, id)))
-        .get("sizes") match {
-        case Some(sm: Map[_, _]) => sm.asInstanceOf[Map[String, Any]]
-          .map { case (f, n) => f -> (n match {
-            case l: Long => l
-            case d: Double => d.toLong
-            case other => other.toString.toDouble.toLong
-          }) }
-        case _ => Map.empty[String, Long]
-      }
-    })
+      Manifest(files, parseStats(m), parseBlooms(m), schemas,
+        longMap(m, "rows"), longMap(m, "sizes"))
+    }
   }
 
   /** Total byte size of the files APPENDED at version `v` (0 for
@@ -1141,16 +1110,8 @@ object Snapshots {
           if (w >= 1) snapshot(spark, table, w).map(_.files.toSet)
             .getOrElse(Set.empty[String])
           else Set.empty[String]
-        val newFiles = s2.files.filterNot(prevFiles)
-        if (newFiles.isEmpty) 0L
-        else {
-          val recorded = snapshotSizes(spark, table, s2)
-          val conf = spark.sparkContext.hadoopConfiguration
-          newFiles.map(f => recorded.getOrElse(f, {
-            val p = new org.apache.hadoop.fs.Path(filePath(table, f))
-            p.getFileSystem(conf).getFileStatus(p).getLen
-          })).sum
-        }
+        s2.files.filterNot(prevFiles)
+          .map(fileSize(spark, table, s2.sizes, _)).sum
       }
     }.getOrElse(0L)
 
@@ -1209,15 +1170,10 @@ object Snapshots {
     None
   }
 
+  /** The parquet files under `dir` as (`rel`-prefixed reference, byte
+    * size): the sizes the one listStatus already returned are what the
+    * commit's manifest records — never a second FS status per file. */
   private def listFresh(spark: SparkSession, dir: String,
-      rel: String): Seq[String] =
-    listFreshSized(spark, dir, rel).map(_._1)
-
-  /** [[listFresh]] KEEPING the byte sizes the one listStatus already
-    * returned: the write path previously discarded them and re-statused
-    * every file again in [[writeManifest]] — O(files) FS round-trips
-    * per commit for facts already in hand. */
-  private def listFreshSized(spark: SparkSession, dir: String,
       rel: String): Seq[(String, Long)] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1227,20 +1183,6 @@ object Snapshots {
         !st.getPath.getName.startsWith("_"))
       .map(st => (s"$rel/${st.getPath.getName}", st.getLen))
       .sortBy(_._1)
-  }
-
-  /** Fresh-file sizes recorded by [[stage]]/[[writeDeletes]] for the
-    * commit's [[writeManifest]], keyed by the run-unique staging dir —
-    * bridges the size facts across the stage→manifest call boundary
-    * without touching every caller's tuple shape. Entries are tiny
-    * (KB); the cap only guards a pathological commit storm. */
-  private val stagedSizes = scala.collection.concurrent.TrieMap
-    .empty[String, Map[String, Long]]
-
-  private def stagedSizeOf(f: String): Option[Long] = {
-    val i = f.lastIndexOf('/')
-    if (i <= 0) None
-    else stagedSizes.get(f.substring(0, i)).flatMap(_.get(f))
   }
 
   /** A log-fed scan over FRESH files this writer itself just produced
@@ -1253,18 +1195,10 @@ object Snapshots {
     * round-trips × passes at 100 TB. */
   private def freshDeltaScan(spark: SparkSession, table: String,
       sized: Seq[(String, Long)],
-      schema: StructType): Option[DataFrame] = {
-    if (!logServedEnabled || sized.isEmpty) return None
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(table).getFileSystem(conf)
-    def qualified(f: String): String =
-      fs.makeQualified(new org.apache.hadoop.fs.Path(filePath(table, f)))
-        .toString
-    Some(org.apache.spark.sql.GraftSqlBridge.logFileRelation(spark,
-      schema,
-      fs.makeQualified(new org.apache.hadoop.fs.Path(table)).toString,
-      sized.map { case (f, len) => qualified(f) -> len }))
-  }
+      schema: StructType): Option[DataFrame] =
+    if (!logServedEnabled || sized.isEmpty) None
+    else Some(org.apache.spark.sql.GraftSqlBridge.logFileRelation(spark,
+      schema, sized.map { case (f, len) => filePath(table, f) -> len }))
 
   // ------------------------------------------------------------ commits
 
@@ -1398,7 +1332,7 @@ object Snapshots {
       // previous incarnation used (tests and scratch tables do this):
       // version numbers restart at 1, so cached resolutions from the
       // old incarnation must not shadow the new log objects
-      if (global.isEmpty) invalidateSnapshotCache(table)
+      if (global.isEmpty) invalidate(table)
       val prev =
         if (toBranch.isEmpty) mainHeadSnapshot(spark, table)
         else Some(branchHeadSnapshot(spark, table, toBranch))
@@ -1411,8 +1345,8 @@ object Snapshots {
       val summaries: Map[String, Map[String, (Double, Double)]] =
         manifests.map { id =>
           id -> prev.flatMap(_.manifestSummaries.get(id)).getOrElse {
-            val (fs, st, _, _, _) = readManifest(spark, table, id)
-            summarizeManifest(st, fs)
+            val m = readManifest(spark, table, id)
+            summarizeManifest(m.stats, m.files)
           }
         }.toMap
       val constraints = newConstraints(prev)
@@ -1464,23 +1398,20 @@ object Snapshots {
         "consecutive publish failures with no observable progress")
   }
 
-  /** Stage `df` once into a run-unique commit dir; returns the relative
-    * file list and (if requested) per-file min/max stats. Staged data is
+  /** Stage `df` once into a run-unique commit dir and write its
+    * manifest from everything the stager computed — files, per-file
+    * stats and blooms, the dir's schema, and the byte sizes of its one
+    * listStatus; returns the manifest id. Staged data and manifest are
     * immutable, so a commit that loses a publish race re-references the
-    * same files — only the log content is recomputed. */
+    * same manifest — only the log content is recomputed. */
   private def stage(spark: SparkSession, table: String, df: DataFrame,
-      statsCols: Seq[String],
-      bloomCols: Seq[String] = Nil): (Seq[String], FileStats, FileBlooms,
-      Map[String, StructType]) = {
+      statsCols: Seq[String], bloomCols: Seq[String] = Nil): String = {
     val rel = s"_snap/c-${Naming.newRunId()}"
     val dataDir = s"$table/$rel"
     unwrapGeneratedRefusal(df.write.mode("overwrite").parquet(dataDir))
-    val sized = listFreshSized(spark, dataDir, rel)
+    val sized = listFresh(spark, dataDir, rel)
     val files = sized.map(_._1)
-    // size facts carry to this commit's writeManifest (no re-status)…
-    if (stagedSizes.size > MaxCachedManifests) stagedSizes.clear()
-    if (sized.nonEmpty) stagedSizes.put(rel, sized.toMap)
-    // …and the metadata passes below share ONE log-fed delta scan: the
+    // the metadata passes below share ONE log-fed delta scan: the
     // schema is what this very write produced, so no listing and no
     // footer probe is owed before reading the delta back
     val delta = freshDeltaScan(spark, table, sized, df.schema)
@@ -1509,9 +1440,11 @@ object Snapshots {
           "k" -> SketchK.toLong, "cols" -> sk, "nulls" -> nulls)))
       }
     }
-    (files, collectStats(spark, table, files, allStats, delta),
+    writeManifest(spark, table, files,
+      collectStats(spark, table, files, allStats, delta),
       collectBlooms(spark, table, files, allBlooms, delta),
-      if (files.isEmpty) Map.empty else Map(rel -> df.schema))
+      if (files.isEmpty) Map.empty else Map(rel -> df.schema),
+      knownSizes = sized.toMap)
   }
 
   /** Per-file KMV sketches over `cols` (string/integral columns), one
@@ -1638,7 +1571,7 @@ object Snapshots {
     * supersets of the truth — unknown never prunes at either. */
   private def shardedKeySelect(spark: SparkSession, table: String,
       lite: LiteSnapshot, column: String,
-      key: Long): (Seq[String], Map[String, StructType]) =
+      key: Long): (Seq[String], Seq[Manifest]) =
     shardedSelect(spark, table, lite)(
       _.get(column).forall { case (mn, mx) =>
         key.toDouble >= mn && key.toDouble <= mx },
@@ -1659,9 +1592,9 @@ object Snapshots {
   def readAtKey(spark: SparkSession, table: String, v: Int,
       column: String, key: Long): Option[DataFrame] =
     readLite(spark, table, v).map { lite =>
-      val (files, schemas) = shardedKeySelect(spark, table, lite, column, key)
+      val (files, touched) = shardedKeySelect(spark, table, lite, column, key)
       if (files.nonEmpty)
-        readDispatch(spark, table, partialSnapshot(lite, files, schemas))
+        readDispatch(spark, table, partialSnapshot(lite, files, touched))
           .filter(col(column) === key)
       // zero kept files — or zero data files in the snapshot (a
       // deleteWhere on a never-committed table publishes such a
@@ -1989,10 +1922,7 @@ object Snapshots {
       df: DataFrame, statsCols: Seq[String], beforePublish: () => Unit,
       bloomCols: Seq[String], newSpec: Option[Seq[String]]): Int = {
     enforceConstraints(spark, table, df, "append")
-    val (staged, stagedStats, stagedBlooms, stagedSchemas) =
-      stage(spark, table, df, statsCols, bloomCols)
-    val mid = writeManifest(spark, table, staged, stagedStats, stagedBlooms,
-      stagedSchemas)
+    val mid = stage(spark, table, df, statsCols, bloomCols)
     val v = commitLoop(spark, table, "append", beforePublish,
       newPartitionSpec = _ => newSpec) { prev =>
       guardRecycledNames(df, prev)
@@ -2258,10 +2188,7 @@ object Snapshots {
     val df = spark.read.parquet(fresh.map(_.getPath.toString): _*)
     val (clustered, stats) = honorSpec(spark, table, df, statsCols)
     enforceConstraints(spark, table, df, "copy-into")
-    val (staged, stagedStats, stagedBlooms, stagedSchemas) =
-      stage(spark, table, clustered, stats, bloomCols)
-    val mid = writeManifest(spark, table, staged, stagedStats, stagedBlooms,
-      stagedSchemas)
+    val mid = stage(spark, table, clustered, stats, bloomCols)
     val v = commitLoop(spark, table, "copy-into", beforePublish,
       extraFields = Map("ingest_sources" -> freshIds)) { prev =>
       guardRecycledNames(df, prev)
@@ -2330,12 +2257,12 @@ object Snapshots {
     }
     val b = bucketValueOf(n, key)
     readLite(spark, table, v).map { lite =>
-      val (files, schemas) = shardedSelect(spark, table, lite)(
+      val (files, touched) = shardedSelect(spark, table, lite)(
         _.get(spec).forall { case (mn, mx) => mx >= b && mn <= b },
         (_, st, _) => st.get(spec)
           .forall { case (mn, mx) => mx >= b && mn <= b })
       if (files.nonEmpty)
-        readDispatch(spark, table, partialSnapshot(lite, files, schemas))
+        readDispatch(spark, table, partialSnapshot(lite, files, touched))
           .filter(col(c) === lit(key))
       else shardedEmptyRead(spark, table, v, _.filter(col(c) === lit(key)))
     }
@@ -2378,10 +2305,7 @@ object Snapshots {
     val df = applyGenerated(spark, table, df0, "overwrite",
       recompute = false)
     enforceConstraints(spark, table, df, "overwrite")
-    val (staged, stagedStats, stagedBlooms, stagedSchemas) =
-      stage(spark, table, df, statsCols, bloomCols)
-    val mid = writeManifest(spark, table, staged, stagedStats, stagedBlooms,
-      stagedSchemas)
+    val mid = stage(spark, table, df, statsCols, bloomCols)
     commitLoop(spark, table, "overwrite",
       newPartitionSpec = _ => newSpec,
       newProperties = prevOpt =>
@@ -2442,21 +2366,6 @@ object Snapshots {
   private[graft] val logServedScans =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** LOG-SERVED SCAN fast path (the Delta/Iceberg snapshot-read shape):
-    * when the manifests already record every requested file's byte size
-    * AND every file's staging dir recorded a schema AND those schemas
-    * are all IDENTICAL, the scan is built directly from log metadata —
-    * no filesystem listing (a `spark.read.parquet(paths)` pays an
-    * InMemoryFileIndex listing per call, a distributed listing JOB past
-    * the parallel-discovery threshold) and no mergeSchema footer pass
-    * (a second job reading every footer). At 100 TB / O(100k files)
-    * those are 100k object-store round-trips per query before the first
-    * data byte; locally they are 2 driver jobs per snapshot read, and
-    * lifecycle queries read snapshots dozens of times. Declines (None)
-    * whenever the log cannot answer COMPLETELY — pre-sizes manifests,
-    * schema-divergent eras (additive evolution reads keep the
-    * mergeSchema semantics they attest), files outside recorded dirs —
-    * so the fallback path and its plans are byte-identical to before. */
   /** The ONE schema every requested file's staging dir recorded, when
     * the log can prove it (all dirs covered, all recorded schemas
     * identical) — what lets a reader skip schema inference entirely. */
@@ -2483,63 +2392,40 @@ object Snapshots {
     !sys.env.get("SPARK_GRAFT_LOG_SERVED_SCAN")
       .exists(v => v == "off" || v == "false" || v == "0")
 
-  /** The MERGED per-file size map of one snapshot version, folded from
-    * its manifests ONCE per (table, version) per JVM: the per-read fold
-    * was O(files) driver CPU and allocation per snapshot read on
-    * many-manifest tables (VERDICT r18 note 6). Log objects and
-    * manifests are immutable, so the merge is too; [[vacuum]]-trimmed
-    * versions simply stop being asked for. */
-  private val mergedSizesCache = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), Map[String, Long]]
+  /** Per-file (RESOLVED path → recorded byte size) for the requested
+    * files when the snapshot proves EVERY one of them (and the fast path
+    * is enabled) — what the DSv2 catalog table
+    * ([[org.apache.spark.sql.GraftSqlBridge.parquetTable]]) feeds beside
+    * its explicit path list so its FileIndex is log-fed like
+    * [[logServedScan]]'s. None on any gap: metadata never guesses. */
+  private[graft] def logServedPathSizes(table: String, s: Snapshot,
+      files: Seq[String]): Option[Map[String, Long]] =
+    if (!logServedEnabled || !files.forall(s.sizes.contains)) None
+    else Some(files.map(f => filePath(table, f) -> s.sizes(f)).toMap)
 
-  private[graft] def snapshotSizes(spark: SparkSession, table: String,
-      s: Snapshot): Map[String, Long] = {
-    if (mergedSizesCache.size > MaxCachedSnapshots) mergedSizesCache.clear()
-    mergedSizesCache.getOrElseUpdate((table, s.version),
-      s.manifests.foldLeft(Map.empty[String, Long])(
-        (m, id) => m ++ manifestSizes(spark, table, id)))
-  }
-
-  /** Per-file (table-relative path → recorded byte size) for the
-    * requested files when the log can prove EVERY one of them (and the
-    * fast path is enabled) — the building block both log-served scan
-    * shapes (V1 [[logServedScan]], the DSv2 catalog table) resolve
-    * their statuses from. None on any gap: metadata never guesses. */
-  private[graft] def logServedSizes(spark: SparkSession, table: String,
-      s: Snapshot, files: Seq[String]): Option[Map[String, Long]] = {
-    if (!logServedEnabled) return None
-    val sizes = snapshotSizes(spark, table, s)
-    if (files.forall(sizes.contains)) Some(sizes) else None
-  }
-
-  /** [[logServedSizes]] re-keyed by RESOLVED path — what the DSv2
-    * catalog table ([[org.apache.spark.sql.GraftSqlBridge.parquetTable]])
-    * feeds beside its explicit path list so its FileIndex is log-fed
-    * too. None whenever the V1 fast path would decline. */
-  private[graft] def logServedPathSizes(spark: SparkSession, table: String,
-      s: Snapshot, files: Seq[String]): Option[Map[String, Long]] =
-    logServedSizes(spark, table, s, files).map(sz =>
-      files.map(f => filePath(table, f) -> sz(f)).toMap)
-
+  /** LOG-SERVED SCAN fast path (the Delta/Iceberg snapshot-read shape):
+    * when the manifests already record every requested file's byte size
+    * AND every file's staging dir recorded a schema AND those schemas
+    * are all IDENTICAL, the scan is built directly from log metadata —
+    * no filesystem listing (a `spark.read.parquet(paths)` pays an
+    * InMemoryFileIndex listing per call, a distributed listing JOB past
+    * the parallel-discovery threshold) and no mergeSchema footer pass
+    * (a second job reading every footer). At 100 TB / O(100k files)
+    * those are 100k object-store round-trips per query before the first
+    * data byte; locally they are 2 driver jobs per snapshot read, and
+    * lifecycle queries read snapshots dozens of times. Declines (None)
+    * whenever the log cannot answer COMPLETELY — pre-sizes manifests,
+    * schema-divergent eras (additive evolution reads keep the
+    * mergeSchema semantics they attest), files outside recorded dirs —
+    * so the fallback path and its plans are byte-identical to before. */
   private def logServedScan(spark: SparkSession, table: String,
-      s: Snapshot, files: Seq[String]): Option[DataFrame] = {
-    val uniform = uniformLogSchema(s, files)
-    if (uniform.isEmpty) return None
-    val sizes = logServedSizes(spark, table, s, files) match {
-      case Some(sz) => sz
-      case None => return None
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(table).getFileSystem(conf)
-    def qualified(f: String): String =
-      fs.makeQualified(new org.apache.hadoop.fs.Path(filePath(table, f)))
-        .toString
-    logServedScans.incrementAndGet()
-    Some(org.apache.spark.sql.GraftSqlBridge.logFileRelation(spark,
-      uniform.get,
-      fs.makeQualified(new org.apache.hadoop.fs.Path(table)).toString,
-      files.map(f => qualified(f) -> sizes(f))))
-  }
+      s: Snapshot, files: Seq[String]): Option[DataFrame] =
+    for {
+      schema <- uniformLogSchema(s, files)
+      if files.forall(s.sizes.contains)
+      scan <- freshDeltaScan(spark, table,
+        files.map(f => f -> s.sizes(f)), schema)
+    } yield { logServedScans.incrementAndGet(); scan }
 
   /** Write a tombstone relation (`file`, `pos` rows) as the positional
     * -delete files of one commit, WITH TASK PARALLELISM: rows are
@@ -2557,7 +2443,7 @@ object Snapshots {
     val dRel = s"_snap/d-${Naming.newRunId()}"
     tomb.repartition(col("file"))
       .write.mode("overwrite").parquet(s"$table/$dRel")
-    val sized = listFreshSized(spark, s"$table/$dRel", dRel)
+    val sized = listFresh(spark, s"$table/$dRel", dRel)
     val refs = sized.map(_._1)
     // Per-file tombstone ROW COUNTS recorded beside the files (the
     // Iceberg delete-manifest `record_count` expressed as a per-commit
@@ -2585,9 +2471,6 @@ object Snapshots {
     * never mistakes it for a delete file. */
   private val DeleteRowsSidecar = "_rows.json"
 
-  private val deleteRowsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Map[String, Long], Map[String, Long])]
-
   /** Per-file tombstone (row counts, byte sizes) a positional-delete
     * directory's sidecar records — empty maps when the sidecar is
     * absent (pre-r18 commits; sizes pre-r19) or unreadable (torn
@@ -2595,25 +2478,14 @@ object Snapshots {
     * immutable once referenced by the log, hence the forever cache. */
   private def deleteDirSidecar(spark: SparkSession, table: String,
       dirRel: String): (Map[String, Long], Map[String, Long]) = {
-    if (deleteRowsCache.size > MaxCachedManifests) deleteRowsCache.clear()
-    deleteRowsCache.getOrElseUpdate((table, dirRel), {
+    val path = s"${filePath(table, dirRel)}/$DeleteRowsSidecar"
+    cachedObject(path) {
       val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
-      def longs(m: Map[String, Any], key: String): Map[String, Long] =
-        m.get(key) match {
-          case Some(rm: Map[_, _]) => rm.asInstanceOf[Map[String, Any]]
-            .map { case (f, n) => f -> (n match {
-              case l: Long => l
-              case d: Double => d.toLong
-              case other => other.toString.toDouble.toLong
-            }) }
-          case _ => Map.empty[String, Long]
-        }
       scala.util.Try {
-        val m = Json.parseObject(ops.readString(
-          s"${filePath(table, dirRel)}/$DeleteRowsSidecar"))
-        (longs(m, "rows"), longs(m, "sizes"))
-      }.getOrElse((Map.empty, Map.empty))
-    })
+        val m = Json.parseObject(ops.readString(path))
+        (longMap(m, "rows"), longMap(m, "sizes"))
+      }.getOrElse((Map.empty[String, Long], Map.empty[String, Long]))
+    }
   }
 
   private def deleteDirRows(spark: SparkSession, table: String,
@@ -2765,7 +2637,7 @@ object Snapshots {
       .get("manifests").map(_.asInstanceOf[Seq[Any]].map(_.toString))
       .getOrElse(Nil)
     val covered = scopeManifests
-      .flatMap(m => readManifest(spark, table, m)._1).distinct
+      .flatMap(readManifest(spark, table, _).files).distinct
     (keys, covered)
   }
 
@@ -3044,12 +2916,6 @@ object Snapshots {
       }
     }
 
-  /** Time-travel read by wall clock (`SELECT … TIMESTAMP AS OF t`). */
-  def readAsOfTimestamp(spark: SparkSession, table: String,
-      tsMillis: Long): Option[DataFrame] =
-    versionAtTimestamp(spark, table, tsMillis)
-      .flatMap(v => readAt(spark, table, v))
-
   def readLatest(spark: SparkSession, table: String): Option[DataFrame] =
     // MAIN head, not global latest: a commit staged on a branch must
     // stay invisible to plain readers until fast-forwarded
@@ -3076,47 +2942,48 @@ object Snapshots {
     * Per-file stats/bloom keys are mapped through the rename chain
     * exactly like full resolution. Returns the kept files (manifest
     * order, so identical to the eager path's order) and the touched
-    * manifests' dir schemas (what [[readDispatch]] needs). At 10M files
-    * in 10k manifests, a selective lookup materializes O(touched)
-    * instead of O(table). */
+    * manifests (whose dir schemas and sizes [[partialSnapshot]] carries
+    * for [[readDispatch]]). At 10M files in 10k manifests, a selective
+    * lookup materializes O(touched) instead of O(table). */
   private def shardedSelect(spark: SparkSession, table: String,
       lite: LiteSnapshot)(
       summaryAdmits: Map[String, (Double, Double)] => Boolean,
       keepFile: (String, Map[String, (Double, Double)],
         Map[String, Array[Byte]]) => Boolean)
-      : (Seq[String], Map[String, StructType]) = {
-    val schemas = Map.newBuilder[String, StructType]
-    val kept = lite.manifests.flatMap { id =>
-      val sum = lite.summaries.getOrElse(id, Map.empty)
-        .map { case (c, iv) => renamedStatsKey(lite.renames, c) -> iv }
-      if (!summaryAdmits(sum)) Nil
-      else {
-        manifestsTouched.incrementAndGet()
-        val (fs, st, bl, sch, _) = readManifest(spark, table, id)
-        schemas ++= sch
-        fs.filter { f =>
-          val fst = st.getOrElse(f, Map.empty).map { case (c, iv) =>
-            renamedStatsKey(lite.renames, c) -> iv }
-          val fbl = bl.getOrElse(f, Map.empty).map { case (c, b) =>
-            renamedStatsKey(lite.renames, c) -> b }
-          keepFile(f, fst, fbl)
-        }
+      : (Seq[String], Seq[Manifest]) = {
+    val touched = lite.manifests.filter { id =>
+      summaryAdmits(lite.summaries.getOrElse(id, Map.empty)
+        .map { case (c, iv) => renamedStatsKey(lite.renames, c) -> iv })
+    }.map { id =>
+      manifestsTouched.incrementAndGet()
+      readManifest(spark, table, id)
+    }
+    val kept = touched.flatMap { m =>
+      m.files.filter { f =>
+        val fst = m.stats.getOrElse(f, Map.empty).map { case (c, iv) =>
+          renamedStatsKey(lite.renames, c) -> iv }
+        val fbl = m.blooms.getOrElse(f, Map.empty).map { case (c, b) =>
+          renamedStatsKey(lite.renames, c) -> b }
+        keepFile(f, fst, fbl)
       }
     }
-    (kept, schemas.result())
+    (kept, touched)
   }
 
-  /** A [[Snapshot]] view carrying only a sharded selection: stats,
-    * blooms and row counts stay EMPTY by design — [[readDispatch]]
-    * (plain scan, tombstone/eq-delete subtraction, era mapping) reads
-    * none of them, so the driver never materializes the untouched
-    * manifests' entries. */
+  /** A [[Snapshot]] view of `files` carrying only what `touched`
+    * manifests record of dir schemas and byte sizes: stats, blooms and
+    * row counts stay EMPTY by design — [[readDispatch]] (plain or
+    * log-fed scan, tombstone/eq-delete subtraction, era mapping) reads
+    * none of them, so a sharded read never materializes the untouched
+    * manifests' entries. Full resolution passes every manifest. */
   private def partialSnapshot(lite: LiteSnapshot, files: Seq[String],
-      schemas: Map[String, StructType]): Snapshot =
+      touched: Seq[Manifest]): Snapshot =
     Snapshot(lite.version, files, lite.deletes, Map.empty, lite.renames,
-      lite.manifests, Map.empty, lite.commitTs, schemas, lite.drops,
-      Map.empty, lite.op, lite.constraints, lite.partitionSpec, lite.ref,
-      lite.defaults, lite.properties, lite.summaries, lite.addedColumns)
+      lite.manifests, Map.empty, lite.commitTs,
+      merged(touched)(_.dirSchemas), lite.drops, Map.empty, lite.op,
+      lite.constraints, lite.partitionSpec, lite.ref, lite.defaults,
+      lite.properties, lite.summaries, lite.addedColumns,
+      merged(touched)(_.sizes))
 
   /** The schemaless corners of a sharded read, resolved eagerly (rare
     * paths): zero kept files still needs the table's SCHEMA for the
@@ -3158,12 +3025,12 @@ object Snapshots {
   def readAtPruned(spark: SparkSession, table: String, v: Int,
       column: String, lo: Double, hi: Double): Option[DataFrame] =
     readLite(spark, table, v).map { lite =>
-      val (files, schemas) = shardedSelect(spark, table, lite)(
+      val (files, touched) = shardedSelect(spark, table, lite)(
         _.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi },
         (_, st, _) => st.get(column)
           .forall { case (mn, mx) => mx >= lo && mn <= hi })
       if (files.nonEmpty)
-        readDispatch(spark, table, partialSnapshot(lite, files, schemas))
+        readDispatch(spark, table, partialSnapshot(lite, files, touched))
           .filter(col(column) >= lo && col(column) <= hi)
       else shardedEmptyRead(spark, table, v,
         _.filter(col(column) >= lo && col(column) <= hi))
@@ -3893,10 +3760,7 @@ object Snapshots {
     val changes = applyGenerated(spark, table, changes0, "merge",
       recompute = false)
     enforceConstraints(spark, table, changes, "merge")
-    val (staged, stagedStats, _, stagedSchemas) =
-      stage(spark, table, changes, statsCols)
-    val mid = writeManifest(spark, table, staged, stagedStats,
-      dirSchemas = stagedSchemas)
+    val mid = stage(spark, table, changes, statsCols)
     commitLoop(spark, table, "merge", toBranch = branch) { prev =>
       val prevFiles = prev.map(_.files).getOrElse(Nil)
       val prevDeletes = prev.map(_.deletes).getOrElse(Nil)
@@ -4129,8 +3993,7 @@ object Snapshots {
       val newManifests = staged.map { df =>
         enforceConstraints(spark, table, df, "merge")
         guardRecycledNames(df, prevOpt)
-        val (files, fStats, _, fSchemas) = stage(spark, table, df, statsCols)
-        writeManifest(spark, table, files, fStats, dirSchemas = fSchemas)
+        stage(spark, table, df, statsCols)
       }.toSeq
       (prev.manifests ++ newManifests, prev.deletes ++ newDeleteFiles,
         prev.renames, prev.drops)
@@ -4215,10 +4078,7 @@ object Snapshots {
         "next replace of ITS window twice")
     enforceConstraints(spark, table, df, "replaceWhere")
     val (clustered, stats) = honorSpec(spark, table, df, statsCols)
-    val (staged, stagedStats, stagedBlooms, stagedSchemas) =
-      stage(spark, table, clustered, stats)
-    val mid = writeManifest(spark, table, staged, stagedStats,
-      stagedBlooms, stagedSchemas)
+    val mid = stage(spark, table, clustered, stats)
     commitLoop(spark, table, "replace-where") { prev =>
       guardRecycledNames(df, prev)
       val prevFiles = prev.map(_.files).getOrElse(Nil)
@@ -4319,9 +4179,7 @@ object Snapshots {
             prev.stats.filter { case (f, _) => !full.contains(f) },
             prev.blooms.filter { case (f, _) => !full.contains(f) },
             prev.dirSchemas.filter { case (d, _) => dirs(d) },
-            knownRows = prev.rowCounts,
-            knownSizes = prev.manifests.foldLeft(Map.empty[String, Long])(
-              _ ++ manifestSizes(spark, table, _))))
+            knownRows = prev.rowCounts, knownSizes = prev.sizes))
         }
       // tombstones already covering dropped files now point at absent
       // paths and match nothing — same carry note as optimizeSmallFiles
@@ -4402,7 +4260,7 @@ object Snapshots {
         .get("manifests").map(_.asInstanceOf[Seq[Any]].map(_.toString))
         .getOrElse(Nil)
       val covered = scopeManifests
-        .flatMap(m => readManifest(spark, table, m)._1).distinct
+        .flatMap(readManifest(spark, table, _).files).distinct
       val covDf = broadcast(covered.toDF("_eq_cov_file"))
       // null-safe key match (Iceberg v2: null equals null in an
       // equality delete) — a name-list join would use === and silently
@@ -4482,10 +4340,7 @@ object Snapshots {
             set.get(c).map(_.as(c)).getOrElse(col(c))): _*),
           "update", recompute = true)
         enforceConstraints(spark, table, updated, "update")
-        val (staged, stagedStats, _, stagedSchemas) =
-          stage(spark, table, updated, statsCols)
-        val mid = writeManifest(spark, table, staged, stagedStats,
-          dirSchemas = stagedSchemas)
+        val mid = stage(spark, table, updated, statsCols)
         (prevManifests :+ mid, prevDeletes ++ dFiles, prevRenames,
           prevDrops)
       }
@@ -4592,7 +4447,8 @@ object Snapshots {
     val manifest = writeManifest(spark, dst, s.files.map(ref),
       s.stats.map { case (f, st) => ref(f) -> st },
       s.blooms.map { case (f, b) => ref(f) -> b },
-      s.dirSchemas.map { case (d, sch) => ref(d) -> sch })
+      s.dirSchemas.map { case (d, sch) => ref(d) -> sch },
+      knownSizes = s.sizes.map { case (f, n) => ref(f) -> n })
     (manifest, cloneDeletes, s.renames,
       s.drops.map { case (n, cl, dirs) => (n, cl, dirs.map(ref)) },
       s.constraints)
@@ -4623,14 +4479,15 @@ object Snapshots {
     val root = LakePaths.tableRootPath(spark, table)
     require(!s"$dir/".startsWith(s"$root/"),
       s"cannot adopt $dir: it is under the table root $root (already table-owned)")
-    val files = listFresh(spark, dir, dir) // dir prefix = absolute refs
+    val sized = listFresh(spark, dir, dir) // dir prefix = absolute refs
+    val files = sized.map(_._1)
     require(files.nonEmpty, s"no parquet files to adopt under $dir")
     val scan = spark.read.parquet(dir)
     enforceConstraints(spark, table, scan, "adopt")
     val mid = writeManifest(spark, table, files,
       collectStats(spark, table, files, statsCols),
       collectBlooms(spark, table, files, bloomCols),
-      Map(dir -> scan.schema))
+      Map(dir -> scan.schema), knownSizes = sized.toMap)
     commitLoop(spark, table, "adopt") { prev =>
       guardRecycledNames(scan, prev)
       (prev.map(_.manifests).getOrElse(Nil) :+ mid,
@@ -4663,12 +4520,9 @@ object Snapshots {
       if (s.partitionSpec.isEmpty) df else clusterBySpec(df, s.partitionSpec, 0)
     def declared(key: String): Seq[String] = s.properties.get(key)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val (staged, stagedStats, stagedBlooms, stagedSchemas) =
-      stage(spark, dst, clustered,
-        (s.partitionSpec ++ declared(StatsColumnsKey)).distinct,
-        declared(BloomColumnsKey))
-    val mid = writeManifest(spark, dst, staged, stagedStats, stagedBlooms,
-      stagedSchemas)
+    val mid = stage(spark, dst, clustered,
+      (s.partitionSpec ++ declared(StatsColumnsKey)).distinct,
+      declared(BloomColumnsKey))
     commitLoop(spark, dst, "deep-clone",
         newConstraints = _ => Some(s.constraints),
         newPartitionSpec = _ => Some(s.partitionSpec),
@@ -4786,12 +4640,12 @@ object Snapshots {
     val prevMans = sPrev.manifests.toSet
     val srcDeltaMids = sV.manifests.filterNot(prevMans)
     val deltaMids = srcDeltaMids.map { mid =>
-      val (files, stats, blooms, dirSchemas, _) =
-        readManifest(spark, branch, mid)
-      writeManifest(spark, dst, files.map(ref),
-        stats.map { case (f, st) => ref(f) -> st },
-        blooms.map { case (f, b) => ref(f) -> b },
-        dirSchemas.map { case (d, sch) => ref(d) -> sch })
+      val m = readManifest(spark, branch, mid)
+      writeManifest(spark, dst, m.files.map(ref),
+        m.stats.map { case (f, st) => ref(f) -> st },
+        m.blooms.map { case (f, b) => ref(f) -> b },
+        m.dirSchemas.map { case (d, sch) => ref(d) -> sch },
+        knownSizes = m.sizes.map { case (f, n) => ref(f) -> n })
     }
     val prevDels = sPrev.deletes.toSet
     val deltaDelSrc = sV.deletes.filterNot(prevDels)
@@ -4862,7 +4716,7 @@ object Snapshots {
     * O(delta) validation passes. */
   private def readManifestScan(spark: SparkSession, table: String,
       mids: Seq[String]): DataFrame = {
-    val files = mids.flatMap(m => readManifest(spark, table, m)._1)
+    val files = mids.flatMap(readManifest(spark, table, _).files)
     spark.read.parquet(files.map(f => filePath(table, f)): _*)
   }
 
@@ -4894,9 +4748,7 @@ object Snapshots {
       val dirs = prev.files.map(_.split("/").dropRight(1).mkString("/")).toSet
       (Seq(writeManifest(spark, table, prev.files, prev.stats, prev.blooms,
         prev.dirSchemas.filter { case (d, _) => dirs(d) },
-        knownRows = prev.rowCounts,
-        knownSizes = prev.manifests.foldLeft(Map.empty[String, Long])(
-          _ ++ manifestSizes(spark, table, _)))),
+        knownRows = prev.rowCounts, knownSizes = prev.sizes)),
         prev.deletes, prev.renames, prev.drops)
     }
 
@@ -4925,7 +4777,6 @@ object Snapshots {
   def optimizeZorder(spark: SparkSession, table: String, cols: Seq[String],
       targetBytes: Long = 128L << 20): Option[Int] = {
     require(cols.nonEmpty, "optimizeZorder needs z-order columns")
-    val conf = spark.sparkContext.hadoopConfiguration
     if (latestSnapshot(spark, table).isEmpty) return None
     Some(commitLoop(spark, table, "optimize") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
@@ -4933,13 +4784,8 @@ object Snapshots {
       if (prev.files.isEmpty)
         (prev.manifests, prev.deletes, prev.renames, prev.drops)
       else {
-        val recorded = snapshotSizes(spark, table, prev)
-        val sized = prev.files.map { f =>
-          f -> recorded.getOrElse(f, {
-            val p = new org.apache.hadoop.fs.Path(filePath(table, f))
-            p.getFileSystem(conf).getFileStatus(p).getLen
-          })
-        }
+        val sized =
+          prev.files.map(f => f -> fileSize(spark, table, prev.sizes, f))
         compactContent(spark, table, prev, sized, Nil, targetBytes,
           (prev.partitionSpec ++ cols).distinct, cols)
       }
@@ -4968,17 +4814,9 @@ object Snapshots {
   def optimizeSmallFiles(spark: SparkSession, table: String,
       minBytes: Long, statsCols: Seq[String] = Nil,
       zorderBy: Seq[String] = Nil): Option[Int] = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val probe = latestSnapshot(spark, table).getOrElse(return None)
-    def sized(s: Snapshot): Seq[(String, Long)] = {
-      val recorded = snapshotSizes(spark, table, s)
-      s.files.map { f =>
-        f -> recorded.getOrElse(f, {
-          val p = new org.apache.hadoop.fs.Path(filePath(table, f))
-          p.getFileSystem(conf).getFileStatus(p).getLen
-        })
-      }
-    }
+    def sized(s: Snapshot): Seq[(String, Long)] =
+      s.files.map(f => f -> fileSize(spark, table, s.sizes, f))
     val probeSized = sized(probe)
     if (probeSized.count(_._2 < minBytes) <= 1) return None
     Some(commitLoop(spark, table, "optimize") { prevOpt =>
@@ -5049,18 +4887,16 @@ object Snapshots {
           withMetaEras(spark, table, prev.copy(files = hot)), prev.deletes,
           prev.renames)
         .drop("_snap_file", "_snap_pos")
-      val (staged, stagedStats, _, stagedSchemas) =
-        stage(spark, table, live.coalesce(math.max(1, hot.size / 2)),
-          statsCols)
-      val fresh = writeManifest(spark, table, staged, stagedStats,
-        dirSchemas = stagedSchemas)
+      val fresh = stage(spark, table,
+        live.coalesce(math.max(1, hot.size / 2)), statsCols)
       val carriedFiles = prev.files.filterNot(hotSet)
       val carriedDirs =
         carriedFiles.map(_.split("/").dropRight(1).mkString("/")).toSet
       val carried = writeManifest(spark, table, carriedFiles,
         prev.stats.filter { case (f, _) => !hotSet(f) },
         prev.blooms.filter { case (f, _) => !hotSet(f) },
-        prev.dirSchemas.filter { case (d, _) => carriedDirs(d) })
+        prev.dirSchemas.filter { case (d, _) => carriedDirs(d) },
+        knownSizes = prev.sizes)
       // tombstones into carried files survive; hot files' are dropped
       // with the files they covered (broadcast anti-join — never isin
       // over an unbounded literal list)
@@ -5147,16 +4983,14 @@ object Snapshots {
     val smallLive =
       if (zorderBy.nonEmpty) ZOrder.clusteredN(live, outFiles, zorderBy)
       else live.coalesce(outFiles)
-    val (staged, stagedStats, _, stagedSchemas) =
-      stage(spark, table, smallLive, statsCols)
-    val compacted = writeManifest(spark, table, staged, stagedStats,
-      dirSchemas = stagedSchemas)
+    val compacted = stage(spark, table, smallLive, statsCols)
     val bigSet = big.map(_._1).toSet
     val bigDirs = big.map(_._1.split("/").dropRight(1).mkString("/")).toSet
     val carried = writeManifest(spark, table, big.map(_._1),
       prev.stats.filter { case (f, _) => bigSet(f) },
       prev.blooms.filter { case (f, _) => bigSet(f) },
-      prev.dirSchemas.filter { case (d, _) => bigDirs(d) })
+      prev.dirSchemas.filter { case (d, _) => bigDirs(d) },
+      knownSizes = prev.sizes)
     // carried big files may still be pre-drop dirs: the ledger stays
     (Seq(carried, compacted), prev.deletes, prev.renames, prev.drops)
   }
@@ -5315,9 +5149,7 @@ object Snapshots {
       .select(keyCols.map(col): _*).distinct()
     val inserts = feed.filter(col("_change_type") === "insert")
       .drop("_change_type")
-    val (staged, _, _, stagedSchemas) = stage(spark, table, inserts, Nil)
-    val mid = writeManifest(spark, table, staged, Map.empty,
-      dirSchemas = stagedSchemas)
+    val mid = stage(spark, table, inserts, Nil)
     commitLoop(spark, table, "cdc-apply") { prev =>
       val prevDeletes = prev.map(_.deletes).getOrElse(Nil)
       val newDeletes: Seq[String] =
@@ -5565,15 +5397,6 @@ object Snapshots {
       name: String): Option[DataFrame] =
     branchHead(spark, table, name).flatMap(v => readAt(spark, table, v))
 
-  /** Read through any named ref — tag first (immutable pins win),
-    * then branch. The SQL `VERSION AS OF '<name>'` resolution. */
-  def readAtRef(spark: SparkSession, table: String,
-      name: String): Option[DataFrame] =
-    tagVersion(spark, table, name) match {
-      case Some(v) => readAt(spark, table, v)
-      case None => readAtBranch(spark, table, name)
-    }
-
   /** Append addressed to a branch: staged like [[append]], committed
     * against the BRANCH head, invisible to main until
     * [[fastForwardMain]] — the write half of write-audit-publish on one
@@ -5582,10 +5405,7 @@ object Snapshots {
       df: DataFrame, statsCols: Seq[String] = Nil): Int = {
     branchHeadSnapshot(spark, table, branch) // fail fast on no such branch
     enforceConstraints(spark, table, df, s"append to branch '$branch'")
-    val (staged, stagedStats, stagedBlooms, stagedSchemas) =
-      stage(spark, table, df, statsCols)
-    val mid = writeManifest(spark, table, staged, stagedStats, stagedBlooms,
-      stagedSchemas)
+    val mid = stage(spark, table, df, statsCols)
     commitLoop(spark, table, "append", toBranch = branch) { prev =>
       guardRecycledNames(df, prev)
       (prev.map(_.manifests).getOrElse(Nil) :+ mid,
@@ -5712,7 +5532,7 @@ object Snapshots {
     // of them — a vacuumed version must resolve to None, not cache hits)
     (1 until keepFrom).filterNot(tagged).foreach(v =>
       ops.delete(logPath(table, v)))
-    invalidateSnapshotCache(table)
+    invalidate(table)
     val keptVersions =
       ((keepFrom to latest) ++ tagged.filter(_ < keepFrom)).distinct.sorted
     val kept = keptVersions.flatMap(v => snapshot(spark, table, v))
@@ -5788,11 +5608,7 @@ object Snapshots {
         .filter(n => n.startsWith("m-") && n.endsWith(".json"))
         .map(_.stripPrefix("m-").stripSuffix(".json"))
         .filterNot(liveManifests)
-        .foreach { id =>
-          ops.delete(manifestPath(table, id))
-          manifestCache.remove((table, id))
-          ()
-        }
+        .foreach(id => ops.delete(manifestPath(table, id)))
     // a checkpoint written before this vacuum references the trimmed
     // versions — refresh it so AS-OF resolution keeps its fast path
     // (resolution survives a stale one regardless, at walk cost)

@@ -48,11 +48,6 @@ object ZOrder {
       ((c.cast("double") - lo) / (hi - lo) * top.toDouble).cast(LongType)))
   }
 
-  /** Min/max-scale a numeric column to a 16-bit rank. Degenerate domains
-    * (lo == hi) map to 0. */
-  def rank16(c: Column, lo: Double, hi: Double): Column =
-    rankBits(c, lo, hi, 16)
-
   /** `df` laid out along the Morton curve of `cols` (any arity ≥ 1):
     * `files` range-partitioned, internally z-sorted partitions. Each
     * column gets `min(16, 62/N)` rank bits so the interleaved key stays

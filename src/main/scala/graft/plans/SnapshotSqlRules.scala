@@ -1073,7 +1073,7 @@ case class SnapshotScanPruning(spark: SparkSession)
           s"${t.inner.name()}#pruned${kept.size}", spark,
           kept.map(fl => Snapshots.filePath(t.path, fl)), opts,
           schema = Some(t.inner.schema()),
-          sizes = Snapshots.logServedPathSizes(spark, t.path, s, kept))
+          sizes = Snapshots.logServedPathSizes(t.path, s, kept))
         Some(r.copy(table =
           SnapshotReadTable(inner, t.path, t.snapVersion, Some(kept))))
       }

@@ -53,13 +53,4 @@ object StreamingIngest {
     }
     tick
   }
-
-  /** Watch until `maxTicks` polls complete (test/demo harness). */
-  def watch(spark: SparkSession, layout: LakeLayout, maxTicks: Int,
-      pollMillis: Long = 1000L): Seq[Tick] =
-    (1 to maxTicks).map { _ =>
-      val t = pollOnce(spark, layout)
-      if (t.ingested.isEmpty && t.rejected.isEmpty) Thread.sleep(pollMillis)
-      t
-    }
 }

@@ -20,10 +20,6 @@ object Sampling {
   def hashBucket(key: Column): Column =
     pmod(wordHash(key.cast("string")), lit(Denominator))
 
-  /** Keep ~`bp`/10000 of rows, decided per key — deterministic. */
-  def hashSample(df: DataFrame, keyCol: String, bp: Int): DataFrame =
-    df.filter(hashBucket(col(keyCol)) < bp)
-
   /** Per-stratum deterministic sampling: `bpByStratum` maps stratum values
     * to basis-point rates; unlisted strata use `defaultBp`. */
   def stratifiedHashSample(df: DataFrame, keyCol: String, stratumCol: String,

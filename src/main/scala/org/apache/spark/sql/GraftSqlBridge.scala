@@ -37,35 +37,17 @@ object GraftSqlBridge {
     * Planning, pushdown, column pruning, `_metadata` columns and
     * vectorized reads all go through the stock ParquetFileFormat /
     * FileSourceStrategy machinery — the physical plan is the same
-    * `FileScan parquet` as a path-based read, just with a log-fed
-    * location. */
+    * `FileScan parquet` as a path-based read, just with a
+    * [[LogFedFileIndex]] location (the DSv2 table's index). */
   def logFileRelation(spark: SparkSession, schema: types.StructType,
-      tableRoot: String, files: Seq[(String, Long)]): DataFrame = {
+      files: Seq[(String, Long)]): DataFrame = {
     import org.apache.spark.sql.execution.datasources._
     val session = spark.asInstanceOf[classic.SparkSession]
-    val statuses = files.map { case (p, len) =>
-      new org.apache.hadoop.fs.FileStatus(len, false, 1, 134217728L, 0L,
-        new org.apache.hadoop.fs.Path(p))
-    }.toArray
-    val root = new org.apache.hadoop.fs.Path(tableRoot)
-    val index = new FileIndex {
-      override def rootPaths: Seq[org.apache.hadoop.fs.Path] = Seq(root)
-      override def listFiles(
-          partitionFilters: Seq[Expression],
-          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-        Seq(PartitionDirectory(
-          org.apache.spark.sql.catalyst.InternalRow.empty, statuses))
-      override def inputFiles: Array[String] =
-        statuses.map(_.getPath.toString)
-      override def refresh(): Unit = ()
-      override val sizeInBytes: Long = statuses.map(_.getLen).sum
-      override def partitionSchema: types.StructType = new types.StructType()
-    }
     // asNullable: a parquet-inferred schema is all-nullable; serving the
     // writer's schema verbatim could mark fields non-null and change
     // downstream null-handling plans vs the path-based read
-    val relation = HadoopFsRelation(index, new types.StructType(),
-      schema.asNullable, None,
+    val relation = HadoopFsRelation(new LogFedFileIndex(session, files),
+      new types.StructType(), schema.asNullable, None,
       new execution.datasources.parquet.ParquetFileFormat,
       Map.empty[String, String])(session)
     classic.Dataset.ofRows(session,
@@ -81,11 +63,12 @@ object GraftSqlBridge {
     *
     * When the log also proves every file's BYTE SIZE (`sizes` covers all
     * paths) the table's FileIndex is served from log metadata — the V2
-    * twin of [[logFileRelation]]: the stock FileTable otherwise pays one
-    * driver-side FS status per path at `fileIndex` construction
-    * (DataSource.checkAndGlobPathIfNecessary + InMemoryFileIndex), which
-    * at 100 TB / O(100k files) is 100k object-store round-trips before
-    * the first data byte of every catalog SQL scan. */
+    * twin of [[logFileRelation]], on the same [[LogFedFileIndex]]: the
+    * stock FileTable otherwise pays one driver-side FS status per path
+    * at `fileIndex` construction (DataSource.checkAndGlobPathIfNecessary
+    * + InMemoryFileIndex), which at 100 TB / O(100k files) is 100k
+    * object-store round-trips before the first data byte of every
+    * catalog SQL scan. */
   def parquetTable(name: String, spark: SparkSession, paths: Seq[String],
       options: java.util.Map[String, String],
       // log-recorded schema when the manifest can prove one (uniform
@@ -102,8 +85,8 @@ object GraftSqlBridge {
       sch <- schema
       sz <- sizes
       if paths.forall(sz.contains)
-    } yield new LogFedParquetTable(name, session, opts, paths,
-      sch.asNullable, fmt, paths.map(p => p -> sz(p)).toMap)
+    } yield new LogFedParquetTable(name, session, opts, sch.asNullable,
+      fmt, paths.map(p => p -> sz(p)))
     served.getOrElse(execution.datasources.v2.parquet.ParquetTable(
       name, session, opts, paths, schema.map(_.asNullable), fmt))
   }
@@ -112,43 +95,42 @@ object GraftSqlBridge {
     * is built ENTIRELY from log metadata (path → recorded byte size):
     * zero FS statuses, zero listings at planning time. Everything else
     * — scan builder, pushdown, vectorized read, write refusal — is the
-    * stock ParquetTable behaviour. Mirrors [[logFileRelation]]'s
-    * contract: statuses carry blockSize 128 MB / modTime 0, split
-    * planning and CBO sizeInBytes read the recorded lengths. */
+    * stock ParquetTable behaviour. */
   private final class LogFedParquetTable(
       name: String, session: classic.SparkSession,
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap,
-      paths: Seq[String], schema: types.StructType,
+      schema: types.StructType,
       fmt: Class[execution.datasources.parquet.ParquetFileFormat],
-      sizesByPath: Map[String, Long])
+      sized: Seq[(String, Long)])
     extends execution.datasources.v2.parquet.ParquetTable(
-      name, session, options, paths, Some(schema), fmt) {
+      name, session, options, sized.map(_._1), Some(schema), fmt) {
     override lazy val fileIndex
-        : execution.datasources.PartitioningAwareFileIndex = {
-      val conf = session.sessionState.newHadoopConf()
-      // qualify against the first path's FS once (all snapshot files
-      // live under one table root / one filesystem)
-      val fs = new org.apache.hadoop.fs.Path(paths.head)
-        .getFileSystem(conf)
-      val statuses = paths.map { p =>
-        new org.apache.hadoop.fs.FileStatus(sizesByPath(p), false, 1,
-          134217728L, 0L,
-          fs.makeQualified(new org.apache.hadoop.fs.Path(p)))
-      }.toArray
-      new LogFedFileIndex(session, statuses)
-    }
+        : execution.datasources.PartitioningAwareFileIndex =
+      new LogFedFileIndex(session, sized)
   }
 
   /** A [[execution.datasources.PartitioningAwareFileIndex]] serving a
-    * fixed, log-recorded file list: no partition inference (snapshot
-    * data files are flat under run-unique staging dirs), no listing, no
-    * refresh (the list IS the version — immutable). */
+    * fixed, log-recorded (path, byte size) file list: no partition
+    * inference (snapshot data files are flat under run-unique staging
+    * dirs), no listing, no refresh (the list IS the version —
+    * immutable). Statuses carry blockSize 128 MB / modTime 0; split
+    * planning and CBO sizeInBytes read the recorded lengths. */
   private final class LogFedFileIndex(session: classic.SparkSession,
-      statuses: Array[org.apache.hadoop.fs.FileStatus])
+      sized: Seq[(String, Long)])
     extends execution.datasources.PartitioningAwareFileIndex(
       session, Map.empty, None,
       execution.datasources.NoopCache) {
     import org.apache.hadoop.fs.{FileStatus, Path}
+    // qualified against the first path's FS once (all snapshot files
+    // live under one table root / one filesystem)
+    private val statuses: Array[FileStatus] = {
+      val fs = new Path(sized.head._1)
+        .getFileSystem(session.sparkContext.hadoopConfiguration)
+      sized.map { case (p, len) =>
+        new FileStatus(len, false, 1, 134217728L, 0L,
+          fs.makeQualified(new Path(p)))
+      }.toArray
+    }
     override def partitionSpec(): execution.datasources.PartitionSpec =
       execution.datasources.PartitionSpec.emptySpec
     override def leafFiles: scala.collection.mutable.LinkedHashMap[

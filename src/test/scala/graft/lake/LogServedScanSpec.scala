@@ -20,6 +20,20 @@ class LogServedScanSpec extends SparkTestBase {
     d
   }
 
+  /** Simple class name of the file index under `df`'s one scan leaf —
+    * V1 FileSourceScan or DSv2 FileScan alike. */
+  private def scanIndex(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.sparkPlan.collectLeaves().collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.isInstanceOf[
+            org.apache.spark.sql.execution.datasources.v2.FileScan] =>
+        b.scan.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.v2.FileScan].fileIndex
+    }.map(_.getClass.getSimpleName).getOrElse(
+      fail(s"no file scan leaf in ${df.queryExecution.sparkPlan}"))
+
   test("log-served scan engages on a uniform table and matches the data") {
     val t = freshDir("logscan") + "/t"
     val df = (1L to 500L).map(i => (i, s"name$i", i % 7))
@@ -30,15 +44,21 @@ class LogServedScanSpec extends SparkTestBase {
     val served = Snapshots.readLatest(spark, t).get
     assert(Snapshots.logServedScans.get() == before + 1,
       "uniform-schema read must take the log-served fast path")
-    // plan leaf must be a FileSourceScan (full pushdown machinery), and
-    // its location must NOT be an InMemoryFileIndex (no listing ran)
+    // plan leaf must be a FileSourceScan (full pushdown machinery) over
+    // the log-fed index — the one the DSv2 catalog table serves too
     val leaves = served.queryExecution.executedPlan.collectLeaves()
-    val scan = leaves.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
-    assert(scan.nonEmpty, s"expected FileSourceScanExec leaf, got $leaves")
-    assert(!scan.get.relation.location
-      .isInstanceOf[org.apache.spark.sql.execution.datasources.InMemoryFileIndex],
-      "log-served scan must not build an InMemoryFileIndex")
+    assert(leaves.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]),
+      s"expected FileSourceScanExec leaf, got $leaves")
+    assert(scanIndex(served) == "LogFedFileIndex")
+    val root = t.stripSuffix("/t")
+    val cat = s"lss_${Integer.toHexString(root.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val sql = spark.sql(s"SELECT * FROM $cat.t")
+    assert(scanIndex(sql) == "LogFedFileIndex")
+    assert(sql.count() == 500L)
     // identical rows to the raw path-based read of the same files
     val files = Snapshots.snapshot(spark, t,
       Snapshots.latestVersion(spark, t).get).get.files
@@ -53,6 +73,20 @@ class LogServedScanSpec extends SparkTestBase {
     assert(fscan.metadata("PushedFilters").contains("IsNotNull(id)"),
       s"pushed filters lost: ${fscan.metadata("PushedFilters")}")
     assert(filtered.count() == 1L)
+  }
+
+  test("a table dropped and re-created in one JVM reads log-served") {
+    val t = freshDir("logscan_recreate") + "/t"
+    Snapshots.append(spark, t, (1L to 50L).toDF("id"))
+    assert(Snapshots.readLatest(spark, t).get.count() == 50L)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t))
+    // the new incarnation restarts at version 1 over different files
+    Snapshots.append(spark, t, (100L to 120L).toDF("id"))
+    val before = Snapshots.logServedScans.get()
+    val served = Snapshots.readLatest(spark, t).get
+    assert(Snapshots.logServedScans.get() == before + 1,
+      "the re-created table's read must take the log-served fast path")
+    assert(served.as[Long].collect().sorted.toSeq == (100L to 120L))
   }
 
   test("schema-divergent eras decline the fast path and keep merging") {

@@ -61,6 +61,19 @@ class ManifestShardingSpec extends SparkTestBase {
       Snapshots.prunedFilesForKey(spark, t, v, "o_orderkey", k).get)
     assert(n2 == 1, s"point lookup touched $n2 manifests, expected 1")
     assert(kf.nonEmpty)
+    // the read opens ONLY that manifest, scan construction included:
+    // with the seven excluded manifest objects moved away and this
+    // JVM's cached metadata dropped, the lookup must still resolve
+    val lite = Snapshots.readLite(spark, t, v).get
+    val excluded = lite.manifests.filterNot(id =>
+      lite.summaries(id).get("o_orderkey")
+        .exists { case (mn, mx) => k >= mn && k <= mx })
+    assert(excluded.size == 7)
+    val away = new File(s"$root/away")
+    excluded.foreach(id =>
+      org.apache.commons.io.FileUtils.moveFileToDirectory(
+        new File(s"$t/_log/m-$id.json"), away, true))
+    Snapshots.invalidate(t)
     // the sharded read is exact
     val (rows, n3) = touched(
       Snapshots.readAtKey(spark, t, v, "o_orderkey", k).get.count())
