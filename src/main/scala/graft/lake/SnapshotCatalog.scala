@@ -172,9 +172,8 @@ final class SnapshotCatalog extends TableCatalog {
 
   /** Do the version's era schemas (from the log) disagree on a column's
     * TYPE? mergeSchema refuses int→long / float→double, so such versions
-    * need the era-aware read. Unknown dirs (pre-upgrade manifests without
-    * recorded schemas) conservatively count as non-widened — they fail at
-    * scan time with parquet's own merge refusal, exactly as before. */
+    * need the era-aware read. Every commit dir's schema is recorded in
+    * its manifest, so the answer never needs a footer probe. */
   private def erasWiden(s: Snapshots.Snapshot): Boolean = {
     val seen = scala.collection.mutable.HashMap
       .empty[String, org.apache.spark.sql.types.DataType]

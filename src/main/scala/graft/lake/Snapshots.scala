@@ -64,44 +64,49 @@ object Snapshots {
     * renames. O(commits) metadata per drop, like the rename chain. */
   type DropSpec = (String, Int, Seq[String])
 
-  /** One published version: data file list, positional-delete file list,
-    * and per-file stats (all file references relative to the table
-    * root). Delete files are the Iceberg-positional-delete half of
-    * merge-on-read [[merge]]: rows of (file: TABLE-RELATIVE data-file
-    * path, pos: row index) that [[readAt]] subtracts with a broadcast
-    * anti join — relative so the table survives relocation
-    * ([[LakePaths]]). */
-  final case class Snapshot(version: Int, files: Seq[String],
-      deletes: Seq[String] = Nil, stats: FileStats = Map.empty,
-      renames: Seq[(String, String)] = Nil,
-      manifests: Seq[String] = Nil,
-      blooms: FileBlooms = Map.empty,
-      commitTs: Long = 0L,
-      dirSchemas: Map[String, StructType] = Map.empty,
-      drops: Seq[DropSpec] = Nil,
-      rowCounts: Map[String, Long] = Map.empty,
-      op: String = "",
-      constraints: Seq[(String, String)] = Nil,
-      partitionSpec: Seq[String] = Nil,
-      ref: String = "",
-      defaults: Seq[(String, String)] = Nil,
-      properties: Map[String, String] = Map.empty,
-      // manifest-LIST summaries (the Iceberg manifest-list partition
-      // summaries): per manifest, the fold of its per-file stats over
-      // the columns EVERY file in it records — what lets a pruned
-      // lookup skip whole manifests from the log object alone
-      // ([[prunedFilesAt]]); KB per manifest, carried by reference
-      manifestSummaries: Map[String, Map[String, (Double, Double)]] =
-        Map.empty,
-      // DECLARED columns no data file carries yet (`ALTER TABLE … ADD
-      // COLUMN`, the Delta/Iceberg metadata-only add): (name, Spark DDL
-      // type). Reads surface them as null — or as their registered
-      // DEFAULT — until some append materializes them; names are stored
-      // CURRENT (rename/drop rewrite the entry, no chain mapping)
-      addedColumns: Seq[(String, String)] = Nil,
+  /** One published version: its log-object record (`entry`) plus what
+    * its manifests resolve to — the data file list and per-file stats,
+    * blooms, era schemas, row counts and byte sizes (all file
+    * references relative to the table root). Delete files are the
+    * Iceberg-positional-delete half of merge-on-read [[merge]]: rows of
+    * (file: TABLE-RELATIVE data-file path, pos: row index) that
+    * [[readAt]] subtracts with a broadcast anti join — relative so the
+    * table survives relocation ([[LakePaths]]). */
+  final case class Snapshot(entry: LiteSnapshot, files: Seq[String],
+      stats: FileStats, blooms: FileBlooms,
+      dirSchemas: Map[String, StructType],
+      rowCounts: Map[String, Long],
       // per-file byte sizes the manifests recorded, folded at resolution
       // like rowCounts: what the log-fed scans build their statuses from
-      sizes: Map[String, Long] = Map.empty)
+      sizes: Map[String, Long]) {
+    def version: Int = entry.version
+    def manifests: Seq[String] = entry.manifests
+    def deletes: Seq[String] = entry.deletes
+    def renames: Seq[(String, String)] = entry.renames
+    def drops: Seq[DropSpec] = entry.drops
+    def commitTs: Long = entry.commitTs
+    def op: String = entry.op
+    def ref: String = entry.ref
+    def constraints: Seq[(String, String)] = entry.constraints
+    def partitionSpec: Seq[String] = entry.partitionSpec
+    def defaults: Seq[(String, String)] = entry.defaults
+    def properties: Map[String, String] = entry.properties
+    def addedColumns: Seq[(String, String)] = entry.addedColumns
+
+    /** The record a commit built on this version starts from: every
+      * field carries except the COPY INTO ledger, which speaks for the
+      * version that loaded the files ([[commitLoop]] stamps version,
+      * ts, op and ref itself). */
+    def carry: LiteSnapshot = entry.copy(ingestSources = Nil)
+  }
+
+  /** [[Snapshot.carry]] of a head that may not exist yet: a
+    * never-committed table's content starts from the empty record. */
+  private def carried(prev: Option[Snapshot]): LiteSnapshot =
+    prev.fold(LiteSnapshot.empty)(_.carry)
+
+  /** A table-relative (or absolute) file reference's commit dir. */
+  private def dirOf(f: String): String = f.substring(0, f.lastIndexOf('/'))
 
   /** Resolve a manifest file reference to a readable path. References
     * are table-relative in the common case; a [[shallowClone]] carries
@@ -138,7 +143,7 @@ object Snapshots {
         var v = h
         while (ops.exists(logPath(table, v + 1))) v += 1
         Some(v)
-      case None => // no/invalid hint (pre-hint table, corrupt write): list
+      case None => // no/invalid hint (lost or corrupt write): list
         val p = new org.apache.hadoop.fs.Path(logDir(table))
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         if (!fs.exists(p)) None
@@ -266,109 +271,120 @@ object Snapshots {
     loaded
   }
 
-  /** Log-object-only snapshot view — everything the version object
-    * itself records, with NO manifest resolution: O(KB) however many
-    * files the table holds (VERDICT r14 task 6, the sharded-resolution
-    * half). The manifest-sharded pruning paths ([[prunedFilesAt]],
-    * [[prunedFilesForKey]], [[readAtPruned]], [[readAtKey]]) start
-    * here and resolve only the manifests their predicate touches. */
+  /** The version object `_log/v<N>.json` as ONE record — everything a
+    * commit publishes beside its manifests, with NO manifest resolution:
+    * O(KB) however many files the table holds. Written and read only
+    * through [[LiteSnapshot.render]] / [[LiteSnapshot.parse]]. The
+    * manifest-sharded pruning paths ([[prunedFilesAt]],
+    * [[prunedFilesForKey]], [[readAtPruned]], [[readAtKey]]) start here
+    * and resolve only the manifests their predicate touches. */
   private[graft] final case class LiteSnapshot(version: Int,
       manifests: Seq[String],
+      // manifest-LIST summaries (the Iceberg manifest-list partition
+      // summaries): per manifest, the fold of its per-file stats over
+      // the columns EVERY file in it records, keys as WRITTEN (consumers
+      // map them through the rename chain) — what lets a pruned lookup
+      // skip whole manifests from the log object alone
       summaries: Map[String, Map[String, (Double, Double)]],
       deletes: Seq[String], renames: Seq[(String, String)],
       drops: Seq[DropSpec], commitTs: Long, op: String,
       constraints: Seq[(String, String)], partitionSpec: Seq[String],
       ref: String, defaults: Seq[(String, String)],
       properties: Map[String, String],
-      addedColumns: Seq[(String, String)])
+      // DECLARED columns no data file carries yet (`ALTER TABLE … ADD
+      // COLUMN`, the Delta/Iceberg metadata-only add): (name, Spark DDL
+      // type). Reads surface them as null — or as their registered
+      // DEFAULT — until some append materializes them; names are stored
+      // CURRENT (rename/drop rewrite the entry, no chain mapping)
+      addedColumns: Seq[(String, String)],
+      // the COPY INTO source identities THIS version loaded
+      // ([[copyInto]]), published atomically with its data
+      ingestSources: Seq[String])
+
+  private[graft] object LiteSnapshot {
+
+    /** The log-object format this build writes and reads. Every
+      * manifest a stamped version references records sizes, row counts
+      * and dir schemas for all of its files, so readers rely on them
+      * without fallbacks; any other stamp fails loudly. */
+    val Format = 1L
+
+    /** The content a never-committed table's first commit starts from. */
+    val empty = LiteSnapshot(0, Nil, Map.empty, Nil, Nil, Nil, 0L, "", Nil,
+      Nil, "", Nil, Map.empty, Nil, Nil)
+
+    private def pairs(ps: Seq[(String, String)]) = ps.map(p => Seq(p._1, p._2))
+
+    def render(e: LiteSnapshot): String = Json.render(Map(
+      "format" -> Format,
+      "version" -> e.version.toLong,
+      "ts" -> e.commitTs,
+      "op" -> e.op,
+      "ref" -> e.ref,
+      "manifests" -> e.manifests,
+      "deletes" -> e.deletes,
+      "renames" -> pairs(e.renames),
+      "drops" -> e.drops.map(d => Seq(d._1, d._2.toLong, d._3)),
+      "constraints" -> pairs(e.constraints),
+      "partition_spec" -> e.partitionSpec,
+      "defaults" -> pairs(e.defaults),
+      "addcols" -> pairs(e.addedColumns),
+      "properties" -> pairs(e.properties.toSeq.sortBy(_._1)),
+      "msum" -> e.summaries.map { case (id, cols) =>
+        id -> cols.toSeq.sortBy(_._1)
+          .map { case (c, (mn, mx)) => Seq[Any](c, mn, mx) }
+      }) ++ (if (e.ingestSources.isEmpty) Map.empty
+        else Map("ingest_sources" -> e.ingestSources)))
+
+    /** Decode the log object at `path`. An unstamped object or another
+      * format fails loudly: every commit path carries the previous
+      * record forward, so silently misreading a foreign shape would drop
+      * data on the next commit. */
+    def parse(path: String, json: String): LiteSnapshot = {
+      val m = Json.parseObject(json)
+      m.get("format") match {
+        case Some(Format) =>
+        case None => throw new IllegalStateException(
+          s"$path is an unstamped (pre-manifest or older) log object; " +
+            s"this build reads log format $Format only — re-create the " +
+            "table (read it with the build that wrote it, overwrite into " +
+            "a fresh path)")
+        case Some(other) => throw new IllegalStateException(
+          s"$path has log format $other; this build reads format " +
+            s"$Format only — re-create the table")
+      }
+      def field(k: String): Any = m.getOrElse(k,
+        throw new IllegalStateException(s"$path lacks the '$k' field"))
+      def seq(a: Any): Seq[Any] = a.asInstanceOf[Seq[Any]]
+      def strings(k: String): Seq[String] = seq(field(k)).map(_.toString)
+      def pairList(k: String): Seq[(String, String)] =
+        seq(field(k)).map { p => (seq(p)(0).toString, seq(p)(1).toString) }
+      LiteSnapshot(field("version").toString.toInt, strings("manifests"),
+        field("msum").asInstanceOf[Map[String, Any]].map { case (id, cols) =>
+          id -> seq(cols).map { c =>
+            val t = seq(c)
+            t(0).toString -> (t(1).toString.toDouble, t(2).toString.toDouble)
+          }.toMap
+        },
+        strings("deletes"), pairList("renames"),
+        seq(field("drops")).map { d =>
+          val t = seq(d)
+          (t(0).toString, t(1).toString.toInt, seq(t(2)).map(_.toString))
+        },
+        field("ts").toString.toLong, field("op").toString,
+        pairList("constraints"), strings("partition_spec"),
+        field("ref").toString, pairList("defaults"),
+        pairList("properties").toMap, pairList("addcols"),
+        m.get("ingest_sources").fold(Seq.empty[String])(seq(_).map(_.toString)))
+    }
+  }
 
   private[graft] def readLite(spark: SparkSession, table: String,
       v: Int): Option[LiteSnapshot] = {
     val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
     val path = logPath(table, v)
-    if (!ops.exists(path)) return None
-    val m = Json.parseObject(ops.readString(path))
-    def strings(k: String): Seq[String] =
-      m.get(k).map(_.asInstanceOf[Seq[Any]].map(_.toString)).getOrElse(Nil)
-    val renames: Seq[(String, String)] = m.get("renames") match {
-      case Some(rs: Seq[_]) => rs.map { r =>
-        val pair = r.asInstanceOf[Seq[Any]]
-        (pair(0).toString, pair(1).toString)
-      }
-      case _ => Nil
-    }
-    val drops: Seq[DropSpec] = m.get("drops") match {
-      case Some(ds: Seq[_]) => ds.map { d =>
-        val t = d.asInstanceOf[Seq[Any]]
-        (t.head.toString, t(1).toString.toDouble.toInt,
-          t(2).asInstanceOf[Seq[Any]].map(_.toString))
-      }
-      case _ => Nil
-    }
-    // Pre-manifest-format logs inlined the file list under a top-level
-    // "files" key. Every commit path carries forward only prev.manifests,
-    // so SILENTLY accepting that shape here would drop all of a legacy
-    // table's data files on its first new-format commit — fail loudly
-    // instead (the one-time migration is: read old, overwrite() new).
-    val legacy = strings("files")
-    if (legacy.nonEmpty) throw new IllegalStateException(
-      s"$path uses the pre-manifest log format (inline 'files' list); " +
-        "rewrite the table (read + overwrite) before committing to it")
-    val commitTs = m.get("ts") match {
-      case Some(l: Long) => l
-      case Some(d: Double) => d.toLong
-      case _ => 0L // pre-timestamp log objects: excluded from AS OF
-    }
-    val constraints: Seq[(String, String)] = m.get("constraints") match {
-      case Some(cs: Seq[_]) => cs.map { c =>
-        val pair = c.asInstanceOf[Seq[Any]]
-        (pair(0).toString, pair(1).toString)
-      }
-      case _ => Nil
-    }
-    val defaults: Seq[(String, String)] = m.get("defaults") match {
-      case Some(ds: Seq[_]) => ds.map { d =>
-        val pair = d.asInstanceOf[Seq[Any]]
-        (pair(0).toString, pair(1).toString)
-      }
-      case _ => Nil
-    }
-    val properties: Map[String, String] = m.get("properties") match {
-      case Some(ps: Seq[_]) => ps.map { p =>
-        val pair = p.asInstanceOf[Seq[Any]]
-        (pair(0).toString, pair(1).toString)
-      }.toMap
-      case _ => Map.empty
-    }
-    // manifest-list summaries: id → column → [min, max] (keys as
-    // WRITTEN; consumers map them through the rename chain). Absent on
-    // pre-summary log objects — the sharded paths then touch every
-    // manifest, exactly the pre-upgrade behavior.
-    val summaries: Map[String, Map[String, (Double, Double)]] =
-      m.get("msum") match {
-        case Some(sm: Map[_, _]) => sm.asInstanceOf[Map[String, Any]]
-          .map { case (id, cols) =>
-            id -> cols.asInstanceOf[Seq[Any]].map { entry =>
-              val t = entry.asInstanceOf[Seq[Any]]
-              t.head.toString -> (t(1).toString.toDouble,
-                t(2).toString.toDouble)
-            }.toMap
-          }
-        case _ => Map.empty
-      }
-    val addedColumns: Seq[(String, String)] = m.get("addcols") match {
-      case Some(as: Seq[_]) => as.map { a =>
-        val pair = a.asInstanceOf[Seq[Any]]
-        (pair(0).toString, pair(1).toString)
-      }
-      case _ => Nil
-    }
-    Some(LiteSnapshot(v, strings("manifests"), summaries,
-      strings("deletes"), renames, drops, commitTs,
-      m.get("op").map(_.toString).getOrElse(""), constraints,
-      strings("partition_spec"),
-      m.get("ref").map(_.toString).getOrElse(""), defaults, properties,
-      addedColumns))
+    if (!ops.exists(path)) None
+    else Some(LiteSnapshot.parse(path, ops.readString(path)))
   }
 
   private def readSnapshotObject(spark: SparkSession, table: String,
@@ -381,10 +397,11 @@ object Snapshots {
         case (f, cols) =>
           f -> cols.map { case (c, x) => renamedStatsKey(lite.renames, c) -> x }
       }
-      partialSnapshot(lite, resolved.flatMap(_.files), resolved).copy(
-        stats = renamed(merged(resolved)(_.stats)),
-        blooms = renamed(merged(resolved)(_.blooms)),
-        rowCounts = merged(resolved)(_.rows))
+      Snapshot(lite, resolved.flatMap(_.files),
+        renamed(merged(resolved)(_.stats)),
+        renamed(merged(resolved)(_.blooms)),
+        merged(resolved)(_.dirSchemas), merged(resolved)(_.rows),
+        merged(resolved)(_.sizes))
     }
 
   /** Commit history of the table as a DataFrame — the `DESCRIBE
@@ -392,7 +409,7 @@ object Snapshots {
     * table ([[SnapshotCatalog]]). One row per version: the recorded
     * operation, commit timestamp, metadata shape, and the version's
     * log-derived row count where the log can answer it ([[rowCountAt]];
-    * −1 where it declines — MoR versions, pre-rowcount manifests).
+    * −1 where it declines — MoR versions).
     * O(versions) driver-side LOG metadata, KB per version — never a data
     * scan. */
   def history(spark: SparkSession, table: String): DataFrame = {
@@ -422,15 +439,15 @@ object Snapshots {
 
   /** Per-file metadata of one version — the `<table>.files` metadata
     * table (the Iceberg files-table shape): every data file the version
-    * references with its manifest-recorded exact row count (−1 on
-    * pre-rowcount manifests) and per-column min/max stat count. O(version
-    * file list) from the LOG, no data scan. */
+    * references with its manifest-recorded exact row count and
+    * per-column min/max stat count. O(version file list) from the LOG,
+    * no data scan. */
   def filesMetadata(spark: SparkSession, table: String, v: Int): DataFrame = {
     val s = snapshot(spark, table, v).getOrElse(
       throw new IllegalArgumentException(s"no version $v of $table"))
     val rows = s.files.map { f =>
       org.apache.spark.sql.Row(f, s.version,
-        s.rowCounts.getOrElse(f, -1L),
+        s.rowCounts(f),
         s.stats.get(f).map(_.size).getOrElse(0))
     }
     spark.createDataFrame(
@@ -474,7 +491,7 @@ object Snapshots {
     * declared table metadata (spec, constraints, defaults, refs) in
     * one discoverable SQL row. O(log) driver-side; row_count is the
     * log-derived exact count or −1 where the log declines
-    * ([[rowCountAt]] — MoR versions, pre-rowcount manifests). */
+    * ([[rowCountAt]] — MoR versions). */
   def detailMetadata(spark: SparkSession, table: String,
       v: Int): DataFrame = {
     val s = snapshot(spark, table, v).getOrElse(
@@ -520,9 +537,9 @@ object Snapshots {
     * aggregate honestly under a NULL partition row instead of being
     * mis-binned. `row_count` is the manifest-exact per-partition count,
     * −1 where the log declines (any deletes outstanding — live count ≠
-    * file count — or a pre-rowcount manifest in the group). O(version
-    * file list) driver-side; never a data scan. An unpartitioned table
-    * is one NULL-partition row covering everything. */
+    * file count). O(version file list) driver-side; never a data scan.
+    * An unpartitioned table is one NULL-partition row covering
+    * everything. */
   def partitionsMetadata(spark: SparkSession, table: String,
       v: Int): DataFrame = {
     val s = snapshot(spark, table, v).getOrElse(
@@ -551,10 +568,7 @@ object Snapshots {
       val part = tup.map(vs =>
         s.partitionSpec.zip(vs).map { case (e, x) => s"$e=$x" }
           .mkString("/")).orNull
-      val n =
-        if (countable && fs.forall(s.rowCounts.contains))
-          fs.map(s.rowCounts).sum
-        else -1L
+      val n = if (countable) fs.map(s.rowCounts).sum else -1L
       org.apache.spark.sql.Row(part, fs.size, n)
     }.sortBy(r => Option(r.getString(0)).getOrElse("￿"))
     spark.createDataFrame(
@@ -571,8 +585,7 @@ object Snapshots {
   /** Per-manifest shape of one version — the `<table>.manifests`
     * metadata table (the Iceberg manifests-table shape): each manifest
     * the version references with its file count and manifest-exact row
-    * count (−1 when any of its files predates row counting). The
-    * operational read: "how fragmented is my metadata" — the
+    * count. The operational read: "how fragmented is my metadata" — the
     * rewriteManifests trigger q234 automates via q255's policy.
     * O(version manifest list) driver-side log metadata. */
   def manifestsMetadata(spark: SparkSession, table: String,
@@ -581,10 +594,7 @@ object Snapshots {
       throw new IllegalArgumentException(s"no version $v of $table"))
     val rows = s.manifests.map { id =>
       val m = readManifest(spark, table, id)
-      val n =
-        if (m.files.forall(m.rows.contains)) m.files.map(m.rows).sum
-        else -1L
-      org.apache.spark.sql.Row(id, m.files.size, n)
+      org.apache.spark.sql.Row(id, m.files.size, m.files.map(m.rows).sum)
     }
     spark.createDataFrame(
       new java.util.ArrayList(scala.jdk.CollectionConverters
@@ -622,14 +632,11 @@ object Snapshots {
   /** Exact row count of version `v` from LOG METADATA alone — O(log
     * objects), no table scan: the sum of the version's per-file manifest
     * counts. Declines (None) when the version carries positional deletes
-    * (live count ≠ file count) or references a pre-rowcount manifest —
-    * callers fall back to the scan, metadata never lies. */
+    * (live count ≠ file count) — callers fall back to the scan, metadata
+    * never lies. */
   def rowCountAt(spark: SparkSession, table: String, v: Int): Option[Long] =
     snapshot(spark, table, v).flatMap { s =>
-      if (s.deletes.nonEmpty) None
-      else if (s.files.forall(s.rowCounts.contains))
-        Some(s.files.map(s.rowCounts).sum)
-      else None
+      if (s.deletes.nonEmpty) None else Some(s.files.map(s.rowCounts).sum)
     }
 
   /** LIVE (row count, byte size) of version `v` from LOG METADATA alone
@@ -642,9 +649,10 @@ object Snapshots {
     * the read's anti-join output is the live fraction, so a table
     * whose live side fits the broadcast threshold must broadcast, not
     * sort-merge. Declines (None) whenever any piece is unknown:
-    * equality deletes (matched count unknown until read), pre-rowcount
-    * or pre-size manifests, pre-sidecar delete dirs — callers fall back
-    * to file-size estimates, metadata never lies.
+    * equality deletes (matched count unknown until read), an unreadable
+    * delete sidecar, a manifest-sharded view (which resolves no row
+    * counts) — callers fall back to file-size estimates, metadata never
+    * lies.
     *
     * The CoW DSv2 catalog path ([[SnapshotReadTable]]) deliberately
     * keeps Spark's own `FileScan.estimateStatistics`: a bare file list
@@ -659,7 +667,6 @@ object Snapshots {
   private def liveStatsFor(spark: SparkSession, table: String,
       s: Snapshot): Option[(Long, Long)] = {
     if (s.files.isEmpty || !s.files.forall(s.rowCounts.contains)) return None
-    if (!s.files.forall(s.sizes.contains)) return None
     tombstoneRowCount(spark, table, s.deletes).flatMap { dead =>
       val tot = s.files.map(s.rowCounts).sum
       if (tot <= 0L) None
@@ -774,12 +781,8 @@ object Snapshots {
   private def ndvFor(spark: SparkSession, table: String, s: Snapshot,
       column: String): Option[Long] = {
     if (s.files.isEmpty) return Some(0L)
-    val per = s.files.map { f =>
-      val slash = f.lastIndexOf('/')
-      if (slash <= 0) None
-      else sketchDirCols(spark, table, f.substring(0, slash))
-        .get(column).flatMap(_.get(f))
-    }
+    val per = s.files.map(f =>
+      sketchDirCols(spark, table, dirOf(f)).get(column).flatMap(_.get(f)))
     if (!per.forall(_.isDefined)) None
     else {
       val u = per.flatten.flatten.distinct.sorted
@@ -790,16 +793,13 @@ object Snapshots {
 
   /** Total NULL count of `column` over version `v`'s files from the
     * sketch sidecars — exact (per-file counts sum), declining when any
-    * file lacks a recorded count (pre-null-count sidecars). */
+    * file lacks a recorded count (dirs staged before the column was
+    * declared). */
   private def nullCountFor(spark: SparkSession, table: String,
       s: Snapshot, column: String): Option[Long] = {
     if (s.files.isEmpty) return Some(0L)
-    val per = s.files.map { f =>
-      val slash = f.lastIndexOf('/')
-      if (slash <= 0) None
-      else sketchDir(spark, table, f.substring(0, slash))._2
-        .get(column).flatMap(_.get(f))
-    }
+    val per = s.files.map(f =>
+      sketchDir(spark, table, dirOf(f))._2.get(column).flatMap(_.get(f)))
     if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
   }
 
@@ -886,16 +886,11 @@ object Snapshots {
         s"cannot add CHECK constraint $name to $table: existing data " +
           s"violates it (${bad.head._2} rows)")
     }
-    commitLoop(spark, table, "add-constraint", newConstraints = prev => {
-      val cur = prev.map(_.constraints).getOrElse(Nil)
-      require(!cur.exists(_._1 == name),
+    commitLoop(spark, table, "add-constraint") { prev =>
+      val cur = carried(prev)
+      require(!cur.constraints.exists(_._1 == name),
         s"constraint $name already exists on $table")
-      Some(cur :+ (name -> checkSql))
-    }) { prev =>
-      (prev.map(_.manifests).getOrElse(Nil),
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      cur.copy(constraints = cur.constraints :+ (name -> checkSql))
     }
   }
 
@@ -904,16 +899,11 @@ object Snapshots {
     * set in force at each version). */
   def dropConstraint(spark: SparkSession, table: String,
       name: String): Int =
-    commitLoop(spark, table, "drop-constraint", newConstraints = prev => {
-      val cur = prev.map(_.constraints).getOrElse(Nil)
-      require(cur.exists(_._1 == name),
+    commitLoop(spark, table, "drop-constraint") { prev =>
+      val cur = carried(prev)
+      require(cur.constraints.exists(_._1 == name),
         s"no constraint $name on $table")
-      Some(cur.filterNot(_._1 == name))
-    }) { prev =>
-      (prev.map(_.manifests).getOrElse(Nil),
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      cur.copy(constraints = cur.constraints.filterNot(_._1 == name))
     }
 
   def statsRangeAt(spark: SparkSession, table: String, v: Int,
@@ -935,8 +925,8 @@ object Snapshots {
     * its commit dirs' schemas (the Iceberg manifest shape). Versions
     * share manifests BY REFERENCE, so a commit writes O(delta) metadata
     * and the log object stays O(commits-since-rewrite) — never O(table
-    * files). Manifests written before row counts or sizes were
-    * recorded lack them: [[rowCountAt]] and the log-fed scans decline. */
+    * files). Rows, sizes and the dir schemas cover every file
+    * ([[writeManifest]] requires it). */
   private final case class Manifest(files: Seq[String], stats: FileStats,
       blooms: FileBlooms, dirSchemas: Map[String, StructType],
       rows: Map[String, Long], sizes: Map[String, Long])
@@ -994,37 +984,26 @@ object Snapshots {
     }
   }
 
-  /** A file's byte size: the recorded one when `recorded` has it, else
-    * one FS status. */
-  private def fileSize(spark: SparkSession, table: String,
-      recorded: Map[String, Long], f: String): Long =
-    recorded.getOrElse(f, {
-      val p = new org.apache.hadoop.fs.Path(filePath(table, f))
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getFileStatus(p).getLen
-    })
-
+  /** Write one manifest. `knownSizes` (byte lengths — from the stager's
+    * one listStatus or the source manifests of carried files) and
+    * `dirSchemas` must cover every file: they are recorded so
+    * byte-bounded consumers (streaming maxBytesPerTrigger), the log-fed
+    * scans and the era reads answer from the log, never an FS status
+    * or footer probe. */
   private def writeManifest(spark: SparkSession, table: String,
-      files: Seq[String], stats: FileStats,
-      blooms: FileBlooms = Map.empty,
-      dirSchemas: Map[String, StructType] = Map.empty,
+      files: Seq[String], stats: FileStats, blooms: FileBlooms,
+      dirSchemas: Map[String, StructType], knownSizes: Map[String, Long],
       // carried-by-reference manifests (metadata delete, manifest
       // rewrites) already KNOW every file's row count from the source
       // manifest — recounting would re-open O(files) footers for data
       // that never moved
-      knownRows: Map[String, Long] = null,
-      // same carry discipline for BYTE sizes: the stager's one
-      // listStatus and the source manifests of carried files already
-      // know the lengths — only files neither recorded (pre-size
-      // manifests) pay an FS status
-      knownSizes: Map[String, Long] = Map.empty): String = {
+      knownRows: Map[String, Long] = null): String = {
+    require(files.forall(f => knownSizes.contains(f) &&
+      dirSchemas.contains(dirOf(f))),
+      s"manifest of $table: every file needs a recorded size and dir schema")
     val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
     val id = Naming.newRunId()
-    // recorded so byte-bounded consumers (streaming maxBytesPerTrigger)
-    // and the log-fed scans answer from the log instead of per-file FS
-    // status at read time
-    val sizes = files.map(f => f -> fileSize(spark, table, knownSizes, f))
-      .toMap
+    val sizes = files.map(f => f -> knownSizes(f)).toMap
     val rows =
       if (knownRows != null && files.forall(knownRows.contains))
         files.map(f => f -> knownRows(f)).toMap
@@ -1032,17 +1011,11 @@ object Snapshots {
         // the distributed count (> DriverFooterCountMaxFiles) rides the
         // same log-fed scan shape as the stats/sketch passes when this
         // very commit's dirSchemas prove ONE schema for every file
-        def uniform: Option[StructType] = {
-          val schemas = files.map { f =>
-            val i = f.lastIndexOf('/')
-            if (i <= 0) None else dirSchemas.get(f.substring(0, i))
-          }
-          if (schemas.exists(_.isEmpty)) None
-          else schemas.map(_.get).distinct match {
+        def uniform: Option[StructType] =
+          files.map(f => dirSchemas(dirOf(f))).distinct match {
             case Seq(one) => Some(one)
             case _ => None
           }
-        }
         val delta =
           if (files.size <= DriverFooterCountMaxFiles) None
           else uniform.flatMap(sch => freshDeltaScan(spark, table,
@@ -1063,8 +1036,7 @@ object Snapshots {
       },
       // commit-dir → era schema, so readers resolve era schemas from the
       // LOG, not from O(commits) footer probes (the Delta/Iceberg
-      // schema-in-log discipline); absent on pre-upgrade manifests —
-      // [[eraGroups]] falls back to a footer probe per unknown dir
+      // schema-in-log discipline)
       "dirSchemas" -> dirSchemas.map { case (d, sch) => d -> sch.json }))
     val path = manifestPath(table, id)
     ops.writeString(s"$path.tmp", json)
@@ -1095,9 +1067,8 @@ object Snapshots {
 
   /** Total byte size of the files APPENDED at version `v` (0 for
     * branch/empty/non-append versions and versions whose files all
-    * carried forward), from manifest-recorded sizes with one FS-status
-    * fallback per file for pre-r17 manifests. The unit a byte-bounded
-    * streaming consumer budgets catch-up batches in. */
+    * carried forward), from manifest-recorded sizes. The unit a
+    * byte-bounded streaming consumer budgets catch-up batches in. */
   private[graft] def appendedVersionBytes(spark: SparkSession,
       table: String, v: Int): Long =
     snapshot(spark, table, v).map { s2 =>
@@ -1110,8 +1081,7 @@ object Snapshots {
           if (w >= 1) snapshot(spark, table, w).map(_.files.toSet)
             .getOrElse(Set.empty[String])
           else Set.empty[String]
-        s2.files.filterNot(prevFiles)
-          .map(fileSize(spark, table, s2.sizes, _)).sum
+        s2.files.filterNot(prevFiles).map(s2.sizes).sum
       }
     }.getOrElse(0L)
 
@@ -1208,43 +1178,15 @@ object Snapshots {
     * deployment would use a conditional PUT). Returns false when another
     * committer already published `v` — the optimistic-concurrency
     * conflict signal. */
-  private def tryPublish(spark: SparkSession, table: String, v: Int,
-      manifests: Seq[String], deletes: Seq[String],
-      renames: Seq[(String, String)], drops: Seq[DropSpec],
-      commitTs: Long, op: String = "",
-      constraints: Seq[(String, String)] = Nil,
-      partitionSpec: Seq[String] = Nil,
-      ref: String = "",
-      defaults: Seq[(String, String)] = Nil,
-      extraFields: Map[String, Any] = Map.empty,
-      properties: Map[String, String] = Map.empty,
-      summaries: Map[String, Map[String, (Double, Double)]] =
-        Map.empty,
-      addedColumns: Seq[(String, String)] = Nil): Boolean = {
+  private def tryPublish(spark: SparkSession, table: String,
+      entry: LiteSnapshot): Boolean = {
+    val v = entry.version
     val conf = spark.sparkContext.hadoopConfiguration
     val ops = new FileOps(conf)
     val dst = new org.apache.hadoop.fs.Path(logPath(table, v))
     val fs = dst.getFileSystem(conf)
     if (fs.exists(dst)) return false // cheap fast path; rename still guards
-    val json = Json.render(Map(
-      "version" -> v.toLong,
-      "ts" -> commitTs,
-      "op" -> op,
-      "ref" -> ref,
-      "manifests" -> manifests,
-      "deletes" -> deletes,
-      "renames" -> renames.map(r => Seq(r._1, r._2)),
-      "drops" -> drops.map(d => Seq(d._1, d._2.toLong, d._3)),
-      "constraints" -> constraints.map(c => Seq(c._1, c._2)),
-      "partition_spec" -> partitionSpec,
-      "defaults" -> defaults.map(d => Seq(d._1, d._2)),
-      "addcols" -> addedColumns.map(a => Seq(a._1, a._2)),
-      "properties" -> properties.toSeq.sortBy(_._1)
-        .map(p => Seq(p._1, p._2)),
-      "msum" -> summaries.map { case (id, cols) =>
-        id -> cols.toSeq.sortBy(_._1)
-          .map { case (c, (mn, mx)) => Seq[Any](c, mn, mx) }
-      }) ++ extraFields)
+    val json = LiteSnapshot.render(entry)
     val tmp = s"${logPath(table, v)}.tmp-${Naming.newRunId()}"
     ops.writeString(tmp, json)
     try {
@@ -1280,46 +1222,22 @@ object Snapshots {
   private val MaxCommitAttempts = 20
 
   /** The optimistic-concurrency commit loop: read the latest snapshot,
-    * let `content` compute the next version's (manifest list, delete
-    * files, rename chain) AGAINST IT, and attempt an exclusive publish
-    * of latest+1. A lost race re-enters `content` with the NEW latest —
-    * append/merge recompute their carry (and merge its tombstones) so
-    * no concurrent writer's files are dropped. `beforePublish` is the
-    * failure/race injection seam for specs (runs after content, before
-    * the claim). */
-  private def commitLoop(spark: SparkSession, table: String,
-      op: String = "", beforePublish: () => Unit = () => (),
-      // CHECK constraints carry forward UNCHANGED through every commit;
-      // only addConstraint/dropConstraint override them
-      newConstraints: Option[Snapshot] => Option[Seq[(String, String)]] =
-        _ => None,
-      // the persisted PARTITION SPEC likewise carries forward; only
-      // appendPartitioned/overwritePartitioned/setPartitionSpec override
-      newPartitionSpec: Option[Snapshot] => Option[Seq[String]] =
-        _ => None,
-      // column DEFAULTS (initial-default semantics) carry forward;
-      // only setColumnDefault/dropColumnDefault/rename/drop override
-      newDefaults: Option[Snapshot] => Option[Seq[(String, String)]] =
-        _ => None,
-      // TABLE PROPERTIES (TBLPROPERTIES) carry forward; only
-      // setTableProperties/unsetTableProperties (and version-pinning
-      // ops like restore) override
-      newProperties: Option[Snapshot] => Option[Map[String, String]] =
-        _ => None,
-      // DECLARED added columns (ADD COLUMN without data) carry forward;
-      // only addColumn/renameColumn/dropColumn (and version-pinning
-      // ops) override
-      newAddedColumns: Option[Snapshot] => Option[Seq[(String, String)]] =
-        _ => None,
+    * let `content` compute the next version's record AGAINST IT —
+    * typically `prev`'s [[Snapshot.carry]] with the fields the operation
+    * changes copied in — and attempt an exclusive publish of latest+1
+    * stamped with the version, commit timestamp, `op`, `toBranch` and
+    * the manifest-list summaries. A lost race re-enters `content` with
+    * the NEW latest — append/merge recompute their carry (and merge its
+    * tombstones) so no concurrent writer's files are dropped.
+    * `beforePublish` is the failure/race injection seam for specs (runs
+    * after content, before the claim). */
+  private def commitLoop(spark: SparkSession, table: String, op: String,
+      beforePublish: () => Unit = () => (),
       // "" = main; a branch name computes content against the BRANCH
       // head and stamps the published log object with the ref, so main
       // readers skip it ([[mainHeadSnapshot]]) until fast-forwarded
-      toBranch: String = "",
-      // opaque extra commit-object fields (e.g. the COPY INTO source
-      // ledger) — atomic with the publish, ignored by snapshot()
-      extraFields: Map[String, Any] = Map.empty)(
-      content: Option[Snapshot] => (Seq[String], Seq[String],
-        Seq[(String, String)], Seq[DropSpec])): Int = {
+      toBranch: String = "")(
+      content: Option[Snapshot] => LiteSnapshot): Int = {
     var attempt = 0
     var lastSeen = -1
     while (attempt < MaxCommitAttempts) {
@@ -1337,28 +1255,17 @@ object Snapshots {
         if (toBranch.isEmpty) mainHeadSnapshot(spark, table)
         else Some(branchHeadSnapshot(spark, table, toBranch))
       val v = global.map(_.version).getOrElse(0) + 1
-      val (manifests, deletes, renames, drops) = content(prev)
-      // manifest-list summaries: carried ids reuse the previous
-      // version's entry (KB copy, never a manifest read); new ids fold
-      // their per-file stats once — O(new manifests). A pre-summary
-      // table backfills on its next commit.
-      val summaries: Map[String, Map[String, (Double, Double)]] =
-        manifests.map { id =>
-          id -> prev.flatMap(_.manifestSummaries.get(id)).getOrElse {
-            val m = readManifest(spark, table, id)
-            summarizeManifest(m.stats, m.files)
-          }
-        }.toMap
-      val constraints = newConstraints(prev)
-        .getOrElse(prev.map(_.constraints).getOrElse(Nil))
-      val partitionSpec = newPartitionSpec(prev)
-        .getOrElse(prev.map(_.partitionSpec).getOrElse(Nil))
-      val defaults = newDefaults(prev)
-        .getOrElse(prev.map(_.defaults).getOrElse(Nil))
-      val properties = newProperties(prev)
-        .getOrElse(prev.map(_.properties).getOrElse(Map.empty))
-      val addedColumns = newAddedColumns(prev)
-        .getOrElse(prev.map(_.addedColumns).getOrElse(Nil))
+      val next = content(prev)
+      // manifest-list summaries: ids the content's record already
+      // summarizes (its carry) reuse that entry (KB copy, never a
+      // manifest read); new ids fold their per-file stats once —
+      // O(new manifests)
+      val summaries = next.manifests.map { id =>
+        id -> next.summaries.getOrElse(id, {
+          val m = readManifest(spark, table, id)
+          summarizeManifest(m.stats, m.files)
+        })
+      }.toMap
       // commit timestamps are MONOTONIC and STRICTLY increasing: clock
       // skew or same-millisecond commits would otherwise make
       // TIMESTAMP AS OF resolution ambiguous (two versions at one ts)
@@ -1370,9 +1277,8 @@ object Snapshots {
       val commitTs = math.max(System.currentTimeMillis(),
         global.map(_.commitTs + 1).getOrElse(0L))
       beforePublish()
-      if (tryPublish(spark, table, v, manifests, deletes, renames, drops,
-          commitTs, op, constraints, partitionSpec, toBranch, defaults,
-          extraFields, properties, summaries, addedColumns)) {
+      if (tryPublish(spark, table, next.copy(version = v, commitTs = commitTs,
+          op = op, ref = toBranch, summaries = summaries))) {
         writeLatestHint(spark, table, v)
         return v
       }
@@ -1896,20 +1802,14 @@ object Snapshots {
     try {
       val idNames = ids.map(_._1).sorted
       var bases = Map.empty[String, Long]
-      commitLoop(spark, table, "identity-reserve",
-        newProperties = prevOpt => {
-          // re-read the marks from the head THIS attempt verifies
-          // against: a retried reservation claims past the winner's
-          val props = prevOpt.map(_.properties).getOrElse(Map.empty)
-          bases = idNames.map(c =>
-            c -> props.getOrElse(IdentityPropPrefix + c, "0").toLong).toMap
-          Some(props ++ bases.map { case (c, b) =>
-            (IdentityPropPrefix + c) -> (b + n).toString })
-        }) { prev =>
-        (prev.map(_.manifests).getOrElse(Nil),
-          prev.map(_.deletes).getOrElse(Nil),
-          prev.map(_.renames).getOrElse(Nil),
-          prev.map(_.drops).getOrElse(Nil))
+      commitLoop(spark, table, "identity-reserve") { prev =>
+        // re-read the marks from the head THIS attempt verifies
+        // against: a retried reservation claims past the winner's
+        val cur = carried(prev)
+        bases = idNames.map(c => c ->
+          cur.properties.getOrElse(IdentityPropPrefix + c, "0").toLong).toMap
+        cur.copy(properties = cur.properties ++ bases.map { case (c, b) =>
+          (IdentityPropPrefix + c) -> (b + n).toString })
       }
       val withIds = assignContiguousIds(spark, rdd, df.schema, offsets,
         idNames.map(c => c -> bases(c)))
@@ -1923,13 +1823,11 @@ object Snapshots {
       bloomCols: Seq[String], newSpec: Option[Seq[String]]): Int = {
     enforceConstraints(spark, table, df, "append")
     val mid = stage(spark, table, df, statsCols, bloomCols)
-    val v = commitLoop(spark, table, "append", beforePublish,
-      newPartitionSpec = _ => newSpec) { prev =>
+    val v = commitLoop(spark, table, "append", beforePublish) { prev =>
       guardRecycledNames(df, prev)
-      (prev.map(_.manifests).getOrElse(Nil) :+ mid,
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      val cur = carried(prev)
+      cur.copy(manifests = cur.manifests :+ mid,
+        partitionSpec = newSpec.getOrElse(cur.partitionSpec))
     }
     maybeAutoCompact(spark, table)
     v
@@ -1983,13 +1881,9 @@ object Snapshots {
     * their consumer ([[maybeAutoCompact]]). */
   def setTableProperties(spark: SparkSession, table: String,
       props: Map[String, String]): Int =
-    commitLoop(spark, table, "set-properties",
-      newProperties = prev =>
-        Some(prev.map(_.properties).getOrElse(Map.empty) ++ props)) { prev =>
-      (prev.map(_.manifests).getOrElse(Nil),
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+    commitLoop(spark, table, "set-properties") { prev =>
+      val cur = carried(prev)
+      cur.copy(properties = cur.properties ++ props)
     }
 
   /** Remove `keys` from the table's properties — ONE metadata-only
@@ -1997,13 +1891,9 @@ object Snapshots {
     * `UNSET TBLPROPERTIES IF EXISTS`. */
   def unsetTableProperties(spark: SparkSession, table: String,
       keys: Seq[String]): Int =
-    commitLoop(spark, table, "unset-properties",
-      newProperties = prev =>
-        Some(prev.map(_.properties).getOrElse(Map.empty) -- keys)) { prev =>
-      (prev.map(_.manifests).getOrElse(Nil),
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+    commitLoop(spark, table, "unset-properties") { prev =>
+      val cur = carried(prev)
+      cur.copy(properties = cur.properties -- keys)
     }
 
   /** Property keys the engine consumes (Delta auto-compaction shape):
@@ -2014,11 +1904,11 @@ object Snapshots {
     * itself publishes first and keeps its own version (a reader
     * between the two sees correct data in small files), the
     * compaction clusters by the persisted partition spec so pruning
-    * stats survive. The threshold check is one O(files) driver-side
-    * FS stat pass, skipped entirely when the property is absent. At
-    * 100 TB this is what keeps a streaming-cadence ingest table from
-    * accreting millions of KB files without an external OPTIMIZE
-    * scheduler. */
+    * stats survive. The threshold check reads the manifest-recorded
+    * file sizes (no FS call), skipped entirely when the property is
+    * absent. At 100 TB this is what keeps a streaming-cadence ingest
+    * table from accreting millions of KB files without an external
+    * OPTIMIZE scheduler. */
   val AutoCompactMinFilesKey = "graft.autoCompact.minFiles"
   val AutoCompactTargetBytesKey = "graft.autoCompact.targetBytes"
 
@@ -2064,12 +1954,7 @@ object Snapshots {
     val target = props.get(AutoCompactTargetBytesKey)
       .flatMap(_.toLongOption).getOrElse(8L << 20)
     val s = latestSnapshot(spark, table).getOrElse(return)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val small = s.files.count { f =>
-      val p = new org.apache.hadoop.fs.Path(filePath(table, f))
-      p.getFileSystem(conf).getFileStatus(p).getLen < target
-    }
-    if (small >= minFiles)
+    if (s.files.count(s.sizes(_) < target) >= minFiles)
       optimizeSmallFiles(spark, table, target,
         statsCols = s.partitionSpec)
   }
@@ -2136,23 +2021,15 @@ object Snapshots {
     s"${st.getPath.getName}:${st.getLen}"
 
   /** Every source identity a LIVE log version records having ingested
-    * (the `ingest_sources` field [[copyInto]] publishes atomically with
-    * its data). O(versions) driver-side KB metadata — the walk the log
-    * already is; versions vacuum reclaims age their entries out, so the
-    * dedup horizon IS the log retention horizon (Delta's documented
-    * COPY INTO behavior). */
-  def loadedSources(spark: SparkSession, table: String): Set[String] = {
-    val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
-    val latest = latestVersion(spark, table).getOrElse(0)
-    (1 to latest).iterator.flatMap { v =>
-      val p = logPath(table, v)
-      if (!ops.exists(p)) Iterator.empty[String]
-      else Json.parseObject(ops.readString(p)).get("ingest_sources") match {
-        case Some(xs: Seq[_]) => xs.iterator.map(_.toString)
-        case _ => Iterator.empty[String]
-      }
-    }.toSet
-  }
+    * (the ledger [[copyInto]] publishes atomically with its data).
+    * O(versions) cached resolutions — the walk the log already is;
+    * versions vacuum reclaims age their entries out, so the dedup
+    * horizon IS the log retention horizon (Delta's documented COPY INTO
+    * behavior). */
+  def loadedSources(spark: SparkSession, table: String): Set[String] =
+    (1 to latestVersion(spark, table).getOrElse(0)).iterator
+      .flatMap(v => snapshot(spark, table, v)).flatMap(_.entry.ingestSources)
+      .toSet
 
   /** Idempotent incremental load — Delta `COPY INTO`: list `srcDir`'s
     * parquet files, SKIP every identity a live log version already
@@ -2189,18 +2066,15 @@ object Snapshots {
     val (clustered, stats) = honorSpec(spark, table, df, statsCols)
     enforceConstraints(spark, table, df, "copy-into")
     val mid = stage(spark, table, clustered, stats, bloomCols)
-    val v = commitLoop(spark, table, "copy-into", beforePublish,
-      extraFields = Map("ingest_sources" -> freshIds)) { prev =>
+    val v = commitLoop(spark, table, "copy-into", beforePublish) { prev =>
       guardRecycledNames(df, prev)
       val nowLoaded = loadedSources(spark, table)
       val dup = freshIds.filter(nowLoaded)
       if (dup.nonEmpty) throw new IllegalStateException(
         s"copy-into on $table lost a race: ${dup.size} source file(s) " +
           "were ingested concurrently — re-run to skip them")
-      (prev.map(_.manifests).getOrElse(Nil) :+ mid,
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      val cur = carried(prev)
+      cur.copy(manifests = cur.manifests :+ mid, ingestSources = freshIds)
     }
     maybeAutoCompact(spark, table)
     (v, fresh.size)
@@ -2216,13 +2090,8 @@ object Snapshots {
   def setPartitionSpec(spark: SparkSession, table: String,
       spec: Seq[String]): Int = {
     validateSpec(spec)
-    commitLoop(spark, table, "set-partition-spec",
-      newPartitionSpec = _ => Some(spec)) { prev =>
-      (prev.map(_.manifests).getOrElse(Nil),
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
-    }
+    commitLoop(spark, table, "set-partition-spec")(
+      carried(_).copy(partitionSpec = spec))
   }
 
   /** The bucket id `bucket(n,·)` assigns to a key literal — evaluated
@@ -2306,17 +2175,15 @@ object Snapshots {
       recompute = false)
     enforceConstraints(spark, table, df, "overwrite")
     val mid = stage(spark, table, df, statsCols, bloomCols)
-    commitLoop(spark, table, "overwrite",
-      newPartitionSpec = _ => newSpec,
-      newProperties = prevOpt =>
-        if (propUpdates.isEmpty) None
-        else Some(prevOpt.map(_.properties).getOrElse(Map.empty)
-          ++ propUpdates)) { prev =>
+    commitLoop(spark, table, "overwrite") { prev =>
       guardRecycledNames(df, prev)
+      val cur = carried(prev)
       // a full rewrite references ONLY fresh files: no pre-drop dirs
       // remain, so the drop ledger resets (the rename chain must stay —
       // tombstoned names may never be recycled)
-      (Seq(mid), Nil, prev.map(_.renames).getOrElse(Nil), Nil)
+      cur.copy(manifests = Seq(mid), deletes = Nil, drops = Nil,
+        partitionSpec = newSpec.getOrElse(cur.partitionSpec),
+        properties = cur.properties ++ propUpdates)
     }
   }
 
@@ -2371,12 +2238,8 @@ object Snapshots {
     * identical) — what lets a reader skip schema inference entirely. */
   private[graft] def uniformLogSchema(s: Snapshot,
       files: Seq[String]): Option[StructType] = {
-    if (files.isEmpty || s.dirSchemas.isEmpty) return None
-    def schemaOf(f: String): Option[StructType] = {
-      val i = f.lastIndexOf('/')
-      if (i <= 0) None else s.dirSchemas.get(f.substring(0, i))
-    }
-    val schemas = files.map(schemaOf)
+    if (files.isEmpty) return None
+    val schemas = files.map(f => s.dirSchemas.get(dirOf(f)))
     if (schemas.exists(_.isEmpty)) return None
     val distinct = schemas.map(_.get).distinct
     if (distinct.size == 1) Some(distinct.head) else None
@@ -2414,10 +2277,10 @@ object Snapshots {
     * those are 100k object-store round-trips per query before the first
     * data byte; locally they are 2 driver jobs per snapshot read, and
     * lifecycle queries read snapshots dozens of times. Declines (None)
-    * whenever the log cannot answer COMPLETELY — pre-sizes manifests,
-    * schema-divergent eras (additive evolution reads keep the
-    * mergeSchema semantics they attest), files outside recorded dirs —
-    * so the fallback path and its plans are byte-identical to before. */
+    * whenever the log cannot answer COMPLETELY — files the snapshot does
+    * not cover, schema-divergent eras (additive evolution reads keep the
+    * mergeSchema semantics they attest) — so the fallback path and its
+    * plans are byte-identical to before. */
   private def logServedScan(spark: SparkSession, table: String,
       s: Snapshot, files: Seq[String]): Option[DataFrame] =
     for {
@@ -2453,10 +2316,10 @@ object Snapshots {
     // just-written footers ([[collectRowCounts]]' driver path for
     // small batches, one distributed pass above the cap); immutable
     // once the commit references the dir. A reader that finds no
-    // sidecar (pre-r18 logs, torn write) DECLINES stats — metadata
-    // never lies.
+    // readable sidecar (torn write) DECLINES stats — metadata never
+    // lies.
     val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
-    // BYTE SIZES beside the row counts (r19): what lets every read of
+    // BYTE SIZES beside the row counts: what lets every read of
     // these positional-delete files skip the listing + footer jobs —
     // their schema is statically (file STRING, pos BIGINT), so size
     // facts are all a log-fed scan was missing
@@ -2473,9 +2336,9 @@ object Snapshots {
 
   /** Per-file tombstone (row counts, byte sizes) a positional-delete
     * directory's sidecar records — empty maps when the sidecar is
-    * absent (pre-r18 commits; sizes pre-r19) or unreadable (torn
-    * write), so callers decline rather than guess. Delete dirs are
-    * immutable once referenced by the log, hence the forever cache. */
+    * unreadable (torn write), so callers decline rather than guess.
+    * Delete dirs are immutable once referenced by the log, hence the
+    * forever cache. */
   private def deleteDirSidecar(spark: SparkSession, table: String,
       dirRel: String): (Map[String, Long], Map[String, Long]) = {
     val path = s"${filePath(table, dirRel)}/$DeleteRowsSidecar"
@@ -2502,16 +2365,12 @@ object Snapshots {
 
   /** Read positional-delete files LOG-FED when every file's sidecar
     * records its size (schema is static, so only sizes were missing);
-    * falls back to the path-based read (listing + footer job) for
-    * pre-r19 delete dirs or under the kill-switch. */
+    * falls back to the path-based read (listing + footer job) for an
+    * unreadable sidecar or under the kill-switch. */
   private def readPosDeletes(spark: SparkSession, table: String,
       pos: Seq[String]): DataFrame = {
-    val sized: Seq[Option[(String, Long)]] = pos.map { f =>
-      val slash = f.lastIndexOf('/')
-      if (slash <= 0) None
-      else deleteDirSidecar(spark, table, f.substring(0, slash))._2
-        .get(f).map(f -> _)
-    }
+    val sized = pos.map(f =>
+      deleteDirSidecar(spark, table, dirOf(f))._2.get(f).map(f -> _))
     (if (sized.forall(_.isDefined))
       freshDeltaScan(spark, table, sized.flatten, PosDeleteSchema)
     else None)
@@ -2528,11 +2387,7 @@ object Snapshots {
       deletes: Seq[String]): Option[Long] = {
     if (deletes.isEmpty) return Some(0L)
     if (deletes.exists(isEqDelete)) return None
-    val counts = deletes.map { f =>
-      val slash = f.lastIndexOf('/')
-      if (slash <= 0) None
-      else deleteDirRows(spark, table, f.substring(0, slash)).get(f)
-    }
+    val counts = deletes.map(f => deleteDirRows(spark, table, dirOf(f)).get(f))
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
@@ -2629,16 +2484,21 @@ object Snapshots {
   private def eqDeleteParts(spark: SparkSession, table: String,
       eqRef: String,
       renames: Seq[(String, String)] = Nil): (DataFrame, Seq[String]) = {
-    val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
     val raw = spark.read.parquet(s"${filePath(table, eqRef)}/keys")
     val keys = raw.toDF(raw.columns.map(c => renamedName(renames, c)): _*)
-    val scopeManifests = Json
-      .parseObject(ops.readString(s"${filePath(table, eqRef)}/scope.json"))
-      .get("manifests").map(_.asInstanceOf[Seq[Any]].map(_.toString))
-      .getOrElse(Nil)
-    val covered = scopeManifests
+    val covered = eqScope(spark, table, eqRef)
       .flatMap(readManifest(spark, table, _).files).distinct
     (keys, covered)
+  }
+
+  /** The manifest ids equality delete `eqRef` scopes — the `scope.json`
+    * [[deleteByKeys]] (or a [[cherryPick]] replay) wrote beside its
+    * keys. */
+  private def eqScope(spark: SparkSession, table: String,
+      eqRef: String): Seq[String] = {
+    val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
+    Json.parseObject(ops.readString(s"${filePath(table, eqRef)}/scope.json"))
+      .apply("manifests").asInstanceOf[Seq[Any]].map(_.toString)
   }
 
   /** The COMPLEMENT of [[applyEqDelete]]: the rows of `data` the
@@ -2978,12 +2838,8 @@ object Snapshots {
     * manifests' entries. Full resolution passes every manifest. */
   private def partialSnapshot(lite: LiteSnapshot, files: Seq[String],
       touched: Seq[Manifest]): Snapshot =
-    Snapshot(lite.version, files, lite.deletes, Map.empty, lite.renames,
-      lite.manifests, Map.empty, lite.commitTs,
-      merged(touched)(_.dirSchemas), lite.drops, Map.empty, lite.op,
-      lite.constraints, lite.partitionSpec, lite.ref, lite.defaults,
-      lite.properties, lite.summaries, lite.addedColumns,
-      merged(touched)(_.sizes))
+    Snapshot(lite, files, Map.empty, Map.empty,
+      merged(touched)(_.dirSchemas), Map.empty, merged(touched)(_.sizes))
 
   /** The schemaless corners of a sharded read, resolved eagerly (rare
     * paths): zero kept files still needs the table's SCHEMA for the
@@ -3057,20 +2913,12 @@ object Snapshots {
         "cannot be recycled under name-chain renames")
   }
 
-  /** Files grouped per commit directory with one schema each (files of a
-    * commit share a schema). Schemas come from the LOG when the commit's
-    * manifest recorded them (`known`, zero I/O); pre-upgrade commits fall
-    * back to one footer probe per dir — O(unknown commits) reads, never
-    * O(files). */
-  private def eraGroups(spark: SparkSession, table: String,
-      files: Seq[String],
-      known: Map[String, StructType] = Map.empty): Seq[(Seq[String], StructType)] =
-    files.groupBy(f => f.split("/").dropRight(1).mkString("/"))
-      .toSeq.sortBy(_._1)
-      .map { case (dir, fs) =>
-        fs -> known.getOrElse(dir,
-          spark.read.parquet(filePath(table, fs.head)).schema)
-      }
+  /** A snapshot's files grouped per commit directory with the one schema
+    * each dir's manifest recorded (files of a commit share a schema) —
+    * zero I/O. */
+  private def eraGroups(s: Snapshot): Seq[(Seq[String], StructType)] =
+    s.files.groupBy(dirOf).toSeq.sortBy(_._1)
+      .map { case (dir, fs) => fs -> s.dirSchemas(dir) }
 
   /** Metadata-only column RENAME (`ALTER TABLE … RENAME COLUMN`): a new
     * version records `from → to` in the log's rename chain — ZERO data
@@ -3121,10 +2969,10 @@ object Snapshots {
     require(!column.contains('.'),
       s"default on struct leaf path '$column' is not supported — " +
         "default the whole struct column")
-    commitLoop(spark, table, "set-default", newDefaults = prevOpt => {
+    commitLoop(spark, table, "set-default") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"cannot set a default on never-committed table $table"))
-      require(liveNames(spark, table, prev).contains(column),
+      require(liveNames(prev).contains(column),
         s"no current column named $column")
       // a GENERATION expression may reference the row's other stored
       // columns (they resolve under CURRENT names at read time) but
@@ -3135,10 +2983,8 @@ object Snapshots {
         s"default for $column references itself")
       readDispatch(spark, table, prev).limit(0).select(expr(defaultSql))
         .schema
-      Some(prev.defaults.filterNot(_._1 == column) :+ (column -> defaultSql))
-    }) { prevOpt =>
-      val prev = prevOpt.get
-      (prev.manifests, prev.deletes, prev.renames, prev.drops)
+      prev.carry.copy(defaults =
+        prev.defaults.filterNot(_._1 == column) :+ (column -> defaultSql))
     }
   }
 
@@ -3146,11 +2992,10 @@ object Snapshots {
     * (from this version forward; history keeps the default). */
   def dropColumnDefault(spark: SparkSession, table: String,
       column: String): Int =
-    commitLoop(spark, table, "drop-default", newDefaults = prevOpt =>
-      prevOpt.map(_.defaults.filterNot(_._1 == column))) { prevOpt =>
+    commitLoop(spark, table, "drop-default") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"cannot drop a default on never-committed table $table"))
-      (prev.manifests, prev.deletes, prev.renames, prev.drops)
+      prev.carry.copy(defaults = prev.defaults.filterNot(_._1 == column))
     }
 
   // ------------------------------------- generated & identity columns
@@ -3325,29 +3170,10 @@ object Snapshots {
     // declared skipping metadata silently stops being collected
     val listProps = Set(StatsColumnsKey, BloomColumnsKey,
       "graft.maintain.zorderBy")
-    commitLoop(spark, table, "rename-column",
-      newPartitionSpec = prevOpt =>
-        prevOpt.map(_.partitionSpec.map(respell)),
-      newProperties = prevOpt => prevOpt.map(_.properties.map {
-        case (k, v) if listProps(k) =>
-          // entries may be dot-path LEAVES (`meta.uid`): a rename of
-          // the ROOT struct must carry them or declared leaf stats
-          // silently stop being collected
-          k -> v.split(",").map(_.trim)
-            .map(c => renamedStatsKey(Seq(from -> to), c)).mkString(",")
-        case kv => kv
-      }),
-      newDefaults = prevOpt =>
-      prevOpt.map(_.defaults.map { case (c, d) =>
-        (if (c == from) to else c, d) }),
-      // declared-only columns store CURRENT names: the entry itself is
-      // rewritten (no chain mapping ever applies to it)
-      newAddedColumns = prevOpt =>
-      prevOpt.map(_.addedColumns.map { case (c, t) =>
-        (if (c == from) to else c, t) })) { prevOpt =>
+    commitLoop(spark, table, "rename-column") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"cannot rename a column of never-committed table $table"))
-      val current = liveNames(spark, table, prev)
+      val current = liveNames(prev)
       require(current.contains(from), s"no current column named $from")
       require(!current.contains(to), s"column $to already exists")
       require(!prev.renames.exists(_._1 == to),
@@ -3361,8 +3187,23 @@ object Snapshots {
             "drop that default first") }
       // stats keys need no rewrite: [[snapshot]] materializes them
       // through the rename chain, so pruning always sees current names
-      (prev.manifests, prev.deletes, prev.renames :+ (from -> to),
-        prev.drops)
+      prev.carry.copy(renames = prev.renames :+ (from -> to),
+        partitionSpec = prev.partitionSpec.map(respell),
+        properties = prev.properties.map {
+          case (k, v) if listProps(k) =>
+            // entries may be dot-path LEAVES (`meta.uid`): a rename of
+            // the ROOT struct must carry them or declared leaf stats
+            // silently stop being collected
+            k -> v.split(",").map(_.trim)
+              .map(c => renamedStatsKey(Seq(from -> to), c)).mkString(",")
+          case kv => kv
+        },
+        defaults = prev.defaults.map { case (c, d) =>
+          (if (c == from) to else c, d) },
+        // declared-only columns store CURRENT names: the entry itself
+        // is rewritten (no chain mapping ever applies to it)
+        addedColumns = prev.addedColumns.map { case (c, t) =>
+          (if (c == from) to else c, t) })
     }
   }
 
@@ -3387,16 +3228,10 @@ object Snapshots {
         "whole struct column")
     // the dropped column's DEFAULT goes with it: a re-added same-named
     // column must start clean (nulls for pre-re-add eras — q192 rule)
-    commitLoop(spark, table, "drop-column", newDefaults = prevOpt =>
-      prevOpt.map(_.defaults.filterNot(_._1 == name)),
-      // a declared-only column drops by erasing its entry (no bytes
-      // anywhere); if later appends materialized it, the drop ledger
-      // below handles those eras like any stored column
-      newAddedColumns = prevOpt =>
-      prevOpt.map(_.addedColumns.filterNot(_._1 == name))) { prevOpt =>
+    commitLoop(spark, table, "drop-column") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"cannot drop a column of never-committed table $table"))
-      require(liveNames(spark, table, prev).contains(name),
+      require(liveNames(prev).contains(name),
         s"no current column named $name")
       // dropping a column OTHER defaults compute from would break them
       // at read time — refuse with the cure ([[renameColumn]]'s rule)
@@ -3404,10 +3239,14 @@ object Snapshots {
         require(!exprRefs(spark, d).contains(name),
           s"column $name is referenced by the default of $c — " +
             "drop that default first") }
-      val dirs = prev.files
-        .map(_.split("/").dropRight(1).mkString("/")).distinct
-      (prev.manifests, prev.deletes, prev.renames,
-        prev.drops :+ ((name, prev.renames.length, dirs)))
+      prev.carry.copy(
+        drops = prev.drops :+ ((name, prev.renames.length,
+          prev.files.map(dirOf).distinct)),
+        defaults = prev.defaults.filterNot(_._1 == name),
+        // a declared-only column drops by erasing its entry (no bytes
+        // anywhere); if later appends materialized it, the drop ledger
+        // handles those eras like any stored column
+        addedColumns = prev.addedColumns.filterNot(_._1 == name))
     }
   }
 
@@ -3472,20 +3311,12 @@ object Snapshots {
       require(cn.nonEmpty, "constraint needs a name")
       nullRow.limit(0).filter(expr(sql))
     }
-    commitLoop(spark, table, "create-table",
-      newAddedColumns = prevOpt => {
-        require(prevOpt.isEmpty, s"table $table already has versions")
-        Some(cols.map(c => (c._1, c._2)))
-      },
-      newDefaults = _ =>
-        Some(cols.collect { case (n, _, Some(d)) => (n, d) }),
-      newPartitionSpec = _ => Some(partitionSpec),
-      newProperties = _ =>
-        if (properties.isEmpty) None else Some(properties),
-      newConstraints = _ =>
-        if (constraints.isEmpty) None else Some(constraints)) { prev =>
+    commitLoop(spark, table, "create-table") { prev =>
       require(prev.isEmpty, s"table $table already has versions")
-      (Nil, Nil, Nil, Nil)
+      LiteSnapshot.empty.copy(addedColumns = cols.map(c => (c._1, c._2)),
+        defaults = cols.collect { case (n, _, Some(d)) => (n, d) },
+        partitionSpec = partitionSpec, properties = properties,
+        constraints = constraints)
     }
   }
 
@@ -3509,21 +3340,17 @@ object Snapshots {
         "column (a struct-typed one if leaves are wanted)")
     // a bad type string must fail the DDL, not the first read
     org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
-    commitLoop(spark, table, "add-column",
-      newAddedColumns = prevOpt => {
-        val prev = prevOpt.getOrElse(throw new IllegalStateException(
-          s"cannot add a column to never-committed table $table"))
-        require(!liveNames(spark, table, prev).contains(name),
-          s"column $name already exists")
-        // a rename's old name is tombstoned: era reads map it forward,
-        // so a re-added column of that name could never receive data
-        // (guardRecycledNames would throw on every later append)
-        require(!prev.renames.map(_._1).contains(name),
-          s"$name was renamed away earlier and cannot be recycled")
-        Some(prev.addedColumns :+ (name -> typeDdl))
-      },
-      newDefaults = prevOpt => defaultSql.map { d =>
-        val prev = prevOpt.get
+    commitLoop(spark, table, "add-column") { prevOpt =>
+      val prev = prevOpt.getOrElse(throw new IllegalStateException(
+        s"cannot add a column to never-committed table $table"))
+      require(!liveNames(prev).contains(name),
+        s"column $name already exists")
+      // a rename's old name is tombstoned: era reads map it forward,
+      // so a re-added column of that name could never receive data
+      // (guardRecycledNames would throw on every later append)
+      require(!prev.renames.map(_._1).contains(name),
+        s"$name was renamed away earlier and cannot be recycled")
+      val defaults = defaultSql.fold(prev.defaults) { d =>
         require(!exprRefs(spark, d).contains(name),
           s"default for $name references itself")
         val resolved = readDispatch(spark, table, prev).limit(0)
@@ -3541,9 +3368,9 @@ object Snapshots {
             " — every read would silently fill NULL; write a default of " +
             "the declared type (or an up-castable one)")
         prev.defaults.filterNot(_._1 == name) :+ (name -> d)
-      }) { prevOpt =>
-      val prev = prevOpt.get
-      (prev.manifests, prev.deletes, prev.renames, prev.drops)
+      }
+      prev.carry.copy(addedColumns = prev.addedColumns :+ (name -> typeDdl),
+        defaults = defaults)
     }
   }
 
@@ -3622,11 +3449,9 @@ object Snapshots {
 
   /** Current live column names of a snapshot: every era's fields minus
     * dropped ones, mapped through the full rename chain. */
-  private def liveNames(spark: SparkSession, table: String,
-      s: Snapshot): Set[String] =
-    eraGroups(spark, table, s.files, s.dirSchemas).flatMap { case (fs, sch) =>
-      val dir = fs.head.split("/").dropRight(1).mkString("/")
-      sch.fieldNames.filterNot(deadInDir(s, dir, _))
+  private def liveNames(s: Snapshot): Set[String] =
+    eraGroups(s).flatMap { case (fs, sch) =>
+      sch.fieldNames.filterNot(deadInDir(s, dirOf(fs.head), _))
         .map(renamedName(s.renames, _))
     }.toSet ++ s.addedColumns.map(_._1)
 
@@ -3646,10 +3471,9 @@ object Snapshots {
     // combinations (a handful, however evolution happened), not commit
     // count — a streaming-ingest table with thousands of one-batch
     // commits still plans 1-3 scans
-    val bySchema = eraGroups(spark, table, s.files, s.dirSchemas)
+    val bySchema = eraGroups(s)
       .groupBy { case (fs, sch) =>
-        val dir = fs.head.split("/").dropRight(1).mkString("/")
-        (sch, sch.fieldNames.filter(deadInDir(s, dir, _)).toSet)
+        (sch, sch.fieldNames.filter(deadInDir(s, dirOf(fs.head), _)).toSet)
       }.toSeq
       .map { case ((sch, dead), gs) => (gs.flatMap(_._1), sch, dead) }
       .sortBy(_._1.head)
@@ -3762,26 +3586,22 @@ object Snapshots {
     enforceConstraints(spark, table, changes, "merge")
     val mid = stage(spark, table, changes, statsCols)
     commitLoop(spark, table, "merge", toBranch = branch) { prev =>
-      val prevFiles = prev.map(_.files).getOrElse(Nil)
-      val prevDeletes = prev.map(_.deletes).getOrElse(Nil)
+      val cur = carried(prev)
       val newDeletes: Seq[String] =
-        if (prevFiles.isEmpty) Nil
+        if (prev.forall(_.files.isEmpty)) Nil
         else {
           // era-aware live view: merge keys must match old-era rows
           // under renamed/widened schemas too
           val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.get), prevDeletes,
-            prev.get.renames)
+            withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
           val keys = changes.select(keyCols.map(col): _*).distinct()
           val tomb = live.join(broadcast(keys), keyCols, "left_semi")
             .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
           writeDeletes(spark, table, tomb)
         }
       guardRecycledNames(changes, prev)
-      (prev.map(_.manifests).getOrElse(Nil) :+ mid,
-        prevDeletes ++ newDeletes,
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      cur.copy(manifests = cur.manifests :+ mid,
+        deletes = cur.deletes ++ newDeletes)
     }
   }
 
@@ -3995,8 +3815,8 @@ object Snapshots {
         guardRecycledNames(df, prevOpt)
         stage(spark, table, df, statsCols)
       }.toSeq
-      (prev.manifests ++ newManifests, prev.deletes ++ newDeleteFiles,
-        prev.renames, prev.drops)
+      prev.carry.copy(manifests = prev.manifests ++ newManifests,
+        deletes = prev.deletes ++ newDeleteFiles)
     }
   }
 
@@ -4015,22 +3835,18 @@ object Snapshots {
       pred: org.apache.spark.sql.Column, branch: String = ""): Int = {
     if (branch.nonEmpty) branchHeadSnapshot(spark, table, branch) // fail fast
     commitLoop(spark, table, "delete", toBranch = branch) { prev =>
-      val prevFiles = prev.map(_.files).getOrElse(Nil)
-      val prevDeletes = prev.map(_.deletes).getOrElse(Nil)
+      val cur = carried(prev)
       val newDeletes: Seq[String] =
-        if (prevFiles.isEmpty) Nil
+        if (prev.forall(_.files.isEmpty)) Nil
         else {
           // era-aware live view: the predicate speaks CURRENT names
           val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.get), prevDeletes,
-            prev.get.renames)
+            withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
           val tomb = live.filter(pred)
             .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
           writeDeletes(spark, table, tomb)
         }
-      (prev.map(_.manifests).getOrElse(Nil), prevDeletes ++ newDeletes,
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      cur.copy(deletes = cur.deletes ++ newDeletes)
     }
   }
 
@@ -4045,15 +3861,14 @@ object Snapshots {
     * [[readAt]] both) — without it a zero-file version is schemaless
     * and SELECT after TRUNCATE would fail, unlike Delta. */
   def truncate(spark: SparkSession, table: String): Int =
-    commitLoop(spark, table, "truncate",
-      newAddedColumns = prevOpt => prevOpt.map { p =>
-        if (p.files.isEmpty) p.addedColumns
-        else readAt(spark, table, p.version).get.schema.fields.toSeq
-          .map(f => f.name -> f.dataType.sql)
-      }) { prev =>
+    commitLoop(spark, table, "truncate") { prev =>
       val p = prev.getOrElse(throw new IllegalStateException(
         s"cannot truncate never-committed table $table"))
-      (Nil, Nil, p.renames, Nil)
+      p.carry.copy(manifests = Nil, deletes = Nil, drops = Nil,
+        addedColumns =
+          if (p.files.isEmpty) p.addedColumns
+          else readAt(spark, table, p.version).get.schema.fields.toSeq
+            .map(f => f.name -> f.dataType.sql))
     }
 
   /** REPLACE WHERE (Delta's `replaceWhere` / Spark's `INSERT INTO …
@@ -4081,22 +3896,18 @@ object Snapshots {
     val mid = stage(spark, table, clustered, stats)
     commitLoop(spark, table, "replace-where") { prev =>
       guardRecycledNames(df, prev)
-      val prevFiles = prev.map(_.files).getOrElse(Nil)
-      val prevDeletes = prev.map(_.deletes).getOrElse(Nil)
+      val cur = carried(prev)
       val newDeletes: Seq[String] =
-        if (prevFiles.isEmpty) Nil
+        if (prev.forall(_.files.isEmpty)) Nil
         else {
           val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.get), prevDeletes,
-            prev.get.renames)
+            withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
           val tomb = live.filter(pred)
             .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
           writeDeletes(spark, table, tomb)
         }
-      (prev.map(_.manifests).getOrElse(Nil) :+ mid,
-        prevDeletes ++ newDeletes,
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      cur.copy(manifests = cur.manifests :+ mid,
+        deletes = cur.deletes ++ newDeletes)
     }
   }
 
@@ -4173,8 +3984,7 @@ object Snapshots {
         if (full.isEmpty) prev.manifests
         else {
           val survivors = prev.files.filterNot(full.toSet)
-          val dirs = survivors
-            .map(_.split("/").dropRight(1).mkString("/")).toSet
+          val dirs = survivors.map(dirOf).toSet
           Seq(writeManifest(spark, table, survivors,
             prev.stats.filter { case (f, _) => !full.contains(f) },
             prev.blooms.filter { case (f, _) => !full.contains(f) },
@@ -4183,8 +3993,8 @@ object Snapshots {
         }
       // tombstones already covering dropped files now point at absent
       // paths and match nothing — same carry note as optimizeSmallFiles
-      (manifests, prev.deletes ++ newDeletes,
-        prev.renames, prev.drops)
+      prev.carry.copy(manifests = manifests,
+        deletes = prev.deletes ++ newDeletes)
     }
 
   /** EQUALITY DELETE ([[https://iceberg.apache.org Iceberg v2]]'s second
@@ -4223,7 +4033,7 @@ object Snapshots {
       // delete applies to exactly the state it committed against
       ops.writeString(s"$table/$rel/scope.json",
         Json.render(Map("manifests" -> prev.manifests)))
-      (prev.manifests, prev.deletes :+ rel, prev.renames, prev.drops)
+      prev.carry.copy(deletes = prev.deletes :+ rel)
     }
   }
 
@@ -4246,7 +4056,6 @@ object Snapshots {
     // throw (or miss old-era rows) on an evolved table.
     val base = subtractDeletes(spark, table,
       withMetaEras(spark, table, s), pos, s.renames)
-    val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
     val tombs = eq.map { e =>
       import spark.implicits._
       // keys written before a RENAME resolve through the chain, the
@@ -4255,11 +4064,7 @@ object Snapshots {
       val keys = rawKeys
         .toDF(rawKeys.columns.map(c => renamedName(s.renames, c)): _*)
         .distinct()
-      val scopeManifests = Json
-        .parseObject(ops.readString(s"${filePath(table, e)}/scope.json"))
-        .get("manifests").map(_.asInstanceOf[Seq[Any]].map(_.toString))
-        .getOrElse(Nil)
-      val covered = scopeManifests
+      val covered = eqScope(spark, table, e)
         .flatMap(readManifest(spark, table, _).files).distinct
       val covDf = broadcast(covered.toDF("_eq_cov_file"))
       // null-safe key match (Iceberg v2: null equals null in an
@@ -4280,8 +4085,7 @@ object Snapshots {
       // delete committed concurrently (visible here after an OCC retry)
       // stays outstanding rather than being silently discarded
       // unmaterialized — the caller can materialize again
-      (prev.manifests, prev.deletes.filterNot(scanned) ++ newDeletes,
-        prev.renames, prev.drops)
+      prev.carry.copy(deletes = prev.deletes.filterNot(scanned) ++ newDeletes)
     })
   }
 
@@ -4308,16 +4112,11 @@ object Snapshots {
       statsCols: Seq[String] = Nil, branch: String = ""): Int = {
     if (branch.nonEmpty) branchHeadSnapshot(spark, table, branch) // fail fast
     commitLoop(spark, table, "update", toBranch = branch) { prev =>
-      val prevManifests = prev.map(_.manifests).getOrElse(Nil)
-      val prevDeletes = prev.map(_.deletes).getOrElse(Nil)
-      val prevRenames = prev.map(_.renames).getOrElse(Nil)
-      val prevDrops = prev.map(_.drops).getOrElse(Nil)
-      if (prev.forall(_.files.isEmpty))
-        (prevManifests, prevDeletes, prevRenames, prevDrops)
+      val cur = carried(prev)
+      if (prev.forall(_.files.isEmpty)) cur
       else {
         val live = subtractDeletes(spark, table,
-          withMetaEras(spark, table, prev.get), prevDeletes,
-          prev.get.renames)
+          withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
         val matched = live.filter(pred)
         // tombstone every matched live copy (delete half of the pair)
         val tomb = matched
@@ -4341,8 +4140,8 @@ object Snapshots {
           "update", recompute = true)
         enforceConstraints(spark, table, updated, "update")
         val mid = stage(spark, table, updated, statsCols)
-        (prevManifests :+ mid, prevDeletes ++ dFiles, prevRenames,
-          prevDrops)
+        cur.copy(manifests = cur.manifests :+ mid,
+          deletes = cur.deletes ++ dFiles)
       }
     }
   }
@@ -4360,14 +4159,7 @@ object Snapshots {
     val target = snapshot(spark, table, v).getOrElse(
       throw new IllegalArgumentException(
         s"cannot restore $table to missing version $v"))
-    commitLoop(spark, table, "restore",
-        newConstraints = _ => Some(target.constraints),
-        newPartitionSpec = _ => Some(target.partitionSpec),
-        newDefaults = _ => Some(target.defaults),
-        newProperties = _ => Some(target.properties),
-        newAddedColumns = _ => Some(target.addedColumns)) { _ =>
-      (target.manifests, target.deletes, target.renames, target.drops)
-    }
+    commitLoop(spark, table, "restore")(_ => target.carry)
   }
 
   /** SHALLOW CLONE (`CREATE TABLE dst SHALLOW CLONE src [VERSION AS OF
@@ -4396,10 +4188,10 @@ object Snapshots {
     * [[fastForward]] publish: `src@v`'s file list / stats / blooms /
     * era schemas rewritten to absolute refs under `src`'s root, and
     * the tombstone sidecars re-written under `dst` with absolute
-    * `file` refs (O(tombstones)). Returns everything a commit needs. */
+    * `file` refs (O(tombstones)). Returns `s`'s record re-pointed at
+    * them. */
   private def cloneContent(spark: SparkSession, src: String, dst: String,
-      s: Snapshot): (String, Seq[String], Seq[(String, String)],
-      Seq[DropSpec], Seq[(String, String)]) = {
+      s: Snapshot): LiteSnapshot = {
     val srcRoot = LakePaths.tableRootPath(spark, src)
     val dstRoot = LakePaths.tableRootPath(spark, dst)
     // canonical reference rule, matching [[LakePaths.relFileCol]]
@@ -4443,15 +4235,14 @@ object Snapshots {
           .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
         writeDeletes(spark, dst, dstCanonical(hits))
       }
-    val cloneDeletes = posCloneDeletes ++ eqCloneDeletes
     val manifest = writeManifest(spark, dst, s.files.map(ref),
       s.stats.map { case (f, st) => ref(f) -> st },
       s.blooms.map { case (f, b) => ref(f) -> b },
       s.dirSchemas.map { case (d, sch) => ref(d) -> sch },
       knownSizes = s.sizes.map { case (f, n) => ref(f) -> n })
-    (manifest, cloneDeletes, s.renames,
-      s.drops.map { case (n, cl, dirs) => (n, cl, dirs.map(ref)) },
-      s.constraints)
+    s.carry.copy(manifests = Seq(manifest),
+      deletes = posCloneDeletes ++ eqCloneDeletes,
+      drops = s.drops.map { case (n, cl, dirs) => (n, cl, dirs.map(ref)) })
   }
 
   /** IN-PLACE ADOPTION (Iceberg `add_files` / `migrate`, Delta
@@ -4490,10 +4281,8 @@ object Snapshots {
       Map(dir -> scan.schema), knownSizes = sized.toMap)
     commitLoop(spark, table, "adopt") { prev =>
       guardRecycledNames(scan, prev)
-      (prev.map(_.manifests).getOrElse(Nil) :+ mid,
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      val cur = carried(prev)
+      cur.copy(manifests = cur.manifests :+ mid)
     }
   }
 
@@ -4523,15 +4312,13 @@ object Snapshots {
     val mid = stage(spark, dst, clustered,
       (s.partitionSpec ++ declared(StatsColumnsKey)).distinct,
       declared(BloomColumnsKey))
-    commitLoop(spark, dst, "deep-clone",
-        newConstraints = _ => Some(s.constraints),
-        newPartitionSpec = _ => Some(s.partitionSpec),
-        newDefaults = _ => Some(s.defaults),
-        newAddedColumns = _ => Some(s.addedColumns),
-        newProperties = _ => Some(s.properties)) { prev =>
+    commitLoop(spark, dst, "deep-clone") { prev =>
       if (prev.nonEmpty) throw new IllegalStateException(
         s"deep clone target $dst already has versions")
-      (Seq(mid), Nil, Nil, Nil)
+      // the live view materialized under current names: no rename
+      // chain, drop ledger or tombstones carry
+      s.carry.copy(manifests = Seq(mid), deletes = Nil, renames = Nil,
+        drops = Nil)
     }
   }
 
@@ -4541,16 +4328,13 @@ object Snapshots {
       throw new IllegalArgumentException(s"clone source $src has no versions"))
     val s = snapshot(spark, src, v).getOrElse(
       throw new IllegalArgumentException(s"$src has no version $v"))
-    val (manifest, cloneDeletes, renames, drops, constraints) =
-      cloneContent(spark, src, dst, s)
-    commitLoop(spark, dst, "clone",
-        newConstraints = _ => Some(constraints),
-        newDefaults = _ => Some(s.defaults),
-        newProperties = _ => Some(s.properties),
-        newAddedColumns = _ => Some(s.addedColumns)) { prev =>
+    val content = cloneContent(spark, src, dst, s)
+    commitLoop(spark, dst, "clone") { prev =>
       if (prev.nonEmpty) throw new IllegalStateException(
         s"shallow clone target $dst already has versions")
-      (Seq(manifest), cloneDeletes, renames, drops)
+      // the partition spec is not cloned: the clone's own writes start
+      // unclustered
+      content.copy(partitionSpec = Nil)
     }
   }
 
@@ -4572,15 +4356,10 @@ object Snapshots {
     val v = latestVersion(spark, branch).getOrElse(
       throw new IllegalArgumentException(s"branch $branch has no versions"))
     val s = snapshot(spark, branch, v).get
-    val (manifest, cloneDeletes, renames, drops, constraints) =
-      cloneContent(spark, branch, dst, s)
-    commitLoop(spark, dst, "fast-forward",
-        newConstraints = _ => Some(constraints),
-        newDefaults = _ => Some(s.defaults),
-        newProperties = _ => Some(s.properties),
-        newAddedColumns = _ => Some(s.addedColumns)) { _ =>
-      (Seq(manifest), cloneDeletes, renames, drops)
-    }
+    val content = cloneContent(spark, branch, dst, s)
+    // dst keeps its own partition spec; everything else is the branch's
+    commitLoop(spark, dst, "fast-forward")(prev =>
+      content.copy(partitionSpec = carried(prev).partitionSpec))
   }
 
   /** CHERRY-PICK one commit from a branch onto this table (Iceberg's
@@ -4665,11 +4444,7 @@ object Snapshots {
       val rel = s"_snap/e-${Naming.newRunId()}"
       spark.read.parquet(s"${filePath(branch, e)}/keys")
         .write.mode("overwrite").parquet(s"$dst/$rel/keys")
-      val srcScope = Json
-        .parseObject(ops.readString(s"${filePath(branch, e)}/scope.json"))
-        .get("manifests").map(_.asInstanceOf[Seq[Any]].map(_.toString))
-        .getOrElse(Nil)
-      (rel, srcScope.exists(srcDeltaSet))
+      (rel, eqScope(spark, branch, e).exists(srcDeltaSet))
     }
     val (deltaDeletes, anchors) =
       if (deltaPosSrc.isEmpty) (Nil, Set.empty[String])
@@ -4705,9 +4480,8 @@ object Snapshots {
         ops.writeString(s"$dst/$rel/scope.json",
           Json.render(Map("manifests" -> scope)))
       }
-      (prev.manifests ++ deltaMids,
-        prev.deletes ++ deltaDeletes ++ eqReplays.map(_._1),
-        prev.renames, prev.drops)
+      prev.carry.copy(manifests = prev.manifests ++ deltaMids,
+        deletes = prev.deletes ++ deltaDeletes ++ eqReplays.map(_._1))
     }
   }
 
@@ -4745,11 +4519,11 @@ object Snapshots {
       // changes nothing the scope reads, and vacuum pins every
       // outstanding eq delete's scope manifests live (liveManifests ∪
       // eqScopes), so GC cannot orphan them either.
-      val dirs = prev.files.map(_.split("/").dropRight(1).mkString("/")).toSet
-      (Seq(writeManifest(spark, table, prev.files, prev.stats, prev.blooms,
+      val dirs = prev.files.map(dirOf).toSet
+      prev.carry.copy(manifests = Seq(writeManifest(spark, table, prev.files,
+        prev.stats, prev.blooms,
         prev.dirSchemas.filter { case (d, _) => dirs(d) },
-        knownRows = prev.rowCounts, knownSizes = prev.sizes)),
-        prev.deletes, prev.renames, prev.drops)
+        knownRows = prev.rowCounts, knownSizes = prev.sizes)))
     }
 
   /** OPTIMIZE: rewrite the current live view (data minus positional
@@ -4781,14 +4555,10 @@ object Snapshots {
     Some(commitLoop(spark, table, "optimize") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"$table disappeared during optimizeZorder"))
-      if (prev.files.isEmpty)
-        (prev.manifests, prev.deletes, prev.renames, prev.drops)
-      else {
-        val sized =
-          prev.files.map(f => f -> fileSize(spark, table, prev.sizes, f))
-        compactContent(spark, table, prev, sized, Nil, targetBytes,
-          (prev.partitionSpec ++ cols).distinct, cols)
-      }
+      if (prev.files.isEmpty) prev.carry
+      else compactContent(spark, table, prev,
+        prev.files.map(f => f -> prev.sizes(f)), Nil, targetBytes,
+        (prev.partitionSpec ++ cols).distinct, cols)
     })
   }
 
@@ -4809,29 +4579,23 @@ object Snapshots {
     * INSIDE the commit loop so an eq delete committed concurrently is
     * re-applied on the OCC retry, never lost. Returns None when fewer
     * than two small files exist — nothing worth rewriting. File sizes
-    * come from the manifests' recorded sizes (the r17+ write path);
-    * only files below pre-size manifests pay a status probe. */
+    * come from the manifests' recorded sizes. */
   def optimizeSmallFiles(spark: SparkSession, table: String,
       minBytes: Long, statsCols: Seq[String] = Nil,
       zorderBy: Seq[String] = Nil): Option[Int] = {
+    def split(s: Snapshot) =
+      s.files.map(f => f -> s.sizes(f)).partition(_._2 < minBytes)
     val probe = latestSnapshot(spark, table).getOrElse(return None)
-    def sized(s: Snapshot): Seq[(String, Long)] =
-      s.files.map(f => f -> fileSize(spark, table, s.sizes, f))
-    val probeSized = sized(probe)
-    if (probeSized.count(_._2 < minBytes) <= 1) return None
+    if (split(probe)._1.size <= 1) return None
     Some(commitLoop(spark, table, "optimize") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"$table disappeared during optimize"))
-      // re-probe sizes only when a concurrent commit moved the version
-      val fileSizes =
-        if (prev.version == probe.version) probeSized else sized(prev)
-      val (small, big) = fileSizes.partition(_._2 < minBytes)
+      val (small, big) = split(prev)
       // a concurrent commit may have changed the layout since the
       // fast-path probe: with nothing left to compact, publish the
       // previous content unchanged (the maintenance attempt is recorded
       // as a no-op version) rather than era-scanning an empty file set
-      if (small.size <= 1)
-        (prev.manifests, prev.deletes, prev.renames, prev.drops)
+      if (small.size <= 1) prev.carry
       else compactContent(spark, table, prev, small, big, minBytes,
         statsCols, zorderBy)
     })
@@ -4876,12 +4640,10 @@ object Snapshots {
     // a concurrent commit between probe and publish re-decides inside
     // the loop (and records a no-op version, like optimizeSmallFiles)
     if (hotOf(probe)._2.isEmpty) return None
-    def content(prev: Snapshot): (Seq[String], Seq[String],
-        Seq[(String, String)], Seq[DropSpec]) = {
-      val noop = (prev.manifests, prev.deletes, prev.renames, prev.drops)
-      if (prev.deletes.forall(isEqDelete)) return noop
+    def content(prev: Snapshot): LiteSnapshot = {
+      if (prev.deletes.forall(isEqDelete)) return prev.carry
       val (allTombs, hot) = hotOf(prev)
-      if (hot.isEmpty) return noop
+      if (hot.isEmpty) return prev.carry
       val hotSet = hot.toSet
       val live = subtractDeletes(spark, table,
           withMetaEras(spark, table, prev.copy(files = hot)), prev.deletes,
@@ -4890,8 +4652,7 @@ object Snapshots {
       val fresh = stage(spark, table,
         live.coalesce(math.max(1, hot.size / 2)), statsCols)
       val carriedFiles = prev.files.filterNot(hotSet)
-      val carriedDirs =
-        carriedFiles.map(_.split("/").dropRight(1).mkString("/")).toSet
+      val carriedDirs = carriedFiles.map(dirOf).toSet
       val carried = writeManifest(spark, table, carriedFiles,
         prev.stats.filter { case (f, _) => !hotSet(f) },
         prev.blooms.filter { case (f, _) => !hotSet(f) },
@@ -4906,9 +4667,8 @@ object Snapshots {
       // outstanding eq deletes carry by reference: the fresh files'
       // names sit outside every scope (their suppressed rows were
       // removed by the live-view rewrite), the cold files stay covered
-      (Seq(carried, fresh),
-        prev.deletes.filter(isEqDelete) ++ writeDeletes(spark, table, keep),
-        prev.renames, prev.drops)
+      prev.carry.copy(manifests = Seq(carried, fresh), deletes =
+        prev.deletes.filter(isEqDelete) ++ writeDeletes(spark, table, keep))
     }
     Some(commitLoop(spark, table, "optimize") { prevOpt =>
       content(prevOpt.getOrElse(throw new IllegalStateException(
@@ -4934,22 +4694,18 @@ object Snapshots {
   def optimizeWhere(spark: SparkSession, table: String, column: String,
       lo: Double, hi: Double, minBytes: Long,
       statsCols: Seq[String] = Nil): Option[Int] = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val probe = latestSnapshot(spark, table).getOrElse(return None)
     def split(s: Snapshot): (Seq[(String, Long)], Seq[(String, Long)]) = {
       val hit = pruneFiles(s, column, lo, hi).toSet
-      s.files.map { f =>
-        val p = new org.apache.hadoop.fs.Path(filePath(table, f))
-        f -> p.getFileSystem(conf).getFileStatus(p).getLen
-      }.partition { case (f, b) => hit(f) && b < minBytes }
+      s.files.map(f => f -> s.sizes(f))
+        .partition { case (f, b) => hit(f) && b < minBytes }
     }
     if (split(probe)._1.size <= 1) return None
     Some(commitLoop(spark, table, "optimize") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"$table disappeared during optimize"))
       val (small, big) = split(prev)
-      if (small.size <= 1)
-        (prev.manifests, prev.deletes, prev.renames, prev.drops)
+      if (small.size <= 1) prev.carry
       else compactContent(spark, table, prev, small, big, minBytes,
         statsCols, Nil)
     })
@@ -4958,8 +4714,7 @@ object Snapshots {
   private def compactContent(spark: SparkSession, table: String,
       prev: Snapshot, small: Seq[(String, Long)], big: Seq[(String, Long)],
       minBytes: Long, statsCols: Seq[String],
-      zorderBy: Seq[String]): (Seq[String], Seq[String],
-      Seq[(String, String)], Seq[DropSpec]) = {
+      zorderBy: Seq[String]): LiteSnapshot = {
     // live rows of the small files only, era-aware, packed into
     // ~minBytes-sized outputs (the bin-packing half of OPTIMIZE —
     // without the coalesce the rewrite re-emits one file per scan
@@ -4985,14 +4740,14 @@ object Snapshots {
       else live.coalesce(outFiles)
     val compacted = stage(spark, table, smallLive, statsCols)
     val bigSet = big.map(_._1).toSet
-    val bigDirs = big.map(_._1.split("/").dropRight(1).mkString("/")).toSet
+    val bigDirs = big.map(b => dirOf(b._1)).toSet
     val carried = writeManifest(spark, table, big.map(_._1),
       prev.stats.filter { case (f, _) => bigSet(f) },
       prev.blooms.filter { case (f, _) => bigSet(f) },
       prev.dirSchemas.filter { case (d, _) => bigDirs(d) },
       knownSizes = prev.sizes)
     // carried big files may still be pre-drop dirs: the ledger stays
-    (Seq(carried, compacted), prev.deletes, prev.renames, prev.drops)
+    prev.carry.copy(manifests = Seq(carried, compacted))
   }
 
   // -------------------------------------------------------- change feed
@@ -5085,8 +4840,9 @@ object Snapshots {
       val rewriteDeletes =
         if (dropped.isEmpty) None
         else Some {
-          subtractDeletes(spark, table,
-              withMetaEras(spark, table, s2.copy(files = dropped)),
+          // dropped files are v1's: their era schemas are v1's records
+          subtractDeletes(spark, table, withMetaEras(spark, table,
+              s2.copy(files = dropped, dirSchemas = s1.dirSchemas)),
               s1.deletes, s2.renames)
             .drop("_snap_file", "_snap_pos")
             .withColumn("_change_type", lit("delete"))
@@ -5151,22 +4907,19 @@ object Snapshots {
       .drop("_change_type")
     val mid = stage(spark, table, inserts, Nil)
     commitLoop(spark, table, "cdc-apply") { prev =>
-      val prevDeletes = prev.map(_.deletes).getOrElse(Nil)
+      val cur = carried(prev)
       val newDeletes: Seq[String] =
         if (prev.forall(_.files.isEmpty)) Nil
         else {
           val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.get), prevDeletes,
-            prev.get.renames)
+            withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
           val tomb = live.join(broadcast(deletes), keyCols, "left_semi")
             .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
           writeDeletes(spark, table, tomb)
         }
       guardRecycledNames(inserts, prev)
-      (prev.map(_.manifests).getOrElse(Nil) :+ mid,
-        prevDeletes ++ newDeletes,
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      cur.copy(manifests = cur.manifests :+ mid,
+        deletes = cur.deletes ++ newDeletes)
     }
   }
 
@@ -5408,10 +5161,8 @@ object Snapshots {
     val mid = stage(spark, table, df, statsCols)
     commitLoop(spark, table, "append", toBranch = branch) { prev =>
       guardRecycledNames(df, prev)
-      (prev.map(_.manifests).getOrElse(Nil) :+ mid,
-        prev.map(_.deletes).getOrElse(Nil),
-        prev.map(_.renames).getOrElse(Nil),
-        prev.map(_.drops).getOrElse(Nil))
+      val cur = carried(prev)
+      cur.copy(manifests = cur.manifests :+ mid)
     }
   }
 
@@ -5425,18 +5176,13 @@ object Snapshots {
       branch: String): Int = {
     val head = branchHeadSnapshot(spark, table, branch)
     val base = branchBase(spark, table, branch).get
-    commitLoop(spark, table, "fast-forward",
-      newConstraints = _ => Some(head.constraints),
-      newPartitionSpec = _ => Some(head.partitionSpec),
-      newDefaults = _ => Some(head.defaults),
-      newProperties = _ => Some(head.properties),
-      newAddedColumns = _ => Some(head.addedColumns)) { prev =>
+    commitLoop(spark, table, "fast-forward") { prev =>
       val mainV = prev.map(_.version).getOrElse(0)
       if (mainV > base) throw new IllegalStateException(
         s"fastForwardMain: main advanced to $mainV past branch " +
           s"'$branch' base $base — not a fast-forward; cherry-pick " +
           "the branch commits instead")
-      (head.manifests, head.deletes, head.renames, head.drops)
+      head.carry
     }
   }
 
@@ -5458,67 +5204,21 @@ object Snapshots {
     * anything — the Delta `VACUUM … DRY RUN` shape (the answer to "is
     * this retention setting about to delete something I still need",
     * asked before the irreversible step, which is the whole point).
-    * Returns table-relative paths: trimmed log objects, dead data
-    * files / equality-delete dirs under `_snap`, and unreferenced
-    * manifests. Read-only MIRROR of vacuum's live-set walk — the two
-    * must stay in lockstep (spec-pinned: dry run == the exact FS diff
-    * a real vacuum then produces). */
+    * Returns table-relative paths, sorted: exactly the plan
+    * [[vacuum]] executes. */
   def vacuumDryRun(spark: SparkSession, table: String,
+      keepFrom: Int): Seq[String] =
+    vacuumPlan(spark, table, keepFrom).sorted
+
+  /** The ONE reclamation plan of a vacuum at horizon `keepFrom`, in
+    * deletion order: trimmed log objects, dead data files /
+    * equality-delete dirs under `_snap`, unreferenced manifests
+    * (table-relative paths). */
+  private def vacuumPlan(spark: SparkSession, table: String,
       keepFrom: Int): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val ops = new FileOps(conf)
     val latest = latestVersion(spark, table).getOrElse(return Nil)
-    val tagged = listTags(spark, table).map(_._2).toSet ++
-      listBranches(spark, table).map(_._2) ++
-      mainHeadSnapshot(spark, table).map(_.version)
-    val deadLog = (1 until keepFrom).filterNot(tagged)
-      .filter(v => ops.exists(logPath(table, v)))
-      .map(v => f"_log/v$v%06d.json")
-    val keptVersions =
-      ((keepFrom to latest) ++ tagged.filter(_ < keepFrom)).distinct.sorted
-    val kept = keptVersions.flatMap(v => snapshot(spark, table, v))
-    val liveFiles = kept.flatMap(s => s.files ++ s.deletes).toSet
-    val liveDirs = liveFiles.flatMap { f =>
-      val segs = f.split("/")
-      if (segs.headOption.contains("_snap")) segs.lift(1) else None
-    }
-    val snapRoot = new org.apache.hadoop.fs.Path(s"$table/_snap")
-    val fs = snapRoot.getFileSystem(conf)
-    val deadData = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(snapRoot))
-      fs.listStatus(snapRoot).foreach { st =>
-        val dirName = st.getPath.getName
-        if (!liveDirs.contains(dirName)) deadData += s"_snap/$dirName"
-        else if (liveFiles.contains(s"_snap/$dirName")) ()
-        else fs.listStatus(st.getPath).foreach { f =>
-          if (!liveFiles.contains(s"_snap/$dirName/${f.getPath.getName}"))
-            deadData += s"_snap/$dirName/${f.getPath.getName}"
-        }
-      }
-    val eqScopes = kept.flatMap(_.deletes).filter(isEqDelete).distinct
-      .flatMap { e =>
-        val p = s"${filePath(table, e)}/scope.json"
-        if (!ops.exists(p)) Nil
-        else Json.parseObject(ops.readString(p))
-          .get("manifests").map(_.asInstanceOf[Seq[Any]].map(_.toString))
-          .getOrElse(Nil)
-      }
-    val liveManifests = kept.flatMap(_.manifests).toSet ++ eqScopes
-    val logRoot = new org.apache.hadoop.fs.Path(logDir(table))
-    val deadManifests =
-      if (!fs.exists(logRoot)) Nil
-      else fs.listStatus(logRoot).map(_.getPath.getName).toSeq
-        .filter(n => n.startsWith("m-") && n.endsWith(".json"))
-        .filterNot(n =>
-          liveManifests(n.stripPrefix("m-").stripSuffix(".json")))
-        .map(n => s"_log/$n")
-    (deadLog ++ deadData ++ deadManifests).sorted
-  }
-
-  def vacuum(spark: SparkSession, table: String, keepFrom: Int): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ops = new FileOps(conf)
-    val latest = latestVersion(spark, table).getOrElse(return)
     // tagged versions are retention-pinned: their log objects survive
     // below the horizon and their files count as live until the tag is
     // dropped (the Iceberg ref-retention contract). Branch HEADS and
@@ -5528,11 +5228,9 @@ object Snapshots {
     val tagged = listTags(spark, table).map(_._2).toSet ++
       listBranches(spark, table).map(_._2) ++
       mainHeadSnapshot(spark, table).map(_.version)
-    // trim log entries below keepFrom (and this JVM's cached resolutions
-    // of them — a vacuumed version must resolve to None, not cache hits)
-    (1 until keepFrom).filterNot(tagged).foreach(v =>
-      ops.delete(logPath(table, v)))
-    invalidate(table)
+    val deadLog = (1 until keepFrom).filterNot(tagged)
+      .filter(v => ops.exists(logPath(table, v)))
+      .map(v => f"_log/v$v%06d.json")
     val keptVersions =
       ((keepFrom to latest) ++ tagged.filter(_ < keepFrom)).distinct.sorted
     val kept = keptVersions.flatMap(v => snapshot(spark, table, v))
@@ -5542,10 +5240,9 @@ object Snapshots {
     // dir-level reap would either leak the dead files' bytes forever
     // (a GDPR physical-erasure violation, q222's audit) or delete live
     // siblings. Fully-dead dirs are removed whole (one delete), mixed
-    // dirs lose exactly their unreferenced files, and a dir emptied by
-    // the sweep is removed. Clone-carried ABSOLUTE refs never match
-    // this table's relative names, so a clone's vacuum still cannot
-    // reap another table's files.
+    // dirs lose exactly their unreferenced files. Clone-carried
+    // ABSOLUTE refs never match this table's relative names, so a
+    // clone's vacuum still cannot reap another table's files.
     val liveFiles = kept.flatMap(s => s.files ++ s.deletes).toSet
     // both reference shapes resolve to their _snap subdirectory: files
     // ("_snap/c-x/part…") and whole-dir equality-delete refs ("_snap/e-x")
@@ -5562,30 +5259,25 @@ object Snapshots {
     // but-uncommitted files, which a reap would silently amputate from
     // its commit. Age disambiguates: with `graft.vacuum.graceMs` set,
     // unreferenced dirs younger than the grace survive this vacuum and
-    // fall to a later one. Referenced-dir file-granular reaping below
-    // needs no guard — commits stage into their OWN fresh dir, never
-    // into an existing one, so dead files inside live dirs are always
+    // fall to a later one. Referenced-dir file-granular reaping needs
+    // no guard — commits stage into their OWN fresh dir, never into an
+    // existing one, so dead files inside live dirs are always
     // vacuumed-version debris.
     val graceMs = tableProperties(spark, table)
       .get("graft.vacuum.graceMs").flatMap(_.toLongOption).getOrElse(0L)
     val nowMs = System.currentTimeMillis()
-    if (fs.exists(snapRoot))
-      fs.listStatus(snapRoot).foreach { st =>
-        val dirName = st.getPath.getName
-        if (!liveDirs.contains(dirName)) {
-          if (nowMs - st.getModificationTime >= graceMs)
-            fs.delete(st.getPath, true)
+    val deadData =
+      if (!fs.exists(snapRoot)) Nil
+      else fs.listStatus(snapRoot).toSeq.flatMap { st =>
+        val dir = s"_snap/${st.getPath.getName}"
+        if (!liveDirs.contains(st.getPath.getName)) {
+          if (nowMs - st.getModificationTime >= graceMs) Seq(dir) else Nil
         }
-        else if (liveFiles.contains(s"_snap/$dirName")) ()
-        // ^ whole-dir reference (equality delete): keys + scope live as
-        //   a unit until no kept version names the dir
-        else {
-          fs.listStatus(st.getPath).foreach { f =>
-            if (!liveFiles.contains(s"_snap/$dirName/${f.getPath.getName}"))
-              fs.delete(f.getPath, false)
-          }
-          if (fs.listStatus(st.getPath).isEmpty) fs.delete(st.getPath, true)
-        }
+        // a whole-dir reference (equality delete): keys + scope live as
+        // a unit until no kept version names the dir
+        else if (liveFiles.contains(dir)) Nil
+        else fs.listStatus(st.getPath).toSeq
+          .map(f => s"$dir/${f.getPath.getName}").filterNot(liveFiles)
       }
     // manifest GC: drop manifest objects no kept version references.
     // An OUTSTANDING equality delete's scope.json references the
@@ -5593,22 +5285,34 @@ object Snapshots {
     // any kept version's manifest list (a later commit rewrote the
     // list), but the delete's read path still opens them, so they are
     // live until the delete is materialized or vacuumed away.
-    val eqScopes = kept.flatMap(_.deletes).filter(isEqDelete).distinct
-      .flatMap { e =>
-        val p = s"${filePath(table, e)}/scope.json"
-        if (!ops.exists(p)) Nil
-        else Json.parseObject(ops.readString(p))
-          .get("manifests").map(_.asInstanceOf[Seq[Any]].map(_.toString))
-          .getOrElse(Nil)
-      }
-    val liveManifests = kept.flatMap(_.manifests).toSet ++ eqScopes
+    val liveManifests = kept.flatMap(_.manifests).toSet ++
+      kept.flatMap(_.deletes).filter(isEqDelete).distinct
+        .flatMap(eqScope(spark, table, _))
     val logRoot = new org.apache.hadoop.fs.Path(logDir(table))
-    if (fs.exists(logRoot))
-      fs.listStatus(logRoot).map(_.getPath.getName)
+    val deadManifests =
+      if (!fs.exists(logRoot)) Nil
+      else fs.listStatus(logRoot).map(_.getPath.getName).toSeq
         .filter(n => n.startsWith("m-") && n.endsWith(".json"))
-        .map(_.stripPrefix("m-").stripSuffix(".json"))
-        .filterNot(liveManifests)
-        .foreach(id => ops.delete(manifestPath(table, id)))
+        .filterNot(n =>
+          liveManifests(n.stripPrefix("m-").stripSuffix(".json")))
+        .map(n => s"_log/$n")
+    deadLog ++ deadData ++ deadManifests
+  }
+
+  def vacuum(spark: SparkSession, table: String, keepFrom: Int): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ops = new FileOps(conf)
+    val plan = vacuumPlan(spark, table, keepFrom)
+    plan.foreach(p => ops.delete(s"$table/$p"))
+    // a trimmed version must resolve to None, not this JVM's cache hits
+    invalidate(table)
+    // a mixed commit dir the file-granular sweep emptied goes too
+    plan.filter(p => p.startsWith("_snap/") && p.count(_ == '/') == 2)
+      .map(dirOf).distinct.foreach { d =>
+        val dir = new org.apache.hadoop.fs.Path(s"$table/$d")
+        val fs = dir.getFileSystem(conf)
+        if (fs.listStatus(dir).isEmpty) fs.delete(dir, true)
+      }
     // a checkpoint written before this vacuum references the trimmed
     // versions — refresh it so AS-OF resolution keeps its fast path
     // (resolution survives a stale one regardless, at walk cost)

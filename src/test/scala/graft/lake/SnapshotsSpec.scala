@@ -470,7 +470,10 @@ class SnapshotsSpec extends SparkTestBase {
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
       "spark.sql.adaptive.coalescePartitions.minPartitionSize")
     val saved = keys.map(k => k -> spark.conf.get(k, "64MB"))
-    keys.foreach(spark.conf.set(_, "1KB"))
+    // both sizes sit below any non-empty partition, so AQE never merges
+    // two tombstone partitions into one writer task, however the
+    // run-unique file names hash
+    keys.foreach(spark.conf.set(_, "1b"))
     val v2 =
       try Snapshots.deleteWhere(spark, t, col("o_totalprice") < 150000)
       finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -970,6 +973,23 @@ class SnapshotsSpec extends SparkTestBase {
       "files" -> files, "deletes" -> Nil, "renames" -> Nil)))
     val e = intercept[IllegalStateException](Snapshots.readLatest(spark, t))
     assert(e.getMessage.contains("pre-manifest"))
+    // a stamp-less object WITHOUT inline files, and a format from a
+    // newer build: both refuse reads and commits instead of guessing
+    val v1 = Json.parseObject(ops.readString(s"$t/_log/v000001.json"))
+    val unstamped = v1 - "format" + ("version" -> 2L)
+    val newer = unstamped + ("format" -> (Snapshots.LiteSnapshot.Format + 1))
+    for ((forged, phrase) <- Seq(unstamped -> "pre-manifest",
+        newer -> "log format")) {
+      ops.writeString(s"$t/_log/v000002.json", Json.render(forged))
+      val onRead = intercept[IllegalStateException](
+        Snapshots.readLatest(spark, t))
+      assert(onRead.getMessage.contains(phrase), onRead.getMessage)
+      val onAppend = intercept[IllegalStateException](
+        Snapshots.append(spark, t, orders.limit(10)))
+      assert(onAppend.getMessage.contains(phrase), onAppend.getMessage)
+      assert(Snapshots.latestVersion(spark, t).contains(2),
+        "no version may commit on top of an unreadable log object")
+    }
     org.apache.commons.io.FileUtils.deleteQuietly(new File(t).getParentFile)
   }
 
@@ -2085,6 +2105,16 @@ class SnapshotsSpec extends SparkTestBase {
     assert(v1 == 1 && n1 == 2)
     assert(Snapshots.readLatest(spark, t).get.count() == 40,
       "crash-then-replay must load once, not twice")
+    // the ledger belongs to the loading version alone: a later append's
+    // log object records none, and vacuuming the loading version ages
+    // its entries out
+    val v2 = Snapshots.append(spark, t, orders.limit(5))
+    val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
+    assert(!Json.parseObject(ops.readString(f"$t/_log/v$v2%06d.json"))
+      .contains("ingest_sources"), "the ledger must not carry forward")
+    assert(Snapshots.loadedSources(spark, t).size == 2)
+    Snapshots.vacuum(spark, t, keepFrom = v2)
+    assert(Snapshots.loadedSources(spark, t).isEmpty)
     // a racing copy-into that lands the same identities first: the OCC
     // retry re-checks the ledger and refuses instead of double-loading
     val t2 = s"$root/t2"

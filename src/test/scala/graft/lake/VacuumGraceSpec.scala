@@ -36,7 +36,29 @@ class VacuumGraceSpec extends SparkTestBase {
 
     Snapshots.setTableProperties(spark, t,
       Map("graft.vacuum.graceMs" -> "3600000"))
+    // the dry run applies the same grace: it forecasts the old orphan,
+    // not the fresh staging, and equals what the vacuum then removes
+    def tree(): Set[String] = {
+      val base = new File(t).toPath
+      val out = Set.newBuilder[String]
+      Files.walk(base).forEach { p =>
+        val rel = base.relativize(p).toString
+        if (Files.isRegularFile(p) && !rel.endsWith(".crc") &&
+          !rel.endsWith("_latest")) { out += rel; () }
+      }
+      out.result()
+    }
+    val dry = Snapshots.vacuumDryRun(spark, t, keepFrom = 1)
+    assert(dry.contains("_snap/c-crashed-old"), dry.toString)
+    assert(!dry.exists(_.contains("c-inflight-fresh")),
+      s"dry run forecasts reaping a fresh staging: $dry")
+    val forecast = dry.flatMap { p =>
+      if (new File(t, p).isDirectory) tree().filter(_.startsWith(s"$p/"))
+      else Seq(p)
+    }.toSet
+    val before = tree()
     Snapshots.vacuum(spark, t, keepFrom = 1)
+    assert(before -- tree() == forecast, "dry run != what vacuum removed")
     assert(!oldOrphan.exists(), "day-old crashed staging must reap")
     assert(inflight.exists(), "fresh staging must survive the grace")
     assert(Snapshots.readLatest(spark, t).get.count() == total,
