@@ -67,7 +67,15 @@ object GoldCompaction {
 
   /** D6 + E5 + E6 — defensive re-clean, row hash, latest-wins dedup.
     * Exposed for tests; pure plan construction. */
-  def compactFrame(df: DataFrame): DataFrame = {
+  def compactFrame(df: DataFrame): DataFrame =
+    latestPerTransaction(df).drop(SourceRows)
+
+  /** Survivor column of [[latestPerTransaction]]: how many source rows its
+    * transaction id had, so summing it over the survivors gives the
+    * partition's source total without a second pass. */
+  private val SourceRows = "_source_rows"
+
+  private def latestPerTransaction(df: DataFrame): DataFrame = {
     // pad expected columns (mergeSchema drift tolerance, :194-202)
     val expected = Schemas.silver.fields.map(_.name)
     val padded = expected.foldLeft(df)((d, c) =>
@@ -92,15 +100,18 @@ object GoldCompaction {
         Schemas.rowHashColumns.map(c =>
           coalesce(col(c).cast(StringType), lit(""))): _*)))
 
-    // E6: latest-wins dedup by transaction_id on ingest_ts (fallback to
-    // compaction time when missing), scoped to this date partition
-    val withTs = hashed
-      .withColumn("ingest_ts_f",
-        coalesce(to_timestamp(col("ingest_ts")), current_timestamp()))
-    val w = Window.partitionBy("transaction_id").orderBy(desc("ingest_ts_f"))
-    withTs.withColumn("rn", row_number().over(w))
+    // E6: latest-wins dedup by transaction_id on ingest_ts, scoped to this
+    // date partition. A missing ingest_ts sorts first, as the reference's
+    // fallback to the compaction time does (no ingest_ts is later than
+    // now); ordering on nulls instead of a folded `current_timestamp()`
+    // keeps a per-run literal out of the generated code.
+    val byTxn = Window.partitionBy("transaction_id")
+    hashed
+      .withColumn("rn", row_number().over(
+        byTxn.orderBy(to_timestamp(col("ingest_ts")).desc_nulls_first)))
+      .withColumn(SourceRows, count(lit(1)).over(byTxn))
       .filter(col("rn") === 1)
-      .drop("rn", "ingest_ts_f")
+      .drop("rn")
   }
 
   /** Compact one date partition; returns its audit metrics. */
@@ -121,30 +132,30 @@ object GoldCompaction {
     try {
       val df = spark.read.option("mergeSchema", "true").parquet(inputPath)
       // one pass: total, survivors, null/dq metrics over survivors (E4)
-      val deduped = compactFrame(df).persist()
+      val deduped = latestPerTransaction(df).persist()
       try {
         val agg = deduped.agg(
+          coalesce(sum(col(SourceRows)), lit(0L)).as("total"),
           count(lit(1)).as("after"),
           sum(when(col("timestamp").isNull, 1L).otherwise(0L)).as("null_ts"),
           sum(when(col("store_id").isNull, 1L).otherwise(0L)).as("null_store"),
           sum(when(col("revenue").isNotNull && col("quantity").isNotNull &&
             (abs(col("revenue") - col("quantity") * col("unit_price")) > 0.01),
             1L).otherwise(0L)).as("dq")).collect()(0)
-        val total = df.count()
+        val after = agg.getAs[Long]("after")
 
         // A4: sorted, compacted, idempotent per-partition overwrite (E7).
         // `date` is dropped from the files: the partition directory carries
         // it (the reference instead embeds an all-null date column that
         // collides with partition inference on read-back).
-        val sorted = deduped.drop("date").orderBy(col("transaction_id"))
+        val sorted = deduped.drop("date", SourceRows).orderBy(col("transaction_id"))
           .coalesce(conf.coalesceFiles)
         if (conf.s3SafeCommit)
-          ManifestCommit.commit(spark, fileOps, sorted, outputPath,
-            agg.getAs[Long]("after"))
+          ManifestCommit.commit(spark, fileOps, sorted, outputPath, after)
         else
           sorted.write.mode("overwrite").parquet(outputPath)
 
-        val m = metrics("written", total, agg.getAs[Long]("after"),
+        val m = metrics("written", agg.getAs[Long]("total"), after,
           agg.getAs[Long]("null_ts"), agg.getAs[Long]("null_store"),
           agg.getAs[Long]("dq"))
         fileOps.writeString(conf.layout.auditMetrics(date), renderMetrics(m))

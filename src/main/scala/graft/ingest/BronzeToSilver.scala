@@ -1,8 +1,6 @@
 package graft.ingest
 
-import java.util.regex.Pattern
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,16 +12,19 @@ import graft.model.RejectRow
   *
   * Spark-native re-expression of the reference Glue job
   * (`scripts/glue_job_raw_to_processed.py:95-392`): schema is discovered
-  * per file on the driver (bounded 20-line sample + header row), the rest
-  * is one declarative column pipeline Catalyst can optimize end-to-end.
-  * Two actions total (one count-aggregation, one per sink) versus the
-  * reference's five.
+  * per file on the driver from one bounded sample whose first line is the
+  * header. The rest is one declarative [[parse]] — each distinct line split,
+  * projected and timestamp-parsed once, cached — and a [[route]] that
+  * filters the cache on its `reject_reason`. After the sample, one
+  * count aggregation and one action per sink (JSON, CSV, silver) read the
+  * cache; the reference re-executes its whole pipeline for each of five
+  * actions.
   *
   * Deliberate fixes over the reference (SURVEY §2.G):
   *  - Q1: delimiter fallback implements the intended "zero occurrences →
   *    comma" rule (the original NameErrors whenever the sniffer succeeds).
-  *  - Q3: the delimiter is regex-quoted before `split` (`|` would otherwise
-  *    split every character).
+  *  - Q3: the delimiter is regex-escaped before `split` (`|` would
+  *    otherwise split every character).
   *  - Q4: the business-DQ predicate is null-safe by default — rows whose
   *    numerics clean to null are routed to BUSINESS_LOGIC_FAIL instead of
   *    silently vanishing under 3VL. `strictNullDq = false` restores the
@@ -65,29 +66,29 @@ object BronzeToSilver {
     // A1 + C1: raw text lines, invisible-char scrub, blank filter
     val clean = scrubbedLines(spark.read.text(inputPath))
 
-    // C2: driver-side delimiter detection over a bounded sample
+    // C2: driver-side delimiter detection over a bounded sample, whose
+    // first line is the header (C3/C4: extraction + canonical resolution)
     val sample = clean.limit(conf.sampleLines).collect().map(_.getString(0)).toSeq
+    val headerLine = sample.headOption.getOrElse(throw new IllegalArgumentException(
+      s"$inputPath has no non-blank line, so no header"))
     val delimiter = Delimiters.detectFromSample(sample)
-
-    // C3/C4: header extraction + canonical resolution
-    val headerLine = clean.first().getString(0)
     val finalHeaders = Headers.resolveHeader(
       Delimiters.splitKeepingEmpty(headerLine, delimiter))
 
-    val (goodPlan, rejectsPlan) =
-      transform(clean, delimiter, headerLine, Headers.indexMap(finalHeaders), conf)
-    // The two frames feed four sinks/actions; persist so the text parse +
-    // clean + dedup pipeline runs once, not once per action (the reference
-    // re-executes it five times).
-    val good = goodPlan.persist()
-    val rejects = rejectsPlan.persist()
+    // The count and the three sinks below read one cached parse: every
+    // distinct line is split, projected and timestamp-parsed once, and the
+    // routing filters read its `reject_reason` instead of re-deriving it.
+    val parsed = parse(clean, delimiter, headerLine,
+      Headers.indexMap(finalHeaders), conf).persist()
 
     try {
+    val (good, rejects) = route(parsed, conf)
 
-    // E4 as one aggregation pass instead of five separate counts
-    val counts = good.select(lit(null).cast(StringType).as("reject_reason"))
-      .unionAll(rejects.select(col("reject_reason")))
-      .groupBy("reject_reason").count().collect()
+    // E4 as one aggregation pass over the cache instead of five separate
+    // counts
+    val counts = parsed.filter(col("sink_rows") > 0)
+      .groupBy("reject_reason").agg(sum("sink_rows"))
+      .collect()
       .map(r => Option(r.getString(0)).getOrElse("GOOD") -> r.getLong(1))
       .toMap
     val goodCount = counts.getOrElse("GOOD", 0L)
@@ -116,8 +117,7 @@ object BronzeToSilver {
     Result(goodCount + rejectCounts.values.sum, goodCount, rejectCounts, dates)
 
     } finally {
-      good.unpersist()
-      rejects.unpersist()
+      parsed.unpersist()
       ()
     }
   }
@@ -132,100 +132,127 @@ object BronzeToSilver {
   /** The declarative transform: (good silver frame, aligned rejects frame).
     * Pure plan construction — callable from tests without touching disk. */
   def transform(clean: DataFrame, delimiter: Char, headerLine: String,
-      indexMap: Map[String, Int], conf: Conf): (DataFrame, DataFrame) = {
+      indexMap: Map[String, Int], conf: Conf): (DataFrame, DataFrame) =
+    route(parse(clean, delimiter, headerLine, indexMap, conf), conf)
 
-    // C5: drop (re-embedded) header lines, split into cells — regex-quoted (Q3)
-    val split_df = clean.filter(col("value") =!= headerLine)
-      .withColumn("cols",
-        split(col("value"), Pattern.quote(delimiter.toString), -1))
+  /** Rows the reference's null-unsafe DQ predicate (`strictNullDq = false`)
+    * loses under 3VL: [[route]] sends them to no sink. */
+  private val droppedByNullDq = "DROPPED_BY_NULL_DQ"
 
-    // C6: positional projection onto the canonical schema. `get` (not
-    // `getItem`/`element_at`) so a short row — e.g. a `;`-joined line in a
-    // comma file that split to one field — yields nulls for the missing
-    // positions (→ structural reject) instead of erroring under ANSI.
-    def extr(name: String): Column =
-      indexMap.get(name)
-        .map(i => get(col("cols"), lit(i)))
-        .getOrElse(lit(null).cast(StringType))
+  private val lineRejectReasons =
+    Seq(RejectRow.reasonMissingRequired, RejectRow.reasonInvalidTimestamp)
 
-    val extracted = split_df.select(
-      extr("transaction_id").as("transaction_id"),
-      extr("store_id").as("store_id"),
-      extr("timestamp").as("timestamp_raw"),
-      extr("item_id").as("item_id"),
-      extr("item_category").as("item_category"),
-      extr("quantity").as("quantity"),
-      extr("unit_price").as("unit_price"),
-      extr("revenue").as("revenue"),
-      extr("payment_method").as("payment_method"),
-      extr("customer_id").as("customer_id"),
-      col("value").as("raw_row"))
+  /** One row per distinct data line: its cells, typed values, the reason
+    * it is rejected (null for a good row) and how many sink rows it
+    * becomes (`sink_rows`). Nothing per-file is inlined into generated
+    * code — the delimiter regex and the header line are string literals
+    * and the header positions one array literal, all reference objects —
+    * so every file layout reuses one compiled stage. */
+  def parse(clean: DataFrame, delimiter: Char, headerLine: String,
+      indexMap: Map[String, Int], conf: Conf): DataFrame = {
+
+    // E2: dedup on the line itself — every other column is a function of
+    // it and of per-file constants, so this equals a full-row dedup.
+    // `copies` keeps how often the line was sent.
+    val lines = clean.filter(col("value") =!= headerLine)
+      .groupBy(col("value").as("raw_row"))
+      .agg(count(lit(1)).as("copies"))
+
+    // C5: split once, on a fast-path regex (Q3); C6: positional projection
+    // onto the canonical schema, positions as data (-1 = column absent).
+    // `get` (not `getItem`/`element_at`) so a short row — e.g. a `;`-joined
+    // line in a comma file that split to one field — yields nulls for the
+    // missing positions (→ structural reject) instead of erroring under ANSI.
+    // The `size` bound repeats what `get` does, but gives the split a second
+    // consumer: with one, the optimizer inlines it into the lambda, where
+    // it would run once per position instead of once per line.
+    val positions = typedLit(Headers.canonical.map(indexMap.getOrElse(_, -1)))
+    val cols = col("cols")
+    val cells = lines
+      .withColumn("cols", split(col("raw_row"), Delimiters.regex(delimiter), -1))
+      .select(col("raw_row"), col("copies"), functions.transform(positions,
+        p => when(p < size(cols), get(cols, p))).as("cells"))
+    val extracted = cells.select(
+      Seq(col("raw_row"), col("copies")) ++ Headers.canonical.zipWithIndex.map {
+        case (name, i) =>
+          get(col("cells"), lit(i)).as(if (name == "timestamp") "timestamp_raw" else name)
+      }: _*)
 
     // D1: structural gate — any required field null
     val missingReq = Headers.required.toSeq.sorted
       .map(c => col(if (c == "timestamp") "timestamp_raw" else c).isNull)
       .reduce(_ || _)
-    val structRejects = extracted.filter(missingReq)
-      .withColumn("reject_reason", lit(RejectRow.reasonMissingRequired))
-    val structGood = extracted.filter(!missingReq)
 
-    // D2: regex-gated multi-format timestamp parse
-    val parsed = structGood.withColumn("timestamp_parsed",
-      Timestamps.parseMultiFormat(col("timestamp_raw")))
-    val tsRejects = parsed.filter(col("timestamp_parsed").isNull)
-      .withColumn("reject_reason", lit(RejectRow.reasonInvalidTimestamp))
-    val tsGood = parsed.filter(col("timestamp_parsed").isNotNull)
-
-    // D3/D4: numeric cleaning (try_cast keeps reference null-on-garbage
-    // semantics under ANSI); E1: lineage columns
-    val enriched = tsGood
-      .withColumn("unit_price", Numerics.cleanCurrency(col("unit_price")))
-      .withColumn("revenue", Numerics.cleanCurrency(col("revenue")))
-      .withColumn("quantity", Numerics.cleanQuantity(col("quantity")))
-      .withColumn("timestamp", col("timestamp_parsed"))
-      .withColumn("ingest_run_id", lit(conf.ingestRunId))
-      .withColumn("source_file", lit(conf.sourceFile))
-      .withColumn("ingest_ts", current_timestamp())
-      .withColumn("date", to_date(col("timestamp")))
-      // E2: full-row dedup — only kills exact intra-file duplicates because
-      // raw_row + lineage participate (semantics preserved from :298)
-      .dropDuplicates()
+    // D2: regex-gated multi-format timestamp parse; D3/D4: numeric
+    // cleaning (try_cast keeps reference null-on-garbage semantics under
+    // ANSI) into `clean_*`, the raw cells staying for the reject record
+    val typed = extracted
+      .withColumn("missing_required", missingReq)
+      .withColumn("timestamp_parsed", when(!col("missing_required"),
+        Timestamps.parseMultiFormat(col("timestamp_raw"))))
+      .withColumn("clean_quantity", Numerics.cleanQuantity(col("quantity")))
+      .withColumn("clean_unit_price", Numerics.cleanCurrency(col("unit_price")))
+      .withColumn("clean_revenue", Numerics.cleanCurrency(col("revenue")))
 
     // D5: business DQ rule, null-safe by default (Q4)
     val dqExpr =
-      col("timestamp").isNull ||
-        (abs(col("revenue") - col("quantity") * col("unit_price")) > 0.01)
+      abs(col("clean_revenue") - col("clean_quantity") * col("clean_unit_price")) > 0.01
     val dqBad = if (conf.strictNullDq) coalesce(dqExpr, lit(true)) else dqExpr
-    val dqRejects = enriched.filter(dqBad)
-      .withColumn("raw_row", lit(null).cast(StringType))
-      .withColumn("reject_reason", lit(RejectRow.reasonBusinessLogic))
-    val good = enriched.filter(if (conf.strictNullDq) !dqBad else !dqExpr)
-      .select("transaction_id", "store_id", "timestamp", "item_id",
-        "item_category", "quantity", "unit_price", "revenue",
-        "payment_method", "customer_id", "ingest_run_id", "source_file",
-        "ingest_ts", "date")
+    val reason = when(col("missing_required"), lit(RejectRow.reasonMissingRequired))
+      .when(col("timestamp_parsed").isNull, lit(RejectRow.reasonInvalidTimestamp))
+      .when(dqBad, lit(RejectRow.reasonBusinessLogic))
+      .when(dqBad.isNull, lit(droppedByNullDq))
+    // How many sink rows the line becomes: a line reject keeps its raw
+    // cells and is reported once per copy, as the reference does; an
+    // accepted line once (E2); a line the null-unsafe DQ drops, never.
+    val sinkRows = when(col("reject_reason").isin(lineRejectReasons: _*), col("copies"))
+      .when(col("reject_reason").eqNullSafe(droppedByNullDq), lit(0L))
+      .otherwise(lit(1L))
+    typed
+      .withColumn("date", to_date(col("timestamp_parsed")))
+      .withColumn("reject_reason", reason)
+      .withColumn("sink_rows", sinkRows)
+      .drop("missing_required")
+  }
 
-    // E3: align to the fixed 13-column reject schema and union
-    val rejects = Seq(structRejects, tsRejects, dqRejects)
-      .map(alignRejectSchema)
-      .reduce(_.unionByName(_))
+  /** Routes a [[parse]]d frame: (good silver frame, aligned rejects frame).
+    * Each sink is one filter on `reject_reason`. */
+  def route(parsed: DataFrame, conf: Conf): (DataFrame, DataFrame) = {
+    val reason = col("reject_reason")
+
+    // E1: lineage columns, added after the dedup
+    val good = parsed.filter(reason.isNull)
+      .select(col("transaction_id"), col("store_id"),
+        col("timestamp_parsed").as("timestamp"), col("item_id"),
+        col("item_category"), col("clean_quantity").as("quantity"),
+        col("clean_unit_price").as("unit_price"),
+        col("clean_revenue").as("revenue"), col("payment_method"),
+        col("customer_id"), lit(conf.ingestRunId).as("ingest_run_id"),
+        lit(conf.sourceFile).as("source_file"),
+        current_timestamp().as("ingest_ts"), col("date"))
+
+    // E3: every reject, `sink_rows` times, in the fixed 13-column schema;
+    // D5 rejects carry the cleaned numerics and no raw row
+    val dq = reason === RejectRow.reasonBusinessLogic
+    def cleanedIfDq(c: String) = when(dq, col(s"clean_$c").cast(StringType)).otherwise(col(c))
+    val rejects = alignRejectSchema(parsed
+      .filter(reason.isNotNull && col("sink_rows") > 0)
+      .withColumn("copy", explode(sequence(lit(1L), col("sink_rows"))))
+      .withColumn("raw_row", when(!dq, col("raw_row")))
+      .withColumn("quantity", cleanedIfDq("quantity"))
+      .withColumn("unit_price", cleanedIfDq("unit_price"))
+      .withColumn("revenue", cleanedIfDq("revenue")))
 
     (good, rejects)
   }
 
-  /** E3 — pad to the 13 reject columns (strings except timestamp_parsed),
-    * preserving the reference's column order. */
-  def alignRejectSchema(df: DataFrame): DataFrame = {
-    val cols = RejectRow.columns.map {
-      case "timestamp_parsed" =>
-        (if (df.columns.contains("timestamp_parsed")) col("timestamp_parsed")
-         else lit(null).cast(TimestampType)).as("timestamp_parsed")
-      case c =>
-        (if (df.columns.contains(c)) col(c).cast(StringType)
-         else lit(null).cast(StringType)).as(c)
-    }
-    df.select(cols: _*)
-  }
+  /** E3 — the 13 reject columns in the reference's order, strings except
+    * timestamp_parsed. Every [[route]]d reject frame carries all of them. */
+  def alignRejectSchema(df: DataFrame): DataFrame =
+    df.select(RejectRow.columns.map {
+      case c @ "timestamp_parsed" => col(c)
+      case c => col(c).cast(StringType).as(c)
+    }: _*)
 
   /** EP1 orchestration: preflight + routing + ETL for one raw file.
     *

@@ -41,8 +41,16 @@ object Delimiters {
     }
   }
 
+  /** The split regex matching `delim` literally (Q3: a bare `|` would
+    * split every character). A regex metacharacter is escaped with one
+    * backslash and any other delimiter stays bare: both forms take
+    * `String.split`'s single-character fast path, where
+    * `Pattern.quote`'s `\Q…\E` compiles a `Pattern` on every call. */
+  def regex(delim: Char): String =
+    if (".$|()[{^?*+\\".indexOf(delim) >= 0) s"\\$delim" else delim.toString
+
   /** Literal split that keeps trailing empty fields (Python-split
     * semantics, which both reference sites rely on). */
   def splitKeepingEmpty(s: String, delim: Char): Seq[String] =
-    s.split(java.util.regex.Pattern.quote(delim.toString), -1).toSeq
+    s.split(regex(delim), -1).toSeq
 }

@@ -63,6 +63,20 @@ class GoldCompactionSpec extends SparkTestBase {
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
+  test("latest-wins: a row with no ingest_ts outranks every stamped row, as the compaction time would") {
+    val stamped = Seq("2024-03-01 01:00:00", "2024-03-01 02:00:00")
+      .map(ts => sale("T1", "2024-03-01", 1L, 2.0, ts))
+    val df = (stamped.toDF().withColumn("source_file", lit("stamped")) union
+      Seq(sale("T1", "2024-03-01", 1L, 2.0, "2024-03-01 00:00:00")).toDF()
+        .withColumn("source_file", lit("unstamped"))
+        .withColumn("ingest_ts", lit(null).cast("timestamp")))
+    val survivors = GoldCompaction.compactFrame(df).select("source_file").as[String].collect()
+    assert(survivors.toSeq == Seq("unstamped"))
+    val latest = GoldCompaction.compactFrame(stamped.toDF())
+      .select(col("ingest_ts").cast("string")).as[String].collect()
+    assert(latest.toSeq == Seq("2024-03-01 02:00:00"))
+  }
+
   test("manifest commit: same rows as overwrite mode, invisible to dir listings") {
     val root = java.nio.file.Files.createTempDirectory("graft_goldman_").toString
     val layout = LakeLayout(root)
