@@ -3,22 +3,27 @@ package graft.gold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.lake.{FileOps, Json, LakeLayout}
 import graft.model.{PartitionMetrics, Schemas}
 
-/** Silver→gold incremental compaction: per-date dedup/compact into
-  * `gold/fact_sales/date=…` + audit metrics.
+/** Silver→gold incremental compaction: dedup/compact the selected dates
+  * into `gold/fact_sales/date=…` + audit metrics.
   *
   * Spark-native re-expression of
   * `scripts/incremental_auto_compaction.py:89-303`, with:
   *  - partition discovery via Hadoop FS listing with a *working* date regex
   *    (the reference's raw-string regex never matches, SURVEY §2.G Q2);
-  *  - all post-dedup metrics in ONE aggregation pass over the window
-  *    instead of five separate count jobs (E4 note) — at 100 TB each extra
-  *    count is a full partition re-scan;
-  *  - per-partition overwrite preserved (idempotent re-runs,
+  *  - every selected date compacted in ONE plan where the reference loops
+  *    date by date: a declared-schema read of the selected date directories
+  *    (no footer-merge job, no listing of the other dates), one exchange
+  *    that the latest-wins window reuses, and one partitioned write;
+  *  - every date's metrics in ONE aggregation over the deduped frame
+  *    instead of five count jobs per date (E4 note) — at 100 TB each extra
+  *    count is a full re-scan;
+  *  - each written date replaced whole (idempotent re-runs,
   *    `docs/gold_job.md:33-34`).
   */
 object GoldCompaction {
@@ -29,19 +34,14 @@ object GoldCompaction {
       reprocess: Boolean = false,
       forceDates: Seq[String] = Nil,
       coalesceFiles: Int = 4,
-      /** Date partitions compacted concurrently. Each partition is an
-        * independent Spark job writing its own directory, so they pipeline
-        * through the scheduler; the reference processes dates strictly
-        * sequentially (SURVEY §7 "hard parts"). */
-      concurrency: Int = 4,
       /** Catalog table to refresh after new partitions land — the Spark form
         * of the reference's optional post-run crawler trigger
         * (`incremental_auto_compaction.py:311-325`). Matches
         * `LakeCatalog.factSalesTable` (kept a literal so the gold layer does
         * not depend on the query layer). `None` disables. */
       refreshTable: Option[String] = Some("retail_db.fact_sales"),
-      /** Commit each partition through [[ManifestCommit]] instead of the
-        * in-place overwrite: data lands in a job-unique `_commits/c-<id>`
+      /** Commit each date through [[ManifestCommit]] instead of the
+        * partitioned overwrite: data lands in a job-unique `_commits/c-<id>`
         * dir and a small `_manifest.json` is published last, so the write
         * is crash/S3-safe without relying on rename atomicity. Readers
         * must resolve the manifest ([[ManifestCommit.readCommitted]]);
@@ -72,27 +72,25 @@ object GoldCompaction {
 
   /** Survivor column of [[latestPerTransaction]]: how many source rows its
     * transaction id had, so summing it over the survivors gives the
-    * partition's source total without a second pass. */
+    * date's source total without a second pass. */
   private val SourceRows = "_source_rows"
 
-  private def latestPerTransaction(df: DataFrame): DataFrame = {
-    // pad expected columns (mergeSchema drift tolerance, :194-202)
-    val expected = Schemas.silver.fields.map(_.name)
-    val padded = expected.foldLeft(df)((d, c) =>
-      if (d.columns.contains(c)) d
-      else d.withColumn(c, lit(null).cast(StringType)))
+  /** D6 targets: column, type, and the characters the re-clean strips. */
+  private val Numerics = Seq(
+    ("quantity", LongType, "[^0-9-]"),
+    ("unit_price", DoubleType, "[^0-9.\\-()]"),
+    ("revenue", DoubleType, "[^0-9.\\-()]"))
 
-    // D6: defensive numeric re-normalization (strings may arrive via drift)
-    val cleaned = padded
-      .withColumn("quantity",
-        regexp_replace(col("quantity").cast(StringType), "[^0-9-]", "")
-          .try_cast(LongType))
-      .withColumn("unit_price",
-        regexp_replace(col("unit_price").cast(StringType), "[^0-9.\\-()]", "")
-          .try_cast(DoubleType))
-      .withColumn("revenue",
-        regexp_replace(col("revenue").cast(StringType), "[^0-9.\\-()]", "")
-          .try_cast(DoubleType))
+  private def latestPerTransaction(df: DataFrame): DataFrame = {
+    // D6: defensive numeric re-normalization of string drift. A typed
+    // column is only cast: Spark renders a double ≥1e7 or <1e-3 in
+    // scientific notation, which the regex would corrupt.
+    val cleaned = Numerics.foldLeft(df) { case (d, (c, t, junk)) =>
+      d.withColumn(c,
+        if (d.schema(c).dataType == StringType)
+          regexp_replace(col(c), junk, "").try_cast(t)
+        else col(c).cast(t))
+    }
 
     // E5: md5 row hash — column order is part of the contract
     val hashed = cleaned.withColumn("row_hash",
@@ -100,12 +98,14 @@ object GoldCompaction {
         Schemas.rowHashColumns.map(c =>
           coalesce(col(c).cast(StringType), lit(""))): _*)))
 
-    // E6: latest-wins dedup by transaction_id on ingest_ts, scoped to this
-    // date partition. A missing ingest_ts sorts first, as the reference's
-    // fallback to the compaction time does (no ingest_ts is later than
-    // now); ordering on nulls instead of a folded `current_timestamp()`
-    // keeps a per-run literal out of the generated code.
-    val byTxn = Window.partitionBy("transaction_id")
+    // E6: latest-wins dedup by transaction_id on ingest_ts, scoped to its
+    // date when the frame has one. A missing ingest_ts sorts first, as the
+    // reference's fallback to the compaction time does (no ingest_ts is
+    // later than now); ordering on nulls instead of a folded
+    // `current_timestamp()` keeps a per-run literal out of the generated
+    // code.
+    val byTxn = Window.partitionBy(
+      Seq("date", "transaction_id").filter(df.columns.contains).map(col): _*)
     hashed
       .withColumn("rn", row_number().over(
         byTxn.orderBy(to_timestamp(col("ingest_ts")).desc_nulls_first)))
@@ -114,83 +114,30 @@ object GoldCompaction {
       .drop("rn")
   }
 
-  /** Compact one date partition; returns its audit metrics. */
-  def compactPartition(spark: SparkSession, date: String, conf: Conf): PartitionMetrics = {
-    val inputPath = conf.layout.processedDate(date)
-    val outputPath = conf.layout.goldDate(date)
-    val fileOps = new FileOps(spark.sparkContext.hadoopConfiguration)
-    val now = java.time.Instant.now().toString
-
-    def metrics(status: String, total: Long = 0, after: Long = 0,
-        nullTs: Long = 0, nullStore: Long = 0, dq: Long = 0,
-        error: Option[String] = None) =
-      PartitionMetrics(date, inputPath, outputPath, total, after,
-        total - after, nullTs, nullStore, dq, now, status, error)
-
-    if (!fileOps.exists(inputPath)) return metrics("no_input")
-
-    try {
-      val df = spark.read.option("mergeSchema", "true").parquet(inputPath)
-      // one pass: total, survivors, null/dq metrics over survivors (E4)
-      val deduped = latestPerTransaction(df).persist()
-      try {
-        val agg = deduped.agg(
-          coalesce(sum(col(SourceRows)), lit(0L)).as("total"),
-          count(lit(1)).as("after"),
-          sum(when(col("timestamp").isNull, 1L).otherwise(0L)).as("null_ts"),
-          sum(when(col("store_id").isNull, 1L).otherwise(0L)).as("null_store"),
-          sum(when(col("revenue").isNotNull && col("quantity").isNotNull &&
-            (abs(col("revenue") - col("quantity") * col("unit_price")) > 0.01),
-            1L).otherwise(0L)).as("dq")).collect()(0)
-        val after = agg.getAs[Long]("after")
-
-        // A4: sorted, compacted, idempotent per-partition overwrite (E7).
-        // `date` is dropped from the files: the partition directory carries
-        // it (the reference instead embeds an all-null date column that
-        // collides with partition inference on read-back).
-        val sorted = deduped.drop("date", SourceRows).orderBy(col("transaction_id"))
-          .coalesce(conf.coalesceFiles)
-        if (conf.s3SafeCommit)
-          ManifestCommit.commit(spark, fileOps, sorted, outputPath, after)
-        else
-          sorted.write.mode("overwrite").parquet(outputPath)
-
-        val m = metrics("written", agg.getAs[Long]("total"), after,
-          agg.getAs[Long]("null_ts"), agg.getAs[Long]("null_store"),
-          agg.getAs[Long]("dq"))
-        fileOps.writeString(conf.layout.auditMetrics(date), renderMetrics(m))
-        m
-      } finally deduped.unpersist()
-    } catch {
-      case e: Exception =>
-        val m = metrics("failed", error = Some(e.toString))
-        fileOps.writeString(conf.layout.auditMetrics(date), renderMetrics(m))
-        m
-    }
-  }
-
-  /** EP2 — full run: discover, select, compact each, write run summary. */
+  /** EP2 — full run: discover, select, compact, write run summary. */
   def run(spark: SparkSession, conf: Conf): RunSummary = {
     val fileOps = new FileOps(spark.sparkContext.hadoopConfiguration)
     val processedDates = fileOps.listPartitionDates(conf.layout.processed)
     val goldDates = fileOps.listPartitionDates(conf.layout.goldFactSales)
     val selected = selectPartitions(processedDates, goldDates, conf)
-    val results = compactAll(spark, selected, conf)
+    val results = compact(spark, fileOps, selected, conf)
     val summary = RunSummary(selected, results)
     fileOps.writeString(conf.layout.auditSummary, Json.render(Map(
       "run_ts_utc" -> java.time.Instant.now().toString,
       "processed_partitions_count" -> selected.size,
       "results" -> results.map(metricsMap))))
-    // F1 epilogue — partition discovery for newly-written dates, so a
-    // registered analyst table never goes stale (the reference optionally
-    // re-triggers the crawler: `incremental_auto_compaction.py:311-325`).
-    // MSCK only scans the partition directory listing, not the data.
-    // Best-effort like the reference's try/except: a refresh failure (e.g.
-    // the table points at another lake whose files are gone) must not fail
-    // the compaction that already committed.
-    if (results.exists(_.status == "written"))
+    // F1 epilogue — register the written dates, so a registered analyst
+    // table never goes stale (the reference optionally re-triggers the
+    // crawler: `incremental_auto_compaction.py:311-325`) without listing
+    // the other gold dates; ADD PARTITION also refreshes the table's cached
+    // file listing of a rewritten date. Best-effort like the reference's
+    // try/except: a refresh failure (e.g. the table points at another lake
+    // whose files are gone) must not fail the compaction that committed.
+    val written = results.filter(_.status == "written").map(_.target_date)
+    if (written.nonEmpty)
       conf.refreshTable.filter(spark.catalog.tableExists).foreach { t =>
-        try spark.sql(s"MSCK REPAIR TABLE $t")
+        try spark.sql(s"ALTER TABLE $t ADD IF NOT EXISTS " +
+          written.map(d => s"PARTITION (date = '$d')").mkString(" "))
         catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[gold] catalog refresh of $t failed: $e")
@@ -199,25 +146,76 @@ object GoldCompaction {
     summary
   }
 
-  /** Compact the selected dates `conf.concurrency` at a time; results come
-    * back in input order. Partitions are disjoint output dirs, so
-    * concurrent jobs never conflict. */
-  private def compactAll(spark: SparkSession, dates: Seq[String],
-      conf: Conf): Seq[PartitionMetrics] =
-    if (dates.size <= 1 || conf.concurrency <= 1)
-      dates.map(compactPartition(spark, _, conf))
-    else {
-      import java.util.concurrent.Executors
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = Executors.newFixedThreadPool(conf.concurrency)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try
-        Await.result(
-          Future.sequence(dates.map(d => Future(compactPartition(spark, d, conf)))),
-          Duration.Inf)
-      finally pool.shutdown()
+  /** Compact every selected date in one plan; metrics come back in `dates`
+    * order. A date whose silver directory is gone or empty is `no_input`.
+    * Any failure fails every date of the run: the default sink commits all
+    * dates in one job, so nothing of the run is visible and the previous
+    * gold of each date stays as it was. */
+  private def compact(spark: SparkSession, fileOps: FileOps,
+      dates: Seq[String], conf: Conf): Seq[PartitionMetrics] = {
+    val layout = conf.layout
+    val now = java.time.Instant.now().toString
+    def metrics(date: String, status: String, total: Long = 0,
+        after: Long = 0, nullTs: Long = 0, nullStore: Long = 0, dq: Long = 0,
+        error: Option[String] = None) =
+      PartitionMetrics(date, layout.processedDate(date), layout.goldDate(date),
+        total, after, total - after, nullTs, nullStore, dq, now, status, error)
+    def audited(m: PartitionMetrics): PartitionMetrics = {
+      fileOps.writeString(layout.auditMetrics(m.target_date), renderMetrics(m))
+      m
     }
+
+    val inputs = dates.filter(d => fileOps.exists(layout.processedDate(d)))
+    if (inputs.isEmpty) return dates.map(metrics(_, "no_input"))
+    try {
+      // The declared schema reads an absent column as null: no footer
+      // merge. One range exchange on (date, transaction_id) feeds the window
+      // and cuts the input into ordered runs (E7), one per advisory size of
+      // silver and at most `coalesceFiles`; a single run samples nothing.
+      val silver = spark.read.schema(Schemas.silver)
+        .option("basePath", layout.processed)
+        .parquet(inputs.map(layout.processedDate): _*)
+      val runs = (silver.queryExecution.optimizedPlan.stats.sizeInBytes /
+        spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
+        .min(conf.coalesceFiles).toInt
+      val deduped = latestPerTransaction(silver.repartitionByRange(
+        runs, col("date"), col("transaction_id"))).persist()
+      try {
+        // E4: every date's metrics in one pass over the survivors
+        val byDate = deduped.groupBy(col("date").cast(StringType)).agg(
+          sum(col(SourceRows)),
+          count(lit(1)),
+          count_if(col("timestamp").isNull),
+          count_if(col("store_id").isNull),
+          count_if(abs(col("revenue") - col("quantity") * col("unit_price")) > 0.01))
+          .collect().map(r => r.getString(0) -> r).toMap
+        val results = dates.map(d => byDate.get(d).fold(metrics(d, "no_input")) { r =>
+          metrics(d, "written", r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4), r.getLong(5))
+        })
+
+        // A4: sorted, compacted, idempotent overwrite of each written date.
+        // `date` is not stored in the files: the partition directory
+        // carries it (the reference instead embeds an all-null date column
+        // that collides with partition inference on read-back).
+        val gold = deduped.drop(SourceRows)
+        if (conf.s3SafeCommit)
+          results.filter(_.status == "written").foreach { m =>
+            ManifestCommit.commit(spark, fileOps,
+              gold.filter(col("date") === m.target_date).drop("date"),
+              layout.goldDate(m.target_date), m.rows_after_dedup)
+          }
+        else if (byDate.nonEmpty)
+          gold.sortWithinPartitions("date", "transaction_id").write
+            .mode("overwrite").option("partitionOverwriteMode", "dynamic")
+            .partitionBy("date").parquet(layout.goldFactSales)
+        results.map(m => if (m.status == "written") audited(m) else m)
+      } finally deduped.unpersist()
+    } catch {
+      case e: Exception =>
+        dates.map(d => audited(metrics(d, "failed", error = Some(e.toString))))
+    }
+  }
 
   private def metricsMap(m: PartitionMetrics): Map[String, Any] = Map(
     "target_date" -> m.target_date,

@@ -255,7 +255,7 @@ class IngestE2ESpec extends SparkTestBase with BeforeAndAfterAll {
     assert(ds.filter(f => f.quantity.exists(_ >= 0)).count() > 0)
   }
 
-  test("F1 epilogue: compaction refreshes the registered catalog table (MSCK)") {
+  test("F1 epilogue: compaction registers its dates in the catalog table") {
     import graft.queries.LakeCatalog
     import org.apache.spark.sql.functions.col
     LakeCatalog.registerFactSales(spark, layout)
