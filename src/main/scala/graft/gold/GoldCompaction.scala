@@ -39,15 +39,7 @@ object GoldCompaction {
         * (`incremental_auto_compaction.py:311-325`). Matches
         * `LakeCatalog.factSalesTable` (kept a literal so the gold layer does
         * not depend on the query layer). `None` disables. */
-      refreshTable: Option[String] = Some("retail_db.fact_sales"),
-      /** Commit each date through [[ManifestCommit]] instead of the
-        * partitioned overwrite: data lands in a job-unique `_commits/c-<id>`
-        * dir and a small `_manifest.json` is published last, so the write
-        * is crash/S3-safe without relying on rename atomicity. Readers
-        * must resolve the manifest ([[ManifestCommit.readCommitted]]);
-        * the default stays the directory-layout write the catalog table
-        * and oracles read. */
-      s3SafeCommit: Boolean = false)
+      refreshTable: Option[String] = Some("retail_db.fact_sales"))
 
   final case class RunSummary(
       processedPartitions: Seq[String],
@@ -199,13 +191,7 @@ object GoldCompaction {
         // carries it (the reference instead embeds an all-null date column
         // that collides with partition inference on read-back).
         val gold = deduped.drop(SourceRows)
-        if (conf.s3SafeCommit)
-          results.filter(_.status == "written").foreach { m =>
-            ManifestCommit.commit(spark, fileOps,
-              gold.filter(col("date") === m.target_date).drop("date"),
-              layout.goldDate(m.target_date), m.rows_after_dedup)
-          }
-        else if (byDate.nonEmpty)
+        if (byDate.nonEmpty)
           gold.sortWithinPartitions("date", "transaction_id").write
             .mode("overwrite").option("partitionOverwriteMode", "dynamic")
             .partitionBy("date").parquet(layout.goldFactSales)

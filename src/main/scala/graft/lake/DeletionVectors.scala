@@ -42,7 +42,7 @@ object DeletionVectors {
   private def withPos(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(table)
       .withColumn("_dv_file",
-        LakePaths.relFileCol(LakePaths.tableRootPath(spark, table)))
+        LakePaths.relFileCol(LakePaths.tableRoot(spark, table)))
       .withColumn("_dv_pos", col("_metadata.row_index"))
 
   /** Record `predicate` rows as a new deletion-vector sidecar WITHOUT

@@ -20,40 +20,57 @@ import org.apache.spark.sql.functions._
   */
 object LakePaths {
 
-  /** The table root as a scheme-free absolute path (URI path component
-    * of the fully-qualified location). */
-  def tableRootPath(spark: SparkSession, table: String): String = {
+  /** The table root's fully-qualified URI (scheme, authority, path). */
+  def tableRoot(spark: SparkSession, table: String): java.net.URI = {
     val p = new org.apache.hadoop.fs.Path(table)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.makeQualified(p).toUri.getPath
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toUri
   }
 
-  /** `_metadata.file_path` → path relative to `rootPath`: two
-    * scheme-strips (`scheme://authority` and bare `scheme:`) then the
-    * quoted root prefix. Codegen'd — no UDF.
+  /** The table root as a scheme-free absolute path (URI path component
+    * of the fully-qualified location). */
+  def tableRootPath(spark: SparkSession, table: String): String =
+    tableRoot(spark, table).getPath
+
+  /** The qualified spellings of files under `root` that
+    * [[relFileCol]]'s fast path strips: `scheme://authority<path>/`,
+    * plus `scheme:<path>/` and `scheme://<path>/` when the authority is
+    * empty (Hadoop's local `file:` paths take both forms). */
+  private[lake] def fastPrefixes(root: java.net.URI): Seq[String] = {
+    val path = root.getPath
+    Option(root.getAuthority).filter(_.nonEmpty) match {
+      case Some(auth) => Seq(s"${root.getScheme}://$auth$path/")
+      case None =>
+        Seq(s"${root.getScheme}:$path/", s"${root.getScheme}://$path/")
+    }
+  }
+
+  /** `_metadata.file_path` → path relative to the table `root` (its
+    * qualified URI, [[tableRoot]]): two scheme-strips (`scheme://authority`
+    * and bare `scheme:`) then the quoted root path prefix. Codegen'd — no
+    * UDF.
     *
-    * FAST PATH (r19, guide §1.2 per-task work): the two qualified
-    * spellings of THIS root — `file:<root>/` and `file://<root>/`
-    * (empty authority) — resolve with one startsWith + substring,
-    * ~ns per row, where the three-regex chain measured ~6µs per row
-    * (q312's MoR scans spent ~900ms CPU per 150k-row stage in it, and
-    * EVERY merge-on-read scan pays this column). Any other spelling
-    * (object-store schemes, unqualified paths, roots not under the
-    * prefix) falls through to the regex chain unchanged, so results
-    * are bit-identical; a production deployment on another scheme adds
-    * its spelling here or rides the exact fallback. */
-  def relFileCol(rootPath: String): Column = {
+    * FAST PATH (r19, guide §1.2 per-task work): the qualified spellings
+    * of THIS root ([[fastPrefixes]] — `s3a://bucket/t/`, or `file:/t/`
+    * and `file:///t/` for a local root) resolve with one startsWith +
+    * substring, ~ns per row, where the three-regex chain measured ~6µs
+    * per row (q312's MoR scans spent ~900ms CPU per 150k-row stage in
+    * it, and EVERY merge-on-read scan pays this column). Any other
+    * spelling (unqualified paths, roots not under the prefix) falls
+    * through to the regex chain unchanged, so results are
+    * bit-identical. */
+  def relFileCol(root: java.net.URI): Column = {
     val p = col("_metadata.file_path")
     val noScheme = regexp_replace(
       regexp_replace(p,
         lit("^[a-zA-Z][a-zA-Z0-9+.-]*://[^/]*"), lit("")),
       lit("^[a-zA-Z][a-zA-Z0-9+.-]*:"), lit(""))
     val slow = regexp_replace(noScheme,
-      lit("^" + java.util.regex.Pattern.quote(rootPath + "/")), lit(""))
-    val pref1 = s"file:$rootPath/"
-    val pref2 = s"file://$rootPath/"
-    when(p.startsWith(pref1), p.substr(lit(pref1.length + 1), length(p)))
-      .when(p.startsWith(pref2), p.substr(lit(pref2.length + 1), length(p)))
-      .otherwise(slow)
+      lit("^" + java.util.regex.Pattern.quote(root.getPath + "/")), lit(""))
+    def strip(pref: String) = p.substr(lit(pref.length + 1), length(p))
+    val prefixes = fastPrefixes(root)
+    prefixes.tail.foldLeft(
+      when(p.startsWith(prefixes.head), strip(prefixes.head)))(
+      (c, pref) => c.when(p.startsWith(pref), strip(pref))).otherwise(slow)
   }
 }

@@ -170,33 +170,19 @@ final class SnapshotCatalog extends TableCatalog {
     tableAt(ident, t, v)
   }
 
-  /** Do the version's era schemas (from the log) disagree on a column's
-    * TYPE? mergeSchema refuses int→long / float→double, so such versions
-    * need the era-aware read. Every commit dir's schema is recorded in
-    * its manifest, so the answer never needs a footer probe. */
-  private def erasWiden(s: Snapshots.Snapshot): Boolean = {
-    val seen = scala.collection.mutable.HashMap
-      .empty[String, org.apache.spark.sql.types.DataType]
-    s.dirSchemas.values.exists(_.exists { f =>
-      seen.put(f.name, f.dataType).exists(_ != f.dataType)
-    })
-  }
-
   private def tableAt(ident: Identifier, t: String, v: Int): Table = {
     val s = Snapshots.snapshot(spark, t, v)
       .getOrElse(throw new NoSuchTableException(ident))
     // a zero-file version with DECLARED columns (TRUNCATE re-declares
-    // the pre-truncate schema; ADD COLUMN declares one) reads as an
-    // empty table with that schema — only a version with no schema at
-    // all (a DML on a never-committed table) fails at resolution
-    if (s.files.isEmpty && s.addedColumns.nonEmpty)
-      return SnapshotMoRTable(s"${ident.name()}@v$v", t, v,
-        Snapshots.readAt(spark, t, v).get.schema, s.properties)
-    if (s.files.isEmpty) throw new UnsupportedOperationException(
-      s"version $v of ${ident.name()} has no data files (schema unknown " +
-        "to the log); read it via Snapshots.readAt, which returns empty")
-    if (s.deletes.nonEmpty || s.renames.nonEmpty || s.drops.nonEmpty ||
-        s.defaults.nonEmpty || s.addedColumns.nonEmpty || erasWiden(s) ||
+    // the pre-truncate schema; ADD COLUMN declares one) takes the era
+    // read below and reads as an empty table with that schema — only a
+    // version with no schema at all (a DML on a never-committed table)
+    // fails at resolution
+    if (s.files.isEmpty && s.addedColumns.isEmpty)
+      throw new UnsupportedOperationException(
+        s"version $v of ${ident.name()} has no data files (schema unknown " +
+          "to the log); read it via Snapshots.readAt, which returns empty")
+    if (s.deletes.nonEmpty || Snapshots.needsEraRead(spark, s) ||
         // row-id-materialized files carry the hidden physical id column
         // (Snapshots.optimizeRowIds) — a bare parquet scan would surface
         // it to SQL; the readAt plan hides it
@@ -218,7 +204,7 @@ final class SnapshotCatalog extends TableCatalog {
       // zero driver-side per-file statuses before the scan plans.
       SnapshotReadTable(GraftSqlBridge.parquetTable(s"${ident.name()}@v$v",
         spark, s.files.map(f => Snapshots.filePath(t, f)), opts,
-        schema = Snapshots.uniformLogSchema(s, s.files),
+        schema = Snapshots.uniformLogSchema(s.dirSchemas, s.files),
         sizes = Snapshots.logServedPathSizes(t, s, s.files)), t, v,
         logProps = s.properties)
     }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.types._
 /** Versioned snapshot log — TIME TRAVEL, incremental reads, merge-on-read
   * MERGE, schema evolution and log-level data skipping over an
   * append-mostly table: the transaction-log shape (Delta `_delta_log` /
-  * Iceberg snapshot list) layered on [[ManifestCommit]]'s staging
-  * discipline:
+  * Iceberg snapshot list) over run-unique staging dirs:
   *
   *  - every commit stages its NEW data files into a run-unique directory
   *    (`_snap/c-<runId>/`, underscore-invisible to plain readers),
@@ -26,11 +25,16 @@ import org.apache.spark.sql.types._
   *    loses the race re-reads the new latest snapshot, recomputes its
   *    commit content against it, and retries — two concurrent writers
   *    both land, as distinct versions, with neither's files lost (the
-  *    Delta/Iceberg commit protocol; [[ManifestCommit]]'s
-  *    last-writer-wins PUT is not enough once versions chain).
+  *    Delta/Iceberg commit protocol; a last-writer-wins PUT is not
+  *    enough once versions chain).
   *  - reads resolve one small log object and read exactly its file list:
   *    `readAt(v)` is the time-travel scan (audits, reproducible training
-  *    runs pinned to a data version); `latest` is the current view.
+  *    runs pinned to a data version); `latest` is the current view. The
+  *    log alone picks the read's shape ([[needsEraRead]]: one scan, or
+  *    the era-aware read for renamed, dropped, defaulted or widened
+  *    versions) — no read starts a job to find out — and every manifest
+  *    records each file's size and dir schema ([[readManifest]] refuses
+  *    one that does not), so uniform versions scan straight from the log.
   *  - `newFilesBetween(v1, v2)` is the incremental-processing source: the
   *    files added after v1 — O(log) metadata, no table diff — which is
   *    how a downstream job consumes "what changed" without CDC columns.
@@ -974,7 +978,7 @@ object Snapshots {
         try f -> reader.getRecordCount finally reader.close()
       }.toMap
     } else {
-      val root = LakePaths.tableRootPath(spark, table)
+      val root = LakePaths.tableRoot(spark, table)
       files.map(_ -> 0L).toMap ++
         delta.getOrElse(
           spark.read.parquet(files.map(f => filePath(table, f)): _*))
@@ -1011,15 +1015,10 @@ object Snapshots {
         // the distributed count (> DriverFooterCountMaxFiles) rides the
         // same log-fed scan shape as the stats/sketch passes when this
         // very commit's dirSchemas prove ONE schema for every file
-        def uniform: Option[StructType] =
-          files.map(f => dirSchemas(dirOf(f))).distinct match {
-            case Seq(one) => Some(one)
-            case _ => None
-          }
         val delta =
           if (files.size <= DriverFooterCountMaxFiles) None
-          else uniform.flatMap(sch => freshDeltaScan(spark, table,
-            files.map(f => f -> sizes(f)), sch))
+          else uniformLogSchema(dirSchemas, files).flatMap(sch =>
+            freshDeltaScan(spark, table, files.map(f => f -> sizes(f)), sch))
         collectRowCounts(spark, table, files, delta)
       }
     val json = Json.render(Map(
@@ -1046,6 +1045,19 @@ object Snapshots {
     id
   }
 
+  /** One manifest carrying `files` of `prev` BY REFERENCE — their
+    * stats, blooms, dir schemas, row counts and sizes copied from the
+    * log, no file opened (metadata deletes, manifest rewrites, the cold
+    * files a compaction keeps). */
+  private def carriedManifest(spark: SparkSession, table: String,
+      prev: Snapshot, files: Seq[String]): String = {
+    val (kept, dirs) = (files.toSet, files.map(dirOf).toSet)
+    writeManifest(spark, table, files,
+      prev.stats.filter(e => kept(e._1)), prev.blooms.filter(e => kept(e._1)),
+      prev.dirSchemas.filter(e => dirs(e._1)),
+      knownSizes = prev.sizes, knownRows = prev.rowCounts)
+  }
+
   private def readManifest(spark: SparkSession, table: String,
       id: String): Manifest = {
     val path = manifestPath(table, id)
@@ -1060,8 +1072,15 @@ object Snapshots {
             .asInstanceOf[StructType] }
         case _ => Map.empty[String, StructType]
       }
+      val sizes = longMap(m, "sizes")
+      val gaps = files.filterNot(f =>
+        sizes.contains(f) && schemas.contains(dirOf(f)))
+      if (gaps.nonEmpty) throw new IllegalStateException(
+        s"$path records no size or dir schema for ${gaps.size} of its " +
+          s"${files.size} files (first: ${gaps.head}); this build reads " +
+          "manifests that cover every file — re-create the table")
       Manifest(files, parseStats(m), parseBlooms(m), schemas,
-        longMap(m, "rows"), longMap(m, "sizes"))
+        longMap(m, "rows"), sizes)
     }
   }
 
@@ -1074,13 +1093,8 @@ object Snapshots {
     snapshot(spark, table, v).map { s2 =>
       if (s2.ref.nonEmpty) 0L
       else {
-        var w = v - 1
-        while (w >= 1 && !snapshot(spark, table, w).exists(_.ref.isEmpty))
-          w -= 1
-        val prevFiles =
-          if (w >= 1) snapshot(spark, table, w).map(_.files.toSet)
-            .getOrElse(Set.empty[String])
-          else Set.empty[String]
+        val prevFiles = mainAtOrBelow(spark, table, v - 1)
+          .fold(Set.empty[String])(_.files.toSet)
         s2.files.filterNot(prevFiles).map(s2.sizes).sum
       }
     }.getOrElse(0L)
@@ -1129,16 +1143,15 @@ object Snapshots {
     mainHeadSnapshot(spark, table).map(_.version)
 
   private def mainHeadSnapshot(spark: SparkSession,
-      table: String): Option[Snapshot] = {
-    var v = latestVersion(spark, table).getOrElse(return None)
-    while (v >= 1) {
-      snapshot(spark, table, v) match {
-        case Some(s) if s.ref.isEmpty => return Some(s)
-        case _ => v -= 1
-      }
-    }
-    None
-  }
+      table: String): Option[Snapshot] =
+    latestVersion(spark, table).flatMap(mainAtOrBelow(spark, table, _))
+
+  /** The newest MAIN snapshot at or below version `v`: branch commits
+    * interleave in the one dense log and are walked past. */
+  private def mainAtOrBelow(spark: SparkSession, table: String,
+      v: Int): Option[Snapshot] =
+    (v to 1 by -1).iterator.flatMap(snapshot(spark, table, _))
+      .find(_.ref.isEmpty)
 
   /** The parquet files under `dir` as (`rel`-prefixed reference, byte
     * size): the sizes the one listStatus already returned are what the
@@ -1371,7 +1384,7 @@ object Snapshots {
          Map[String, Map[String, Long]]) = {
     import org.apache.spark.sql.functions.{conv, md5, substring, sum}
     if (cols.isEmpty || files.isEmpty) return (Map.empty, Map.empty)
-    val root = LakePaths.tableRootPath(spark, table)
+    val root = LakePaths.tableRoot(spark, table)
     val data = delta.getOrElse(spark.read.option("mergeSchema", "true")
       .parquet(files.map(f => filePath(table, f)): _*))
     val present = cols.filter(data.schema.fieldNames.contains)
@@ -1424,7 +1437,7 @@ object Snapshots {
     if (bloomCols.isEmpty || files.isEmpty) return Map.empty
     import org.apache.spark.util.sketch.BloomFilter
     import spark.implicits._
-    val root = LakePaths.tableRootPath(spark, table)
+    val root = LakePaths.tableRoot(spark, table)
     def ser(b: BloomFilter): Array[Byte] = {
       val bos = new java.io.ByteArrayOutputStream()
       b.writeTo(bos)
@@ -1464,50 +1477,21 @@ object Snapshots {
     }.toMap
   }
 
-  /** Version `v`'s file list pruned BY THE LOG ALONE for a point lookup:
-    * only files whose bloom might contain `key` (files without a bloom
-    * for the column are kept — unknown never prunes). The bloom's
-    * superset guarantee means a joining file is never dropped; ~fpp of
-    * non-matching files leak through and the residual predicate keeps
-    * exactness. */
-  /** The point-lookup selection shared by [[prunedFilesForKey]] and
-    * [[readAtKey]]: manifests whose stats SUMMARY excludes the key are
-    * skipped whole (never materialized); files in touched manifests
-    * drop when their bloom proves the key absent. Both levels are
-    * supersets of the truth — unknown never prunes at either. */
-  private def shardedKeySelect(spark: SparkSession, table: String,
-      lite: LiteSnapshot, column: String,
-      key: Long): (Seq[String], Seq[Manifest]) =
-    shardedSelect(spark, table, lite)(
-      _.get(column).forall { case (mn, mx) =>
-        key.toDouble >= mn && key.toDouble <= mx },
-      (f, _, bl) => bl.get(column) match {
-        case Some(bytes) =>
-          deserializedBloom(table, f, column, bytes).mightContainLong(key)
-        case None => true
-      })
-
+  /** Version `v`'s file list pruned BY THE LOG ALONE for a point lookup
+    * ([[keySelection]]): manifests whose stats summary excludes the key
+    * are skipped whole, and files whose bloom proves the key absent
+    * drop. */
   def prunedFilesForKey(spark: SparkSession, table: String, v: Int,
       column: String, key: Long): Option[Seq[String]] =
-    readLite(spark, table, v)
-      .map(lite => shardedKeySelect(spark, table, lite, column, key)._1)
+    selectedFiles(spark, table, v, keySelection(table, column, key))
 
   /** Point-lookup scan of version `v` through the log blooms: only
     * surviving files open, residual equality keeps exactness.
     * Manifest-sharded like [[readAtPruned]]. */
   def readAtKey(spark: SparkSession, table: String, v: Int,
       column: String, key: Long): Option[DataFrame] =
-    readLite(spark, table, v).map { lite =>
-      val (files, touched) = shardedKeySelect(spark, table, lite, column, key)
-      if (files.nonEmpty)
-        readDispatch(spark, table, partialSnapshot(lite, files, touched))
-          .filter(col(column) === key)
-      // zero kept files — or zero data files in the snapshot (a
-      // deleteWhere on a never-committed table publishes such a
-      // version): the residual filter cannot resolve `column` on the
-      // schemaless empty frame, so the rare empty path resolves eagerly
-      else shardedEmptyRead(spark, table, v, _.filter(col(column) === key))
-    }
+    shardedRead(spark, table, v, keySelection(table, column, key),
+      _.filter(col(column) === key))
 
   /** Transform-encoded stats names — the HIDDEN-PARTITIONING spec
     * (Iceberg partition transforms, re-expressed as manifest stats over
@@ -1580,7 +1564,7 @@ object Snapshots {
       delta: Option[DataFrame] = None): FileStats = {
     if (statsCols0.isEmpty || files.isEmpty) return Map.empty
     import org.apache.spark.sql.functions.{max, min}
-    val root = LakePaths.tableRootPath(spark, table)
+    val root = LakePaths.tableRoot(spark, table)
     val scan = delta.getOrElse(
       spark.read.parquet(files.map(f => filePath(table, f)): _*))
     // struct LEAVES join the type map under their dot paths (the
@@ -2125,16 +2109,8 @@ object Snapshots {
         s"not a bucket transform spec: $spec")
     }
     val b = bucketValueOf(n, key)
-    readLite(spark, table, v).map { lite =>
-      val (files, touched) = shardedSelect(spark, table, lite)(
-        _.get(spec).forall { case (mn, mx) => mx >= b && mn <= b },
-        (_, st, _) => st.get(spec)
-          .forall { case (mn, mx) => mx >= b && mn <= b })
-      if (files.nonEmpty)
-        readDispatch(spark, table, partialSnapshot(lite, files, touched))
-          .filter(col(c) === lit(key))
-      else shardedEmptyRead(spark, table, v, _.filter(col(c) === lit(key)))
-    }
+    shardedRead(spark, table, v, rangeSelection(spec, b, b),
+      _.filter(col(c) === lit(key)))
   }
 
   /** New version replaces the file list wholesale (old files remain for
@@ -2218,32 +2194,38 @@ object Snapshots {
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
   }
 
-  /** Scan with table-relative (file, pos) reader columns attached. */
-  private def withMeta(spark: SparkSession, table: String,
-      files: Seq[String], snap: Option[Snapshot] = None): DataFrame = {
-    val root = LakePaths.tableRootPath(spark, table)
-    snap.flatMap(s => logServedScan(spark, table, s, files))
+  /** One scan of `files` of version `s`: log-served when their eras are
+    * uniform ([[logServedScan]] — zero listings, zero footer probes);
+    * otherwise `mergeSchema` over additively-evolved eras (a later
+    * append introduced a column, and earlier rows surface it as null),
+    * the union computed from file FOOTERS, never a data pass. */
+  private def scanFiles(spark: SparkSession, table: String, s: Snapshot,
+      files: Seq[String]): DataFrame =
+    logServedScan(spark, table, s, files)
       .getOrElse(spark.read.option("mergeSchema", "true")
         .parquet(files.map(f => filePath(table, f)): _*))
-      .withColumn("_snap_file", LakePaths.relFileCol(root))
+
+  /** Scan with table-relative (file, pos) reader columns attached. */
+  private def withMeta(spark: SparkSession, table: String, s: Snapshot,
+      files: Seq[String]): DataFrame =
+    scanFiles(spark, table, s, files)
+      .withColumn("_snap_file",
+        LakePaths.relFileCol(LakePaths.tableRoot(spark, table)))
       .withColumn("_snap_pos", col("_metadata.row_index"))
-  }
 
   /** Spec counter: successful log-served scan constructions this JVM. */
   private[graft] val logServedScans =
     new java.util.concurrent.atomic.AtomicLong(0)
 
   /** The ONE schema every requested file's staging dir recorded, when
-    * the log can prove it (all dirs covered, all recorded schemas
-    * identical) — what lets a reader skip schema inference entirely. */
-  private[graft] def uniformLogSchema(s: Snapshot,
-      files: Seq[String]): Option[StructType] = {
-    if (files.isEmpty) return None
-    val schemas = files.map(f => s.dirSchemas.get(dirOf(f)))
-    if (schemas.exists(_.isEmpty)) return None
-    val distinct = schemas.map(_.get).distinct
-    if (distinct.size == 1) Some(distinct.head) else None
-  }
+    * the recorded schemas are identical — what lets a reader skip schema
+    * inference entirely. Manifests cover every file ([[readManifest]]). */
+  private[graft] def uniformLogSchema(dirSchemas: Map[String, StructType],
+      files: Seq[String]): Option[StructType] =
+    files.map(f => dirSchemas(dirOf(f))).distinct match {
+      case Seq(one) => Some(one)
+      case _ => None
+    }
 
   /** Production kill-switch for every log-served read fast path (the
     * ADVICE r18 mitigation): `SPARK_GRAFT_LOG_SERVED_SCAN=off` forces
@@ -2256,43 +2238,40 @@ object Snapshots {
       .exists(v => v == "off" || v == "false" || v == "0")
 
   /** Per-file (RESOLVED path → recorded byte size) for the requested
-    * files when the snapshot proves EVERY one of them (and the fast path
-    * is enabled) — what the DSv2 catalog table
+    * files when the fast path is enabled — what the DSv2 catalog table
     * ([[org.apache.spark.sql.GraftSqlBridge.parquetTable]]) feeds beside
     * its explicit path list so its FileIndex is log-fed like
-    * [[logServedScan]]'s. None on any gap: metadata never guesses. */
+    * [[logServedScan]]'s. */
   private[graft] def logServedPathSizes(table: String, s: Snapshot,
       files: Seq[String]): Option[Map[String, Long]] =
-    if (!logServedEnabled || !files.forall(s.sizes.contains)) None
+    if (!logServedEnabled) None
     else Some(files.map(f => filePath(table, f) -> s.sizes(f)).toMap)
 
   /** LOG-SERVED SCAN fast path (the Delta/Iceberg snapshot-read shape):
-    * when the manifests already record every requested file's byte size
-    * AND every file's staging dir recorded a schema AND those schemas
-    * are all IDENTICAL, the scan is built directly from log metadata —
-    * no filesystem listing (a `spark.read.parquet(paths)` pays an
-    * InMemoryFileIndex listing per call, a distributed listing JOB past
+    * the manifests record every file's byte size and dir schema, so when
+    * those schemas are all IDENTICAL the scan is built directly from log
+    * metadata — no filesystem listing (a `spark.read.parquet(paths)`
+    * pays an InMemoryFileIndex listing per call, a distributed listing JOB past
     * the parallel-discovery threshold) and no mergeSchema footer pass
     * (a second job reading every footer). At 100 TB / O(100k files)
     * those are 100k object-store round-trips per query before the first
     * data byte; locally they are 2 driver jobs per snapshot read, and
     * lifecycle queries read snapshots dozens of times. Declines (None)
-    * whenever the log cannot answer COMPLETELY — files the snapshot does
-    * not cover, schema-divergent eras (additive evolution reads keep the
-    * mergeSchema semantics they attest) — so the fallback path and its
-    * plans are byte-identical to before. */
+    * for schema-divergent eras (additive evolution reads keep the
+    * mergeSchema semantics they attest) and under the kill-switch. */
   private def logServedScan(spark: SparkSession, table: String,
       s: Snapshot, files: Seq[String]): Option[DataFrame] =
     for {
-      schema <- uniformLogSchema(s, files)
-      if files.forall(s.sizes.contains)
+      schema <- uniformLogSchema(s.dirSchemas, files)
       scan <- freshDeltaScan(spark, table,
         files.map(f => f -> s.sizes(f)), schema)
     } yield { logServedScans.incrementAndGet(); scan }
 
-  /** Write a tombstone relation (`file`, `pos` rows) as the positional
-    * -delete files of one commit, WITH TASK PARALLELISM: rows are
-    * hash-clustered on the target data file so each delete file covers a
+  /** Write the tombstones of `rows` — by default live-view rows, whose
+    * `_snap_file`/`_snap_pos` reader columns name them; a relation
+    * already in (`file`, `pos`) shape passes those columns — as the
+    * positional-delete files of one commit, WITH TASK PARALLELISM: rows
+    * are hash-clustered on the target data file so each delete file covers a
     * disjoint set of data files (the Iceberg per-task positional-delete
     * shape), and the write scales with executor count. The previous
     * `coalesce(1)` funneled O(changes) rows through ONE task — a MERGE
@@ -2302,9 +2281,10 @@ object Snapshots {
     * lists; AQE coalesces the exchange when the tombstone batch is
     * small, so tiny DMLs still emit one or two files. */
   private def writeDeletes(spark: SparkSession, table: String,
-      tomb: DataFrame): Seq[String] = {
+      rows: DataFrame, file: Column = col("_snap_file"),
+      pos: Column = col("_snap_pos")): Seq[String] = {
     val dRel = s"_snap/d-${Naming.newRunId()}"
-    tomb.repartition(col("file"))
+    rows.select(file.as("file"), pos.as("pos")).repartition(col("file"))
       .write.mode("overwrite").parquet(s"$table/$dRel")
     val sized = listFresh(spark, s"$table/$dRel", dRel)
     val refs = sized.map(_._1)
@@ -2351,10 +2331,6 @@ object Snapshots {
     }
   }
 
-  private def deleteDirRows(spark: SparkSession, table: String,
-      dirRel: String): Map[String, Long] =
-    deleteDirSidecar(spark, table, dirRel)._1
-
   /** The positional-delete file schema — fixed by [[writeDeletes]]
     * since the first MoR commit: table-relative data-file path + row
     * index. What makes these files servable log-fed with zero footer
@@ -2387,7 +2363,7 @@ object Snapshots {
       deletes: Seq[String]): Option[Long] = {
     if (deletes.isEmpty) return Some(0L)
     if (deletes.exists(isEqDelete)) return None
-    val counts = deletes.map(f => deleteDirRows(spark, table, dirOf(f)).get(f))
+    val counts = deletes.map(f => deleteDirSidecar(spark, table, dirOf(f))._1.get(f))
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
@@ -2523,6 +2499,20 @@ object Snapshots {
     }
   }
 
+  /** The reader columns of `s`'s live rows its EQUALITY deletes
+    * suppress — each delete's [[eqDeleteHits]] on the era-aware live
+    * view under the positional deletes alone, so renamed key columns
+    * resolve the way the read path resolves them. None for a zero-file
+    * version (nothing to suppress). `s` must carry an equality delete. */
+  private def eqSuppressed(spark: SparkSession, table: String,
+      s: Snapshot): Option[DataFrame] = {
+    val (eq, pos) = s.deletes.partition(isEqDelete)
+    liveView(spark, table, s.copy(entry = s.entry.copy(deletes = pos)))
+      .map(base => eq.map(eqDeleteHits(spark, table, base, _, s.renames))
+        .reduce(_ unionAll _).select(col("_snap_file"), col("_snap_pos"))
+        .distinct())
+  }
+
   private def applyEqDelete(spark: SparkSession, table: String,
       data: DataFrame, eqRef: String,
       renames: Seq[(String, String)] = Nil): DataFrame = {
@@ -2550,33 +2540,21 @@ object Snapshots {
     }
   }
 
+  /** The single-scan read of a version that needs no era read: its
+    * LOG-truth statistics ([[leafStatsFor]]) attach to the DATA leaf
+    * (before any tombstone join enters the plan), and the hidden
+    * physical [[RowIdCol]] ([[optimizeRowIds]]) never surfaces. */
   private def readSnapshot(spark: SparkSession, table: String,
-      files: Seq[String], deletes: Seq[String],
-      // LOG-truth statistics ([[leafStatsFor]]) — attached to the DATA
-      // leaf only (before any tombstone join enters the plan)
-      leafStats: Option[
-        org.apache.spark.sql.catalyst.catalog.CatalogStatistics] = None,
-      snap: Option[Snapshot] = None)
-      : DataFrame =
-    if (files.isEmpty) spark.emptyDataFrame
-    else if (deletes.isEmpty) {
-      // mergeSchema: a version may reference files from commits with
-      // DIFFERENT schemas (additive evolution — a later append
-      // introduced a column); rows from pre-evolution files surface
-      // the new column as null. At 100 TB the union is computed from
-      // file FOOTERS, never a data pass. RowIdCol is a hidden physical
-      // column ([[optimizeRowIds]]) — plain reads never surface it.
-      // Uniform-schema versions take the log-served fast path instead
-      // ([[logServedScan]]): zero listings, zero footer probes.
-      val data = snap.flatMap(s => logServedScan(spark, table, s, files))
-        .getOrElse(spark.read.option("mergeSchema", "true")
-          .parquet(files.map(f => filePath(table, f)): _*))
-        .drop(RowIdCol)
-      leafStats.fold(data)(withLeafStats(spark, data, _))
-    } else {
-      val data = withMeta(spark, table, files, snap)
-      val statted = leafStats.fold(data)(withLeafStats(spark, data, _))
-      subtractDeletes(spark, table, statted, deletes)
+      s: Snapshot): DataFrame =
+    if (s.files.isEmpty) spark.emptyDataFrame
+    else {
+      val leafStats = leafStatsFor(spark, table, s)
+      def statted(data: DataFrame) =
+        leafStats.fold(data)(withLeafStats(spark, data, _))
+      if (s.deletes.isEmpty)
+        statted(scanFiles(spark, table, s, s.files).drop(RowIdCol))
+      else subtractDeletes(spark, table,
+          statted(withMeta(spark, table, s, s.files)), s.deletes)
         .drop("_snap_file", "_snap_pos", RowIdCol)
     }
 
@@ -2630,7 +2608,7 @@ object Snapshots {
       if (s.files.isEmpty) spark.emptyDataFrame
       else {
         val data = subtractDeletes(spark, table,
-          withMeta(spark, table, s.files, Some(s)), s.deletes)
+          withMeta(spark, table, s, s.files), s.deletes)
         val fresh = org.apache.spark.sql.functions
           .xxhash64(col("_snap_file"), col("_snap_pos"))
         val withId =
@@ -2656,31 +2634,30 @@ object Snapshots {
       .map(live => overwrite(spark, table,
         live.withColumnRenamed("_row_id", RowIdCol), statsCols))
 
+  /** Does version `s` need the era-aware read? The log alone decides:
+    * yes when it records renames, drops, defaults or added columns, or
+    * when its files' dir schemas do not merge under Spark's own
+    * `StructType.merge` — the merge the single-scan `mergeSchema` read
+    * would run over the same schemas in a footer job (it refuses
+    * int→long, float→double and incompatible types alike). */
+  private[graft] def needsEraRead(spark: SparkSession, s: Snapshot): Boolean =
+    s.renames.nonEmpty || s.drops.nonEmpty || s.defaults.nonEmpty ||
+      s.addedColumns.nonEmpty ||
+      !org.apache.spark.sql.GraftSqlBridge.schemasMerge(spark,
+        s.files.map(dirOf).distinct.map(s.dirSchemas))
+
   /** Time-travel scan: exactly version `v`'s files, minus its positional
     * deletes (broadcast anti join — same shape and scale argument as
-    * [[DeletionVectors.read]]). A snapshot carrying column renames
-    * routes through the era-aware read so every era surfaces the
-    * current names; rename-free snapshots keep the single-scan
-    * mergeSchema fast path. */
-  /** Rename-free snapshots take the single-scan mergeSchema fast path;
-    * renamed ones go straight to the era-aware read. A fast path that
-    * FAILS schema merging (numeric widening across eras — mergeSchema
-    * refuses int/long) falls back to the era read too, so readAt /
-    * readLatest / optimize keep working on widened tables without the
-    * caller knowing to ask for [[readAtWidened]]. */
+    * [[DeletionVectors.read]]). Versions the log says need it
+    * ([[needsEraRead]]) take the era-aware read, so every era surfaces
+    * the current names and widened types and readAt / readLatest /
+    * optimize work on widened tables without the caller knowing to ask
+    * for [[readAtWidened]]; the rest take the single scan (log-served
+    * when the eras are uniform, `mergeSchema` when they are additive). */
   private def readDispatch(spark: SparkSession, table: String,
       s: Snapshot): DataFrame =
-    if (s.renames.nonEmpty || s.drops.nonEmpty || s.defaults.nonEmpty ||
-        s.addedColumns.nonEmpty)
-      eraRead(spark, table, s)
-    else
-      try readSnapshot(spark, table, s.files, s.deletes,
-        leafStatsFor(spark, table, s), Some(s))
-      catch {
-        case _: org.apache.spark.SparkException |
-            _: org.apache.spark.sql.AnalysisException =>
-          eraRead(spark, table, s)
-      }
+    if (needsEraRead(spark, s)) eraRead(spark, table, s)
+    else readSnapshot(spark, table, s)
 
   def readAt(spark: SparkSession, table: String, v: Int): Option[DataFrame] =
     snapshot(spark, table, v).map(s => readDispatch(spark, table, s))
@@ -2768,12 +2745,7 @@ object Snapshots {
       // at or before it (branch-staged data must never leak to a
       // wall-clock reader). Commit ts is chain-monotone, so the walk
       // preserves "latest main version with ts <= t".
-      resolved.flatMap { r =>
-        var v = r
-        while (v >= 1 && !snapshot(spark, table, v).exists(_.ref.isEmpty))
-          v -= 1
-        if (v >= 1) Some(v) else None
-      }
+      resolved.flatMap(mainAtOrBelow(spark, table, _)).map(_.version)
     }
 
   def readLatest(spark: SparkSession, table: String): Option[DataFrame] =
@@ -2783,114 +2755,106 @@ object Snapshots {
 
   // ------------------------------------------- log-level data skipping
 
-  /** Version `v`'s file list pruned BY THE LOG ALONE to files whose
-    * recorded [min, max] for `column` intersects [lo, hi]. Files with no
-    * recorded stats for the column are kept (unknown never prunes), so
-    * the result is always a superset of the matching files — exactness
-    * comes from the residual predicate in [[readAtPruned]]. Zero
-    * listings, zero footer probes: at 100 TB / O(100k files) this is the
-    * difference between one KB-sized log read and 100k object-store
-    * round-trips before the first byte of data (the Iceberg manifest /
-    * Delta checkpoint mechanism; [[ZoneMap]] is the same idea as a
-    * sidecar for plain directories — here pruning and time travel
-    * compose in one metadata object). */
+  /** A manifest-sharded file selection: `admit` decides a whole
+    * manifest from its stats summary, `keep` one file of an admitted
+    * manifest from its stats and blooms (keys mapped through the rename
+    * chain). Both must be supersets of the truth — unknown never prunes
+    * at either level; the read's residual predicate keeps exactness. */
+  private final case class Selection(
+      admit: Map[String, (Double, Double)] => Boolean,
+      keep: (String, Map[String, (Double, Double)],
+        Map[String, Array[Byte]]) => Boolean)
+
+  /** Files whose recorded [min, max] for stats name `stat` intersects
+    * [lo, hi]; files (and manifests) without that stat are kept. */
+  private def rangeSelection(stat: String, lo: Double,
+      hi: Double): Selection = {
+    def overlaps(st: Map[String, (Double, Double)]) =
+      st.get(stat).forall { case (mn, mx) => mx >= lo && mn <= hi }
+    Selection(overlaps, (_, st, _) => overlaps(st))
+  }
+
+  /** A point lookup of `key` on `column`: the summary range admits, and
+    * a file's bloom (when it has one) must allow the key — the bloom's
+    * superset guarantee never drops a joining file; ~fpp of the rest
+    * leak through to the residual. */
+  private def keySelection(table: String, column: String,
+      key: Long): Selection =
+    Selection(rangeSelection(column, key.toDouble, key.toDouble).admit,
+      (f, _, bl) => bl.get(column).forall(bytes =>
+        deserializedBloom(table, f, column, bytes).mightContainLong(key)))
+
   /** MANIFEST-SHARDED selection (VERDICT r14 task 6 — bounding the
     * driver's per-operation metadata): walk the log object's manifest
-    * list, SKIP whole manifests whose summary proves every file misses
-    * (`summaryAdmits` false — their per-file entries are never
-    * materialized), and load + per-file-filter only the touched rest.
-    * Per-file stats/bloom keys are mapped through the rename chain
-    * exactly like full resolution. Returns the kept files (manifest
-    * order, so identical to the eager path's order) and the touched
-    * manifests (whose dir schemas and sizes [[partialSnapshot]] carries
-    * for [[readDispatch]]). At 10M files in 10k manifests, a selective
-    * lookup materializes O(touched) instead of O(table). */
+    * list, SKIP whole manifests `sel` does not admit (their per-file
+    * entries are never materialized), and load + per-file-filter only
+    * the touched rest. Returns the kept files (manifest order, so
+    * identical to the eager path's order) and the touched manifests
+    * (whose dir schemas and sizes [[shardedRead]] reads through). At 10M
+    * files in 10k manifests, a selective lookup materializes O(touched)
+    * instead of O(table) — zero listings, zero footer probes. */
   private def shardedSelect(spark: SparkSession, table: String,
-      lite: LiteSnapshot)(
-      summaryAdmits: Map[String, (Double, Double)] => Boolean,
-      keepFile: (String, Map[String, (Double, Double)],
-        Map[String, Array[Byte]]) => Boolean)
-      : (Seq[String], Seq[Manifest]) = {
-    val touched = lite.manifests.filter { id =>
-      summaryAdmits(lite.summaries.getOrElse(id, Map.empty)
-        .map { case (c, iv) => renamedStatsKey(lite.renames, c) -> iv })
-    }.map { id =>
-      manifestsTouched.incrementAndGet()
-      readManifest(spark, table, id)
-    }
-    val kept = touched.flatMap { m =>
-      m.files.filter { f =>
-        val fst = m.stats.getOrElse(f, Map.empty).map { case (c, iv) =>
-          renamedStatsKey(lite.renames, c) -> iv }
-        val fbl = m.blooms.getOrElse(f, Map.empty).map { case (c, b) =>
-          renamedStatsKey(lite.renames, c) -> b }
-        keepFile(f, fst, fbl)
+      lite: LiteSnapshot, sel: Selection): (Seq[String], Seq[Manifest]) = {
+    def renamed[A](m: Map[String, A]) =
+      m.map { case (c, x) => renamedStatsKey(lite.renames, c) -> x }
+    val touched = lite.manifests
+      .filter(id => sel.admit(renamed(lite.summaries.getOrElse(id, Map.empty))))
+      .map { id =>
+        manifestsTouched.incrementAndGet()
+        readManifest(spark, table, id)
       }
-    }
+    val kept = touched.flatMap(m => m.files.filter(f => sel.keep(f,
+      renamed(m.stats.getOrElse(f, Map.empty)),
+      renamed(m.blooms.getOrElse(f, Map.empty)))))
     (kept, touched)
   }
 
-  /** A [[Snapshot]] view of `files` carrying only what `touched`
-    * manifests record of dir schemas and byte sizes: stats, blooms and
-    * row counts stay EMPTY by design — [[readDispatch]] (plain or
-    * log-fed scan, tombstone/eq-delete subtraction, era mapping) reads
-    * none of them, so a sharded read never materializes the untouched
-    * manifests' entries. Full resolution passes every manifest. */
-  private def partialSnapshot(lite: LiteSnapshot, files: Seq[String],
-      touched: Seq[Manifest]): Snapshot =
-    Snapshot(lite, files, Map.empty, Map.empty,
-      merged(touched)(_.dirSchemas), Map.empty, merged(touched)(_.sizes))
+  /** The files of version `v` that `sel` keeps, from the log alone. */
+  private def selectedFiles(spark: SparkSession, table: String, v: Int,
+      sel: Selection): Option[Seq[String]] =
+    readLite(spark, table, v).map(shardedSelect(spark, table, _, sel)._1)
 
-  /** The schemaless corners of a sharded read, resolved eagerly (rare
-    * paths): zero kept files still needs the table's SCHEMA for the
-    * empty frame, and a zero-file snapshot returns the unfiltered empty
-    * dispatch exactly as before. */
-  private def shardedEmptyRead(spark: SparkSession, table: String,
-      v: Int, residual: DataFrame => DataFrame): DataFrame = {
-    val s = snapshot(spark, table, v).get
-    if (s.files.isEmpty) readDispatch(spark, table, s)
-    else residual(readDispatch(spark, table, s).limit(0))
-  }
-
-  def prunedFilesAt(spark: SparkSession, table: String, v: Int,
-      column: String, lo: Double, hi: Double): Option[Seq[String]] =
+  /** The one sharded read every pruned lookup runs: the kept files read
+    * through [[readDispatch]] over a [[Snapshot]] view carrying only the
+    * touched manifests' dir schemas and sizes (stats, blooms and row
+    * counts stay EMPTY — the read needs none of them, so the untouched
+    * manifests are never materialized), then `residual` re-applies the
+    * predicate. Zero kept files — or a zero-file snapshot — resolve the
+    * full version instead: the empty frame still needs the table's
+    * schema, and a zero-file snapshot returns the unfiltered empty read
+    * (the residual could not resolve its column on a schemaless frame). */
+  private def shardedRead(spark: SparkSession, table: String, v: Int,
+      sel: Selection, residual: DataFrame => DataFrame): Option[DataFrame] =
     readLite(spark, table, v).map { lite =>
-      shardedSelect(spark, table, lite)(
-        _.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi },
-        (_, st, _) => st.get(column)
-          .forall { case (mn, mx) => mx >= lo && mn <= hi })._1
-    }
-
-  /** Interval pruning over an already-resolved snapshot — for callers
-    * (compactions) that hold the full view anyway; lookups use the
-    * manifest-sharded [[prunedFilesAt]] instead. */
-  private def pruneFiles(s: Snapshot, column: String, lo: Double,
-      hi: Double): Seq[String] =
-    s.files.filter { f =>
-      s.stats.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
+      val (files, touched) = shardedSelect(spark, table, lite, sel)
+      if (files.nonEmpty)
+        residual(readDispatch(spark, table, Snapshot(lite, files, Map.empty,
+          Map.empty, merged(touched)(_.dirSchemas), Map.empty,
+          merged(touched)(_.sizes))))
+      else {
+        val s = snapshot(spark, table, v).get
+        if (s.files.isEmpty) readDispatch(spark, table, s)
+        else residual(readDispatch(spark, table, s).limit(0))
       }
     }
 
+  /** Version `v`'s file list pruned BY THE LOG ALONE to files whose
+    * recorded [min, max] for `column` intersects [lo, hi] — a superset
+    * of the matching files (the Iceberg manifest / Delta checkpoint
+    * mechanism; [[ZoneMap]] is the same idea as a sidecar for plain
+    * directories — here pruning and time travel compose in one
+    * metadata object). */
+  def prunedFilesAt(spark: SparkSession, table: String, v: Int,
+      column: String, lo: Double, hi: Double): Option[Seq[String]] =
+    selectedFiles(spark, table, v, rangeSelection(column, lo, hi))
+
   /** Range scan of version `v` through the log stats: only surviving
     * files are opened, and the predicate is re-applied to their rows so
-    * results equal a full scan regardless of how files were clustered.
-    * Manifest-sharded: manifests whose summary misses the range are
-    * never materialized. */
+    * results equal a full scan regardless of how files were clustered. */
   def readAtPruned(spark: SparkSession, table: String, v: Int,
       column: String, lo: Double, hi: Double): Option[DataFrame] =
-    readLite(spark, table, v).map { lite =>
-      val (files, touched) = shardedSelect(spark, table, lite)(
-        _.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi },
-        (_, st, _) => st.get(column)
-          .forall { case (mn, mx) => mx >= lo && mn <= hi })
-      if (files.nonEmpty)
-        readDispatch(spark, table, partialSnapshot(lite, files, touched))
-          .filter(col(column) >= lo && col(column) <= hi)
-      else shardedEmptyRead(spark, table, v,
-        _.filter(col(column) >= lo && col(column) <= hi))
-    }
+    shardedRead(spark, table, v, rangeSelection(column, lo, hi),
+      _.filter(col(column) >= lo && col(column) <= hi))
 
   // ------------------------------------------------- schema evolution
 
@@ -3505,7 +3469,7 @@ object Snapshots {
           case None => lit(null).cast(f.dataType).as(f.name)
         }
       }
-      val mapped = withMeta(spark, table, fs, Some(s))
+      val mapped = withMeta(spark, table, s, fs)
         .select(col("_snap_file") +: col("_snap_pos") +: casts: _*)
       // absent columns with a registered DEFAULT fill AFTER the
       // era→current mapping, so the expression resolves under CURRENT
@@ -3522,28 +3486,36 @@ object Snapshots {
     }.reduce(_ unionByName _)
   }
 
-  private def eraRead(spark: SparkSession, table: String, s: Snapshot): DataFrame =
-    if (s.files.isEmpty) {
-      // a zero-file version still has a schema when the commit DECLARED
-      // columns ([[truncate]] re-declares the pre-truncate live schema;
-      // ADD COLUMN declares one) — serve a typed empty relation instead
-      // of a schemaless one, the Delta truncated-table read contract
-      if (s.addedColumns.isEmpty) spark.emptyDataFrame
-      else spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        StructType(s.addedColumns.map { case (n, t) =>
-          StructField(n, org.apache.spark.sql.types.DataType.fromDDL(t),
-            nullable = true) }))
-    }
-    else {
-      val data = withMetaEras(spark, table, s)
-      // log-truth stats attach here too (createTable'd / declared /
-      // renamed tables route through the era read) — but only when the
-      // plan has exactly ONE data leaf (a multi-era union has one scan
-      // per era group, and table-global numbers attached per-leaf
-      // would overstate by the group count; single era — including
-      // every same-schema append history — is the dominant case)
-      val statted = leafStatsFor(spark, table, s).fold(data) { st =>
+  /** The LIVE rows of `s`'s files with the (`_snap_file`, `_snap_pos`)
+    * reader columns: the era-aware scan ([[withMetaEras]]), passed
+    * through `leaf` before any tombstone join enters the plan, minus
+    * `s`'s positional and equality deletes under its rename chain. None
+    * for a version with no data files. The one live view [[eraRead]]
+    * and every DML, compaction and feed path read. */
+  private def liveView(spark: SparkSession, table: String, s: Snapshot,
+      leaf: DataFrame => DataFrame = identity): Option[DataFrame] =
+    if (s.files.isEmpty) None
+    else Some(subtractDeletes(spark, table,
+      leaf(withMetaEras(spark, table, s)), s.deletes, s.renames))
+
+  /** Tombstone the live rows of `prev` that `hits` selects, as one
+    * positional-delete write ([[writeDeletes]]); nothing for an empty
+    * or never-committed head. */
+  private def tombstone(spark: SparkSession, table: String,
+      prev: Option[Snapshot])(hits: DataFrame => DataFrame): Seq[String] =
+    prev.flatMap(liveView(spark, table, _))
+      .fold(Seq.empty[String])(live => writeDeletes(spark, table, hits(live)))
+
+  private def eraRead(spark: SparkSession, table: String,
+      s: Snapshot): DataFrame = {
+    // log-truth stats attach at the leaf too (createTable'd / declared /
+    // renamed tables route through the era read) — but only when the
+    // plan has exactly ONE data leaf (a multi-era union has one scan per
+    // era group, and table-global numbers attached per-leaf would
+    // overstate by the group count; single era — including every
+    // same-schema append history — is the dominant case)
+    def statted(data: DataFrame): DataFrame =
+      leafStatsFor(spark, table, s).fold(data) { st =>
         val leaves = org.apache.spark.sql.GraftSqlBridge.analyzed(data)
           .collect {
             case lr: org.apache.spark.sql.execution.datasources
@@ -3551,9 +3523,21 @@ object Snapshots {
           }
         if (leaves.size == 1) withLeafStats(spark, data, st) else data
       }
-      subtractDeletes(spark, table, statted, s.deletes, s.renames)
-        .drop("_snap_file", "_snap_pos", RowIdCol)
-    }
+    liveView(spark, table, s, statted)
+      .map(_.drop("_snap_file", "_snap_pos", RowIdCol))
+      .getOrElse(
+        // a zero-file version still has a schema when the commit
+        // DECLARED columns ([[truncate]] re-declares the pre-truncate
+        // live schema; ADD COLUMN declares one) — serve a typed empty
+        // relation instead of a schemaless one, the Delta
+        // truncated-table read contract
+        if (s.addedColumns.isEmpty) spark.emptyDataFrame
+        else spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          StructType(s.addedColumns.map { case (n, t) =>
+            StructField(n, org.apache.spark.sql.types.DataType.fromDDL(t),
+              nullable = true) })))
+  }
 
   // -------------------------------------------------------------- merge
 
@@ -3585,24 +3569,24 @@ object Snapshots {
       recompute = false)
     enforceConstraints(spark, table, changes, "merge")
     val mid = stage(spark, table, changes, statsCols)
+    val keys = changes.select(keyCols.map(col): _*).distinct()
     commitLoop(spark, table, "merge", toBranch = branch) { prev =>
-      val cur = carried(prev)
-      val newDeletes: Seq[String] =
-        if (prev.forall(_.files.isEmpty)) Nil
-        else {
-          // era-aware live view: merge keys must match old-era rows
-          // under renamed/widened schemas too
-          val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
-          val keys = changes.select(keyCols.map(col): _*).distinct()
-          val tomb = live.join(broadcast(keys), keyCols, "left_semi")
-            .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
-          writeDeletes(spark, table, tomb)
-        }
       guardRecycledNames(changes, prev)
-      cur.copy(manifests = cur.manifests :+ mid,
-        deletes = cur.deletes ++ newDeletes)
+      keyedContent(spark, table, prev, keys, keyCols, mid)
     }
+  }
+
+  /** The content of a keyed upsert ([[merge]], [[applyChanges]]): every
+    * live copy of a `keys` key tombstoned — era-aware, so keys match
+    * old-era rows under renamed/widened schemas too — and the staged
+    * manifest `mid` appended. */
+  private def keyedContent(spark: SparkSession, table: String,
+      prev: Option[Snapshot], keys: DataFrame, keyCols: Seq[String],
+      mid: String): LiteSnapshot = {
+    val cur = carried(prev)
+    cur.copy(manifests = cur.manifests :+ mid, deletes = cur.deletes ++
+      tombstone(spark, table, prev)(
+        _.join(broadcast(keys), keyCols, "left_semi")))
   }
 
   /** One WHEN clause of [[mergeWhen]]. Conditions and right-hand sides
@@ -3676,14 +3660,21 @@ object Snapshots {
     commitLoop(spark, table, "merge", toBranch = branch) { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"cannot MERGE into never-committed table $table"))
-      val liveOpt =
-        if (prev.files.isEmpty) None
-        else Some(subtractDeletes(spark, table,
-          withMetaEras(spark, table, prev), prev.deletes, prev.renames))
+      val liveOpt = liveView(spark, table, prev)
       val targetCols = liveOpt.map(_.columns.toSeq
         .filterNot(Set("_snap_file", "_snap_pos", RowIdCol))).getOrElse(Nil)
       val liveTypes = liveOpt.map(_.schema.fields
         .map(f => f.name -> f.dataType).toMap).getOrElse(Map.empty)
+      // an UPDATE clause's restaged rows: its SETs cast to the live
+      // types, every other target column carried
+      def updated(rows: DataFrame, sets: Map[String, Column]): DataFrame = {
+        val unknown = sets.keySet -- targetCols.toSet
+        if (unknown.nonEmpty) throw new IllegalArgumentException(
+          s"MERGE UPDATE sets non-existent column(s): " +
+            unknown.mkString(", "))
+        rows.select(targetCols.map(c => sets.get(c)
+          .map(_.cast(liveTypes(c)).as(c)).getOrElse(col(c).as(c))): _*)
+      }
       // ---------------- matched side: tombstones + update restages
       var newDeleteFiles: Seq[String] = Nil
       var restaged: Option[DataFrame] = None
@@ -3700,21 +3691,12 @@ object Snapshots {
           s"MERGE is ambiguous: $ambiguous target row(s) matched by " +
             "multiple source rows — dedup the source or use merge() " +
             "(latest-wins)")
-        newDeleteFiles = writeDeletes(spark, table, affected
-          .select(col("_snap_file").as("file"), col("_snap_pos").as("pos")))
+        newDeleteFiles = writeDeletes(spark, table, affected)
         val updates = matched.zipWithIndex.collect {
           case (u: WhenMatchedUpdate, i) =>
-            val sets =
+            updated(affected.filter(col("_clause") === i),
               if (u.set.nonEmpty) u.set
-              else targetCols.map(c => c -> col(s"_src_$c")).toMap
-            val unknown = sets.keySet -- targetCols.toSet
-            if (unknown.nonEmpty) throw new IllegalArgumentException(
-              s"MERGE UPDATE sets non-existent column(s): " +
-                unknown.mkString(", "))
-            affected.filter(col("_clause") === i)
-              .select(targetCols.map(c => sets.get(c)
-                .map(_.cast(liveTypes(c)).as(c))
-                .getOrElse(col(c).as(c))): _*)
+              else targetCols.map(c => c -> col(s"_src_$c")).toMap)
         }
         restaged = updates.reduceOption(_ unionAll _)
       }
@@ -3728,22 +3710,13 @@ object Snapshots {
         val orphans = live.join(broadcast(srcKeys), keyCols, "left_anti")
         val routed = orphans.withColumn("_clause", routeOf(bySource))
         val affected = routed.filter(col("_clause") >= 0)
-        newDeleteFiles = newDeleteFiles ++ writeDeletes(spark, table,
-          affected.select(col("_snap_file").as("file"),
-            col("_snap_pos").as("pos")))
+        newDeleteFiles = newDeleteFiles ++ writeDeletes(spark, table, affected)
         val updates = bySource.zipWithIndex.collect {
           case (u: WhenNotMatchedBySourceUpdate, i) =>
             require(u.set.nonEmpty,
               "WHEN NOT MATCHED BY SOURCE UPDATE needs explicit SET " +
                 "expressions — there are no source columns to star from")
-            val unknown = u.set.keySet -- targetCols.toSet
-            if (unknown.nonEmpty) throw new IllegalArgumentException(
-              s"MERGE UPDATE sets non-existent column(s): " +
-                unknown.mkString(", "))
-            affected.filter(col("_clause") === i)
-              .select(targetCols.map(c => u.set.get(c)
-                .map(_.cast(liveTypes(c)).as(c))
-                .getOrElse(col(c).as(c))): _*)
+            updated(affected.filter(col("_clause") === i), u.set)
         }
         restaged = (restaged.toSeq ++ updates).reduceOption(_ unionAll _)
       }
@@ -3834,20 +3807,18 @@ object Snapshots {
   def deleteWhere(spark: SparkSession, table: String,
       pred: org.apache.spark.sql.Column, branch: String = ""): Int = {
     if (branch.nonEmpty) branchHeadSnapshot(spark, table, branch) // fail fast
-    commitLoop(spark, table, "delete", toBranch = branch) { prev =>
-      val cur = carried(prev)
-      val newDeletes: Seq[String] =
-        if (prev.forall(_.files.isEmpty)) Nil
-        else {
-          // era-aware live view: the predicate speaks CURRENT names
-          val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
-          val tomb = live.filter(pred)
-            .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
-          writeDeletes(spark, table, tomb)
-        }
-      cur.copy(deletes = cur.deletes ++ newDeletes)
-    }
+    commitLoop(spark, table, "delete", toBranch = branch)(
+      deleteContent(spark, table, _, pred))
+  }
+
+  /** The content of a predicate DELETE: `prev`'s record plus the
+    * tombstones of its live rows matching `pred` (era-aware: the
+    * predicate speaks CURRENT names). */
+  private def deleteContent(spark: SparkSession, table: String,
+      prev: Option[Snapshot], pred: Column): LiteSnapshot = {
+    val cur = carried(prev)
+    cur.copy(deletes =
+      cur.deletes ++ tombstone(spark, table, prev)(_.filter(pred)))
   }
 
   /** TRUNCATE: one metadata-only commit with an EMPTY manifest list —
@@ -3896,18 +3867,8 @@ object Snapshots {
     val mid = stage(spark, table, clustered, stats)
     commitLoop(spark, table, "replace-where") { prev =>
       guardRecycledNames(df, prev)
-      val cur = carried(prev)
-      val newDeletes: Seq[String] =
-        if (prev.forall(_.files.isEmpty)) Nil
-        else {
-          val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
-          val tomb = live.filter(pred)
-            .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
-          writeDeletes(spark, table, tomb)
-        }
-      cur.copy(manifests = cur.manifests :+ mid,
-        deletes = cur.deletes ++ newDeletes)
+      val deleted = deleteContent(spark, table, prev, pred)
+      deleted.copy(manifests = deleted.manifests :+ mid)
     }
   }
 
@@ -3969,28 +3930,15 @@ object Snapshots {
       val boundary = byCls.getOrElse(1, Nil) ++
         (if (hasEq) byCls.getOrElse(2, Nil) else Nil)
       val newDeletes =
-        if (boundary.isEmpty) Nil
-        else {
-          val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.copy(files = boundary)),
-            prev.deletes, prev.renames)
+        tombstone(spark, table, Some(prev.copy(files = boundary))) { live =>
           val types = live.schema.fields.map(f => f.name -> f.dataType).toMap
           val v = statsExpr(statName, types)
-          val tomb = live.filter(v >= lit(lo) && v <= lit(hi))
-            .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
-          writeDeletes(spark, table, tomb)
+          live.filter(v >= lit(lo) && v <= lit(hi))
         }
       val manifests =
         if (full.isEmpty) prev.manifests
-        else {
-          val survivors = prev.files.filterNot(full.toSet)
-          val dirs = survivors.map(dirOf).toSet
-          Seq(writeManifest(spark, table, survivors,
-            prev.stats.filter { case (f, _) => !full.contains(f) },
-            prev.blooms.filter { case (f, _) => !full.contains(f) },
-            prev.dirSchemas.filter { case (d, _) => dirs(d) },
-            knownRows = prev.rowCounts, knownSizes = prev.sizes))
-        }
+        else Seq(carriedManifest(spark, table, prev,
+          prev.files.filterNot(full.toSet)))
       // tombstones already covering dropped files now point at absent
       // paths and match nothing — same carry note as optimizeSmallFiles
       prev.carry.copy(manifests = manifests,
@@ -4046,37 +3994,10 @@ object Snapshots {
     * Returns None when none are outstanding. */
   def materializeEqDeletes(spark: SparkSession, table: String): Option[Int] = {
     val s = latestSnapshot(spark, table).getOrElse(return None)
-    val (eq, pos) = s.deletes.partition(isEqDelete)
+    val eq = s.deletes.filter(isEqDelete)
     if (eq.isEmpty) return None
-    // live rows the equality deletes currently suppress = (all minus
-    // positional) minus (all minus ALL deletes): compute directly by
-    // flagging each eq delete's matches on the positional-only view.
-    // Era-aware scan: the key join must resolve RENAMED key columns the
-    // way the read path does ([[eraRead]]) — a plain withMeta would
-    // throw (or miss old-era rows) on an evolved table.
-    val base = subtractDeletes(spark, table,
-      withMetaEras(spark, table, s), pos, s.renames)
-    val tombs = eq.map { e =>
-      import spark.implicits._
-      // keys written before a RENAME resolve through the chain, the
-      // same mapping [[eqDeleteParts]] serves the read path
-      val rawKeys = spark.read.parquet(s"${filePath(table, e)}/keys")
-      val keys = rawKeys
-        .toDF(rawKeys.columns.map(c => renamedName(s.renames, c)): _*)
-        .distinct()
-      val covered = eqScope(spark, table, e)
-        .flatMap(readManifest(spark, table, _).files).distinct
-      val covDf = broadcast(covered.toDF("_eq_cov_file"))
-      // null-safe key match (Iceberg v2: null equals null in an
-      // equality delete) — a name-list join would use === and silently
-      // drop null-keyed deletes
-      val kcond = keys.columns.toSeq
-        .map(c => base(c) <=> keys(c)).reduce(_ && _)
-      base.join(broadcast(keys), kcond, "left_semi")
-        .join(covDf, col("_snap_file") === col("_eq_cov_file"), "left_semi")
-        .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
-    }.reduce(_ unionAll _).distinct()
-    val newDeletes = writeDeletes(spark, table, tombs)
+    val newDeletes = eqSuppressed(spark, table, s)
+      .fold(Seq.empty[String])(writeDeletes(spark, table, _))
     val scanned = eq.toSet
     Some(commitLoop(spark, table, "delete") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
@@ -4113,15 +4034,10 @@ object Snapshots {
     if (branch.nonEmpty) branchHeadSnapshot(spark, table, branch) // fail fast
     commitLoop(spark, table, "update", toBranch = branch) { prev =>
       val cur = carried(prev)
-      if (prev.forall(_.files.isEmpty)) cur
-      else {
-        val live = subtractDeletes(spark, table,
-          withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
+      prev.flatMap(liveView(spark, table, _)).fold(cur) { live =>
         val matched = live.filter(pred)
         // tombstone every matched live copy (delete half of the pair)
-        val tomb = matched
-          .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
-        val dFiles = writeDeletes(spark, table, tomb)
+        val dFiles = writeDeletes(spark, table, matched)
         // re-stage the matched rows with the SET expressions applied
         // (insert half) — ALL SETs in ONE projection against the
         // pre-update row, so a right-hand side referencing another SET
@@ -4161,6 +4077,17 @@ object Snapshots {
         s"cannot restore $table to missing version $v"))
     commitLoop(spark, table, "restore")(_ => target.carry)
   }
+
+  /** A tombstone `file` reference of the table rooted at `srcRoot`
+    * re-pointed at the table rooted at `dstRoot` by the canonical
+    * reference rule (the same as [[LakePaths.relFileCol]]): a file under
+    * dst's own root is dst-RELATIVE, anything else absolute. */
+  private def rebasedFileCol(file: Column, srcRoot: String,
+      dstRoot: String): Column =
+    regexp_replace(
+      when(file.startsWith("/"), file)
+        .otherwise(concat(lit(srcRoot + "/"), file)),
+      lit("^" + java.util.regex.Pattern.quote(dstRoot + "/")), lit(""))
 
   /** SHALLOW CLONE (`CREATE TABLE dst SHALLOW CLONE src [VERSION AS OF
     * v]`, the Delta zero-copy clone): `dst` is born as a one-version
@@ -4205,36 +4132,23 @@ object Snapshots {
       val a = if (f.startsWith("/")) f else s"$srcRoot/$f"
       if (a.startsWith(dstRoot + "/")) a.stripPrefix(dstRoot + "/") else a
     }
-    def dstCanonical(dels: DataFrame): DataFrame = {
-      val absCol = when(col("file").startsWith("/"), col("file"))
-        .otherwise(concat(lit(srcRoot + "/"), col("file")))
-      dels.withColumn("file",
-        regexp_replace(absCol,
-          lit("^" + java.util.regex.Pattern.quote(dstRoot + "/")),
-          lit("")))
-    }
     val (eqDels, posDels) = s.deletes.partition(isEqDelete)
     val posCloneDeletes: Seq[String] =
       if (posDels.isEmpty) Nil
-      else writeDeletes(spark, dst, dstCanonical(
-        readPosDeletes(spark, src, posDels)))
+      else writeDeletes(spark, dst, readPosDeletes(spark, src, posDels),
+        rebasedFileCol(col("file"), srcRoot, dstRoot), col("pos"))
     // outstanding EQUALITY deletes materialize INTO THE CLONE: their
     // scope speaks source manifest ids, meaningless to carry — so the
-    // suppressed positions are located here (one scan of the scoped
-    // files, the same join shape as materializeEqDeletes) and written
+    // suppressed positions are located here ([[eqSuppressed]], as
+    // materializeEqDeletes does) and written
     // as the clone's own positional tombstones. The source is never
     // mutated, the clone carries no eq debt, and the cloned live view
     // is bit-identical to the source's.
     val eqCloneDeletes: Seq[String] =
       if (eqDels.isEmpty) Nil
-      else {
-        val base = subtractDeletes(spark, src,
-          withMetaEras(spark, src, s), posDels, s.renames)
-        val hits = eqDels.map(e => eqDeleteHits(spark, src, base, e, s.renames))
-          .reduce(_ unionAll _).distinct()
-          .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
-        writeDeletes(spark, dst, dstCanonical(hits))
-      }
+      else eqSuppressed(spark, src, s).fold(Seq.empty[String])(
+        writeDeletes(spark, dst, _,
+          rebasedFileCol(col("_snap_file"), srcRoot, dstRoot)))
     val manifest = writeManifest(spark, dst, s.files.map(ref),
       s.stats.map { case (f, st) => ref(f) -> st },
       s.blooms.map { case (f, b) => ref(f) -> b },
@@ -4450,14 +4364,10 @@ object Snapshots {
       if (deltaPosSrc.isEmpty) (Nil, Set.empty[String])
       else {
         val dels = readPosDeletes(spark, branch, deltaPosSrc)
-          .withColumn("file", regexp_replace(
-            when(col("file").startsWith("/"), col("file"))
-              .otherwise(concat(lit(srcRoot + "/"), col("file"))),
-            lit("^" + java.util.regex.Pattern.quote(dstRoot + "/")),
-            lit("")))
+          .withColumn("file", rebasedFileCol(col("file"), srcRoot, dstRoot))
         val anchored = dels.select("file").distinct()
           .collect().map(_.getString(0)).toSet
-        (writeDeletes(spark, dst, dels), anchored)
+        (writeDeletes(spark, dst, dels, col("file"), col("pos")), anchored)
       }
     if (deltaMids.nonEmpty)
       enforceConstraints(spark, dst, readManifestScan(spark, dst, deltaMids),
@@ -4519,11 +4429,8 @@ object Snapshots {
       // changes nothing the scope reads, and vacuum pins every
       // outstanding eq delete's scope manifests live (liveManifests ∪
       // eqScopes), so GC cannot orphan them either.
-      val dirs = prev.files.map(dirOf).toSet
-      prev.carry.copy(manifests = Seq(writeManifest(spark, table, prev.files,
-        prev.stats, prev.blooms,
-        prev.dirSchemas.filter { case (d, _) => dirs(d) },
-        knownRows = prev.rowCounts, knownSizes = prev.sizes)))
+      prev.carry.copy(manifests =
+        Seq(carriedManifest(spark, table, prev, prev.files)))
     }
 
   /** OPTIMIZE: rewrite the current live view (data minus positional
@@ -4582,9 +4489,17 @@ object Snapshots {
     * come from the manifests' recorded sizes. */
   def optimizeSmallFiles(spark: SparkSession, table: String,
       minBytes: Long, statsCols: Seq[String] = Nil,
-      zorderBy: Seq[String] = Nil): Option[Int] = {
-    def split(s: Snapshot) =
-      s.files.map(f => f -> s.sizes(f)).partition(_._2 < minBytes)
+      zorderBy: Seq[String] = Nil): Option[Int] =
+    compactSmall(spark, table, minBytes, statsCols, zorderBy)((_, _) => true)
+
+  /** The small-file compaction commit: the head's files under
+    * `minBytes` that `eligible` admits compact ([[compactContent]]), the
+    * rest carry by reference. None when the probe finds fewer than two. */
+  private def compactSmall(spark: SparkSession, table: String,
+      minBytes: Long, statsCols: Seq[String], zorderBy: Seq[String])(
+      eligible: (Snapshot, String) => Boolean): Option[Int] = {
+    def split(s: Snapshot) = s.files.map(f => f -> s.sizes(f))
+      .partition { case (f, b) => b < minBytes && eligible(s, f) }
     val probe = latestSnapshot(spark, table).getOrElse(return None)
     if (split(probe)._1.size <= 1) return None
     Some(commitLoop(spark, table, "optimize") { prevOpt =>
@@ -4645,19 +4560,12 @@ object Snapshots {
       val (allTombs, hot) = hotOf(prev)
       if (hot.isEmpty) return prev.carry
       val hotSet = hot.toSet
-      val live = subtractDeletes(spark, table,
-          withMetaEras(spark, table, prev.copy(files = hot)), prev.deletes,
-          prev.renames)
+      val live = liveView(spark, table, prev.copy(files = hot)).get
         .drop("_snap_file", "_snap_pos")
       val fresh = stage(spark, table,
         live.coalesce(math.max(1, hot.size / 2)), statsCols)
-      val carriedFiles = prev.files.filterNot(hotSet)
-      val carriedDirs = carriedFiles.map(dirOf).toSet
-      val carried = writeManifest(spark, table, carriedFiles,
-        prev.stats.filter { case (f, _) => !hotSet(f) },
-        prev.blooms.filter { case (f, _) => !hotSet(f) },
-        prev.dirSchemas.filter { case (d, _) => carriedDirs(d) },
-        knownSizes = prev.sizes)
+      val carried =
+        carriedManifest(spark, table, prev, prev.files.filterNot(hotSet))
       // tombstones into carried files survive; hot files' are dropped
       // with the files they covered (broadcast anti-join — never isin
       // over an unbounded literal list)
@@ -4668,7 +4576,8 @@ object Snapshots {
       // names sit outside every scope (their suppressed rows were
       // removed by the live-view rewrite), the cold files stay covered
       prev.carry.copy(manifests = Seq(carried, fresh), deletes =
-        prev.deletes.filter(isEqDelete) ++ writeDeletes(spark, table, keep))
+        prev.deletes.filter(isEqDelete) ++
+          writeDeletes(spark, table, keep, col("file"), col("pos")))
     }
     Some(commitLoop(spark, table, "optimize") { prevOpt =>
       content(prevOpt.getOrElse(throw new IllegalStateException(
@@ -4694,21 +4603,9 @@ object Snapshots {
   def optimizeWhere(spark: SparkSession, table: String, column: String,
       lo: Double, hi: Double, minBytes: Long,
       statsCols: Seq[String] = Nil): Option[Int] = {
-    val probe = latestSnapshot(spark, table).getOrElse(return None)
-    def split(s: Snapshot): (Seq[(String, Long)], Seq[(String, Long)]) = {
-      val hit = pruneFiles(s, column, lo, hi).toSet
-      s.files.map(f => f -> s.sizes(f))
-        .partition { case (f, b) => hit(f) && b < minBytes }
-    }
-    if (split(probe)._1.size <= 1) return None
-    Some(commitLoop(spark, table, "optimize") { prevOpt =>
-      val prev = prevOpt.getOrElse(throw new IllegalStateException(
-        s"$table disappeared during optimize"))
-      val (small, big) = split(prev)
-      if (small.size <= 1) prev.carry
-      else compactContent(spark, table, prev, small, big, minBytes,
-        statsCols, Nil)
-    })
+    val sel = rangeSelection(column, lo, hi)
+    compactSmall(spark, table, minBytes, statsCols, Nil)((s, f) =>
+      sel.keep(f, s.stats.getOrElse(f, Map.empty), Map.empty))
   }
 
   private def compactContent(spark: SparkSession, table: String,
@@ -4721,9 +4618,7 @@ object Snapshots {
     // partition and compacts nothing)
     val outFiles = math.max(1L,
       math.min(small.size.toLong, small.map(_._2).sum / minBytes)).toInt
-    val live = subtractDeletes(spark, table,
-        withMetaEras(spark, table, prev.copy(files = small.map(_._1))),
-        prev.deletes, prev.renames)
+    val live = liveView(spark, table, prev.copy(files = small.map(_._1))).get
       .drop("_snap_file", "_snap_pos")
     // `OPTIMIZE ... ZORDER BY (c1, c2)`: instead of packing arbitrary
     // rows together, lay the rewritten tail out along the Morton curve
@@ -4739,13 +4634,7 @@ object Snapshots {
       if (zorderBy.nonEmpty) ZOrder.clusteredN(live, outFiles, zorderBy)
       else live.coalesce(outFiles)
     val compacted = stage(spark, table, smallLive, statsCols)
-    val bigSet = big.map(_._1).toSet
-    val bigDirs = big.map(b => dirOf(b._1)).toSet
-    val carried = writeManifest(spark, table, big.map(_._1),
-      prev.stats.filter { case (f, _) => bigSet(f) },
-      prev.blooms.filter { case (f, _) => bigSet(f) },
-      prev.dirSchemas.filter { case (d, _) => bigDirs(d) },
-      knownSizes = prev.sizes)
+    val carried = carriedManifest(spark, table, prev, big.map(_._1))
     // carried big files may still be pre-drop dirs: the ledger stays
     prev.carry.copy(manifests = Seq(carried, compacted))
   }
@@ -4815,71 +4704,53 @@ object Snapshots {
             .drop("_snap_file", "_snap_pos")
             .withColumn("_change_type", lit("insert"))
         }
+      // the rows of RETAINED files that delete entries hit — rows under
+      // positional tombstones `pos`, and each equality delete's keys
+      // within its scope ([[eqDeleteHits]]) — minus rows `dead` kills
+      def retainedHits(pos: Option[DataFrame], eq: Seq[String],
+          dead: Seq[String]): Option[DataFrame] =
+        if (retained.isEmpty || (pos.isEmpty && eq.isEmpty)) None
+        else Some {
+          val rows = withMetaEras(spark, table, s2.copy(files = retained))
+          val posHit = pos.map(t => rows.join(broadcast(t),
+            rows("_snap_file") === t("file") && rows("_snap_pos") === t("pos"),
+            "left_semi"))
+          val hit = (posHit.toSeq ++
+            eq.map(eqDeleteHits(spark, table, rows, _, s2.renames)))
+            .reduce(_ unionAll _).distinct()
+          subtractDeletes(spark, table, hit, dead, s2.renames)
+            .drop("_snap_file", "_snap_pos")
+        }
       // tombstone deletes read RETAINED v1 files only: a tombstone into a
       // dropped file is covered by the rewrite-delete source below — one
       // emission per dead row, never two. Rows ALREADY dead at v1 are
       // excluded (anti join on v1's deletes): a restore-then-re-delete
       // window re-tombstones rows v1 never had, and emitting deletes for
       // those would make the feed non-composable across a restore.
-      val tombDeletes =
-        if (retained.isEmpty || (tombs.isEmpty && newEq.isEmpty)) None
-        else Some {
-          val old = withMetaEras(spark, table, s2.copy(files = retained))
-          val posHit = tombs.map(t => old.join(broadcast(t),
-            old("_snap_file") === t("file") && old("_snap_pos") === t("pos"),
-            "left_semi"))
-          // eq-delete delete images: rows of retained files the new eq
-          // deletes suppress — key semi-join within each delete's scope
-          val eqHit = newEq.map(e =>
-            eqDeleteHits(spark, table, old, e, s2.renames))
-          val hit = (posHit.toSeq ++ eqHit).reduce(_ unionAll _).distinct()
-          subtractDeletes(spark, table, hit, s1.deletes, s2.renames)
-            .drop("_snap_file", "_snap_pos")
-            .withColumn("_change_type", lit("delete"))
-        }
-      val rewriteDeletes =
-        if (dropped.isEmpty) None
-        else Some {
-          // dropped files are v1's: their era schemas are v1's records
-          subtractDeletes(spark, table, withMetaEras(spark, table,
-              s2.copy(files = dropped, dirSchemas = s1.dirSchemas)),
-              s1.deletes, s2.renames)
-            .drop("_snap_file", "_snap_pos")
-            .withColumn("_change_type", lit("delete"))
-        }
+      val tombDeletes = retainedHits(tombs, newEq, s1.deletes)
+        .map(_.withColumn("_change_type", lit("delete")))
+      // dropped files are v1's: their dir schemas, sizes and tombstones
+      // are v1's records, read under v2's names
+      val rewriteDeletes = liveView(spark, table, s1.copy(files = dropped,
+          entry = s2.entry.copy(deletes = s1.deletes)))
+        .map(_.drop("_snap_file", "_snap_pos")
+          .withColumn("_change_type", lit("delete")))
       // resurrection inserts: tombstones REMOVED by the window (a
       // [[restore]] rolls delete files back) revive their rows — each
       // revived row surfaces as an insert iff its file is retained and
       // no v2 tombstone still covers it. Without this source, applying
-      // the feed across a restore misses exactly the un-deleted rows.
+      // the feed across a restore misses exactly the un-deleted rows. A
+      // REMOVED eq delete (a restore rolled it back, or a materialize
+      // converted it) revives its suppressed rows — for a materialize
+      // window the replacement positional tombstones land in s2.deletes
+      // and cancel the revival exactly, so the feed is empty (the live
+      // view did not change)
       val (remEq, remPos) = s1.deletes.filterNot(s2.deletes.toSet)
         .partition(isEqDelete)
-      val resurrections =
-        if ((remEq.isEmpty && remPos.isEmpty) || retained.isEmpty) None
-        else Some {
-          val rows = withMetaEras(spark, table, s2.copy(files = retained))
-          val posRevived =
-            if (remPos.isEmpty) None
-            else Some {
-              val tOld = readPosDeletes(spark, table, remPos)
-              rows.join(broadcast(tOld),
-                rows("_snap_file") === tOld("file") &&
-                  rows("_snap_pos") === tOld("pos"), "left_semi")
-            }
-          // a REMOVED eq delete (a restore rolled it back, or a
-          // materialize converted it) revives its suppressed rows —
-          // for a materialize window the replacement positional
-          // tombstones land in s2.deletes and the subtraction below
-          // cancels the revival exactly, so the feed is empty (the
-          // live view did not change)
-          val eqRevived = remEq.map(e =>
-            eqDeleteHits(spark, table, rows, e, s2.renames))
-          val revived = (posRevived.toSeq ++ eqRevived)
-            .reduce(_ unionAll _).distinct()
-          subtractDeletes(spark, table, revived, s2.deletes, s2.renames)
-            .drop("_snap_file", "_snap_pos")
-            .withColumn("_change_type", lit("insert"))
-        }
+      val resurrections = retainedHits(
+          Some(remPos).filter(_.nonEmpty).map(readPosDeletes(spark, table, _)),
+          remEq, s2.deletes)
+        .map(_.withColumn("_change_type", lit("insert")))
       // every side reads through the era-aware scan with v2's rename
       // chain, so old-era delete images union with new-era inserts under
       // the CURRENT names and widened types
@@ -4907,19 +4778,8 @@ object Snapshots {
       .drop("_change_type")
     val mid = stage(spark, table, inserts, Nil)
     commitLoop(spark, table, "cdc-apply") { prev =>
-      val cur = carried(prev)
-      val newDeletes: Seq[String] =
-        if (prev.forall(_.files.isEmpty)) Nil
-        else {
-          val live = subtractDeletes(spark, table,
-            withMetaEras(spark, table, prev.get), cur.deletes, cur.renames)
-          val tomb = live.join(broadcast(deletes), keyCols, "left_semi")
-            .select(col("_snap_file").as("file"), col("_snap_pos").as("pos"))
-          writeDeletes(spark, table, tomb)
-        }
       guardRecycledNames(inserts, prev)
-      cur.copy(manifests = cur.manifests :+ mid,
-        deletes = cur.deletes ++ newDeletes)
+      keyedContent(spark, table, prev, deletes, keyCols, mid)
     }
   }
 
@@ -4962,10 +4822,7 @@ object Snapshots {
     snapshot(spark, table, v).flatMap { s2 =>
       if (s2.ref.nonEmpty) None
       else {
-        var w = v - 1
-        while (w >= 1 && !snapshot(spark, table, w).exists(_.ref.isEmpty))
-          w -= 1
-        val s1 = if (w >= 1) snapshot(spark, table, w) else None
+        val s1 = mainAtOrBelow(spark, table, v - 1)
         val prevFiles = s1.map(_.files.toSet).getOrElse(Set.empty)
         val prevDeletes = s1.map(_.deletes.toSet).getOrElse(Set.empty)
         val appendShaped = prevFiles.subsetOf(s2.files.toSet) &&

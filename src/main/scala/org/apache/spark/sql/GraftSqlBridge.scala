@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkException
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
@@ -24,6 +25,16 @@ object GraftSqlBridge {
   /** Wrap a (already-resolved) logical plan back into a DataFrame. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Do `schemas` merge under `StructType.merge`, the merge a parquet
+    * `mergeSchema` footer pass folds its files' schemas with (same case
+    * sensitivity)? A pure check: no job, no file opened. */
+  def schemasMerge(spark: SparkSession,
+      schemas: Seq[types.StructType]): Boolean = {
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    try { schemas.reduceOption(_.merge(_, caseSensitive)); true }
+    catch { case _: SparkException => false }
+  }
 
   /** A V1 parquet scan built ENTIRELY from log metadata — the
     * Delta/Iceberg snapshot-read shape (TahoeLogFileIndex): the manifest
@@ -61,8 +72,8 @@ object GraftSqlBridge {
     * read), so `VERSION AS OF` scans plan exactly like a native V2
     * table. Internal constructor, hence bridged here.
     *
-    * When the log also proves every file's BYTE SIZE (`sizes` covers all
-    * paths) the table's FileIndex is served from log metadata — the V2
+    * When the log also serves every file's BYTE SIZE (`sizes`) the
+    * table's FileIndex is served from log metadata — the V2
     * twin of [[logFileRelation]], on the same [[LogFedFileIndex]]: the
     * stock FileTable otherwise pays one driver-side FS status per path
     * at `fileIndex` construction (DataSource.checkAndGlobPathIfNecessary
@@ -74,9 +85,9 @@ object GraftSqlBridge {
       // log-recorded schema when the manifest can prove one (uniform
       // eras): skips the footer-inference pass a None schema pays
       schema: Option[types.StructType] = None,
-      // log-recorded per-file byte sizes (same keys as `paths`), when
-      // the manifests can prove ALL of them — enables the log-fed
-      // FileIndex; None / partial coverage keeps the stock listing path
+      // log-recorded per-file byte sizes (same keys as `paths`; the
+      // manifests record every file's) — enables the log-fed FileIndex;
+      // None keeps the stock listing path
       sizes: Option[Map[String, Long]] = None): connector.catalog.Table = {
     val session = spark.asInstanceOf[classic.SparkSession]
     val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(options)
@@ -84,7 +95,6 @@ object GraftSqlBridge {
     val served = for {
       sch <- schema
       sz <- sizes
-      if paths.forall(sz.contains)
     } yield new LogFedParquetTable(name, session, opts, sch.asNullable,
       fmt, paths.map(p => p -> sz(p)))
     served.getOrElse(execution.datasources.v2.parquet.ParquetTable(

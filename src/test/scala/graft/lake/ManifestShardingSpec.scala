@@ -114,4 +114,44 @@ class ManifestShardingSpec extends SparkTestBase {
     assert(Snapshots.readLite(spark, t, v3).get.summaries.nonEmpty)
     org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
   }
+
+  test("sharded reads: zero kept files keep the schema, a zero-file " +
+      "snapshot reads empty") {
+    val root = Files.createTempDirectory("graft_shard3").toString
+    val t = s"$root/t"
+    val z = s"$root/z"
+    val orders = graft.queries.Tables(spark, sfDir, "orders")
+    // every file records o_orderkey stats and blooms, and bucket 0 only
+    Snapshots.appendPartitioned(spark, t,
+      orders.filter(pmod(xxhash64(col("o_custkey")), lit(4)) === 0),
+      Seq("bucket(4,o_custkey)"), numFiles = 2,
+      statsCols = Seq("o_orderkey"), bloomCols = Seq("o_orderkey"))
+    val v = Snapshots.latestVersion(spark, t).get
+    val schema = Snapshots.readAt(spark, t, v).get.schema
+    val otherBucket = (1L to 100L).find(Snapshots.bucketValueOf(4, _) != 0d).get
+    assert(Snapshots.prunedFilesAt(spark, t, v, "o_orderkey", -9d, -8d)
+      .get.isEmpty)
+    assert(Snapshots.prunedFilesForKey(spark, t, v, "o_orderkey", -7L)
+      .get.isEmpty)
+    val reads = Seq(
+      Snapshots.readAtPruned(spark, t, v, "o_orderkey", -9d, -8d).get,
+      Snapshots.readAtKey(spark, t, v, "o_orderkey", -7L).get,
+      Snapshots.readAtBucketPoint(spark, t, v, "bucket(4,o_custkey)",
+        otherBucket).get)
+    reads.foreach { df =>
+      assert(df.schema == schema)
+      assert(df.count() == 0)
+    }
+    // deleteWhere on a never-committed table publishes a zero-file version
+    val vz = Snapshots.deleteWhere(spark, z, col("o_orderkey") === 1)
+    assert(Snapshots.snapshot(spark, z, vz).get.files.isEmpty)
+    Seq(Snapshots.readAtPruned(spark, z, vz, "o_orderkey", 0d, 9d).get,
+      Snapshots.readAtKey(spark, z, vz, "o_orderkey", 1L).get,
+      Snapshots.readAtBucketPoint(spark, z, vz, "bucket(4,o_custkey)", 1L).get)
+      .foreach { df =>
+        assert(df.schema.isEmpty)
+        assert(df.count() == 0)
+      }
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
+  }
 }
