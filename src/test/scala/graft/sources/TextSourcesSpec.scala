@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.types._
 
-import graft.SparkTestBase
+import graft.{ReferenceCorpus, SparkTestBase}
 
 /** PERMISSIVE capture semantics of the schema'd zone readers: bad lines
   * land verbatim in the corrupt column, good lines type cleanly, nothing
@@ -60,6 +60,7 @@ class TextSourcesSpec extends SparkTestBase {
   }
 
   test("reference sample CSV reads schema'd: every line lands as good or captured") {
+    ReferenceCorpus.assumePresent()
     // the comma-delimited reference sample, read against the declared
     // 10-column sales schema: currency/timestamp junk that the bronze
     // path rejects row-by-row must surface here as nulls or captures,
@@ -75,7 +76,7 @@ class TextSourcesSpec extends SparkTestBase {
       StructField("revenue", DoubleType),
       StructField("payment_method", StringType),
       StructField("customer_id", StringType)))
-    val path = "/root/reference/sample_csv_files/sales_2024-10-16.csv"
+    val path = s"${ReferenceCorpus.dir}/sales_2024-10-16.csv"
     val df = TextSources.readCsvZone(spark, path, salesSchema).persist()
     val total = df.count()
     val good = TextSources.good(df).count()

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{ReferenceCorpus, SparkTestBase}
 import graft.queries.{EventQueries, Tables}
 import graft.streaming.EventStreams.Event
 
@@ -440,10 +440,11 @@ class StreamingIngestSpec extends SparkTestBase {
   import graft.lake.LakeLayout
 
   test("watcher ingests raw files exactly once") {
+    ReferenceCorpus.assumePresent()
     val root = Files.createTempDirectory("graft_watch_").toString
     val layout = LakeLayout(root)
     Files.createDirectories(Paths.get(layout.raw))
-    Files.copy(Paths.get("/root/reference/sample_csv_files/sales_2024-10-16.csv"),
+    Files.copy(Paths.get(s"${ReferenceCorpus.dir}/sales_2024-10-16.csv"),
       Paths.get(s"${layout.raw}/sales_2024-10-16.csv"),
       StandardCopyOption.REPLACE_EXISTING)
     val notifier = new graft.lake.Notifier.Buffering
