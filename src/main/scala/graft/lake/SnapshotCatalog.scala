@@ -40,9 +40,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * CANNOT be served as a bare parquet file list — those loads fail
   * loudly, pointing at [[Snapshots.readAt]], rather than silently
   * resurrecting tombstoned rows or surfacing stale names. Additive
-  * schema evolution is served (mergeSchema); int→long widened eras
-  * surface parquet's merge refusal rather than clipped values. A
-  * read-only catalog: DDL/DML route through [[Snapshots]] commits.
+  * schema evolution is served log-fed too, under the eras' merged log
+  * schema ([[Snapshots.logSchema]]). A read-only catalog: DDL/DML
+  * route through [[Snapshots]] commits.
   */
 final class SnapshotCatalog extends TableCatalog {
 
@@ -182,7 +182,7 @@ final class SnapshotCatalog extends TableCatalog {
       throw new UnsupportedOperationException(
         s"version $v of ${ident.name()} has no data files (schema unknown " +
           "to the log); read it via Snapshots.readAt, which returns empty")
-    if (s.deletes.nonEmpty || Snapshots.needsEraRead(spark, s) ||
+    if (s.deletes.nonEmpty || Snapshots.needsEraRead(spark, t, s) ||
         // row-id-materialized files carry the hidden physical id column
         // (Snapshots.optimizeRowIds) — a bare parquet scan would surface
         // it to SQL; the readAt plan hides it
@@ -194,18 +194,15 @@ final class SnapshotCatalog extends TableCatalog {
       SnapshotMoRTable(s"${ident.name()}@v$v", t, v,
         Snapshots.readAt(spark, t, v).get.schema, s.properties)
     else {
-      val opts = new util.HashMap[String, String]()
-      // a version may span commits with additively-evolved schemas
-      opts.put("mergeSchema", "true")
       // SnapshotReadTable hides the FileTable so INSERT INTO stays a V2
       // AppendData (routed to the log) instead of falling back to a V1
-      // file write into the version's file list — see its Scaladoc.
-      // Log-recorded sizes (when complete) make the FileIndex log-fed:
-      // zero driver-side per-file statuses before the scan plans.
+      // file write into the version's file list — see its Scaladoc. The
+      // table is log-fed: the merged log schema (defined — the version
+      // needs no era read) over the recorded sizes, so the scan plans
+      // with zero driver-side per-file statuses and no footer pass.
       SnapshotReadTable(GraftSqlBridge.parquetTable(s"${ident.name()}@v$v",
-        spark, s.files.map(f => Snapshots.filePath(t, f)), opts,
-        schema = Snapshots.uniformLogSchema(s.dirSchemas, s.files),
-        sizes = Snapshots.logServedPathSizes(t, s, s.files)), t, v,
+        spark, Snapshots.logSchema(spark, t, s.dirSchemas, s.files).get,
+        s.files.map(f => Snapshots.filePath(t, f) -> s.sizes(f))), t, v,
         logProps = s.properties)
     }
   }

@@ -34,7 +34,9 @@ import org.apache.spark.sql.types._
   *    the era-aware read for renamed, dropped, defaulted or widened
   *    versions) — no read starts a job to find out — and every manifest
   *    records each file's size and dir schema ([[readManifest]] refuses
-  *    one that does not), so uniform versions scan straight from the log.
+  *    one that does not), so the one scan, uniform or additively evolved,
+  *    is served straight from the log under the eras' merged schema
+  *    ([[logSchema]]): no listing, no footer probe.
   *  - `newFilesBetween(v1, v2)` is the incremental-processing source: the
   *    files added after v1 — O(log) metadata, no table diff — which is
   *    how a downstream job consumes "what changed" without CDC columns.
@@ -829,16 +831,6 @@ object Snapshots {
           nullCount = Some(BigInt(nc)))
       }.toMap
 
-  /** Exact (min, max) of `column` over version `v` from LOG METADATA
-    * alone — the manifest per-file stats folded across the version's
-    * file list. Sound only when the stats ARE the data's extremes:
-    * declines on positional deletes (the extreme row may be deleted),
-    * drops (a re-added name could surface dead-era stats), or any file
-    * without a recorded range for the column (stats not collected,
-    * all-null, or non-finite values — collectStats skips those, and
-    * unknown never answers). Null-skipping matches SQL MIN/MAX: files
-    * whose column is all-null carry no entry, and if EVERY file lacked
-    * one this declines rather than fabricating a null. */
   /** Row-failure counts of `df` against CHECK `constraints`, ONE pass:
     * a single aggregate with a failure-sum per constraint. SQL CHECK
     * semantics — a row violates only when the expression is FALSE
@@ -910,6 +902,16 @@ object Snapshots {
       cur.copy(constraints = cur.constraints.filterNot(_._1 == name))
     }
 
+  /** Exact (min, max) of `column` over version `v` from LOG METADATA
+    * alone — the manifest per-file stats folded across the version's
+    * file list. Sound only when the stats ARE the data's extremes:
+    * declines on positional deletes (the extreme row may be deleted),
+    * drops (a re-added name could surface dead-era stats), or any file
+    * without a recorded range for the column (stats not collected,
+    * all-null, or non-finite values — collectStats skips those, and
+    * unknown never answers). Null-skipping matches SQL MIN/MAX: files
+    * whose column is all-null carry no entry, and if EVERY file lacked
+    * one this declines rather than fabricating a null. */
   def statsRangeAt(spark: SparkSession, table: String, v: Int,
       column: String): Option[(Double, Double)] =
     snapshot(spark, table, v).flatMap { s =>
@@ -963,11 +965,11 @@ object Snapshots {
   /** Per-file exact row counts of a manifest's delta. Always recorded so
     * `count(*)` over a delete-free version is answerable from the LOG in
     * O(manifests), never a table scan ([[rowCountAt]] — the Delta
-    * metadata-only-query discipline). Files the distributed scan yields
-    * no group for are genuinely empty → 0. */
+    * metadata-only-query discipline). Files the distributed pass over
+    * `scan` (the files' log-fed scan, built only when the pass runs)
+    * yields no group for are genuinely empty → 0. */
   private def collectRowCounts(spark: SparkSession, table: String,
-      files: Seq[String],
-      delta: Option[DataFrame] = None): Map[String, Long] = {
+      files: Seq[String], scan: => DataFrame): Map[String, Long] = {
     if (files.isEmpty) return Map.empty
     val conf = spark.sparkContext.hadoopConfiguration
     if (files.size <= DriverFooterCountMaxFiles) {
@@ -980,47 +982,33 @@ object Snapshots {
     } else {
       val root = LakePaths.tableRoot(spark, table)
       files.map(_ -> 0L).toMap ++
-        delta.getOrElse(
-          spark.read.parquet(files.map(f => filePath(table, f)): _*))
-          .groupBy(LakePaths.relFileCol(root).as("_f"))
+        scan.groupBy(LakePaths.relFileCol(root).as("_f"))
           .count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     }
   }
 
   /** Write one manifest. `knownSizes` (byte lengths — from the stager's
-    * one listStatus or the source manifests of carried files) and
-    * `dirSchemas` must cover every file: they are recorded so
-    * byte-bounded consumers (streaming maxBytesPerTrigger), the log-fed
-    * scans and the era reads answer from the log, never an FS status
-    * or footer probe. */
+    * one listStatus or the source manifests of carried files),
+    * `knownRows` (counted from a fresh write, [[collectRowCounts]], or
+    * copied from the source manifests of carried files — data that never
+    * moved is never recounted) and `dirSchemas` must cover every file:
+    * they are recorded so byte-bounded consumers (streaming
+    * maxBytesPerTrigger), metadata-only counts, the log-fed scans and
+    * the era reads answer from the log, never an FS status or footer
+    * probe. */
   private def writeManifest(spark: SparkSession, table: String,
       files: Seq[String], stats: FileStats, blooms: FileBlooms,
       dirSchemas: Map[String, StructType], knownSizes: Map[String, Long],
-      // carried-by-reference manifests (metadata delete, manifest
-      // rewrites) already KNOW every file's row count from the source
-      // manifest — recounting would re-open O(files) footers for data
-      // that never moved
-      knownRows: Map[String, Long] = null): String = {
+      knownRows: Map[String, Long]): String = {
     require(files.forall(f => knownSizes.contains(f) &&
-      dirSchemas.contains(dirOf(f))),
-      s"manifest of $table: every file needs a recorded size and dir schema")
+      knownRows.contains(f) && dirSchemas.contains(dirOf(f))),
+      s"manifest of $table: every file needs a recorded size, row count " +
+        "and dir schema")
     val ops = new FileOps(spark.sparkContext.hadoopConfiguration)
     val id = Naming.newRunId()
     val sizes = files.map(f => f -> knownSizes(f)).toMap
-    val rows =
-      if (knownRows != null && files.forall(knownRows.contains))
-        files.map(f => f -> knownRows(f)).toMap
-      else {
-        // the distributed count (> DriverFooterCountMaxFiles) rides the
-        // same log-fed scan shape as the stats/sketch passes when this
-        // very commit's dirSchemas prove ONE schema for every file
-        val delta =
-          if (files.size <= DriverFooterCountMaxFiles) None
-          else uniformLogSchema(dirSchemas, files).flatMap(sch =>
-            freshDeltaScan(spark, table, files.map(f => f -> sizes(f)), sch))
-        collectRowCounts(spark, table, files, delta)
-      }
+    val rows = files.map(f => f -> knownRows(f)).toMap
     val json = Json.render(Map(
       "files" -> files,
       "rows" -> rows,
@@ -1127,6 +1115,12 @@ object Snapshots {
   private def latestSnapshot(spark: SparkSession, table: String): Option[Snapshot] =
     latestVersion(spark, table).flatMap(v => snapshot(spark, table, v))
 
+  /** Main's current head VERSION — equals [[latestVersion]] unless
+    * branch commits sit at the tip. The version plain readers and SQL
+    * scans serve. */
+  def mainHeadVersion(spark: SparkSession, table: String): Option[Int] =
+    mainHeadSnapshot(spark, table).map(_.version)
+
   /** Head snapshot of MAIN: the highest version NOT addressed to a
     * named branch ([[createBranch]]). Branch commits claim global
     * version numbers (the one OCC allocator serializes every writer,
@@ -1136,12 +1130,6 @@ object Snapshots {
     * at the tip) cached log-object reads; zero for a branch-less table.
     * Holes from vacuum's pinned-version trimming are skipped (a hole
     * can never be main's head — vacuum pins it). */
-  /** Main's current head VERSION — equals [[latestVersion]] unless
-    * branch commits sit at the tip. The version plain readers and SQL
-    * scans serve. */
-  def mainHeadVersion(spark: SparkSession, table: String): Option[Int] =
-    mainHeadSnapshot(spark, table).map(_.version)
-
   private def mainHeadSnapshot(spark: SparkSession,
       table: String): Option[Snapshot] =
     latestVersion(spark, table).flatMap(mainAtOrBelow(spark, table, _))
@@ -1168,20 +1156,18 @@ object Snapshots {
       .sortBy(_._1)
   }
 
-  /** A log-fed scan over FRESH files this writer itself just produced
-    * (the write-side twin of [[logServedScan]]): the stager knows every
-    * file's byte size from the one listStatus that discovered them and
-    * the exact schema it wrote, so the stats/sketch/bloom/row-count
-    * passes over the delta skip the InMemoryFileIndex listing and the
-    * mergeSchema footer job a path-based read pays PER PASS — 2 driver
-    * jobs × passes per commit locally, O(files) object-store
-    * round-trips × passes at 100 TB. */
-  private def freshDeltaScan(spark: SparkSession, table: String,
-      sized: Seq[(String, Long)],
-      schema: StructType): Option[DataFrame] =
-    if (!logServedEnabled || sized.isEmpty) None
-    else Some(org.apache.spark.sql.GraftSqlBridge.logFileRelation(spark,
-      schema, sized.map { case (f, len) => filePath(table, f) -> len }))
+  /** The one scan of files the log records: `sized` (table refs → byte
+    * size) served under `schema` by the log-fed V1 builder
+    * ([[org.apache.spark.sql.GraftSqlBridge.logFileRelation]]) — no
+    * listing, no footer probe. Snapshot reads ([[scanFiles]]), the
+    * metadata passes over a fresh delta ([[stage]]) and tombstone reads
+    * ([[readPosDeletes]]) all build it here; at 100 TB the listing and
+    * footer job a path-based read pays per call are O(files)
+    * object-store round-trips each. */
+  private def logScan(spark: SparkSession, table: String,
+      schema: StructType, sized: Seq[(String, Long)]): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.logFileRelation(spark, schema,
+      sized.map { case (f, len) => filePath(table, f) -> len })
 
   // ------------------------------------------------------------ commits
 
@@ -1331,9 +1317,10 @@ object Snapshots {
     val sized = listFresh(spark, dataDir, rel)
     val files = sized.map(_._1)
     // the metadata passes below share ONE log-fed delta scan: the
-    // schema is what this very write produced, so no listing and no
-    // footer probe is owed before reading the delta back
-    val delta = freshDeltaScan(spark, table, sized, df.schema)
+    // schema is what this very write produced and the sizes come from
+    // the one listStatus, so no listing and no footer probe is owed
+    // before reading the delta back — built only if a pass runs
+    lazy val delta = logScan(spark, table, df.schema, sized)
     // DECLARED stats/bloom columns (q261 table properties) apply at
     // this one chokepoint so EVERY staged write records them —
     // appends, SQL INSERTs, and crucially the DML restages
@@ -1363,7 +1350,8 @@ object Snapshots {
       collectStats(spark, table, files, allStats, delta),
       collectBlooms(spark, table, files, allBlooms, delta),
       if (files.isEmpty) Map.empty else Map(rel -> df.schema),
-      knownSizes = sized.toMap)
+      knownSizes = sized.toMap,
+      knownRows = collectRowCounts(spark, table, files, delta))
   }
 
   /** Per-file KMV sketches over `cols` (string/integral columns), one
@@ -1376,18 +1364,13 @@ object Snapshots {
     * delta's schema records nothing and NDV for the version declines
     * — unknown never answers. */
   private def collectSketches(spark: SparkSession, table: String,
-      files: Seq[String], cols: Seq[String],
-      // log-fed scan over the fresh delta ([[freshDeltaScan]]) when the
-      // stager has one — skips the listing + footer jobs per commit
-      delta: Option[DataFrame] = None)
+      files: Seq[String], cols: Seq[String], scan: => DataFrame)
       : (Map[String, Map[String, Seq[Long]]],
          Map[String, Map[String, Long]]) = {
     import org.apache.spark.sql.functions.{conv, md5, substring, sum}
     if (cols.isEmpty || files.isEmpty) return (Map.empty, Map.empty)
     val root = LakePaths.tableRoot(spark, table)
-    val data = delta.getOrElse(spark.read.option("mergeSchema", "true")
-      .parquet(files.map(f => filePath(table, f)): _*))
-    val present = cols.filter(data.schema.fieldNames.contains)
+    val present = cols.filter(scan.schema.fieldNames.contains)
     if (present.isEmpty) return (Map.empty, Map.empty)
     // ONE partial-aggregated pass for EVERY sketched column's KMV
     // bottom-k AND its null count (guide §2.3/§1.2): the previous shape
@@ -1402,7 +1385,7 @@ object Snapshots {
             .cast("long"), SketchK).as(s"_sk_$c"),
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"_nl_$c"))
     }
-    val rows = data
+    val rows = scan
       .groupBy(LakePaths.relFileCol(root).as("_f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -1433,7 +1416,7 @@ object Snapshots {
     * no bloom (unknown never prunes). */
   private def collectBlooms(spark: SparkSession, table: String,
       files: Seq[String], bloomCols: Seq[String],
-      delta: Option[DataFrame] = None): FileBlooms = {
+      scan: => DataFrame): FileBlooms = {
     if (bloomCols.isEmpty || files.isEmpty) return Map.empty
     import org.apache.spark.util.sketch.BloomFilter
     import spark.implicits._
@@ -1445,10 +1428,6 @@ object Snapshots {
     }
     def deser(bytes: Array[Byte]): BloomFilter =
       BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
-    // ONE scan construction shared by every bloom column's pass: the
-    // per-column spark.read paid a fresh listing + footer job each
-    val scan = delta.getOrElse(
-      spark.read.parquet(files.map(f => filePath(table, f)): _*))
     val perCol = bloomCols.map { c =>
       val partials = scan
         .select(LakePaths.relFileCol(root).as("_f"),
@@ -1561,12 +1540,10 @@ object Snapshots {
     * never prunes. */
   private def collectStats(spark: SparkSession, table: String,
       files: Seq[String], statsCols0: Seq[String],
-      delta: Option[DataFrame] = None): FileStats = {
+      scan: => DataFrame): FileStats = {
     if (statsCols0.isEmpty || files.isEmpty) return Map.empty
     import org.apache.spark.sql.functions.{max, min}
     val root = LakePaths.tableRoot(spark, table)
-    val scan = delta.getOrElse(
-      spark.read.parquet(files.map(f => filePath(table, f)): _*))
     // struct LEAVES join the type map under their dot paths (the
     // Iceberg leaf-path stats norm), so `props.signup_date`-style stats
     // columns get the same unit conversions flat columns do
@@ -2194,16 +2171,47 @@ object Snapshots {
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
   }
 
-  /** One scan of `files` of version `s`: log-served when their eras are
-    * uniform ([[logServedScan]] — zero listings, zero footer probes);
-    * otherwise `mergeSchema` over additively-evolved eras (a later
-    * append introduced a column, and earlier rows surface it as null),
-    * the union computed from file FOOTERS, never a data pass. */
+  /** The one schema a scan of `files` serves: their recorded dir
+    * schemas merged ([[org.apache.spark.sql.GraftSqlBridge.mergedSchema]])
+    * in the order a parquet footer merge folds them — files sorted by
+    * path — so additively-evolved eras (a later append introduced a
+    * column or a struct leaf) surface the very field order a footer
+    * merge infers, and earlier rows read them as null.
+    * None when the schemas do not merge (widened or incompatible eras).
+    * Zero I/O: manifests record every file's dir schema
+    * ([[readManifest]]). */
+  private[graft] def logSchema(spark: SparkSession, table: String,
+      dirSchemas: Map[String, StructType],
+      files: Seq[String]): Option[StructType] = {
+    val root = LakePaths.tableRootPath(spark, table)
+    // a dir's files share one resolved prefix, so its first file in path
+    // order stands for the dir: sort O(dirs), not O(files)
+    org.apache.spark.sql.GraftSqlBridge.mergedSchema(spark,
+      files.groupBy(dirOf).values.map(_.min).toSeq
+        .sortBy(f => if (f.startsWith("/")) f else s"$root/$f")
+        .map(f => dirSchemas(dirOf(f))))
+  }
+
+  /** The one scan of `files` of version `s` that every non-era read
+    * builds ([[logScan]]): log-fed under their merged log schema, zero
+    * listings and zero footer probes. Callers hold files whose schemas
+    * merge ([[needsEraRead]] said no, or one era group). */
   private def scanFiles(spark: SparkSession, table: String, s: Snapshot,
-      files: Seq[String]): DataFrame =
-    logServedScan(spark, table, s, files)
-      .getOrElse(spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => filePath(table, f)): _*))
+      files: Seq[String]): DataFrame = {
+    val scan = logScan(spark, table,
+      logSchema(spark, table, s.dirSchemas, files).getOrElse(
+        throw new IllegalArgumentException(s"the dir schemas of $table@v" +
+          s"${s.version}'s files do not merge; read it through the era read")),
+      files.map(f => f -> s.sizes(f)))
+    if (org.apache.spark.sql.GraftSqlBridge.logServedEnabled)
+      logServedScans.incrementAndGet()
+    scan
+  }
+
+  /** Snapshot read scans ([[scanFiles]]) served log-fed this JVM: a spec
+    * counter, and the numerator of perfbench's `lake.log_served_ratio`. */
+  private[graft] val logServedScans =
+    new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Scan with table-relative (file, pos) reader columns attached. */
   private def withMeta(spark: SparkSession, table: String, s: Snapshot,
@@ -2212,60 +2220,6 @@ object Snapshots {
       .withColumn("_snap_file",
         LakePaths.relFileCol(LakePaths.tableRoot(spark, table)))
       .withColumn("_snap_pos", col("_metadata.row_index"))
-
-  /** Spec counter: successful log-served scan constructions this JVM. */
-  private[graft] val logServedScans =
-    new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** The ONE schema every requested file's staging dir recorded, when
-    * the recorded schemas are identical — what lets a reader skip schema
-    * inference entirely. Manifests cover every file ([[readManifest]]). */
-  private[graft] def uniformLogSchema(dirSchemas: Map[String, StructType],
-      files: Seq[String]): Option[StructType] =
-    files.map(f => dirSchemas(dirOf(f))).distinct match {
-      case Seq(one) => Some(one)
-      case _ => None
-    }
-
-  /** Production kill-switch for every log-served read fast path (the
-    * ADVICE r18 mitigation): `SPARK_GRAFT_LOG_SERVED_SCAN=off` forces
-    * the byte-identical filesystem-truth fallback (listing +
-    * mergeSchema), so a corrupted-manifest incident is mitigable
-    * without a code change. Any other value (or absence) keeps the
-    * fast path. */
-  private[graft] def logServedEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_LOG_SERVED_SCAN")
-      .exists(v => v == "off" || v == "false" || v == "0")
-
-  /** Per-file (RESOLVED path → recorded byte size) for the requested
-    * files when the fast path is enabled — what the DSv2 catalog table
-    * ([[org.apache.spark.sql.GraftSqlBridge.parquetTable]]) feeds beside
-    * its explicit path list so its FileIndex is log-fed like
-    * [[logServedScan]]'s. */
-  private[graft] def logServedPathSizes(table: String, s: Snapshot,
-      files: Seq[String]): Option[Map[String, Long]] =
-    if (!logServedEnabled) None
-    else Some(files.map(f => filePath(table, f) -> s.sizes(f)).toMap)
-
-  /** LOG-SERVED SCAN fast path (the Delta/Iceberg snapshot-read shape):
-    * the manifests record every file's byte size and dir schema, so when
-    * those schemas are all IDENTICAL the scan is built directly from log
-    * metadata — no filesystem listing (a `spark.read.parquet(paths)`
-    * pays an InMemoryFileIndex listing per call, a distributed listing JOB past
-    * the parallel-discovery threshold) and no mergeSchema footer pass
-    * (a second job reading every footer). At 100 TB / O(100k files)
-    * those are 100k object-store round-trips per query before the first
-    * data byte; locally they are 2 driver jobs per snapshot read, and
-    * lifecycle queries read snapshots dozens of times. Declines (None)
-    * for schema-divergent eras (additive evolution reads keep the
-    * mergeSchema semantics they attest) and under the kill-switch. */
-  private def logServedScan(spark: SparkSession, table: String,
-      s: Snapshot, files: Seq[String]): Option[DataFrame] =
-    for {
-      schema <- uniformLogSchema(s.dirSchemas, files)
-      scan <- freshDeltaScan(spark, table,
-        files.map(f => f -> s.sizes(f)), schema)
-    } yield { logServedScans.incrementAndGet(); scan }
 
   /** Write the tombstones of `rows` — by default live-view rows, whose
     * `_snap_file`/`_snap_pos` reader columns name them; a relation
@@ -2304,7 +2258,8 @@ object Snapshots {
     // their schema is statically (file STRING, pos BIGINT), so size
     // facts are all a log-fed scan was missing
     ops.writeString(s"$table/$dRel/$DeleteRowsSidecar",
-      Json.render(Map("rows" -> collectRowCounts(spark, table, refs),
+      Json.render(Map("rows" -> collectRowCounts(spark, table, refs,
+        logScan(spark, table, PosDeleteSchema, sized)),
         "sizes" -> sized.toMap)))
     refs
   }
@@ -2342,15 +2297,14 @@ object Snapshots {
   /** Read positional-delete files LOG-FED when every file's sidecar
     * records its size (schema is static, so only sizes were missing);
     * falls back to the path-based read (listing + footer job) for an
-    * unreadable sidecar or under the kill-switch. */
+    * unreadable sidecar. */
   private def readPosDeletes(spark: SparkSession, table: String,
       pos: Seq[String]): DataFrame = {
     val sized = pos.map(f =>
       deleteDirSidecar(spark, table, dirOf(f))._2.get(f).map(f -> _))
-    (if (sized.forall(_.isDefined))
-      freshDeltaScan(spark, table, sized.flatten, PosDeleteSchema)
-    else None)
-      .getOrElse(spark.read.parquet(pos.map(f => filePath(table, f)): _*))
+    if (sized.forall(_.isDefined))
+      logScan(spark, table, PosDeleteSchema, sized.flatten)
+    else spark.read.parquet(pos.map(f => filePath(table, f)): _*)
   }
 
   /** Total tombstoned row count of a version's delete list from sidecar
@@ -2367,14 +2321,14 @@ object Snapshots {
     if (counts.forall(_.isDefined)) Some(counts.flatten.sum) else None
   }
 
-  /** Broadcast anti-join subtraction of positional deletes; expects the
-    * `_snap_file`/`_snap_pos` reader columns on `data`. */
   /** Is this deletes-list entry an EQUALITY-delete directory
     * ([[deleteByKeys]]) rather than a positional-delete file? The two
     * kinds share the log's `deletes` list; the `_snap/e-` prefix is the
     * dispatch (positional files live under `_snap/d-`). */
   private[graft] def isEqDelete(f: String): Boolean = f.contains("_snap/e-")
 
+  /** Broadcast anti-join subtraction of positional deletes; expects the
+    * `_snap_file`/`_snap_pos` reader columns on `data`. */
   private def subtractDeletes(spark: SparkSession, table: String,
       data: DataFrame, deletes: Seq[String],
       renames: Seq[(String, String)] = Nil): DataFrame = {
@@ -2439,14 +2393,6 @@ object Snapshots {
     keyCols.foldLeft(out)((d, c) => d.drop(keysAll(c)))
   }
 
-  /** Apply ONE equality-delete entry: suppress rows whose key matches a
-    * delete key AND whose data file is in the delete's recorded SCOPE —
-    * the manifests live when the delete committed (the Iceberg
-    * sequence-number rule expressed over immutable manifest ids, so a
-    * row appended AFTER the delete with the same key survives, which is
-    * what makes key-upserts compose). Two broadcast left joins (scope
-    * flag, key flag) + one filter — O(keys + scoped-file-list) driver
-    * metadata, no shuffle of `data`. */
   /** Load ONE equality delete's (key set, covered data-file list):
     * keys are the delete file itself; coverage is the union of data
     * files in the manifests recorded live at the delete's commit
@@ -2513,6 +2459,14 @@ object Snapshots {
         .distinct())
   }
 
+  /** Apply ONE equality-delete entry: suppress rows whose key matches a
+    * delete key AND whose data file is in the delete's recorded SCOPE —
+    * the manifests live when the delete committed (the Iceberg
+    * sequence-number rule expressed over immutable manifest ids, so a
+    * row appended AFTER the delete with the same key survives, which is
+    * what makes key-upserts compose). Two broadcast left joins (scope
+    * flag, key flag) + one filter — O(keys + scoped-file-list) driver
+    * metadata, no shuffle of `data`. */
   private def applyEqDelete(spark: SparkSession, table: String,
       data: DataFrame, eqRef: String,
       renames: Seq[(String, String)] = Nil): DataFrame = {
@@ -2636,15 +2590,14 @@ object Snapshots {
 
   /** Does version `s` need the era-aware read? The log alone decides:
     * yes when it records renames, drops, defaults or added columns, or
-    * when its files' dir schemas do not merge under Spark's own
-    * `StructType.merge` — the merge the single-scan `mergeSchema` read
-    * would run over the same schemas in a footer job (it refuses
-    * int→long, float→double and incompatible types alike). */
-  private[graft] def needsEraRead(spark: SparkSession, s: Snapshot): Boolean =
+    * when its files' dir schemas have no merged schema ([[logSchema]]:
+    * Spark's own `StructType.merge`, which refuses int→long,
+    * float→double and incompatible types alike). */
+  private[graft] def needsEraRead(spark: SparkSession, table: String,
+      s: Snapshot): Boolean =
     s.renames.nonEmpty || s.drops.nonEmpty || s.defaults.nonEmpty ||
       s.addedColumns.nonEmpty ||
-      !org.apache.spark.sql.GraftSqlBridge.schemasMerge(spark,
-        s.files.map(dirOf).distinct.map(s.dirSchemas))
+      logSchema(spark, table, s.dirSchemas, s.files).isEmpty
 
   /** Time-travel scan: exactly version `v`'s files, minus its positional
     * deletes (broadcast anti join — same shape and scale argument as
@@ -2652,11 +2605,12 @@ object Snapshots {
     * ([[needsEraRead]]) take the era-aware read, so every era surfaces
     * the current names and widened types and readAt / readLatest /
     * optimize work on widened tables without the caller knowing to ask
-    * for [[readAtWidened]]; the rest take the single scan (log-served
-    * when the eras are uniform, `mergeSchema` when they are additive). */
+    * for [[readAtWidened]]; the rest take the one log-fed scan under
+    * their merged log schema, uniform and additively-evolved eras
+    * alike. */
   private def readDispatch(spark: SparkSession, table: String,
       s: Snapshot): DataFrame =
-    if (needsEraRead(spark, s)) eraRead(spark, table, s)
+    if (needsEraRead(spark, table, s)) eraRead(spark, table, s)
     else readSnapshot(spark, table, s)
 
   def readAt(spark: SparkSession, table: String, v: Int): Option[DataFrame] =
@@ -2884,14 +2838,14 @@ object Snapshots {
     s.files.groupBy(dirOf).toSeq.sortBy(_._1)
       .map { case (dir, fs) => fs -> s.dirSchemas(dir) }
 
-  /** Metadata-only column RENAME (`ALTER TABLE … RENAME COLUMN`): a new
-    * version records `from → to` in the log's rename chain — ZERO data
-    * files touched; every era's files keep their written name and
-    * [[readAt]] surfaces them under the current name, while time travel
-    * BELOW the rename still shows the era's own name (the chain is
-    * versioned with the log). Stats keys follow the rename so log-level
-    * pruning keeps working under the current name. Old names are
-    * tombstoned against recycling ([[guardRecycledNames]]). */
+  /** The column names a default/generation expression references
+    * (pre-analysis, so usable for DDL-time guards). */
+  private def exprRefs(spark: SparkSession, sql: String): Set[String] =
+    spark.sessionState.sqlParser.parseExpression(sql).collect {
+      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
+        a.name
+    }.toSet
+
   /** Metadata-only COLUMN DEFAULT (Iceberg v3 initial-default / Delta
     * column DEFAULT + generated columns, read-side form): rows in
     * files that do not CARRY `column` surface `defaultSql` instead of
@@ -2918,14 +2872,6 @@ object Snapshots {
     * emitting delete/insert pairs for every filled row would be the
     * O(table) diff the feed exists to avoid. Downstream consumers
     * apply the same DDL out of band, exactly as they do for renames. */
-  /** The column names a default/generation expression references
-    * (pre-analysis, so usable for DDL-time guards). */
-  private def exprRefs(spark: SparkSession, sql: String): Set[String] =
-    spark.sessionState.sqlParser.parseExpression(sql).collect {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-        a.name
-    }.toSet
-
   def setColumnDefault(spark: SparkSession, table: String, column: String,
       defaultSql: String): Int = {
     // defaults fill whole ABSENT COLUMNS; a leaf default would have to
@@ -3109,6 +3055,14 @@ object Snapshots {
     spark.createDataFrame(withId, outSchema)
   }
 
+  /** Metadata-only column RENAME (`ALTER TABLE … RENAME COLUMN`): a new
+    * version records `from → to` in the log's rename chain — ZERO data
+    * files touched; every era's files keep their written name and
+    * [[readAt]] surfaces them under the current name, while time travel
+    * BELOW the rename still shows the era's own name (the chain is
+    * versioned with the log). Stats keys follow the rename so log-level
+    * pruning keeps working under the current name. Old names are
+    * tombstoned against recycling ([[guardRecycledNames]]). */
   def renameColumn(spark: SparkSession, table: String, from: String,
       to: String): Int = {
     require(from != to, s"rename of $from onto itself")
@@ -3389,10 +3343,10 @@ object Snapshots {
   /** Schema-evolution read with numeric TYPE WIDENING and column
     * RENAMES — the other half of the evolution contract beyond additive
     * columns: when a version's file list spans commits whose schemas
-    * disagree by int→long / float→double (parquet `mergeSchema` refuses
-    * those) or by renamed columns, resolve each era's schema from ONE
-    * footer per commit directory (files of a commit share a schema —
-    * O(commits) metadata, not O(files)), map era names through the
+    * disagree by int→long / float→double (`StructType.merge` refuses
+    * those) or by renamed columns, resolve each era's schema from the
+    * ONE dir schema its manifest records (files of a commit share a
+    * schema — O(commits) metadata, not O(files)), map era names through the
     * snapshot's rename chain, widen, cast up, and union. Time travel to
     * a single-era version still returns that era's own narrow type and
     * names ([[readAt]] — the rename chain is versioned with the log). */
@@ -3420,11 +3374,11 @@ object Snapshots {
     }.toSet ++ s.addedColumns.map(_._1)
 
   /** The era-aware multi-schema scan keeping the reader columns: one
-    * schema probe per commit dir, era names mapped through the rename
+    * recorded schema per commit dir, era names mapped through the rename
     * chain, types cast to the widened union, all eras unioned. This is
     * the multi-era equivalent of [[withMeta]] and the scan EVERY
-    * DML/feed path uses over a possibly-evolved file set — a plain
-    * mergeSchema read would throw on widened eras, and on renamed eras
+    * DML/feed path uses over a possibly-evolved file set — one scan
+    * under a merged schema cannot exist on widened eras, and on renamed eras
     * would silently surface old names (a merge key or delete predicate
     * on the current name would MISS every old-era row). Requires
     * s.files nonEmpty. */
@@ -4089,28 +4043,6 @@ object Snapshots {
         .otherwise(concat(lit(srcRoot + "/"), file)),
       lit("^" + java.util.regex.Pattern.quote(dstRoot + "/")), lit(""))
 
-  /** SHALLOW CLONE (`CREATE TABLE dst SHALLOW CLONE src [VERSION AS OF
-    * v]`, the Delta zero-copy clone): `dst` is born as a one-version
-    * table whose manifest references `src`'s data files BY ABSOLUTE
-    * PATH — no data byte is copied, cost is O(metadata). Stats, blooms,
-    * era schemas, the rename chain, the drop ledger and CHECK
-    * constraints all carry over, so pruning and era-aware reads work on
-    * the clone exactly as on the source at `v`. The two tables then
-    * diverge independently: DML on the clone tombstones/stages under
-    * the CLONE's directory only, and — because [[vacuum]] only ever
-    * deletes under its own table's `_snap/` — neither table's vacuum
-    * can reap the other's files (the clone's vacuum sees foreign
-    * absolute refs it never matches; the SOURCE's vacuum after trimming
-    * `v` CAN reap files the clone still references, the documented
-    * Delta shallow-clone hazard — a deployment pins source retention to
-    * outstanding clones).
-    *
-    * Tombstone sidecars need one rewrite: their CONTENT references data
-    * files in source-relative terms, while the clone's reader computes
-    * foreign files' `_snap_file` as absolute paths — so the carried
-    * delete rows are re-written under `dst` with absolute `file` refs
-    * (O(tombstones), metadata scale). Cloning a clone passes absolute
-    * refs through unchanged. */
   /** The by-reference commit content both [[shallowClone]] and
     * [[fastForward]] publish: `src@v`'s file list / stats / blooms /
     * era schemas rewritten to absolute refs under `src`'s root, and
@@ -4153,7 +4085,8 @@ object Snapshots {
       s.stats.map { case (f, st) => ref(f) -> st },
       s.blooms.map { case (f, b) => ref(f) -> b },
       s.dirSchemas.map { case (d, sch) => ref(d) -> sch },
-      knownSizes = s.sizes.map { case (f, n) => ref(f) -> n })
+      knownSizes = s.sizes.map { case (f, n) => ref(f) -> n },
+      knownRows = s.rowCounts.map { case (f, n) => ref(f) -> n })
     s.carry.copy(manifests = Seq(manifest),
       deletes = posCloneDeletes ++ eqCloneDeletes,
       drops = s.drops.map { case (n, cl, dirs) => (n, cl, dirs.map(ref)) })
@@ -4190,9 +4123,10 @@ object Snapshots {
     val scan = spark.read.parquet(dir)
     enforceConstraints(spark, table, scan, "adopt")
     val mid = writeManifest(spark, table, files,
-      collectStats(spark, table, files, statsCols),
-      collectBlooms(spark, table, files, bloomCols),
-      Map(dir -> scan.schema), knownSizes = sized.toMap)
+      collectStats(spark, table, files, statsCols, scan),
+      collectBlooms(spark, table, files, bloomCols, scan),
+      Map(dir -> scan.schema), knownSizes = sized.toMap,
+      knownRows = collectRowCounts(spark, table, files, scan))
     commitLoop(spark, table, "adopt") { prev =>
       guardRecycledNames(scan, prev)
       val cur = carried(prev)
@@ -4236,6 +4170,28 @@ object Snapshots {
     }
   }
 
+  /** SHALLOW CLONE (`CREATE TABLE dst SHALLOW CLONE src [VERSION AS OF
+    * v]`, the Delta zero-copy clone): `dst` is born as a one-version
+    * table whose manifest references `src`'s data files BY ABSOLUTE
+    * PATH — no data byte is copied, cost is O(metadata). Stats, blooms,
+    * era schemas, the rename chain, the drop ledger and CHECK
+    * constraints all carry over, so pruning and era-aware reads work on
+    * the clone exactly as on the source at `v`. The two tables then
+    * diverge independently: DML on the clone tombstones/stages under
+    * the CLONE's directory only, and — because [[vacuum]] only ever
+    * deletes under its own table's `_snap/` — neither table's vacuum
+    * can reap the other's files (the clone's vacuum sees foreign
+    * absolute refs it never matches; the SOURCE's vacuum after trimming
+    * `v` CAN reap files the clone still references, the documented
+    * Delta shallow-clone hazard — a deployment pins source retention to
+    * outstanding clones).
+    *
+    * Tombstone sidecars need one rewrite: their CONTENT references data
+    * files in source-relative terms, while the clone's reader computes
+    * foreign files' `_snap_file` as absolute paths — so the carried
+    * delete rows are re-written under `dst` with absolute `file` refs
+    * (O(tombstones), metadata scale). Cloning a clone passes absolute
+    * refs through unchanged. */
   def shallowClone(spark: SparkSession, src: String, dst: String,
       version: Option[Int] = None): Int = {
     val v = version.orElse(latestVersion(spark, src)).getOrElse(
@@ -4338,7 +4294,8 @@ object Snapshots {
         m.stats.map { case (f, st) => ref(f) -> st },
         m.blooms.map { case (f, b) => ref(f) -> b },
         m.dirSchemas.map { case (d, sch) => ref(d) -> sch },
-        knownSizes = m.sizes.map { case (f, n) => ref(f) -> n })
+        knownSizes = m.sizes.map { case (f, n) => ref(f) -> n },
+        knownRows = m.rows.map { case (f, n) => ref(f) -> n })
     }
     val prevDels = sPrev.deletes.toSet
     val deltaDelSrc = sV.deletes.filterNot(prevDels)
@@ -4369,9 +4326,8 @@ object Snapshots {
           .collect().map(_.getString(0)).toSet
         (writeDeletes(spark, dst, dels, col("file"), col("pos")), anchored)
       }
-    if (deltaMids.nonEmpty)
-      enforceConstraints(spark, dst, readManifestScan(spark, dst, deltaMids),
-        "cherry-pick")
+    readManifestScan(spark, dst, deltaMids)
+      .foreach(enforceConstraints(spark, dst, _, "cherry-pick"))
     commitLoop(spark, dst, "cherry-pick") { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
         s"cherry-pick target $dst has no versions"))
@@ -4395,13 +4351,19 @@ object Snapshots {
     }
   }
 
-  /** A plain scan of the union of `mids`' file lists (already
-    * dst-canonical refs) — schema-widened via one read, used only for
-    * O(delta) validation passes. */
+  /** The log-fed scan of the union of `mids`' file lists (already
+    * dst-canonical refs) under their merged dir schemas — what an
+    * O(delta) validation pass reads; None when they list no file. */
   private def readManifestScan(spark: SparkSession, table: String,
-      mids: Seq[String]): DataFrame = {
-    val files = mids.flatMap(readManifest(spark, table, _).files)
-    spark.read.parquet(files.map(f => filePath(table, f)): _*)
+      mids: Seq[String]): Option[DataFrame] = {
+    val ms = mids.map(readManifest(spark, table, _))
+    val (files, sizes) = (ms.flatMap(_.files), merged(ms)(_.sizes))
+    if (files.isEmpty) None
+    else Some(logScan(spark, table,
+      logSchema(spark, table, merged(ms)(_.dirSchemas), files).getOrElse(
+        throw new IllegalArgumentException(s"cherry-pick into $table: " +
+          "the picked commit's dir schemas do not merge")),
+      files.map(f => f -> sizes(f))))
   }
 
   /** MANIFEST-LIST COMPACTION (Iceberg `rewrite_manifests` — OPTIMIZE

@@ -1064,17 +1064,14 @@ case class SnapshotScanPruning(spark: SparkSession)
       if (kept.size == current.size) None // fixed point: nothing to drop
       else if (kept.isEmpty) Some(LocalRelation(r.output, Nil))
       else {
-        val opts = new java.util.HashMap[String, String]()
-        opts.put("mergeSchema", "true")
         // the relation's resolved schema carries over: the pruned file
-        // subset serves the same columns, so re-inferring from footers
-        // (a None schema) would pay a pass for an answer already known
+        // subset serves the same columns, log-fed like the version
         val inner = GraftSqlBridge.parquetTable(
-          s"${t.inner.name()}#pruned${kept.size}", spark,
-          kept.map(fl => Snapshots.filePath(t.path, fl)), opts,
-          schema = Some(t.inner.schema()),
-          sizes = Snapshots.logServedPathSizes(t.path, s, kept))
-        Some(r.copy(table =
+          s"${t.inner.name()}#pruned${kept.size}", spark, t.inner.schema(),
+          kept.map(fl => Snapshots.filePath(t.path, fl) -> s.sizes(fl)))
+        // under the kill-switch the subset's schema is inferred from its
+        // own footers: prune only when it still serves the relation's
+        Option.when(inner.schema() == t.inner.schema())(r.copy(table =
           SnapshotReadTable(inner, t.path, t.snapVersion, Some(kept))))
       }
     }

@@ -603,7 +603,7 @@ object LayoutQueries {
     * object, never lists a directory, and the scan plans through
     * Spark's native V2 parquet path (pushdown + pruning; spec-pinned).
     * The latest read spans two additively-evolved commits, so the
-    * catalog's mergeSchema surface is exercised too. */
+    * catalog's merged-log-schema surface is exercised too. */
   def snapshotSqlCatalog(spark: SparkSession, dir: String): DataFrame = {
     import graft.lake.Snapshots
     val root = graft.util.Scratch.dir("snapcat", dir)

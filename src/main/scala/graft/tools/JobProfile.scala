@@ -68,7 +68,7 @@ object JobProfile {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let the listener bus drain
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
       emit(f"== pass $p wall=$wall%.2fs ==")
       if (p == passes) {
         import scala.jdk.CollectionConverters._

@@ -26,32 +26,59 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Do `schemas` merge under `StructType.merge`, the merge a parquet
-    * `mergeSchema` footer pass folds its files' schemas with (same case
-    * sensitivity)? A pure check: no job, no file opened. */
-  def schemasMerge(spark: SparkSession,
-      schemas: Seq[types.StructType]): Boolean = {
+  /** Block until every event posted so far has reached `sc`'s
+    * listeners (`LiveListenerBus.waitUntilEmpty`, `private[spark]`):
+    * what a job count read right after an action needs, in place of a
+    * guessed sleep. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The schema a parquet `mergeSchema` footer pass infers over files
+    * whose schemas are `schemas`, given in the order that pass folds
+    * them — files sorted by path string (`ParquetUtils.splitFiles`) —
+    * through the same `StructType.merge` (same case sensitivity), so the
+    * merged field order is the footer pass's; None when they do not
+    * merge. A pure fold: no job, no file opened. */
+  def mergedSchema(spark: SparkSession,
+      schemas: Seq[types.StructType]): Option[types.StructType] = {
     val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
-    try { schemas.reduceOption(_.merge(_, caseSensitive)); true }
-    catch { case _: SparkException => false }
+    try Some(schemas.foldLeft(new types.StructType())(
+      _.merge(_, caseSensitive)))
+    catch { case _: SparkException => None }
   }
 
-  /** A V1 parquet scan built ENTIRELY from log metadata — the
-    * Delta/Iceberg snapshot-read shape (TahoeLogFileIndex): the manifest
-    * already records every data file's path, byte size and schema, so
-    * the scan needs ZERO filesystem listings and ZERO footer/schema
-    * probes before its first data byte. `spark.read.parquet(paths)`
-    * pays both on every call (an InMemoryFileIndex listing — a
-    * distributed job past the parallel-discovery threshold — plus a
-    * mergeSchema footer pass); at 100 TB / O(100k files) that is 100k
-    * object-store round-trips per query before planning even starts.
-    * Planning, pushdown, column pruning, `_metadata` columns and
-    * vectorized reads all go through the stock ParquetFileFormat /
-    * FileSourceStrategy machinery — the physical plan is the same
-    * `FileScan parquet` as a path-based read, just with a
-    * [[LogFedFileIndex]] location (the DSv2 table's index). */
+  /** Production kill-switch for both log-fed builders below:
+    * `SPARK_GRAFT_LOG_SERVED_SCAN=off` (or `false`/`0`) makes them read
+    * filesystem truth instead — a listing plus a `mergeSchema` footer
+    * pass — so a corrupted-manifest incident is mitigable without a code
+    * change. Any other value (or absence) keeps the log-fed scans
+    * (what `Snapshots.logServedScans` counts). */
+  def logServedEnabled: Boolean =
+    !sys.env.get("SPARK_GRAFT_LOG_SERVED_SCAN")
+      .exists(v => v == "off" || v == "false" || v == "0")
+
+  /** The V1 parquet scan of log-recorded files, built ENTIRELY from log
+    * metadata — the Delta/Iceberg snapshot-read shape
+    * (TahoeLogFileIndex): the manifests record every data file's path,
+    * byte size and schema, so the scan serves `schema` over `files`
+    * (path → recorded size) with ZERO filesystem listings and ZERO
+    * footer probes before its first data byte, where
+    * `spark.read.parquet(paths)` pays both on every call (an
+    * InMemoryFileIndex listing — a distributed job past the
+    * parallel-discovery threshold — plus a footer job); at 100 TB /
+    * O(100k files) that is 100k object-store round-trips per query
+    * before planning starts. A file that lacks a column or struct leaf
+    * of `schema` reads it as null, the per-file mechanism a
+    * `mergeSchema` read relies on too. Planning, pushdown, column
+    * pruning, `_metadata` columns and vectorized reads all go through
+    * the stock ParquetFileFormat / FileSourceStrategy machinery: the
+    * physical plan is the same `FileScan parquet` as a path-based read,
+    * with a [[LogFedFileIndex]] location. Under the kill-switch it is
+    * that path-based read, with `mergeSchema`. */
   def logFileRelation(spark: SparkSession, schema: types.StructType,
       files: Seq[(String, Long)]): DataFrame = {
+    if (!logServedEnabled) return spark.read.option("mergeSchema", "true")
+      .parquet(files.map(_._1): _*)
     import org.apache.spark.sql.execution.datasources._
     val session = spark.asInstanceOf[classic.SparkSession]
     // asNullable: a parquet-inferred schema is all-nullable; serving the
@@ -65,40 +92,27 @@ object GraftSqlBridge {
       LogicalRelation(relation, isStreaming = false))
   }
 
-  /** A DataSourceV2 parquet Table over an EXPLICIT file list — the
-    * building block for a snapshot-log TableCatalog: each catalog load
-    * resolves a version's file list from the log and serves it through
-    * Spark's own ParquetTable (full pushdown, column pruning, vectorized
-    * read), so `VERSION AS OF` scans plan exactly like a native V2
-    * table. Internal constructor, hence bridged here.
-    *
-    * When the log also serves every file's BYTE SIZE (`sizes`) the
-    * table's FileIndex is served from log metadata — the V2
-    * twin of [[logFileRelation]], on the same [[LogFedFileIndex]]: the
-    * stock FileTable otherwise pays one driver-side FS status per path
-    * at `fileIndex` construction (DataSource.checkAndGlobPathIfNecessary
-    * + InMemoryFileIndex), which at 100 TB / O(100k files) is 100k
-    * object-store round-trips before the first data byte of every
-    * catalog SQL scan. */
-  def parquetTable(name: String, spark: SparkSession, paths: Seq[String],
-      options: java.util.Map[String, String],
-      // log-recorded schema when the manifest can prove one (uniform
-      // eras): skips the footer-inference pass a None schema pays
-      schema: Option[types.StructType] = None,
-      // log-recorded per-file byte sizes (same keys as `paths`; the
-      // manifests record every file's) — enables the log-fed FileIndex;
-      // None keeps the stock listing path
-      sizes: Option[Map[String, Long]] = None): connector.catalog.Table = {
+  /** The DataSourceV2 twin of [[logFileRelation]], the building block
+    * of the snapshot-log TableCatalog: a parquet Table serving `schema`
+    * over `files` (path → recorded size) through Spark's own ParquetTable
+    * (full pushdown, column pruning, vectorized read), with its
+    * FileIndex built from the log ([[LogFedFileIndex]]) — so `VERSION AS
+    * OF` scans plan exactly like a native V2 table, without the one
+    * driver-side FS status per path (DataSource.checkAndGlobPathIfNecessary
+    * + InMemoryFileIndex) or the footer pass a stock FileTable pays at
+    * construction. Under the kill-switch it is the stock ParquetTable
+    * over a listing, its schema inferred with `mergeSchema`. Internal
+    * constructors, hence bridged here. */
+  def parquetTable(name: String, spark: SparkSession,
+      schema: types.StructType,
+      files: Seq[(String, Long)]): connector.catalog.Table = {
     val session = spark.asInstanceOf[classic.SparkSession]
-    val opts = new org.apache.spark.sql.util.CaseInsensitiveStringMap(options)
     val fmt = classOf[execution.datasources.parquet.ParquetFileFormat]
-    val served = for {
-      sch <- schema
-      sz <- sizes
-    } yield new LogFedParquetTable(name, session, opts, sch.asNullable,
-      fmt, paths.map(p => p -> sz(p)))
-    served.getOrElse(execution.datasources.v2.parquet.ParquetTable(
-      name, session, opts, paths, schema.map(_.asNullable), fmt))
+    if (logServedEnabled)
+      new LogFedParquetTable(name, session, schema.asNullable, fmt, files)
+    else execution.datasources.v2.parquet.ParquetTable(name, session,
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("mergeSchema", "true")), files.map(_._1), None, fmt)
   }
 
   /** [[execution.datasources.v2.parquet.ParquetTable]] whose FileIndex
@@ -108,12 +122,12 @@ object GraftSqlBridge {
     * stock ParquetTable behaviour. */
   private final class LogFedParquetTable(
       name: String, session: classic.SparkSession,
-      options: org.apache.spark.sql.util.CaseInsensitiveStringMap,
       schema: types.StructType,
       fmt: Class[execution.datasources.parquet.ParquetFileFormat],
       sized: Seq[(String, Long)])
-    extends execution.datasources.v2.parquet.ParquetTable(
-      name, session, options, sized.map(_._1), Some(schema), fmt) {
+    extends execution.datasources.v2.parquet.ParquetTable(name, session,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(),
+      sized.map(_._1), Some(schema), fmt) {
     override lazy val fileIndex
         : execution.datasources.PartitioningAwareFileIndex =
       new LogFedFileIndex(session, sized)

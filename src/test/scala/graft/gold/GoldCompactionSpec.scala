@@ -176,21 +176,10 @@ class GoldCompactionSpec extends SparkTestBase {
     withLake("graft_goldjobs_") { (layout, _) =>
       val dates = Seq("2024-12-01", "2024-12-02", "2024-12-03", "2024-12-04")
       dates.foreach(writeSilver(layout, _, 30))
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val t0 = System.currentTimeMillis() // the silver writes' jobs start before
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (js.time >= t0) jobs.incrementAndGet(): Unit
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val s = GoldCompaction.run(spark,
-          GoldCompaction.Conf(layout, refreshTable = None))
-        Thread.sleep(500) // let job-start events drain to the listener
-        assert(s.results.map(_.status) == Seq.fill(4)("written"))
-        assert(jobs.get() <= 6, s"4-date compaction ran ${jobs.get()} Spark jobs")
-      } finally spark.sparkContext.removeSparkListener(l)
+      val (s, jobs) = jobsDuring(GoldCompaction.run(spark,
+        GoldCompaction.Conf(layout, refreshTable = None)))
+      assert(s.results.map(_.status) == Seq.fill(4)("written"))
+      assert(jobs <= 6, s"4-date compaction ran $jobs Spark jobs")
     }
   }
 

@@ -172,22 +172,7 @@ class GeneratedIdentitySpec extends SparkTestBase {
       ("band", "STRING", None)))
     Snapshots.setGeneratedColumn(spark, t, "band",
       "CASE WHEN v < 10 THEN 'lo' ELSE 'hi' END")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    def jobsOf(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(l)
-      try {
-        jobs.set(0)
-        body
-        Thread.sleep(500) // let job-start events drain to the listener
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+    def jobsOf(body: => Unit): Int = jobsDuring(body)._2
     // warm lazy caches on both shapes once
     Snapshots.append(spark, t, Seq((0L, 1L)).toDF("k", "v"))
     Snapshots.append(spark, t,

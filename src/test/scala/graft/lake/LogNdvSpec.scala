@@ -32,25 +32,12 @@ class LogNdvSpec extends SparkTestBase {
     // warm the driver-side snapshot/manifest caches, then pin zero jobs
     assert(Snapshots.ndvAt(spark, t, v, "k").contains(64L) ||
       Snapshots.ndvAt(spark, t, v, "k").nonEmpty)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      jobs.set(0)
-      val k = Snapshots.ndvAt(spark, t, v, "k")
-      val g = Snapshots.ndvAt(spark, t, v, "grp")
-      Thread.sleep(500)
-      assert(k.nonEmpty && g.nonEmpty)
-      // small-set-exact branch: 97 and 13 true distincts, both ≥/< k
-      assert(g.contains(13L), s"grp ndv=$g")
-      assert(jobs.get() == 0,
-        s"NDV serve ran ${jobs.get()} Spark jobs — must be log-only")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val ((k, g), jobs) = jobsDuring(
+      (Snapshots.ndvAt(spark, t, v, "k"), Snapshots.ndvAt(spark, t, v, "grp")))
+    assert(k.nonEmpty && g.nonEmpty)
+    // small-set-exact branch: 97 and 13 true distincts, both ≥/< k
+    assert(g.contains(13L), s"grp ndv=$g")
+    assert(jobs == 0, s"NDV serve ran $jobs Spark jobs — must be log-only")
   }
 
   test("pre-declaration commits decline; declared ones serve") {

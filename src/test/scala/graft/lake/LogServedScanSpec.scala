@@ -7,10 +7,11 @@ import graft.SparkTestBase
 /** r18 optimization pins: the log-served scan fast path (zero listing /
   * zero schema inference — manifest sizes + dir schemas feed the scan
   * directly) must (1) actually engage on a uniform-schema table,
-  * (2) serve byte-identical rows to the path-based read, (3) decline on
-  * schema-divergent eras so additive evolution keeps mergeSchema
-  * semantics, and (4) the KMV sketch single-pass rewrite must emit the
-  * same bottom-k sets and null counts the per-column passes did. */
+  * (2) serve byte-identical rows to the path-based read, (3) engage on
+  * schema-divergent (additively evolved) eras too, serving their merged
+  * log schema with the older eras' rows null in the added column, and
+  * (4) the KMV sketch single-pass rewrite must emit the same bottom-k
+  * sets and null counts the per-column passes did. */
 class LogServedScanSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -20,19 +21,7 @@ class LogServedScanSpec extends SparkTestBase {
     d
   }
 
-  /** Simple class name of the file index under `df`'s one scan leaf —
-    * V1 FileSourceScan or DSv2 FileScan alike. */
-  private def scanIndex(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.sparkPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.relation.location
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-          if b.scan.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.v2.FileScan] =>
-        b.scan.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.v2.FileScan].fileIndex
-    }.map(_.getClass.getSimpleName).getOrElse(
-      fail(s"no file scan leaf in ${df.queryExecution.sparkPlan}"))
+  import LogServedScanSpec.scanIndex
 
   test("log-served scan engages on a uniform table and matches the data") {
     val t = freshDir("logscan") + "/t"
@@ -89,7 +78,7 @@ class LogServedScanSpec extends SparkTestBase {
     assert(served.as[Long].collect().sorted.toSeq == (100L to 120L))
   }
 
-  test("schema-divergent eras decline the fast path and keep merging") {
+  test("schema-divergent eras read log-fed under their merged schema") {
     val t = freshDir("logscan_evo") + "/t"
     Snapshots.append(spark, t, Seq((1L, "a")).toDF("id", "name"))
     Snapshots.append(spark, t,
@@ -97,8 +86,8 @@ class LogServedScanSpec extends SparkTestBase {
     val before = Snapshots.logServedScans.get()
     val served = Snapshots.readLatest(spark, t).get
     assert(served.count() == 2L)
-    assert(Snapshots.logServedScans.get() == before,
-      "divergent-era read must fall back to the mergeSchema path")
+    assert(Snapshots.logServedScans.get() == before + 1,
+      "divergent-era read must take the log-served fast path")
     assert(served.filter($"extra".isNull).count() == 1L)
   }
 
@@ -126,4 +115,21 @@ class LogServedScanSpec extends SparkTestBase {
       .head().getSeq[Long](1)
     assert(got == Seq(1L, 2L, 3L), s"got $got")
   }
+}
+
+object LogServedScanSpec {
+
+  /** Simple class name of the file index under `df`'s one scan leaf —
+    * V1 FileSourceScan or DSv2 FileScan alike. */
+  def scanIndex(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.sparkPlan.collectLeaves().collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.isInstanceOf[
+            org.apache.spark.sql.execution.datasources.v2.FileScan] =>
+        b.scan.asInstanceOf[
+          org.apache.spark.sql.execution.datasources.v2.FileScan].fileIndex
+    }.map(_.getClass.getSimpleName).getOrElse(throw new AssertionError(
+      s"no file scan leaf in ${df.queryExecution.sparkPlan}"))
 }

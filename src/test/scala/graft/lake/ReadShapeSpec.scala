@@ -3,6 +3,7 @@ package graft.lake
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -101,23 +102,55 @@ class ReadShapeSpec extends SparkTestBase {
     try {
       Snapshots.append(spark, t, Seq((1L, 10), (2L, 20)).toDF("id", "v"))
       Snapshots.append(spark, t, Seq((3L, 30L)).toDF("id", "v"))
-      val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          starts.add(js.time): Unit
-      }
-      spark.sparkContext.addSparkListener(l)
+      val (df, jobs) = jobsDuring(Snapshots.readLatest(spark, t).get)
+      assert(jobs == 0, s"building the widened read ran $jobs Spark job(s)")
+      assert(df.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
+  }
+
+  shapes.filter(_.name.startsWith("additive")).foreach { c =>
+    test(s"read shape, ${c.name}: both frames build log-fed, without a Spark job") {
+      val (cat, root) = freshCatalog(c.name.filter(_.isLetter).take(8))
+      val t = s"$root/t"
       try {
-        val t0 = System.currentTimeMillis()
-        val df = Snapshots.readLatest(spark, t).get
-        val t1 = System.currentTimeMillis()
-        Thread.sleep(500) // let job-start events drain to the listener
-        import scala.jdk.CollectionConverters._
-        val jobs = starts.asScala.count(ts => ts >= t0 && ts <= t1)
-        assert(jobs == 0, s"building the widened read ran $jobs Spark job(s)")
-        assert(df.schema("v").dataType == org.apache.spark.sql.types.LongType)
-      } finally spark.sparkContext.removeSparkListener(l)
+        c.build(t)
+        for ((path, read) <- Seq[(String, () => DataFrame)](
+            "readLatest" -> (() => Snapshots.readLatest(spark, t).get),
+            "SQL" -> (() => spark.sql(s"SELECT * FROM $cat.t")))) {
+          val (df, jobs) = jobsDuring(read())
+          assert(jobs == 0, s"$path: building the frame ran $jobs Spark job(s)")
+          assert(LogServedScanSpec.scanIndex(df) == "LogFedFileIndex", path)
+          assert(df.collect().map(_.toString).toSeq.sorted == c.expected,
+            s"$path rows")
+        }
+      } finally org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
+    }
+  }
+
+  test("two later eras add different columns: the log schema is mergeSchema's") {
+    // the clone's own append lives under `adst`, its source's two eras
+    // under `zsrc`: by path the LATEST era folds first, so the merged
+    // field order is z before y — not the commit order
+    val (cat, root) = freshCatalog("twoeras")
+    val (src, dst) = (s"$root/zsrc", s"$root/adst")
+    try {
+      Snapshots.append(spark, src, base)
+      Snapshots.append(spark, src, Seq((2L, "b", 7)).toDF("id", "x", "y"))
+      Snapshots.shallowClone(spark, src, dst)
+      Snapshots.append(spark, dst, Seq((3L, "c", 8L)).toDF("id", "x", "z"))
+      val s = Snapshots.snapshot(spark, dst,
+        Snapshots.latestVersion(spark, dst).get).get
+      val footerMerged = spark.read.option("mergeSchema", "true")
+        .parquet(s.files.map(Snapshots.filePath(dst, _)): _*)
+      for ((path, df) <- Seq(
+          "readLatest" -> Snapshots.readLatest(spark, dst).get,
+          "SQL" -> spark.sql(s"SELECT * FROM $cat.adst"))) {
+        assert(df.schema == footerMerged.schema, s"$path schema")
+        assert(df.schema.toDDL == "id BIGINT,x STRING,z BIGINT,y INT", path)
+        assert(LogServedScanSpec.scanIndex(df) == "LogFedFileIndex", path)
+        assert(df.exceptAll(footerMerged).isEmpty &&
+          footerMerged.exceptAll(df).isEmpty, s"$path rows")
+      }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
   }
 

@@ -1806,6 +1806,40 @@ class SnapshotsSpec extends SparkTestBase {
     assert(liveKeys() == wantKeys)
   }
 
+  test("cherryPick lands a branch UPDATE's positional tombstones on a diverged main") {
+    import spark.implicits._
+    val main = fresh("pospick")
+    val br = s"${new File(main).getParent}/br"
+    def rows(t: String): Seq[(Long, Long)] = Snapshots.readLatest(spark, t)
+      .get.as[(Long, Long)].collect().sorted.toSeq
+    Snapshots.append(spark, main, (1L to 10L).map(i => (i, i)).toDF("id", "v"))
+    Snapshots.shallowClone(spark, main, br)
+    // main alone carries the constraint (a clone would copy it)
+    Snapshots.addConstraint(spark, main, "v_pos", "v > 0")
+    // one branch commit carries both halves: tombstones anchored in
+    // main's own files and a staged manifest of the updated rows
+    val vUp = Snapshots.updateWhere(spark, br, col("id") % 3 === 0,
+      Map("v" -> col("v") * 100))
+    assert(Snapshots.snapshot(spark, br, vUp).get.deletes.nonEmpty)
+    // main diverges, so only a pick (not a fast-forward) publishes it
+    Snapshots.append(spark, main, Seq((11L, 11L), (12L, 12L)).toDF("id", "v"))
+    val before = rows(main)
+    Snapshots.cherryPick(spark, main, br, vUp)
+    val want = before.map { case (i, v) =>
+      if (i <= 10 && i % 3 == 0) (i, v * 100) else (i, v) }.sorted
+    assert(rows(main) == want)
+    // main's CHECK constraint validates the picked rows: a branch
+    // update main's constraint refuses does not land
+    val vNeg = Snapshots.updateWhere(spark, br, col("id") === 1L,
+      Map("v" -> -col("v")))
+    val at = Snapshots.latestVersion(spark, main).get
+    val e = intercept[IllegalArgumentException](
+      Snapshots.cherryPick(spark, main, br, vNeg))
+    assert(e.getMessage.contains("v_pos"), e.getMessage)
+    assert(Snapshots.latestVersion(spark, main).contains(at))
+    assert(rows(main) == want)
+  }
+
   test("cherryPick replays an eq-delete commit re-scoped to the target") {
     val t = fresh("eqpick")
     import spark.implicits._

@@ -70,22 +70,7 @@ class ShowCreateSpec extends SparkTestBase {
       properties = Map("team" -> "graft"),
       constraints = Seq("k_pos" -> "k >= 0"))
     import spark.implicits._
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    def jobsOf(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(l)
-      try {
-        jobs.set(0)
-        body
-        Thread.sleep(500) // let job-start events drain to the listener
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
+    def jobsOf(body: => Unit): Int = jobsDuring(body)._2
     Snapshots.append(spark, t, Seq(1L, 2L).toDF("k"))
     spark.sql(s"SHOW CREATE TABLE $cat.t").collect() // warm lazy caches
     val small = jobsOf(
