@@ -26,8 +26,7 @@ object Preflight {
       resolvedHeader: Seq[String],
       errors: Seq[String])
 
-  def check(headBytes: Array[Byte],
-      required: Set[String] = Headers.required): Decision = {
+  def check(headBytes: Array[Byte]): Decision = {
     val text = new String(headBytes, StandardCharsets.UTF_8)
     Delimiters.detectFromHead(text) match {
       case None =>
@@ -35,7 +34,7 @@ object Preflight {
           Seq("delimiter_detection_failed"))
       case Some((delim, rawHeader)) =>
         val resolved = Headers.resolveHeader(rawHeader)
-        val missing = (required -- resolved.toSet).toSeq.sorted
+        val missing = Headers.missingRequired(resolved).toSeq.sorted
         val errors =
           if (missing.nonEmpty) Seq(s"missing_columns:${missing.mkString(",")}")
           else Nil

@@ -2,7 +2,7 @@ package graft.lake
 
 import java.util
 
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
 import org.apache.spark.sql.connector.catalog.{Identifier, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -194,15 +194,12 @@ final class SnapshotCatalog extends TableCatalog {
       SnapshotMoRTable(s"${ident.name()}@v$v", t, v,
         Snapshots.readAt(spark, t, v).get.schema, s.properties)
     else {
-      // SnapshotReadTable hides the FileTable so INSERT INTO stays a V2
-      // AppendData (routed to the log) instead of falling back to a V1
-      // file write into the version's file list — see its Scaladoc. The
-      // table is log-fed: the merged log schema (defined — the version
-      // needs no era read) over the recorded sizes, so the scan plans
-      // with zero driver-side per-file statuses and no footer pass.
-      SnapshotReadTable(GraftSqlBridge.parquetTable(s"${ident.name()}@v$v",
-        spark, Snapshots.logSchema(spark, t, s.dirSchemas, s.files).get,
-        s.files.map(f => Snapshots.filePath(t, f) -> s.sizes(f))), t, v,
+      // log-fed: the merged log schema (defined — the version needs no
+      // era read) over the recorded sizes, so the scan plans with zero
+      // driver-side per-file statuses and no footer pass
+      SnapshotReadTable(s"${ident.name()}@v$v", spark,
+        Snapshots.logSchema(spark, t, s.dirSchemas, s.files).get,
+        s.files.map(f => Snapshots.filePath(t, f) -> s.sizes(f)), t, v,
         logProps = s.properties)
     }
   }

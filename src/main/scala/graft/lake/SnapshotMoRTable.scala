@@ -54,34 +54,36 @@ final case class SnapshotMetaTable(ident: String, kind: String,
     util.Collections.emptySet()
 }
 
-/** Read delegate around Spark's native `ParquetTable` for versions that
-  * CAN be served as a bare file list. The delegation exists because
-  * `ParquetTable` is a `FileTable`, and the analyzer's built-in
-  * `FallBackFileSourceV2` rule rewrites `INSERT INTO` over any FileTable
-  * into a V1 file write against the table's PATHS — which for a snapshot
-  * version is the resolved per-commit file list, so the fallback would
-  * write data files INTO a staged commit dir behind the log's back
-  * (observed: `ParentNotDirectoryException` under `_snap/c-*`). Hiding
-  * the FileTable behind a plain `SupportsRead` keeps the insert as a V2
-  * `AppendData`, which [[graft.plans.SnapshotDmlRewrite]] then routes to
-  * a proper [[Snapshots.append]] log commit. Scans delegate verbatim to
-  * the inner ParquetTable's ScanBuilder — pushdown, column pruning and
-  * vectorized reads plan exactly as before. */
-final case class SnapshotReadTable(inner: Table, path: String,
-    snapVersion: Int,
-    // Some(files) once SnapshotScanPruning replaced the inner table with
-    // a log-stats-pruned file list — lets the rule detect a fixed point
+/** The V2 table of a snapshot version that CAN be served as a bare file
+  * list: the log's merged schema (`asNullable`, as a parquet-inferred
+  * schema is) over the recorded (path, byte size) `files`, its scans
+  * built from the log alone
+  * ([[org.apache.spark.sql.GraftSqlBridge.logFedScans]] — Spark's own
+  * ParquetScanBuilder over a log-fed file index: pushdown, column
+  * pruning and vectorized reads plan as for a native parquet table).
+  * It is a plain `SupportsRead`, never a `FileTable`: the analyzer's
+  * built-in `FallBackFileSourceV2` rule rewrites `INSERT INTO` over any
+  * FileTable into a V1 file write against the table's PATHS — for a
+  * snapshot version the per-commit file list, so data files would land
+  * INTO a staged commit dir behind the log's back (observed:
+  * `ParentNotDirectoryException` under `_snap/c-*`). As a plain
+  * `SupportsRead` the insert stays a V2 `AppendData`, which
+  * [[graft.plans.SnapshotDmlRewrite]] routes to a proper
+  * [[Snapshots.append]] log commit. */
+final case class SnapshotReadTable(ident: String,
+    spark: org.apache.spark.sql.SparkSession, tableSchema: StructType,
+    files: Seq[(String, Long)], path: String, snapVersion: Int,
+    // Some(kept) once SnapshotScanPruning narrowed `files` to a
+    // log-stats-pruned subset — lets the rule detect a fixed point
     // instead of re-pruning forever in the optimizer batch
     prunedFiles: Option[Seq[String]] = None,
-    // the LOG's TBLPROPERTIES, served through properties() so
-    // `SHOW TBLPROPERTIES cat.t` answers from the snapshot, not the
-    // inner ParquetTable's file options
+    // the LOG's TBLPROPERTIES — what `SHOW TBLPROPERTIES cat.t` reads
     logProps: Map[String, String] = Map.empty)
     extends Table with org.apache.spark.sql.connector.catalog.SupportsRead {
-  override def name(): String = inner.name()
-  override def schema(): StructType = inner.schema()
-  override def partitioning(): Array[org.apache.spark.sql.connector
-      .expressions.Transform] = inner.partitioning()
+  @transient private lazy val scans =
+    org.apache.spark.sql.GraftSqlBridge.logFedScans(spark, tableSchema, files)
+  override def name(): String = ident
+  override def schema(): StructType = tableSchema
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
     logProps.foreach { case (k, v) => m.put(k, v) }
@@ -91,7 +93,5 @@ final case class SnapshotReadTable(inner: Table, path: String,
     util.Collections.singleton(TableCapability.BATCH_READ)
   override def newScanBuilder(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
-      : org.apache.spark.sql.connector.read.ScanBuilder =
-    inner.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(options)
+      : org.apache.spark.sql.connector.read.ScanBuilder = scans(options)
 }

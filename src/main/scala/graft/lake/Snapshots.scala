@@ -2203,8 +2203,7 @@ object Snapshots {
         throw new IllegalArgumentException(s"the dir schemas of $table@v" +
           s"${s.version}'s files do not merge; read it through the era read")),
       files.map(f => f -> s.sizes(f)))
-    if (org.apache.spark.sql.GraftSqlBridge.logServedEnabled)
-      logServedScans.incrementAndGet()
+    logServedScans.incrementAndGet()
     scan
   }
 
@@ -2604,10 +2603,9 @@ object Snapshots {
     * [[DeletionVectors.read]]). Versions the log says need it
     * ([[needsEraRead]]) take the era-aware read, so every era surfaces
     * the current names and widened types and readAt / readLatest /
-    * optimize work on widened tables without the caller knowing to ask
-    * for [[readAtWidened]]; the rest take the one log-fed scan under
-    * their merged log schema, uniform and additively-evolved eras
-    * alike. */
+    * optimize work on widened tables without the caller asking for it;
+    * the rest take the one log-fed scan under their merged log schema,
+    * uniform and additively-evolved eras alike. */
   private def readDispatch(spark: SparkSession, table: String,
       s: Snapshot): DataFrame =
     if (needsEraRead(spark, table, s)) eraRead(spark, table, s)
@@ -3340,19 +3338,6 @@ object Snapshots {
       if (present.forall(_.contains(f.name))) f else f.copy(nullable = true)))
   }
 
-  /** Schema-evolution read with numeric TYPE WIDENING and column
-    * RENAMES — the other half of the evolution contract beyond additive
-    * columns: when a version's file list spans commits whose schemas
-    * disagree by int→long / float→double (`StructType.merge` refuses
-    * those) or by renamed columns, resolve each era's schema from the
-    * ONE dir schema its manifest records (files of a commit share a
-    * schema — O(commits) metadata, not O(files)), map era names through the
-    * snapshot's rename chain, widen, cast up, and union. Time travel to
-    * a single-era version still returns that era's own narrow type and
-    * names ([[readAt]] — the rename chain is versioned with the log). */
-  def readAtWidened(spark: SparkSession, table: String, v: Int): Option[DataFrame] =
-    snapshot(spark, table, v).map(s => eraRead(spark, table, s))
-
   /** Is era field `eraName` (raw, pre-chain) in commit dir `dir` DEAD
     * under the snapshot's drop ledger? A drop speaks the name as of its
     * own chain position: the era name mapped through the chain PREFIX
@@ -3460,6 +3445,16 @@ object Snapshots {
     prev.flatMap(liveView(spark, table, _))
       .fold(Seq.empty[String])(live => writeDeletes(spark, table, hits(live)))
 
+  /** Schema-evolution read with numeric TYPE WIDENING and column
+    * RENAMES — the other half of the evolution contract beyond additive
+    * columns: when a version's file list spans commits whose schemas
+    * disagree by int→long / float→double (`StructType.merge` refuses
+    * those) or by renamed columns, resolve each era's schema from the
+    * ONE dir schema its manifest records (files of a commit share a
+    * schema — O(commits) metadata, not O(files)), map era names through
+    * the snapshot's rename chain, widen, cast up, and union. Time travel
+    * to a single-era version still returns that era's own narrow type
+    * and names ([[readAt]] routes here only when [[needsEraRead]]). */
   private def eraRead(spark: SparkSession, table: String,
       s: Snapshot): DataFrame = {
     // log-truth stats attach at the leaf too (createTable'd / declared /

@@ -813,12 +813,12 @@ case class SnapshotMetadataCount(spark: SparkSession)
   * over a [[SnapshotReadTable]] relation has its top-level conjuncts
   * mined for per-DOUBLE-column intervals (`>`, `>=`, `<`, `<=`, `=`
   * against literals, either side); files whose recorded [min,max] can't
-  * intersect are dropped and the relation's inner ParquetTable is
-  * rebuilt over the survivors — the FULL predicate stays as the
-  * residual, so results equal the unpruned scan regardless of
-  * clustering (files without stats for a column always survive:
-  * unknown never prunes). Runs as an operator-optimization rule; a
-  * fixed point is reached when re-pruning removes nothing. */
+  * intersect are dropped and the relation's table is copied over the
+  * survivors — the FULL predicate stays as the residual, so results
+  * equal the unpruned scan regardless of clustering (files without
+  * stats for a column always survive: unknown never prunes). Runs as an
+  * operator-optimization rule; a fixed point is reached when re-pruning
+  * removes nothing. */
 case class SnapshotScanPruning(spark: SparkSession)
     extends Rule[LogicalPlan] {
 
@@ -1064,15 +1064,12 @@ case class SnapshotScanPruning(spark: SparkSession)
       if (kept.size == current.size) None // fixed point: nothing to drop
       else if (kept.isEmpty) Some(LocalRelation(r.output, Nil))
       else {
-        // the relation's resolved schema carries over: the pruned file
-        // subset serves the same columns, log-fed like the version
-        val inner = GraftSqlBridge.parquetTable(
-          s"${t.inner.name()}#pruned${kept.size}", spark, t.inner.schema(),
-          kept.map(fl => Snapshots.filePath(t.path, fl) -> s.sizes(fl)))
-        // under the kill-switch the subset's schema is inferred from its
-        // own footers: prune only when it still serves the relation's
-        Option.when(inner.schema() == t.inner.schema())(r.copy(table =
-          SnapshotReadTable(inner, t.path, t.snapVersion, Some(kept))))
+        // the pruned file subset serves the version's schema and
+        // properties, log-fed like the version
+        Some(r.copy(table = t.copy(
+          ident = s"${t.ident}#pruned${kept.size}",
+          files = kept.map(fl => Snapshots.filePath(t.path, fl) -> s.sizes(fl)),
+          prunedFiles = Some(kept))))
       }
     }
   }

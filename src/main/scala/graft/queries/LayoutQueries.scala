@@ -243,10 +243,11 @@ object LayoutQueries {
     * `o_units` metric as INT; v2 appends the same column as BIGINT with
     * values beyond int range, so the widening is semantically forced,
     * not cosmetic. Time travel to v1 surfaces the era's own narrow type
-    * (pinned in the `units_type` marker column); the widened read
-    * ([[graft.lake.Snapshots.readAtWidened]]) resolves the target schema
-    * from ONE footer per commit directory, casts each era up, and
-    * unions — parquet `mergeSchema` refuses an int/long mix outright.
+    * (pinned in the `units_type` marker column); v2's read
+    * ([[graft.lake.Snapshots.readAt]], which the log routes to the era
+    * read) resolves the target schema from ONE recorded dir schema per
+    * commit directory, casts each era up, and unions — parquet
+    * `mergeSchema` refuses an int/long mix outright.
     * The oracle replays both eras from the key closed form; a read that
     * clipped the bigint era to int, or widened v1's travel view, shifts
     * a row. */
@@ -267,7 +268,7 @@ object LayoutQueries {
       .select(lit(1L).as("version"),
         lit(v1.schema("o_units").dataType.simpleString).as("units_type"),
         col("n_rows"), col("sum_units"))
-    val wide = Snapshots.readAtWidened(spark, table, 2).get
+    val wide = Snapshots.readAt(spark, table, 2).get
     val era2 = wide
       .agg(count(lit(1)).as("n_rows"), sum(col("o_units")).as("sum_units"))
       .select(lit(2L).as("version"),

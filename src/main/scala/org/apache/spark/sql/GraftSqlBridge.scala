@@ -11,7 +11,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * and `Dataset.ofRows` `private[sql]`; third-party expression/operator
   * libraries conventionally host a one-file shim inside the
   * `org.apache.spark.sql` package to reach them. This is the only file in
-  * the repo living outside the graft namespace.
+  * the repo living outside the graft namespace. It also builds the one
+  * scan of files the snapshot log records, V1 ([[logFileRelation]]) and
+  * V2 ([[logFedScans]]), from the log alone: there is no listing path
+  * beside it.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -33,29 +36,20 @@ object GraftSqlBridge {
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 
-  /** The schema a parquet `mergeSchema` footer pass infers over files
-    * whose schemas are `schemas`, given in the order that pass folds
+  /** The schema a parquet `mergeSchema` read serves over files whose
+    * schemas are `schemas`, given in the order its footer pass folds
     * them — files sorted by path string (`ParquetUtils.splitFiles`) —
     * through the same `StructType.merge` (same case sensitivity), so the
-    * merged field order is the footer pass's; None when they do not
-    * merge. A pure fold: no job, no file opened. */
+    * merged field order is the footer pass's, and all-nullable as the
+    * read serves it; None when they do not merge. A pure fold: no job,
+    * no file opened. */
   def mergedSchema(spark: SparkSession,
       schemas: Seq[types.StructType]): Option[types.StructType] = {
     val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
     try Some(schemas.foldLeft(new types.StructType())(
-      _.merge(_, caseSensitive)))
+      _.merge(_, caseSensitive)).asNullable)
     catch { case _: SparkException => None }
   }
-
-  /** Production kill-switch for both log-fed builders below:
-    * `SPARK_GRAFT_LOG_SERVED_SCAN=off` (or `false`/`0`) makes them read
-    * filesystem truth instead — a listing plus a `mergeSchema` footer
-    * pass — so a corrupted-manifest incident is mitigable without a code
-    * change. Any other value (or absence) keeps the log-fed scans
-    * (what `Snapshots.logServedScans` counts). */
-  def logServedEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_LOG_SERVED_SCAN")
-      .exists(v => v == "off" || v == "false" || v == "0")
 
   /** The V1 parquet scan of log-recorded files, built ENTIRELY from log
     * metadata — the Delta/Iceberg snapshot-read shape
@@ -73,12 +67,9 @@ object GraftSqlBridge {
     * pruning, `_metadata` columns and vectorized reads all go through
     * the stock ParquetFileFormat / FileSourceStrategy machinery: the
     * physical plan is the same `FileScan parquet` as a path-based read,
-    * with a [[LogFedFileIndex]] location. Under the kill-switch it is
-    * that path-based read, with `mergeSchema`. */
+    * with a [[LogFedFileIndex]] location. */
   def logFileRelation(spark: SparkSession, schema: types.StructType,
       files: Seq[(String, Long)]): DataFrame = {
-    if (!logServedEnabled) return spark.read.option("mergeSchema", "true")
-      .parquet(files.map(_._1): _*)
     import org.apache.spark.sql.execution.datasources._
     val session = spark.asInstanceOf[classic.SparkSession]
     // asNullable: a parquet-inferred schema is all-nullable; serving the
@@ -92,45 +83,24 @@ object GraftSqlBridge {
       LogicalRelation(relation, isStreaming = false))
   }
 
-  /** The DataSourceV2 twin of [[logFileRelation]], the building block
-    * of the snapshot-log TableCatalog: a parquet Table serving `schema`
-    * over `files` (path → recorded size) through Spark's own ParquetTable
-    * (full pushdown, column pruning, vectorized read), with its
-    * FileIndex built from the log ([[LogFedFileIndex]]) — so `VERSION AS
-    * OF` scans plan exactly like a native V2 table, without the one
-    * driver-side FS status per path (DataSource.checkAndGlobPathIfNecessary
-    * + InMemoryFileIndex) or the footer pass a stock FileTable pays at
-    * construction. Under the kill-switch it is the stock ParquetTable
-    * over a listing, its schema inferred with `mergeSchema`. Internal
+  /** The DataSourceV2 twin of [[logFileRelation]], the scan side of
+    * the snapshot-log TableCatalog's read table: scan builders serving
+    * `schema` over `files` (path → recorded size) through Spark's own
+    * ParquetScanBuilder (full pushdown, column pruning, vectorized
+    * read) over one [[LogFedFileIndex]] — what `ParquetTable` builds,
+    * without the one driver-side FS status per path
+    * (DataSource.checkAndGlobPathIfNecessary + InMemoryFileIndex) or
+    * the footer pass a stock FileTable pays at construction. The index
+    * is built once, on the first scan, so every scan of one table
+    * shares it (equal scans, reusable exchanges). Internal
     * constructors, hence bridged here. */
-  def parquetTable(name: String, spark: SparkSession,
-      schema: types.StructType,
-      files: Seq[(String, Long)]): connector.catalog.Table = {
+  def logFedScans(spark: SparkSession, schema: types.StructType,
+      files: Seq[(String, Long)])
+      : util.CaseInsensitiveStringMap => connector.read.ScanBuilder = {
     val session = spark.asInstanceOf[classic.SparkSession]
-    val fmt = classOf[execution.datasources.parquet.ParquetFileFormat]
-    if (logServedEnabled)
-      new LogFedParquetTable(name, session, schema.asNullable, fmt, files)
-    else execution.datasources.v2.parquet.ParquetTable(name, session,
-      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
-        java.util.Map.of("mergeSchema", "true")), files.map(_._1), None, fmt)
-  }
-
-  /** [[execution.datasources.v2.parquet.ParquetTable]] whose FileIndex
-    * is built ENTIRELY from log metadata (path → recorded byte size):
-    * zero FS statuses, zero listings at planning time. Everything else
-    * — scan builder, pushdown, vectorized read, write refusal — is the
-    * stock ParquetTable behaviour. */
-  private final class LogFedParquetTable(
-      name: String, session: classic.SparkSession,
-      schema: types.StructType,
-      fmt: Class[execution.datasources.parquet.ParquetFileFormat],
-      sized: Seq[(String, Long)])
-    extends execution.datasources.v2.parquet.ParquetTable(name, session,
-      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(),
-      sized.map(_._1), Some(schema), fmt) {
-    override lazy val fileIndex
-        : execution.datasources.PartitioningAwareFileIndex =
-      new LogFedFileIndex(session, sized)
+    lazy val index = new LogFedFileIndex(session, files)
+    options => execution.datasources.v2.parquet.ParquetScanBuilder(
+      session, index, schema, schema, options)
   }
 
   /** A [[execution.datasources.PartitioningAwareFileIndex]] serving a

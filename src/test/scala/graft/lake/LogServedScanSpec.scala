@@ -9,9 +9,11 @@ import graft.SparkTestBase
   * directly) must (1) actually engage on a uniform-schema table,
   * (2) serve byte-identical rows to the path-based read, (3) engage on
   * schema-divergent (additively evolved) eras too, serving their merged
-  * log schema with the older eras' rows null in the added column, and
+  * log schema with the older eras' rows null in the added column,
   * (4) the KMV sketch single-pass rewrite must emit the same bottom-k
-  * sets and null counts the per-column passes did. */
+  * sets and null counts the per-column passes did, and (5) the V2
+  * catalog table serves the log's schema, properties and a log-fed scan
+  * for uniform, additively evolved and stats-pruned versions alike. */
 class LogServedScanSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -89,6 +91,48 @@ class LogServedScanSpec extends SparkTestBase {
     assert(Snapshots.logServedScans.get() == before + 1,
       "divergent-era read must take the log-served fast path")
     assert(served.filter($"extra".isNull).count() == 1L)
+  }
+
+  test("the V2 table serves the log's schema, properties and scan: uniform, additive, #pruned") {
+    import scala.jdk.CollectionConverters._
+    val root = freshDir("logscan_v2")
+    val t = s"$root/t"
+    val cat = s"lsv2_${Integer.toHexString(root.hashCode)}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[SnapshotCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    def band(lo: Long, hi: Long) = (lo to hi).toDF("id")
+      .withColumn("name", concat(lit("n"), $"id"))
+    Snapshots.append(spark, t, band(1L, 100L), statsCols = Seq("id"))
+    val vUniform = Snapshots.setTableProperties(spark, t,
+      Map("owner" -> "lake", "tier" -> "gold"))
+    val vAdditive = Snapshots.append(spark, t,
+      band(101L, 200L).withColumn("extra", $"id" % 7), statsCols = Seq("id"))
+    for ((label, v, where) <- Seq(
+        ("uniform", vUniform, ""),
+        ("additive", vAdditive, ""),
+        ("#pruned", vAdditive, " WHERE id > 150"))) {
+      val df = spark.sql(s"SELECT * FROM $cat.t VERSION AS OF $v$where")
+      val table = df.queryExecution.optimizedPlan.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2ScanRelation => r.relation.table
+      }.get.asInstanceOf[SnapshotReadTable]
+      val s = Snapshots.snapshot(spark, t, v).get
+      assert(table.name().contains("#pruned") == (label == "#pruned") &&
+        table.prunedFiles.forall(_.size < s.files.size),
+        s"$label: table ${table.name()}")
+      assert(table.schema() == Snapshots.readAt(spark, t, v).get.schema,
+        s"$label: schema")
+      assert(scanIndex(df) == "LogFedFileIndex", s"$label: scan index")
+      assert(s.properties.nonEmpty &&
+        table.properties().asScala.toMap == s.properties, s"$label: properties")
+      val raw = spark.read.option("mergeSchema", "true")
+        .parquet(s.files.map(f => s"$t/$f"): _*)
+        .where(if (where.isEmpty) "true" else where.stripPrefix(" WHERE "))
+        .select(df.columns.map(col): _*)
+      assert(raw.count() > 0 &&
+        df.exceptAll(raw).isEmpty && raw.exceptAll(df).isEmpty, s"$label: rows")
+    }
   }
 
   test("single-pass KMV sketches equal the independent per-column answer") {

@@ -119,7 +119,7 @@ class SnapshotCatalogSpec extends SparkTestBase {
     val w = spark.sql(s"SELECT sum(units) AS s FROM $cat.t2")
     assert(w.schema("s").dataType.typeName == "long")
     assert(w.head().getLong(0) ==
-      Snapshots.readAtWidened(spark, t2, 2).get
+      Snapshots.readAt(spark, t2, 2).get
         .agg(sum(col("units"))).head().getLong(0))
     org.apache.commons.io.FileUtils.deleteQuietly(new File(root))
   }

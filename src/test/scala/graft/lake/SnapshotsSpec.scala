@@ -354,8 +354,9 @@ class SnapshotsSpec extends SparkTestBase {
     val v1 = Snapshots.readAt(spark, t, 1).get
     assert(v1.schema("o_units").dataType ==
       org.apache.spark.sql.types.IntegerType)
-    // plain mergeSchema refuses int-vs-long — the widened read resolves it
-    val wide = Snapshots.readAtWidened(spark, t, 2).get
+    // plain mergeSchema refuses int-vs-long — the log routes v2 to the
+    // era read, which widens
+    val wide = Snapshots.readAt(spark, t, 2).get
     assert(wide.schema("o_units").dataType ==
       org.apache.spark.sql.types.LongType)
     assert(wide.count() == orders.count())
@@ -363,8 +364,8 @@ class SnapshotsSpec extends SparkTestBase {
       sum(when(col("o_orderkey") % 2 === 0, col("o_orderkey") % 100)
         .otherwise(col("o_orderkey") % 100 + 10000000000L))).head().getLong(0)
     assert(wide.agg(sum(col("o_units"))).head().getLong(0) == wantSum)
-    // the PLAIN read path self-heals on a widened table: mergeSchema
-    // refuses int/long, so readLatest must fall back to the era read
+    // readLatest takes the era read too: the log's dir schemas do not
+    // merge (int vs long), so the log picks it without trying a scan
     // (and optimize, which reads through it, must keep working)
     assert(Snapshots.readLatest(spark, t).get.count() == orders.count())
     val vOpt = Snapshots.optimize(spark, t).get
@@ -374,7 +375,7 @@ class SnapshotsSpec extends SparkTestBase {
       orders.filter(col("o_orderkey") % 2 === 0).limit(10)
         .withColumn("o_units", col("o_orderkey") % 100 + 20000000000L)
         .withColumn("o_channel", lit("web")))
-    val wide3 = Snapshots.readAtWidened(spark, t, vAdd).get
+    val wide3 = Snapshots.readAt(spark, t, vAdd).get
     assert(wide3.schema("o_units").dataType ==
       org.apache.spark.sql.types.LongType)
     assert(wide3.filter(col("o_channel").isNull).count() == orders.count())

@@ -38,15 +38,11 @@ class ScaleSpecs extends SparkTestBase {
         Seq(graft.lake.Snapshots.WhenMatchedUpdate(),
           graft.lake.Snapshots.WhenNotMatchedInsert(),
           graft.lake.Snapshots.WhenNotMatchedBySourceDelete()))
-      // the listener bus is asynchronous: poll until the join plans
-      // (tombstone writes + staged rows) have all been delivered
-      val deadline = System.currentTimeMillis() + 30000
-      def joined = (0 until plans.size).map(plans.get)
+      // the listener bus is asynchronous: drain it so every join plan
+      // (tombstone writes + staged rows) has been delivered
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
+      val jp = (0 until plans.size).map(plans.get)
         .filter(p => p.contains("Join"))
-      while (joined.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      Thread.sleep(500) // drain stragglers
-      val jp = joined
       assert(jp.nonEmpty, "no join plans captured from the merge")
       jp.foreach { p =>
         assert(!p.contains("SortMergeJoin"),
@@ -407,14 +403,10 @@ class ScaleSpecs extends SparkTestBase {
     try {
       graft.similarity.Similarity.nswIndexAdd(spark, root,
         emb.filter(col("vec_id") % 5 === 0), "vec_id", "embedding")
-      val deadline = System.currentTimeMillis() + 30000
-      def joined = (0 until plans.size).map(plans.get)
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
+      val jp = (0 until plans.size).map(plans.get)
         .filter(p => p.contains("BroadcastHashJoin") ||
           p.contains("SortMergeJoin"))
-      while (joined.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      Thread.sleep(500)
-      val jp = joined
       assert(jp.nonEmpty, "no candidate-join plan captured from add()")
       jp.foreach { p =>
         assert(!p.contains("SortMergeJoin"),
