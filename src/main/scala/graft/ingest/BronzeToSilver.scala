@@ -129,12 +129,6 @@ object BronzeToSilver {
         regexp_replace(col("value"), "[\\uFEFF\\u200B\\u00A0]", ""))
       .filter(trim(col("value")) =!= "")
 
-  /** The declarative transform: (good silver frame, aligned rejects frame).
-    * Pure plan construction — callable from tests without touching disk. */
-  def transform(clean: DataFrame, delimiter: Char, headerLine: String,
-      indexMap: Map[String, Int], conf: Conf): (DataFrame, DataFrame) =
-    route(parse(clean, delimiter, headerLine, indexMap, conf), conf)
-
   /** Rows the reference's null-unsafe DQ predicate (`strictNullDq = false`)
     * loses under 3VL: [[route]] sends them to no sink. */
   private val droppedByNullDq = "DROPPED_BY_NULL_DQ"

@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,10 +29,28 @@ import org.apache.spark.sql.functions._
   * picking sidecars up as data (Spark skips `_`/`.` paths), so readers
   * that have not adopted DV semantics degrade to seeing undeleted data,
   * never to schema corruption.
+  *
+  * Every existence check, listing and rename goes through the table
+  * path's Hadoop `FileSystem`, so a qualified table path (`file://`,
+  * `s3a://`) keeps its vectors exactly like a plain one.
   */
 object DeletionVectors {
 
   private def dvDir(table: String) = s"$table/_dv"
+
+  private def fsOf(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The sidecar dirs under `_dv`, listed explicitly (no glob: a
+    * concurrent writer's half-staged dir under a glob pattern surfaces
+    * as a logged read error). */
+  private def sidecars(spark: SparkSession, table: String): Seq[String] = {
+    val dir = new Path(dvDir(table))
+    val fs = fsOf(spark, dir)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet")).map(_.toString)
+  }
 
   /** The hidden-column scan every DV operation builds on. File
     * references are TABLE-RELATIVE ([[LakePaths]]): the same
@@ -83,22 +102,15 @@ object DeletionVectors {
 
   /** True if the table has any deletion vectors pending. */
   def hasVectors(spark: SparkSession, table: String): Boolean =
-    new java.io.File(dvDir(table)).exists() &&
-      new java.io.File(dvDir(table)).listFiles() != null &&
-      new java.io.File(dvDir(table)).listFiles().nonEmpty
+    sidecars(spark, table).nonEmpty
 
-  /** All accumulated tombstones as one (file, pos) relation. Sidecars are
-    * enumerated explicitly (no glob: a concurrent writer's half-staged
-    * dir under a glob pattern surfaces as a logged read error). */
+  /** All accumulated tombstones as one (file, pos) relation. */
   def vectors(spark: SparkSession, table: String): DataFrame = {
-    val dirs =
-      if (!hasVectors(spark, table)) Array.empty[String]
-      else new java.io.File(dvDir(table)).listFiles()
-        .filter(_.getName.endsWith(".parquet")).map(_.getPath)
+    val dirs = sidecars(spark, table)
     if (dirs.isEmpty) {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF("file", "pos")
-    } else spark.read.parquet(dirs.toIndexedSeq: _*).distinct()
+    } else spark.read.parquet(dirs: _*).distinct()
   }
 
   /** Merge-on-read scan: the table minus its deletion vectors. The DV
@@ -120,15 +132,16 @@ object DeletionVectors {
     if (!hasVectors(spark, table)) return
     val staged = s"$table.compacting"
     read(spark, table).write.mode("overwrite").parquet(staged)
-    val live = new java.io.File(table)
-    val old = new java.io.File(s"$table.old")
-    org.apache.commons.io.FileUtils.deleteQuietly(old)
-    if (!live.renameTo(old))
+    val (live, old) = (new Path(table), new Path(s"$table.old"))
+    val fs = fsOf(spark, live)
+    fs.delete(old, true)
+    if (!fs.rename(live, old))
       throw new IllegalStateException(s"swap failed for $table")
-    if (!new java.io.File(staged).renameTo(live)) {
-      old.renameTo(live) // roll back
+    if (!fs.rename(new Path(staged), live)) {
+      fs.rename(old, live) // roll back
       throw new IllegalStateException(s"swap-in failed for $table")
     }
-    org.apache.commons.io.FileUtils.deleteQuietly(old)
+    fs.delete(old, true)
+    ()
   }
 }

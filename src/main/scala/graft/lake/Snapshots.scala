@@ -162,6 +162,14 @@ object Snapshots {
     }
   }
 
+  /** The one exactly-once rule of every `foreachBatch` sink: sink
+    * version k+1 holds micro-batch k, so a batch this is true for is
+    * already in (an at-least-once replay, or a late old id) and must be
+    * skipped. A batch that crashed before its publish left no version,
+    * so its retry is not skipped. */
+  def holdsBatch(spark: SparkSession, table: String, batchId: Long): Boolean =
+    latestVersion(spark, table).exists(_ > batchId)
+
   /** Advisory post-publish hint update (crash-safe: stale is fine). */
   private def writeLatestHint(spark: SparkSession, table: String, v: Int): Unit = {
     val ops = new FileOps(spark.sparkContext.hadoopConfiguration)

@@ -46,7 +46,8 @@ object RetailQueries {
     * mixing a distinct with other aggregates makes Catalyst thread every
     * accumulator (including the DECIMAL ones) through the wide
     * (group, orderkey)-keyed phases of its one-distinct rewrite —
-    * measured 1.4–1.7 s at sf0.1 vs 1.1 s for this form (PlanProbe).
+    * measured 1.4–1.7 s at sf0.1 vs 1.1 s for this form (best of three
+    * noop-sink passes each).
     * Here phase 1 pre-aggregates per (flag, status, orderkey) — the
     * relation the distinct pass shuffles anyway — with ALL-PRIMITIVE long
     * partials (safe at any table size: a single order's lines bound the

@@ -35,12 +35,13 @@ object StreamingQueries {
     * more partitions than the event rate needs multiplies overhead
     * without adding parallelism. Measured on this corpus: the q69
     * stream-stream join runs 5.6 s at 32 partitions vs 2.8 s at 8
-    * (PlanProbe). A production deployment sizes this to peak
-    * events/sec ÷ per-partition throughput; the local replay defaults to
-    * 8 (override: SPARK_GRAFT_STATE_PARTITIONS). The session width is
-    * restored before returning, so the read-back result and every batch
-    * query keep the full core count — the partition count is pinned into
-    * each query's fresh checkpoint at start. */
+    * (sf0.1, best of two whole-query runs). A production deployment
+    * sizes this to peak events/sec ÷ per-partition throughput; the
+    * local replay defaults to 8 (override:
+    * SPARK_GRAFT_STATE_PARTITIONS). The session width is restored
+    * before returning, so the read-back result and every batch query
+    * keep the full core count — the partition count is pinned into each
+    * query's fresh checkpoint at start. */
   private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
@@ -427,12 +428,13 @@ object StreamingQueries {
   }
 
   /** q115 — continuously-maintained materialized rollup: each microbatch
-    * merges its partial (hour, event_type) aggregate into a VERSIONED
-    * stored rollup via [[graft.streaming.IncrementalRollup]] — q104's
-    * incremental view maintenance driven by `foreachBatch`, with
-    * atomic-pointer snapshot publication and idempotent per-batch
-    * commits (replayed batches can't double-count; crash mid-write
-    * leaves the previous version visible — spec'd in
+    * merges its partial (hour, event_type) aggregate into a stored
+    * rollup SNAPSHOT TABLE via [[graft.streaming.IncrementalRollup]] —
+    * q104's incremental view maintenance driven by `foreachBatch`,
+    * under the one log discipline of every `foreachBatch` sink
+    * ([[graft.lake.Snapshots.holdsBatch]]: batch k publishes version
+    * k+1; replayed batches can't double-count; a crash before the
+    * publish leaves the previous version visible — spec'd in
     * IncrementalRollupSpec). Unlike q84/q86, NO streaming state store
     * exists at all: merge cost per batch is O(batch agg + rollup),
     * history is never rescanned, and the rollup survives outside any
@@ -469,9 +471,11 @@ object StreamingQueries {
     * event stream is read as a change log over per-user state — every
     * event upserts the user's latest-state row, and `error` events are
     * tombstones that remove it — applied batch-by-batch through
-    * [[graft.operators.CdcMerge]] onto a [[graft.streaming.VersionedStore]]
-    * snapshot (exactly-once per batch, atomic version publication, same
-    * guarantees spec'd for q115). The change sequence is the
+    * [[graft.operators.CdcMerge]] onto a [[graft.lake.Snapshots]] state
+    * table — each batch one `overwrite` version under q115's log
+    * discipline ([[graft.lake.Snapshots.holdsBatch]]: exactly-once per
+    * batch, a crash before the publish leaves the previous version
+    * visible). The change sequence is the
     * (event-time, event_id) struct, so within and across batches the
     * globally-latest change wins deterministically (per-key in-order
     * delivery across batches — the contract a real CDC log provides;
@@ -481,6 +485,7 @@ object StreamingQueries {
     * apply-per-batch ∘ fold ≡ global-latest equivalence that makes
     * streamed replication trustworthy. */
   def cdcApplyStream(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+    import graft.lake.Snapshots
     import graft.operators.CdcMerge
     val src = s"$dir/events.parquet"
     val out = scratchDir("stream_q118_state", dir)
@@ -490,9 +495,9 @@ object StreamingQueries {
     val stream = spark.readStream.schema(schema)
       .parquet(s"$dir/events*.parquet")
       .transform(Tables.normalizeEventTs)
-    val store = new graft.streaming.VersionedStore(out)
     val apply: (Dataset[Row], Long) => Unit = (batch, id) => {
-      if (!store.committedBatch.exists(_ >= id)) {
+      val s = batch.sparkSession
+      if (!Snapshots.holdsBatch(s, out, id)) {
         val changes = batch.select(
           col("user_id"),
           col("event_id").as("last_event_id"),
@@ -501,10 +506,10 @@ object StreamingQueries {
           when(col("event_type") === "error", lit("D")).otherwise(lit("U"))
             .as("op"),
           struct(unix_micros(col("ts")), col("event_id")).as("seq"))
-        val snapshot = store.read(batch.sparkSession).getOrElse(
+        val snapshot = Snapshots.readLatest(s, out).getOrElse(
           changes.select("user_id", "last_event_id", "last_type", "last_value")
             .limit(0))
-        store.commit(CdcMerge(snapshot, changes, Seq("user_id")), id)
+        Snapshots.overwrite(s, out, CdcMerge(snapshot, changes, Seq("user_id")))
       }
     }
     val q = stream.writeStream
@@ -513,7 +518,7 @@ object StreamingQueries {
       .trigger(Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally { q.stop(); delete(ckpt) }
-    store.read(spark).get
+    Snapshots.readLatest(spark, out).get
   }
 
   /** Same oracle text as q58 — the whole point: one SQL truth, two
@@ -530,8 +535,8 @@ object StreamingQueries {
 
   /** q133 — streaming SKETCH maintenance: per-type approximate-distinct
     * users kept current by merging each microbatch's HLL sketch into a
-    * stored one through the [[graft.streaming.VersionedStore]] (q115's
-    * exactly-once commit discipline — no state store, replay-safe).
+    * stored [[graft.lake.Snapshots]] table, one `overwrite` version per
+    * batch (q115's log discipline — no state store, replay-safe).
     * This is the mergeable-sketch trio (HLL q54 / quantile q56 / CMS
     * q68) promoted to CONTINUOUS operation: per batch the merge cost is
     * O(batch agg + types·sketch), never O(history), and the stored
@@ -542,6 +547,7 @@ object StreamingQueries {
     * tolerance, here generous 5%+16 absolute for the small gate
     * cardinalities where HLL's sparse mode is near-exact). */
   def distinctSketchStream(spark: SparkSession, dir: String): DataFrame = withStatePartitions(spark) {
+    import graft.lake.Snapshots
     val src = s"$dir/events.parquet"
     val out = scratchDir("stream_q133_hll", dir)
     val ckpt = scratchDir("stream_q133_ckpt", dir)
@@ -549,17 +555,17 @@ object StreamingQueries {
     val schema = spark.read.parquet(src).schema
     val stream = spark.readStream.schema(schema)
       .parquet(s"$dir/events*.parquet")
-    val store = new graft.streaming.VersionedStore(out)
     val apply: (Dataset[Row], Long) => Unit = (batch, id) => {
-      if (!store.committedBatch.exists(_ >= id)) {
+      val s = batch.sparkSession
+      if (!Snapshots.holdsBatch(s, out, id)) {
         val delta = batch.groupBy("event_type")
           .agg(hll_sketch_agg(col("user_id")).as("sk"))
-        val merged = store.read(batch.sparkSession) match {
+        val merged = Snapshots.readLatest(s, out) match {
           case Some(prev) => prev.unionByName(delta)
             .groupBy("event_type").agg(hll_union_agg(col("sk")).as("sk"))
           case None => delta
         }
-        store.commit(merged, id)
+        Snapshots.overwrite(s, out, merged)
       }
     }
     val q = stream.writeStream.foreachBatch(apply)
@@ -567,7 +573,7 @@ object StreamingQueries {
       .trigger(Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally { q.stop(); delete(ckpt) }
-    val est = store.read(spark).get
+    val est = Snapshots.readLatest(spark, out).get
       .select(col("event_type"), hll_sketch_estimate(col("sk")).as("est"))
     Tables.events(spark, dir)
       .groupBy("event_type")
@@ -583,11 +589,11 @@ object StreamingQueries {
     * `maxFilesPerTrigger`) streams through `foreachBatch` into a
     * [[graft.lake.Snapshots]] table, ONE LOG VERSION PER MICRO-BATCH,
     * idempotent under batch replay by the batchId↔version correspondence
-    * (a replayed batch id < latest version is skipped — the
-    * transactional-sink contract a foreachBatch parquet `append` cannot
-    * give, and exactly the q115 versioned-store discipline applied to
-    * the table log). The gate reads the FINAL SNAPSHOT and aggregates in
-    * exact integers: a dropped batch, a double-applied replay, or a log
+    * ([[graft.lake.Snapshots.holdsBatch]]: a replayed batch id below the
+    * latest version is skipped — the transactional-sink contract a
+    * foreachBatch parquet `append` cannot give, and the one log
+    * discipline every `foreachBatch` sink here shares). The gate reads
+    * the FINAL SNAPSHOT and aggregates in exact integers: a dropped batch, a double-applied replay, or a log
     * version that lost carried files all shift `n_events`/`sum_id`.
     *
     * Scale shape: each commit stages only its micro-batch (O(delta)) and
@@ -609,8 +615,7 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", 1)
       .parquet(src)
     val writeBatch: (Dataset[Row], Long) => Unit = (batch, id) =>
-      // idempotent: version k+1 holds batch k; a replayed batch is a no-op
-      if (Snapshots.latestVersion(spark, table).getOrElse(0) < id + 1)
+      if (!Snapshots.holdsBatch(spark, table, id))
         Snapshots.append(spark, table, batch)
     val q = stream.writeStream
       .foreachBatch(writeBatch)
@@ -792,7 +797,7 @@ object StreamingQueries {
       val s = batch.sparkSession
       s.catalog.refreshTable(s"$db.sig_index")
       val bands = DedupQueries.bandRows(batch.toDF())
-      if (Snapshots.latestVersion(s, pairsT).getOrElse(0) < id + 1) {
+      if (!Snapshots.holdsBatch(s, pairsT, id)) {
         val cand = s.table(s"$db.sig_index")
           .withColumnRenamed("doc_id", "x")
           .join(bands.withColumnRenamed("doc_id", "y"), Seq("band"))
@@ -912,7 +917,7 @@ object StreamingQueries {
       .parquet(src)
     val serveBatch: (Dataset[Row], Long) => Unit = (batch, id) => {
       val s = batch.sparkSession
-      if (Snapshots.latestVersion(s, resultsT).getOrElse(0) < id + 1) {
+      if (!Snapshots.holdsBatch(s, resultsT, id)) {
         val hits = graft.similarity.Similarity.bruteForceTopK(
             Tables(s, dir, "embeddings"), batch.toDF(),
             "vec_id", "embedding", ServeK)

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.lit
 
 import graft.lake.Snapshots
 
@@ -23,11 +22,11 @@ import graft.lake.Snapshots
   * the `_ckpt` index.
   *
   * Each micro-batch maps its version objects to the change windows
-  * (v-1, v] via [[Snapshots.changesBetween]] and appends the row-level
-  * feed to `feedTable` under the exactly-once discipline: feed version
-  * k+1 holds batch k — INCLUDING the seed version's empty window, so the
-  * batchId↔version bijection survives replays — and a replayed batch id
-  * at or below the committed frontier is a no-op.
+  * (v-1, v] via [[Snapshots.changesBetween]]; the stream, the
+  * exactly-once append to `feedTable` (feed version k+1 holds batch k,
+  * the seed version's empty window included) and the AvailableNow run
+  * are [[SnapshotStreamSource]]'s one shared driver — this source is
+  * only its change-feed emitter.
   *
   * Scale shape: discovery lists the KB-sized log directory (the Delta
   * source does the same each trigger); each batch reads O(changed files
@@ -35,44 +34,20 @@ import graft.lake.Snapshots
   */
 object ChangeFeedSource {
 
-  /** Version number of a log object path (`.../v000042.json` → 42). */
-  private def versionOf(path: String): Int =
-    path.split("/").last.stripPrefix("v").stripSuffix(".json").toInt
-
   /** Consume every unconsumed log version of `table` (AvailableNow) and
     * append each window's change feed to `feedTable`; checkpoint state
     * (the consumed-version frontier) lives under `checkpoint`. Restart
     * with the same checkpoint to consume only versions committed since
     * the last run. */
   def runOnce(spark: SparkSession, table: String, feedTable: String,
-      checkpoint: String): Unit = {
-    // the version objects' NAMES are the offsets — the content is not
-    // needed; `_metadata` must be projected on the SOURCE side (inside
-    // foreachBatch the batch is a plain relation without reader columns)
-    val stream = spark.readStream
-      .option("maxFilesPerTrigger", 1)
-      .text(s"$table/_log/v*.json")
-      .select(col("_metadata.file_path").as("log_object"))
-    val writeBatch: (Dataset[Row], Long) => Unit = (batch, id) =>
-      if (Snapshots.latestVersion(spark, feedTable).getOrElse(0) < id + 1) {
-        val versions = batch.select(col("log_object")).distinct()
-          .collect().map(r => versionOf(r.getString(0))).toSeq.sorted
-        val feeds = versions.filter(_ >= 2).map(v =>
-          Snapshots.changesBetween(spark, table, v - 1, v).get)
-        val feed = feeds.reduceOption(_.unionByName(_)).getOrElse {
-          // seed / empty window: publish an EMPTY feed version so the
-          // batchId↔version bijection holds (skipping would let a
-          // replay of the NEXT batch slip past the frontier check)
-          Snapshots.readLatest(spark, table).get.limit(0)
-            .withColumn("_change_type", lit("insert"))
-        }
-        Snapshots.append(spark, feedTable, feed)
-      }
-    val q = stream.writeStream
-      .foreachBatch(writeBatch)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-  }
+      checkpoint: String): Unit =
+    SnapshotStreamSource.drive(spark, table, feedTable, checkpoint,
+        versionsPerTrigger = 1) { versions =>
+      versions.filter(_ >= 2)
+        .map(v => Snapshots.changesBetween(spark, table, v - 1, v).get)
+        .reduceOption(_.unionByName(_))
+        // the seed version's empty window: the feed's schema, no rows
+        .getOrElse(Snapshots.readLatest(spark, table).get.limit(0)
+          .withColumn("_change_type", lit("insert")))
+    }
 }

@@ -1,93 +1,52 @@
 package graft.streaming
 
-import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.gold.IncrementalAgg
-
-/** Versioned snapshot store with exactly-once batch publication — the
-  * storage half shared by the incremental streaming materializations
-  * ([[IncrementalRollup]], the q118 CDC apply).
-  *
-  * Two properties make it production-shaped:
-  *
-  *  - '''Versioned snapshots, not in-place overwrite''': batch B writes
-  *    to a fresh `v<B>` directory and only then swaps the `latest`
-  *    pointer (atomic rename). Readers always see a complete version; a
-  *    crash mid-write leaves the previous pointer intact (the same
-  *    reader contract as gold's manifest protocol).
-  *  - '''Idempotent per batch''': `foreachBatch` is at-least-once under
-  *    retries; a batch whose id is at-or-below the committed pointer is
-  *    SKIPPED, so a replayed batch cannot double-apply. A batch that
-  *    crashed after writing `v<B>` but before the pointer swap is
-  *    rewritten — the orphan version was never visible.
-  */
-final class VersionedStore(root: String) extends Serializable {
-
-  private def pointerPath = Paths.get(root, "latest")
-  private def versionDir(b: Long) = s"$root/v$b"
-
-  /** The committed batch id, if any version has been published. */
-  def committedBatch: Option[Long] = {
-    val p = pointerPath
-    if (Files.exists(p))
-      Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8).trim.toLong)
-    else None
-  }
-
-  /** The current snapshot contents (None before any commit). */
-  def read(spark: SparkSession): Option[DataFrame] =
-    committedBatch.map(b => spark.read.parquet(versionDir(b)))
-
-  /** Publish `next` as batch `batchId`'s version; no-op when this id (or
-    * a later one) is already committed. */
-  def commit(next: DataFrame, batchId: Long): Unit = {
-    if (committedBatch.exists(_ >= batchId)) return // replay: already in
-    next.write.mode("overwrite").parquet(versionDir(batchId))
-    // atomic pointer swap: readers see the old version until this rename
-    new File(root).mkdirs()
-    val tmp = Paths.get(root, s".latest.tmp.$batchId")
-    Files.write(tmp, batchId.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, pointerPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-}
+import graft.lake.Snapshots
 
 /** Continuously-maintained materialized rollup: each microbatch's partial
-  * aggregate merges into the versioned stored rollup
-  * ([[graft.gold.IncrementalAgg]] over a [[VersionedStore]]).
+  * aggregate merges into the stored rollup ([[graft.gold.IncrementalAgg]]),
+  * kept as a [[graft.lake.Snapshots]] table at `root`.
   *
   * This is the streaming form of incremental view maintenance — the q104
   * merge driven by `foreachBatch` instead of a scheduled job. Merge cost
   * per batch is O(|batch agg| + |rollup|), independent of stream
   * history — the property that lets the view run forever.
+  *
+  * Exactly-once is the snapshot log's, as for every `foreachBatch` sink
+  * ([[graft.lake.Snapshots.holdsBatch]]): batch B publishes version B+1
+  * with one `overwrite`, so readers always see a complete version, a
+  * replayed batch is skipped, and a batch that crashed before its
+  * publish left only unreferenced staged files — its retry rewrites
+  * them and publishes.
   */
 final class IncrementalRollup(root: String, keys: Seq[String],
     measures: Seq[String]) extends Serializable {
 
-  private val store = new VersionedStore(root)
+  /** The last batch id published, if any. */
+  def committedBatch: Option[Long] =
+    Snapshots.latestVersion(SparkSession.active, root).map(_ - 1L)
 
-  def committedBatch: Option[Long] = store.committedBatch
-
-  def read(spark: SparkSession): Option[DataFrame] = store.read(spark)
+  /** The current rollup (None before any commit). */
+  def read(spark: SparkSession): Option[DataFrame] =
+    Snapshots.readLatest(spark, root)
 
   /** Merge one batch's rows into the rollup and publish; no-op if this
     * batchId (or a later one) is already committed. `aggOf` turns raw
     * batch rows into a partial aggregate carrying `keys` + `measures`. */
   def apply(batch: DataFrame, batchId: Long, aggOf: DataFrame => DataFrame): Unit = {
-    if (store.committedBatch.exists(_ >= batchId)) return
+    val spark = batch.sparkSession
+    if (Snapshots.holdsBatch(spark, root, batchId)) return
     val delta = aggOf(batch)
-    val merged = store.read(batch.sparkSession) match {
+    val merged = read(spark) match {
       case Some(stored) => IncrementalAgg.merge(stored, delta, keys, measures)
       case None => delta
     }
     // keep the stored schema stable across merges (sum() widens decimals)
     val deltaTypes = delta.schema.fields.map(f => f.name -> f.dataType).toMap
-    val stable = merged.select((keys ++ measures).map(c =>
-      org.apache.spark.sql.functions.col(c).cast(deltaTypes(c)).as(c)): _*)
-    store.commit(stable, batchId)
+    Snapshots.overwrite(spark, root, merged.select((keys ++ measures).map(c =>
+      col(c).cast(deltaTypes(c)).as(c)): _*))
   }
 }

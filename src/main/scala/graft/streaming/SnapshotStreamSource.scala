@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
@@ -42,18 +42,17 @@ import graft.lake.Snapshots
   *    never committed, so the error repeats on restart until the
   *    consumer resolves it deliberately.
   *
-  * Exactly-once into the sink table mirrors [[ChangeFeedSource]]: sink
-  * version k+1 holds batch k — empty windows publish empty versions so
-  * the batchId↔version bijection survives replays — and a replayed batch
-  * at or below the committed frontier is a no-op.
+  * Both log-fed sources run on ONE driver ([[drive]]): the `_log`
+  * stream, the batch's versions, the exactly-once append (sink version
+  * k+1 holds batch k — empty windows publish empty versions so the
+  * batchId↔version bijection survives replays) and the AvailableNow
+  * run. A source is only its per-batch emitter: this one emits the
+  * appended rows, [[ChangeFeedSource]] the change feed.
   *
   * Scale shape: discovery lists the KB-sized log dir per trigger; a
   * batch reads O(new files of its versions), never a table diff or scan.
   */
 object SnapshotStreamSource {
-
-  private def versionOf(path: String): Int =
-    path.split("/").last.stripPrefix("v").stripSuffix(".json").toInt
 
   /** The per-trigger version-count window honoring a byte cap: the
     * LARGEST k (≤ the version cap) such that EVERY k consecutive
@@ -115,28 +114,44 @@ object SnapshotStreamSource {
         byteBoundedWindow(bytes, cap, maxVersionsPerTrigger)
       case None => maxVersionsPerTrigger
     }
-    // version objects' NAMES are the offsets; `_metadata` is projected
-    // on the SOURCE side (inside foreachBatch the batch is a plain
-    // relation without reader columns)
+    drive(spark, table, sinkTable, checkpoint, versionsPerTrigger) { versions =>
+      enrich(versions.filter(_ >= fromVersion)
+        .flatMap(v =>
+          Snapshots.appendedVersionRows(spark, table, v, ignoreChanges))
+        .reduceOption(_.unionByName(_, allowMissingColumns = true))
+        // empty window (seed, pre-startingVersion, branch or ignored
+        // version): the table's schema, no rows
+        .getOrElse(Snapshots.readLatest(spark, table).get.limit(0)))
+    }
+  }
+
+  /** Version number of a log object path (`.../v000042.json` → 42). */
+  private def versionOf(path: String): Int =
+    path.split("/").last.stripPrefix("v").stripSuffix(".json").toInt
+
+  /** The one driver of both log-fed sources: consume every unconsumed
+    * log version of `table` (AvailableNow, at most `versionsPerTrigger`
+    * versions per micro-batch) and append `emit(versions)` — the rows
+    * of one batch's sorted versions — to `sink`, exactly once
+    * ([[Snapshots.holdsBatch]]). Every batch publishes one sink
+    * version, an empty window an EMPTY one, so the batchId↔version
+    * bijection survives replays (skipping would let a replay of the
+    * NEXT batch slip past the frontier). */
+  private[streaming] def drive(spark: SparkSession, table: String,
+      sink: String, checkpoint: String, versionsPerTrigger: Int)(
+      emit: Seq[Int] => DataFrame): Unit = {
+    // the version objects' NAMES are the offsets; `_metadata` is
+    // projected on the SOURCE side (inside foreachBatch the batch is a
+    // plain relation without reader columns)
     val stream = spark.readStream
       .option("maxFilesPerTrigger", versionsPerTrigger)
       .text(s"$table/_log/v*.json")
       .select(col("_metadata.file_path").as("log_object"))
     val writeBatch: (Dataset[Row], Long) => Unit = (batch, id) =>
-      if (Snapshots.latestVersion(spark, sinkTable).getOrElse(0) < id + 1) {
+      if (!Snapshots.holdsBatch(spark, sink, id)) {
         val versions = batch.select(col("log_object")).distinct()
           .collect().map(r => versionOf(r.getString(0))).toSeq.sorted
-        val emitted = versions.filter(_ >= fromVersion).flatMap(v =>
-          Snapshots.appendedVersionRows(spark, table, v, ignoreChanges))
-        val rows = emitted
-          .reduceOption(_.unionByName(_, allowMissingColumns = true))
-          .getOrElse {
-            // empty window (seed, pre-startingVersion, branch or
-            // ignored version): publish an EMPTY sink version so the
-            // batchId↔version bijection holds under replay
-            Snapshots.readLatest(spark, table).get.limit(0)
-          }
-        Snapshots.append(spark, sinkTable, enrich(rows))
+        Snapshots.append(spark, sink, emit(versions))
       }
     val q = stream.writeStream
       .foreachBatch(writeBatch)

@@ -11,6 +11,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * and stage breakdown, slowest first.
   *
   * Usage: runMain graft.tools.JobProfile <queryName> [sfDir] [passes]
+  * (the profile goes to stdout; redirect it to keep it).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
@@ -21,9 +22,6 @@ object JobProfile {
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
     val spark = graft.GraftSession.get("graft-jobprofile")
-    val sink = new java.io.PrintWriter(new java.io.FileWriter(
-      s"/tmp/jobprofile_$name.txt"))
-    def emit(s: String): Unit = { println(s); sink.println(s); sink.flush() }
 
     case class JobRec(id: Int, desc: String, start: Long, var end: Long = -1,
       var stages: List[String] = Nil)
@@ -61,7 +59,7 @@ object JobProfile {
     }
 
     // warmup pass (uncounted) mirrors Bench's min-of-two discipline
-    try for (p <- 1 to passes) {
+    for (p <- 1 to passes) {
       spark.catalog.clearCache()
       jobs.clear(); order.clear(); stageJob.clear()
       if (p == passes) spark.sparkContext.addSparkListener(listener)
@@ -69,16 +67,16 @@ object JobProfile {
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
-      emit(f"== pass $p wall=$wall%.2fs ==")
+      println(f"== pass $p wall=$wall%.2fs ==")
       if (p == passes) {
         import scala.jdk.CollectionConverters._
         val recs = order.asScala.flatMap(id => Option(jobs.get(id))).toSeq
         val total = recs.map(j => math.max(0L, j.end - j.start)).sum
-        emit(f"jobs=${recs.size} sum-of-job-wall=${total / 1000.0}%.2fs")
+        println(f"jobs=${recs.size} sum-of-job-wall=${total / 1000.0}%.2fs")
         val slow = recs.sortBy(j => -(j.end - j.start)).take(30)
         slow.foreach { j =>
-          emit(f"  job${j.id}%4d ${(j.end - j.start) / 1000.0}%7.2fs  ${j.desc.take(110)}")
-          j.stages.reverse.take(6).foreach(s => emit(s"        $s"))
+          println(f"  job${j.id}%4d ${(j.end - j.start) / 1000.0}%7.2fs  ${j.desc.take(110)}")
+          j.stages.reverse.take(6).foreach(s => println(s"        $s"))
         }
         // histogram: every job bucketed by its first stage's call site —
         // job COUNT is the contention-insensitive lever (each job costs
@@ -89,9 +87,9 @@ object JobProfile {
           .map { case (k, js) =>
             (k, js.size, js.map(j => math.max(0L, j.end - j.start)).sum) }
           .toSeq.sortBy(-_._3)
-        emit("  -- jobs by first-stage call site --")
+        println("  -- jobs by first-stage call site --")
         hist.foreach { case (k, n, ms) =>
-          emit(f"  $n%4d jobs ${ms / 1000.0}%7.2fs  $k") }
+          println(f"  $n%4d jobs ${ms / 1000.0}%7.2fs  $k") }
         // gap analysis: time between consecutive jobs = driver-side work
         val sorted = recs.sortBy(_.start)
         val gaps = sorted.sliding(2).collect {
@@ -99,12 +97,12 @@ object JobProfile {
             (a.id, b.id, b.start - a.end, b.desc.take(80))
         }.toSeq.sortBy(-_._3).take(15)
         if (gaps.nonEmpty) {
-          emit("  -- driver gaps >200ms between jobs --")
+          println("  -- driver gaps >200ms between jobs --")
           gaps.foreach { case (a, b, ms, d) =>
-            emit(f"  job$a%4d -> job$b%4d ${ms / 1000.0}%6.2fs before '$d'") }
+            println(f"  job$a%4d -> job$b%4d ${ms / 1000.0}%6.2fs before '$d'") }
         }
       }
-    } finally sink.close()
+    }
     spark.stop()
   }
 }

@@ -110,6 +110,22 @@ class DeletionVectorsSpec extends SparkTestBase {
     org.apache.commons.io.FileUtils.deleteQuietly(new File(moved).getParentFile)
   }
 
+  test("a file://-spelled table path keeps its deletes and compacts them") {
+    val t = freshTable("qualified")
+    val q = s"file://$t"
+    val want = spark.read.parquet(t)
+      .filter(col("o_totalprice") >= 30000).count()
+    assert(DeletionVectors.delete(spark, q, col("o_totalprice") < 30000) > 0)
+    assert(DeletionVectors.hasVectors(spark, q))
+    assert(DeletionVectors.read(spark, q).count() == want,
+      "deleted rows served again through the qualified path")
+    DeletionVectors.compact(spark, q)
+    assert(!DeletionVectors.hasVectors(spark, q), "sidecars survived compaction")
+    assert(spark.read.parquet(t).count() == want,
+      "compaction did not fold the deletes")
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(t).getParentFile)
+  }
+
   test("plain readers skip the _dv directory (graceful degradation)") {
     val t = freshTable("skip")
     val total = spark.read.parquet(t).count()

@@ -33,23 +33,40 @@ class IncrementalRollupSpec extends SparkTestBase {
     assert(state() == after)
   }
 
-  test("a crash between version write and pointer swap stays invisible, then heals") {
+  test("a crash between staging and the log publish stays invisible, then heals") {
     val root = freshRoot()
     val r = new IncrementalRollup(root, Seq("k"), Seq("n", "s"))
     r(Seq(("a", 1L)).toDF("k", "v"), 0L, aggOf)
-    // simulate batch 1 crashing AFTER writing v1 but BEFORE the pointer
-    // swap: write an orphan (and even corrupt-in-spirit) version dir
-    Seq(("a", 100L)).toDF("k", "v")
-      .groupBy("k").agg(count(lit(1)).as("n"), sum("v").as("s"))
-      .write.parquet(s"$root/v1")
-    // readers still see v0 — the orphan was never published
+    // simulate batch 1 crashing AFTER staging its data but BEFORE the
+    // log publish: an unpublished (and corrupt-in-spirit) data dir
+    // under the table's _snap/ that no log version references
+    aggOf(Seq(("a", 100L)).toDF("k", "v"))
+      .write.parquet(s"$root/_snap/c-crashed")
+    // readers still see batch 0 — the staged dir was never published
     assert(r.committedBatch.contains(0L))
     assert(r.read(spark).get.as[(String, Long, Long)].collect().toSeq ==
       Seq(("a", 1L, 1L)))
-    // the retried batch 1 rewrites v1 and publishes atomically
+    // the retried batch 1 stages afresh and publishes
     r(Seq(("a", 4L)).toDF("k", "v"), 1L, aggOf)
     assert(r.committedBatch.contains(1L))
     assert(r.read(spark).get.as[(String, Long, Long)].collect().toSeq ==
       Seq(("a", 2L, 5L)))
+  }
+
+  test("a rollup committed through a file:// root is the same rollup at the plain path") {
+    val root = freshRoot()
+    val qualified = new IncrementalRollup(s"file://$root", Seq("k"), Seq("n", "s"))
+    qualified(Seq(("a", 1L), ("b", 2L)).toDF("k", "v"), 0L, aggOf)
+    qualified(Seq(("a", 3L)).toDF("k", "v"), 1L, aggOf)
+    val plain = new IncrementalRollup(root, Seq("k"), Seq("n", "s"))
+    assert(plain.committedBatch.contains(1L))
+    assert(plain.committedBatch == qualified.committedBatch)
+    def state(r: IncrementalRollup) = r.read(spark).get.orderBy("k")
+      .as[(String, Long, Long)].collect().toSeq
+    assert(state(plain) == Seq(("a", 2L, 4L), ("b", 1L, 2L)))
+    assert(state(plain) == state(qualified))
+    // the plain spelling sees the frontier too: a replay is skipped
+    plain(Seq(("a", 999L)).toDF("k", "v"), 1L, aggOf)
+    assert(state(qualified) == Seq(("a", 2L, 4L), ("b", 1L, 2L)))
   }
 }
