@@ -77,6 +77,47 @@ final class FileOps(conf: Configuration) {
     finally out.close()
   }
 
+  /** Create `path` holding `content` only if it does not exist yet: the
+    * exclusive claim behind the snapshot log's version publish and a
+    * table group's marker. The content goes to a run-unique tmp file in
+    * the same directory, which is then linked or renamed into place
+    * with fail-if-exists semantics (the primitive Delta's HDFSLogStore
+    * builds on). Returns false, leaving no tmp behind, when the path
+    * already exists — another writer won the claim. */
+  def createExclusive(path: String, content: String): Boolean = {
+    val dst = new Path(path)
+    val f = fs(dst)
+    if (f.exists(dst)) return false // cheap fast path; the claim still guards
+    val tmp = s"$path.tmp-${Naming.newRunId()}"
+    writeString(tmp, content)
+    try {
+      if (f.getScheme == "file") {
+        // the local claim must be KERNEL-atomic: FileContext.rename with
+        // Rename.NONE on RawLocalFs is exists-check-then-POSIX-rename,
+        // and rename(2) silently overwrites — two racers in the TOCTOU
+        // window would both "win" and one write would vanish. link(2)
+        // fails with EEXIST atomically; HDFS rename (below) is atomic
+        // server-side; an S3 deployment uses a conditional PUT.
+        java.nio.file.Files.createLink(
+          java.nio.file.Paths.get(dst.toUri.getPath),
+          java.nio.file.Paths.get(new Path(tmp).toUri.getPath))
+        // delete the tmp through the checksummed FS, not java.nio: the
+        // LocalFileSystem write left a .<name>.tmp-*.crc sidecar that a
+        // raw unlink would orphan
+        delete(tmp)
+      } else
+        org.apache.hadoop.fs.FileContext.getFileContext(f.getUri, conf)
+          .rename(new Path(tmp), dst)
+      true
+    } catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+          _: java.nio.file.FileAlreadyExistsException =>
+        delete(tmp); false
+      case _: java.io.IOException if f.exists(dst) =>
+        delete(tmp); false
+    }
+  }
+
   def readString(path: String): String = {
     val p = new Path(path)
     val in = fs(p).open(p)

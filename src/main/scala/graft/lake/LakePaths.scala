@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Table-relative file references for merge-on-read metadata.
   *
-  * Positional tombstones ([[DeletionVectors]], [[Snapshots.merge]]) key
+  * Positional tombstones ([[Snapshots.merge]], [[Snapshots.deleteWhere]]) key
   * rows by (data file, row index). Storing the ABSOLUTE
   * `_metadata.file_path` URI couples every sidecar to one spelling of
   * one location: relocate the table directory (or read it via a

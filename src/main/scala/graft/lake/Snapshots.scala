@@ -1179,52 +1179,13 @@ object Snapshots {
 
   // ------------------------------------------------------------ commits
 
-  /** Claim `v`'s log object exclusively: tmp write, then a
-    * fail-if-exists rename (`FileContext.rename` with `Rename.NONE` —
-    * the HDFS/local primitive Delta's HDFSLogStore builds on; an S3
-    * deployment would use a conditional PUT). Returns false when another
-    * committer already published `v` — the optimistic-concurrency
-    * conflict signal. */
+  /** Claim `v`'s log object exclusively ([[FileOps.createExclusive]]).
+    * Returns false when another committer already published `v` — the
+    * optimistic-concurrency conflict signal. */
   private def tryPublish(spark: SparkSession, table: String,
-      entry: LiteSnapshot): Boolean = {
-    val v = entry.version
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ops = new FileOps(conf)
-    val dst = new org.apache.hadoop.fs.Path(logPath(table, v))
-    val fs = dst.getFileSystem(conf)
-    if (fs.exists(dst)) return false // cheap fast path; rename still guards
-    val json = LiteSnapshot.render(entry)
-    val tmp = s"${logPath(table, v)}.tmp-${Naming.newRunId()}"
-    ops.writeString(tmp, json)
-    try {
-      if (fs.getScheme == "file") {
-        // the local claim must be KERNEL-atomic: FileContext.rename with
-        // Rename.NONE on RawLocalFs is exists-check-then-POSIX-rename,
-        // and rename(2) silently overwrites — two racers in the TOCTOU
-        // window would both "win" and one delta would vanish. link(2)
-        // fails with EEXIST atomically; HDFS rename (below) is atomic
-        // server-side; an S3 deployment uses a conditional PUT.
-        val tmpP = java.nio.file.Paths.get(
-          new org.apache.hadoop.fs.Path(tmp).toUri.getPath)
-        val dstP = java.nio.file.Paths.get(dst.toUri.getPath)
-        java.nio.file.Files.createLink(dstP, tmpP)
-        // delete the tmp through the checksummed FS, not java.nio: the
-        // LocalFileSystem write left a .v*.json.tmp-*.crc sidecar that a
-        // raw unlink orphans in _log/ forever (vacuum only GCs manifests)
-        ops.delete(tmp)
-      } else {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-        fc.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-      }
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-          _: java.nio.file.FileAlreadyExistsException =>
-        ops.delete(tmp); false
-      case _: java.io.IOException if fs.exists(dst) =>
-        ops.delete(tmp); false
-    }
-  }
+      entry: LiteSnapshot): Boolean =
+    new FileOps(spark.sparkContext.hadoopConfiguration).createExclusive(
+      logPath(table, entry.version), LiteSnapshot.render(entry))
 
   private val MaxCommitAttempts = 20
 
@@ -2607,11 +2568,12 @@ object Snapshots {
       logSchema(spark, table, s.dirSchemas, s.files).isEmpty
 
   /** Time-travel scan: exactly version `v`'s files, minus its positional
-    * deletes (broadcast anti join — same shape and scale argument as
-    * [[DeletionVectors.read]]). Versions the log says need it
-    * ([[needsEraRead]]) take the era-aware read, so every era surfaces
-    * the current names and widened types and readAt / readLatest /
-    * optimize work on widened tables without the caller asking for it;
+    * deletes (a broadcast left-anti join on (file, row position): sparse
+    * deletes make a small relation, so the data side never shuffles).
+    * Versions the log says need it ([[needsEraRead]]) take the
+    * era-aware read, so every era surfaces the current names and
+    * widened types and readAt / readLatest / optimize work on widened
+    * tables without the caller asking for it;
     * the rest take the one log-fed scan under their merged log schema,
     * uniform and additively-evolved eras alike. */
   private def readDispatch(spark: SparkSession, table: String,
@@ -2801,9 +2763,8 @@ object Snapshots {
   /** Version `v`'s file list pruned BY THE LOG ALONE to files whose
     * recorded [min, max] for `column` intersects [lo, hi] — a superset
     * of the matching files (the Iceberg manifest / Delta checkpoint
-    * mechanism; [[ZoneMap]] is the same idea as a sidecar for plain
-    * directories — here pruning and time travel compose in one
-    * metadata object). */
+    * mechanism: pruning and time travel compose in one metadata
+    * object). */
   def prunedFilesAt(spark: SparkSession, table: String, v: Int,
       column: String, lo: Double, hi: Double): Option[Seq[String]] =
     selectedFiles(spark, table, v, rangeSelection(column, lo, hi))
@@ -4400,9 +4361,9 @@ object Snapshots {
 
   /** OPTIMIZE: rewrite the current live view (data minus positional
     * deletes) into fresh compacted files published as a NEW version —
-    * the amortized answer to merge-on-read debt. Unlike
-    * [[DeletionVectors.compact]]'s in-place swap, history stays intact:
-    * prior versions remain time-travelable until [[vacuum]] trims them.
+    * the amortized answer to merge-on-read debt. Nothing is swapped in
+    * place, so history stays intact: prior versions remain
+    * time-travelable until [[vacuum]] trims them.
     * Run when the delete ratio or small-file count crosses a threshold;
     * cost is one read+write of the live data, after which scans are
     * anti-join-free again. [[optimizeSmallFiles]] is the targeted form

@@ -82,46 +82,18 @@ object TableGroup {
     (1 to latestMarkerSeq(ops, group))
       .flatMap(readMarker(ops, group, _))
 
-  /** Exclusive claim of marker `seq` — the same kernel-atomic
-    * link/rename primitive the log's version claim uses: false means
-    * another transaction won the slot. */
+  /** Exclusive claim of marker `seq` through the log's own version
+    * claim ([[FileOps.createExclusive]]): false means another
+    * transaction won the slot. */
   private def claimMarker(spark: SparkSession, group: String, seq: Int,
-      pins: Seq[(String, String, Int)], token: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val ops = new FileOps(conf)
-    val dstS = markerPath(group, seq)
-    val dst = new org.apache.hadoop.fs.Path(dstS)
-    val fs = dst.getFileSystem(conf)
-    if (fs.exists(dst)) return false
-    if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
-    val json = Json.render(Map(
-      "seq" -> seq.toLong,
-      "ts" -> System.currentTimeMillis(),
-      "token" -> token,
-      "tables" -> pins.map(p => Seq(p._1, p._2, p._3.toLong))))
-    val tmp = s"$dstS.tmp-${Naming.newRunId()}"
-    ops.writeString(tmp, json)
-    try {
-      if (fs.getScheme == "file") {
-        val tmpP = java.nio.file.Paths.get(
-          new org.apache.hadoop.fs.Path(tmp).toUri.getPath)
-        val dstP = java.nio.file.Paths.get(dst.toUri.getPath)
-        java.nio.file.Files.createLink(dstP, tmpP)
-        ops.delete(tmp)
-      } else {
-        val fc = org.apache.hadoop.fs.FileContext
-          .getFileContext(fs.getUri, conf)
-        fc.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-      }
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-          _: java.nio.file.FileAlreadyExistsException =>
-        ops.delete(tmp); false
-      case _: java.io.IOException if fs.exists(dst) =>
-        ops.delete(tmp); false
-    }
-  }
+      pins: Seq[(String, String, Int)], token: String): Boolean =
+    new FileOps(spark.sparkContext.hadoopConfiguration).createExclusive(
+      markerPath(group, seq),
+      Json.render(Map(
+        "seq" -> seq.toLong,
+        "ts" -> System.currentTimeMillis(),
+        "token" -> token,
+        "tables" -> pins.map(p => Seq(p._1, p._2, p._3.toLong)))))
 
   /** Each published marker's pins as (member → version), in marker
     * order — the audit surface for replaying group consistency at

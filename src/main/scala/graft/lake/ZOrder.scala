@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-/** Z-order (Morton) clustering: lay a table out so that file-level
-  * min/max stats ([[ZoneMap]]) prune scans on MORE THAN ONE column.
+/** Z-order (Morton) clustering: lay a table out so that the snapshot
+  * log's per-file min/max stats ([[Snapshots.readAtPruned]]) prune scans
+  * on MORE THAN ONE column.
   *
   * Range-clustering on a single column gives that column tight per-file
   * intervals but leaves every other column's interval spanning the whole
@@ -15,7 +16,7 @@ import org.apache.spark.sql.types.LongType
   * covers a small RECTANGLE: both columns get usably tight intervals and
   * either predicate prunes. This is the layout lever behind
   * `OPTIMIZE ... ZORDER BY` in lakehouse engines; the skipping mechanism
-  * it feeds is exactly [[ZoneMap]].
+  * it feeds is the log's recorded file stats.
   *
   * The ranks are 16-bit min/max-scaled positions (bounds from one
   * bounded driver agg), and the interleave is a pure bitwise Column
@@ -35,10 +36,6 @@ object ZOrder {
       }
     }
 
-  /** Morton-interleave two 16-bit values (bit i of `a` → bit 2i, bit i
-    * of `b` → bit 2i+1). Inputs must already be in [0, 65535]. */
-  def interleave(a: Column, b: Column): Column = interleaveN(Seq(a, b), 16)
-
   /** Min/max-scale a numeric column to a `bits`-bit rank. Degenerate
     * domains (lo == hi) map to 0. */
   def rankBits(c: Column, lo: Double, hi: Double, bits: Int): Column = {
@@ -54,8 +51,8 @@ object ZOrder {
     * inside a non-negative Long — at 4 columns that is 15 bits each,
     * still 32k distinct ranks per axis, far finer than file granularity.
     * One bounded driver agg for the domain bounds (2N doubles), one
-    * range exchange — the shared clustering step of [[clusterWrite]]
-    * and the snapshot log's `OPTIMIZE … ZORDER BY`
+    * range exchange — the clustering step of a z-ordered append and of
+    * the snapshot log's `OPTIMIZE … ZORDER BY`
     * ([[Snapshots.optimizeSmallFiles]]). */
   def clusteredN(df: DataFrame, files: Int, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "z-order needs at least one column")
@@ -72,19 +69,5 @@ object ZOrder {
       .repartitionByRange(files, col("_z"))
       .sortWithinPartitions("_z")
       .drop("_z")
-  }
-
-  /** Two-column form of [[clusteredN]]. */
-  def clustered(df: DataFrame, files: Int, c1: String, c2: String): DataFrame =
-    clusteredN(df, files, Seq(c1, c2))
-
-  /** Write `df` z-ordered on (`c1`, `c2`) into `files` range-partitioned,
-    * internally sorted files, then persist [[ZoneMap]] stats for both
-    * columns. */
-  def clusterWrite(df: DataFrame, path: String, files: Int,
-      c1: String, c2: String): Unit = {
-    clustered(df, files, c1, c2)
-      .write.mode("overwrite").parquet(path)
-    ZoneMap.writeStats(df.sparkSession, path, Seq(c1, c2))
   }
 }

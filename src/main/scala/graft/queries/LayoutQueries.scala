@@ -94,31 +94,32 @@ object LayoutQueries {
        strftime(o_orderdate, '%Y-%m-%d %H:%M:%S'),
        o_orderpriority)"""
 
-  /** q153 — merge-on-read DELETE via deletion vectors
-    * ([[graft.lake.DeletionVectors]]): a 4-file copy of orders takes two
-    * OVERLAPPING sparse deletes recorded purely as (file, row-position)
-    * sidecars — the data files stay byte-immutable (spec-asserted) — and
-    * the scan subtracts the tombstones with a broadcast left-anti join on
-    * the parquet reader's hidden `_metadata.file_path`/`row_index`
-    * columns. The gate aggregates the merge-on-read view against a plain
+  /** q153 — merge-on-read DELETE through the snapshot log
+    * ([[graft.lake.Snapshots.deleteWhere]]): a 4-file copy of orders
+    * takes two OVERLAPPING sparse deletes, each recorded purely as a new
+    * version's (file, row-position) tombstones — the data files stay
+    * byte-immutable (spec-asserted) — and the latest-version scan
+    * subtracts the tombstones with a broadcast left-anti join on the
+    * parquet reader's hidden `_metadata.file_path`/`row_index` columns.
+    * The gate aggregates the merge-on-read view against a plain
     * predicate oracle: a position off-by-one, a file-path mismatch, or a
-    * lost vector in the union shifts the counts.
+    * tombstone lost between the two versions shifts the counts.
     *
-    * Scale shape: deletes cost O(deleted rows), never a rewrite; the DV
-    * relation for sparse deletes is MBs at 100 TB, so the anti join
-    * broadcasts and the data side stays a shuffle-free narrow scan.
-    * [[graft.lake.DeletionVectors.compact]] is the amortized fold-back,
-    * staged write-then-swap (spec-pinned). */
+    * Scale shape: deletes cost O(deleted rows), never a rewrite; the
+    * tombstone relation for sparse deletes is MBs at 100 TB, so the anti
+    * join broadcasts and the data side stays a shuffle-free narrow scan
+    * (ScaleSpecs pins the plan). [[graft.lake.Snapshots.optimize]] is the
+    * amortized fold-back, published as a new version. */
   def deletionVectorRead(spark: SparkSession, dir: String): DataFrame = {
+    import graft.lake.Snapshots
     val table = graft.util.Scratch.dir("dv_table", dir)
-    Tables(spark, dir, "orders")
-      .repartition(4, col("o_orderkey"))
-      .write.mode("overwrite").parquet(table) // also clears prior _dv
-    graft.lake.DeletionVectors.delete(spark, table,
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(table))
+    Snapshots.append(spark, table,
+      Tables(spark, dir, "orders").repartition(4, col("o_orderkey")))
+    Snapshots.deleteWhere(spark, table,
       col("o_orderstatus") === "O" && col("o_totalprice") < 50000)
-    graft.lake.DeletionVectors.delete(spark, table,
-      col("o_totalprice") < 20000)
-    graft.lake.DeletionVectors.read(spark, table)
+    Snapshots.deleteWhere(spark, table, col("o_totalprice") < 20000)
+    Snapshots.readLatest(spark, table).get
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_rows"),
         Num.sumMoney(col("o_totalprice")).as("sum_price"))
@@ -285,11 +286,11 @@ object LayoutQueries {
     * / O(100k) files, the difference between one KB-sized log read and
     * 100k object-store round-trips) — and re-applies the predicate to
     * surviving rows for exactness. Composes with time travel: the stats
-    * live in the same versioned log object the travel read resolves
-    * (q99's zone maps and q154's log were previously disjoint
-    * mechanisms). The `files_pruned` marker pins that a strict subset of
-    * files was actually opened; SnapshotsSpec additionally pins
-    * `inputFiles` equality with the pruned list. */
+    * live in the same versioned log object the travel read resolves,
+    * the one file-skipping mechanism q99 and q103 also read through.
+    * The `files_pruned` marker pins that a strict subset of files was
+    * actually opened; SnapshotsSpec additionally pins `inputFiles`
+    * equality with the pruned list. */
   def logStatsPruning(spark: SparkSession, dir: String): DataFrame = {
     import graft.lake.Snapshots
     val table = graft.util.Scratch.dir("logstats_table", dir)

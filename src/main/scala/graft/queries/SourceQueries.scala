@@ -73,45 +73,51 @@ object SourceQueries {
     spark.read.orc(path)
   }
 
-  /** Zone-mapped range scan (q99): orders is written range-clustered on
-    * `o_totalprice` (8 files, near-disjoint slices), per-file min/max
-    * stats are persisted as the `_zonemap` sidecar
-    * ([[graft.lake.ZoneMap]]), and the range query reads ONLY the files
-    * whose interval overlaps [50k, 150k] — at 100 TB this replaces
-    * listing+footer-probing every file with one bounded sidecar read.
-    * The residual predicate over the surviving files restores exactness
+  /** Zone-mapped range scan (q99): orders is committed to a snapshot
+    * table range-clustered on `o_totalprice` (8 files, near-disjoint
+    * slices) with per-file min/max stats recorded in the log
+    * ([[graft.lake.Snapshots.append]] `statsCols`), and the range query
+    * opens ONLY the files whose interval overlaps [50k, 150k]
+    * ([[graft.lake.Snapshots.readAtPruned]]) — at 100 TB this replaces
+    * listing+footer-probing every file with one KB-sized log read. The
+    * residual predicate over the surviving files restores exactness
     * (boundary files carry out-of-range rows), which is what the plain
     * full-scan oracle verifies; the file-count reduction itself is
-    * pinned by ScaleSpecs. */
+    * pinned by SnapshotsSpec. */
   def zoneMapScan(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.ZoneMap
+    import graft.lake.Snapshots
     import graft.queries.Num.sumMoney
-    val path = zoneDir("zonemap", dir)
-    Tables(spark, dir, "orders")
-      .repartitionByRange(8, col("o_totalprice"))
-      .write.mode("overwrite").parquet(path)
-    ZoneMap.writeStats(spark, path, Seq("o_totalprice"))
-    ZoneMap.prunedRead(spark, path, "o_totalprice", 50000.0, 150000.0)
+    val table = zoneDir("zonemap", dir)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(table))
+    Snapshots.append(spark, table,
+      Tables(spark, dir, "orders").repartitionByRange(8, col("o_totalprice")),
+      statsCols = Seq("o_totalprice"))
+    Snapshots.readAtPruned(spark, table, 1,
+        "o_totalprice", 50000.0, 150000.0).get
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         sumMoney(col("o_totalprice")).as("revenue"))
   }
 
-  /** Z-ordered scan (q103): orders laid out on the Morton interleave of
-    * (o_totalprice, o_custkey) ranks ([[graft.lake.ZOrder]]), zone maps
-    * on BOTH columns, then a range query on the SECOND column — the one
-    * a single-column clustering would not prune at all. Each file covers
-    * a rectangle of the 2-D space, so the custkey predicate skips most
-    * files via the sidecar alone; the residual filter restores exactness
-    * and the plain full-scan oracle verifies it. Both-column pruning is
-    * pinned by ScaleSpecs. */
+  /** Z-ordered scan (q103): orders committed to a snapshot table laid
+    * out on the Morton interleave of (o_totalprice, o_custkey) ranks
+    * ([[graft.lake.ZOrder.clusteredN]]), log stats on BOTH columns, then
+    * a range query on the SECOND column — the one a single-column
+    * clustering would not prune at all. Each file covers a rectangle of
+    * the 2-D space, so the custkey predicate skips most files through
+    * the log alone; the residual filter restores exactness and the plain
+    * full-scan oracle verifies it. Both-column pruning is pinned by
+    * ScaleSpecs. */
   def zOrderScan(spark: SparkSession, dir: String): DataFrame = {
-    import graft.lake.{ZoneMap, ZOrder}
+    import graft.lake.{Snapshots, ZOrder}
     import graft.queries.Num.sumMoney
-    val path = zoneDir("zorder", dir)
-    ZOrder.clusterWrite(Tables(spark, dir, "orders"), path, files = 16,
-      c1 = "o_totalprice", c2 = "o_custkey")
-    ZoneMap.prunedRead(spark, path, "o_custkey", 100L, 400L)
+    val table = zoneDir("zorder", dir)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(table))
+    val cols = Seq("o_totalprice", "o_custkey")
+    Snapshots.append(spark, table,
+      ZOrder.clusteredN(Tables(spark, dir, "orders"), 16, cols),
+      statsCols = cols)
+    Snapshots.readAtPruned(spark, table, 1, "o_custkey", 100.0, 400.0).get
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n_orders"),
         sumMoney(col("o_totalprice")).as("revenue"))

@@ -29,24 +29,24 @@ object StreamingQueries {
   private def scratchDir(tag: String, dir: String): String =
     graft.util.Scratch.dir(tag, dir)
 
-  /** Streaming STATE partitions are a throughput-sizing knob, decoupled
+  /** Streaming STATE partitions are sized to the workload, decoupled
     * from the batch shuffle width: every state partition pays fixed
     * per-microbatch state-store costs (RocksDB open/changelog/commit), so
     * more partitions than the event rate needs multiplies overhead
     * without adding parallelism. Measured on this corpus: the q69
     * stream-stream join runs 5.6 s at 32 partitions vs 2.8 s at 8
     * (sf0.1, best of two whole-query runs). A production deployment
-    * sizes this to peak events/sec ÷ per-partition throughput; the
-    * local replay defaults to 8 (override:
-    * SPARK_GRAFT_STATE_PARTITIONS). The session width is restored
-    * before returning, so the read-back result and every batch query
-    * keep the full core count — the partition count is pinned into each
-    * query's fresh checkpoint at start. */
+    * sizes this to peak events/sec ÷ per-partition throughput. */
+  private val StatePartitions = 8
+
+  /** Run `body` at [[StatePartitions]] shuffle width. The session width
+    * is restored before returning, so the read-back result and every
+    * batch query keep the full core count — the partition count is
+    * pinned into each query's fresh checkpoint at start. */
   private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      sys.env.getOrElse("SPARK_GRAFT_STATE_PARTITIONS", "8"))
+    spark.conf.set(key, StatePartitions.toLong)
     try body finally spark.conf.set(key, prev)
   }
 

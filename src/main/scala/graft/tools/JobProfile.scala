@@ -37,6 +37,9 @@ object JobProfile {
           .orElse(Option(e.properties)
             .flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse("")
+          // a micro-batch's description spans lines (`\nid = …\nrunId =
+          // …\nbatch = N`): fold them so each job prints on one line
+          .linesIterator.map(_.trim).filter(_.nonEmpty).mkString(" ")
         jobs.put(e.jobId, JobRec(e.jobId, desc, e.time))
         e.stageIds.foreach(sid => stageJob.put(sid, e.jobId))
         order.add(e.jobId)

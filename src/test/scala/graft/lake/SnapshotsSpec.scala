@@ -402,6 +402,7 @@ class SnapshotsSpec extends SparkTestBase {
       orders.repartitionByRange(8, col("o_totalprice")),
       statsCols = Seq("o_totalprice"))
     val all = Snapshots.snapshot(spark, t, 1).get
+    assert(all.files.size >= 8, s"expected >= 8 data files, saw ${all.files.size}")
     assert(all.stats.nonEmpty && all.stats.keySet == all.files.toSet)
     val pruned = Snapshots.prunedFilesAt(spark, t, 1,
       "o_totalprice", 50000.0, 150000.0).get
@@ -419,9 +420,12 @@ class SnapshotsSpec extends SparkTestBase {
     assert(df.count() == want.count())
     assert(df.agg(sum(col("o_orderkey"))).head().getLong(0) ==
       want.agg(sum(col("o_orderkey"))).head().getLong(0))
-    // a no-overlap range opens nothing; full-domain degrades to all files
-    assert(Snapshots.readAtPruned(spark, t, 1,
-      "o_totalprice", -2.0, -1.0).get.count() == 0)
+    // a no-overlap range opens nothing but keeps the schema;
+    // full-domain degrades to all files
+    val none = Snapshots.readAtPruned(spark, t, 1,
+      "o_totalprice", -2.0, -1.0).get
+    assert(none.count() == 0)
+    assert(none.columns.sameElements(Snapshots.readAt(spark, t, 1).get.columns))
     assert(Snapshots.prunedFilesAt(spark, t, 1,
       "o_totalprice", 0.0, 1e9).get.size == all.files.size)
     // carried files keep their stats across a later append
@@ -454,6 +458,25 @@ class SnapshotsSpec extends SparkTestBase {
     assert(feed.filter(col("_change_type") === "insert").count() == 0)
     assert(feed.filter(col("_change_type") === "delete").count() ==
       before - want)
+    org.apache.commons.io.FileUtils.deleteQuietly(new File(t).getParentFile)
+  }
+
+  test("a file://-spelled table path keeps its deletes and compacts them") {
+    val t = fresh("qualified")
+    val q = s"file://$t"
+    Snapshots.append(spark, q, orders.repartition(3, col("o_orderkey")))
+    val total = orders.count()
+    val want = orders.filter(col("o_totalprice") >= 30000).count()
+    assert(want < total)
+    val vDel = Snapshots.deleteWhere(spark, q, col("o_totalprice") < 30000)
+    assert(Snapshots.snapshot(spark, q, vDel).get.deletes.nonEmpty)
+    assert(Snapshots.readLatest(spark, q).get.count() == want,
+      "deleted rows served again through the qualified path")
+    val vOpt = Snapshots.optimize(spark, q).get
+    assert(Snapshots.snapshot(spark, q, vOpt).get.deletes.isEmpty,
+      "tombstones survived optimize")
+    assert(Snapshots.readLatest(spark, t).get.count() == want,
+      "optimize did not fold the deletes")
     org.apache.commons.io.FileUtils.deleteQuietly(new File(t).getParentFile)
   }
 

@@ -668,82 +668,49 @@ class ScaleSpecs extends SparkTestBase {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("zone map prunes the file list and stays exact at the boundaries") {
-    import graft.lake.ZoneMap
-    val path = java.nio.file.Files.createTempDirectory("graft_zonemap_").toString
-    try {
-      Tables(spark, dir, "orders")
-        .repartitionByRange(8, col("o_totalprice"))
-        .write.mode("overwrite").parquet(path)
-      ZoneMap.writeStats(spark, path, Seq("o_totalprice"))
-      val allFiles = new java.io.File(path).listFiles()
-        .count(f => f.getName.endsWith(".parquet"))
-      assert(allFiles >= 8, s"expected >= 8 data files, saw $allFiles")
-      // a narrow range hits a strict subset of the range-clustered files
-      val narrow = ZoneMap.pruneFiles(spark, path, "o_totalprice", 50000.0, 150000.0)
-      assert(narrow.length < allFiles,
-        s"no pruning: ${narrow.length} of $allFiles files survive")
-      assert(narrow.nonEmpty)
-      // exactness incl. boundary rows: pruned read == full-scan filter
-      val got = ZoneMap.prunedRead(spark, path, "o_totalprice", 50000.0, 150000.0)
-      val want = spark.read.parquet(path)
-        .filter(col("o_totalprice") >= 50000.0 && col("o_totalprice") <= 150000.0)
-      assert(got.count() == want.count())
-      assert(got.agg(sum(col("o_orderkey"))).head.getLong(0) ==
-        want.agg(sum(col("o_orderkey"))).head.getLong(0))
-      // a no-overlap range reads nothing but keeps the schema
-      val none = ZoneMap.prunedRead(spark, path, "o_totalprice", -2.0, -1.0)
-      assert(none.count() == 0)
-      assert(none.columns.sameElements(spark.read.parquet(path).columns))
-      // full-domain range degrades gracefully to all files
-      val all = ZoneMap.pruneFiles(spark, path, "o_totalprice", 0.0, 1e9)
-      assert(all.length == allFiles)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
-  }
-
   test("z-order layout prunes on both columns where 1-D clustering prunes one") {
-    import graft.lake.{ZoneMap, ZOrder}
+    import graft.lake.{Snapshots, ZOrder}
     // interleave unit checks: bit i of a → 2i, of b → 2i+1
+    def interleave(a: Long, b: Long) = ZOrder.interleaveN(Seq(lit(a), lit(b)), 16)
     val probe = spark.range(1).select(
-      ZOrder.interleave(lit(0xFFFFL), lit(0L)).as("a_only"),
-      ZOrder.interleave(lit(0L), lit(0xFFFFL)).as("b_only"),
-      ZOrder.interleave(lit(1L), lit(1L)).as("both_low")).head()
+      interleave(0xFFFFL, 0L).as("a_only"),
+      interleave(0L, 0xFFFFL).as("b_only"),
+      interleave(1L, 1L).as("both_low")).head()
     assert(probe.getLong(0) == 0x55555555L)
     assert(probe.getLong(1) == 0xAAAAAAAAL)
     assert(probe.getLong(2) == 3L)
-    val zPath = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
-    val linPath = java.nio.file.Files.createTempDirectory("graft_linear_").toString
+    val root = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
+    val (zT, linT) = (s"$root/z", s"$root/linear")
     try {
       val orders = Tables(spark, dir, "orders")
-      ZOrder.clusterWrite(orders, zPath, files = 16,
-        c1 = "o_totalprice", c2 = "o_custkey")
+      val cols = Seq("o_totalprice", "o_custkey")
+      Snapshots.append(spark, zT, ZOrder.clusteredN(orders, 16, cols),
+        statsCols = cols)
       // 1-D control: range-clustered on totalprice alone, same stats
-      orders.repartitionByRange(16, col("o_totalprice"))
-        .write.mode("overwrite").parquet(linPath)
-      ZoneMap.writeStats(spark, linPath, Seq("o_totalprice", "o_custkey"))
-      val total = new java.io.File(zPath).listFiles()
-        .count(_.getName.endsWith(".parquet"))
+      Snapshots.append(spark, linT,
+        orders.repartitionByRange(16, col("o_totalprice")), statsCols = cols)
+      val total = Snapshots.snapshot(spark, zT, 1).get.files.size
       assert(total >= 16)
       // both dimensions prune under z-order
-      val byPrice = ZoneMap.pruneFiles(spark, zPath, "o_totalprice", 50000.0, 150000.0)
-      val byCust = ZoneMap.pruneFiles(spark, zPath, "o_custkey", 10L, 40L)
-      assert(byPrice.length < total, s"price: ${byPrice.length}/$total")
-      assert(byCust.length < total, s"custkey: ${byCust.length}/$total")
+      val byPrice = Snapshots.prunedFilesAt(spark, zT, 1,
+        "o_totalprice", 50000.0, 150000.0).get
+      val byCust = Snapshots.prunedFilesAt(spark, zT, 1,
+        "o_custkey", 10.0, 40.0).get
+      assert(byPrice.size < total, s"price: ${byPrice.size}/$total")
+      assert(byCust.size < total, s"custkey: ${byCust.size}/$total")
       // the linear layout cannot prune its non-clustered column
-      val linByCust = ZoneMap.pruneFiles(spark, linPath, "o_custkey", 10L, 40L)
-      val linTotal = new java.io.File(linPath).listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      assert(linByCust.length == linTotal,
-        s"unexpected pruning on unclustered column: ${linByCust.length}/$linTotal")
+      val linByCust = Snapshots.prunedFilesAt(spark, linT, 1,
+        "o_custkey", 10.0, 40.0).get
+      val linTotal = Snapshots.snapshot(spark, linT, 1).get.files.size
+      assert(linByCust.size == linTotal,
+        s"unexpected pruning on unclustered column: ${linByCust.size}/$linTotal")
       // exactness through the z-ordered layout
-      val got = ZoneMap.prunedRead(spark, zPath, "o_custkey", 10L, 40L).count()
+      val got = Snapshots.readAtPruned(spark, zT, 1,
+        "o_custkey", 10.0, 40.0).get.count()
       val want = orders
         .filter(col("o_custkey") >= 10L && col("o_custkey") <= 40L).count()
       assert(got == want)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(zPath))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(linPath))
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("prefix-filter join stays an equi-join and recalls every exact pair") {
@@ -926,26 +893,20 @@ class ScaleSpecs extends SparkTestBase {
 
   test("deletion-vector scan broadcasts the tombstones and stays anti-join") {
     // q153: the merge-on-read subtraction must be a BROADCAST left-anti
-    // join (the DV relation is MBs at 100 TB) — a sort-merge anti would
-    // shuffle the full data side on (file, pos), and a nested loop would
-    // be quadratic. Also pins that the vector columns never survive into
-    // the user-visible schema.
-    val table = java.nio.file.Files.createTempDirectory("graft_dvplan_")
-      .toString + "/t"
-    Tables(spark, dir, "orders").repartition(2, col("o_orderkey"))
-      .write.mode("overwrite").parquet(table)
-    graft.lake.DeletionVectors.delete(spark, table,
-      col("o_totalprice") < 30000)
-    val mor = graft.lake.DeletionVectors.read(spark, table)
+    // join (the tombstone relation is MBs at 100 TB) — a sort-merge anti
+    // would shuffle the full data side on (file, pos), and a nested loop
+    // would be quadratic. Also pins that the tombstone columns never
+    // survive into the user-visible schema of the table it reads.
+    val mor = LayoutQueries.deletionVectorRead(spark, dir)
     mor.collect()
     val plan = mor.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
       plan.take(2500))
     assert(!plan.contains("SortMergeJoin"), plan.take(2500))
-    assert(!mor.columns.contains("_dv_file") && !mor.columns.contains("_dv_pos"))
-    org.apache.commons.io.FileUtils.deleteQuietly(
-      new java.io.File(table).getParentFile)
+    val table = graft.util.Scratch.dir("dv_table", dir)
+    assert(graft.lake.Snapshots.readLatest(spark, table).get.columns
+      .sameElements(Tables(spark, dir, "orders").columns))
   }
 
   test("q01 distinct restructure: no expanded distinct phase, partials stay primitive") {
