@@ -1,6 +1,6 @@
 package graft.gold
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -170,9 +170,9 @@ object GoldCompaction {
       val runs = (silver.queryExecution.optimizedPlan.stats.sizeInBytes /
         spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
         .min(conf.coalesceFiles).toInt
-      val deduped = latestPerTransaction(silver.repartitionByRange(
-        runs, col("date"), col("transaction_id"))).persist()
-      try {
+      // The metrics and the write read the survivors held as row copies.
+      GraftSqlBridge.withRowCache(latestPerTransaction(silver.repartitionByRange(
+          runs, col("date"), col("transaction_id")))) { deduped =>
         // E4: every date's metrics in one pass over the survivors
         val byDate = deduped.groupBy(col("date").cast(StringType)).agg(
           sum(col(SourceRows)),
@@ -196,7 +196,7 @@ object GoldCompaction {
             .mode("overwrite").option("partitionOverwriteMode", "dynamic")
             .partitionBy("date").parquet(layout.goldFactSales)
         results.map(m => if (m.status == "written") audited(m) else m)
-      } finally deduped.unpersist()
+      }
     } catch {
       case e: Exception =>
         dates.map(d => audited(metrics(d, "failed", error = Some(e.toString))))

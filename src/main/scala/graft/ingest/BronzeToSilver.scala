@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession, functions}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,11 +14,11 @@ import graft.model.RejectRow
   * (`scripts/glue_job_raw_to_processed.py:95-392`): schema is discovered
   * per file on the driver from one bounded sample whose first line is the
   * header. The rest is one declarative [[parse]] — each distinct line split,
-  * projected and timestamp-parsed once, cached — and a [[route]] that
-  * filters the cache on its `reject_reason`. After the sample, one
-  * count aggregation and one action per sink (JSON, CSV, silver) read the
-  * cache; the reference re-executes its whole pipeline for each of five
-  * actions.
+  * projected and timestamp-parsed once, its rows held as copies
+  * (`GraftSqlBridge.withRowCache`) — and a [[route]] that filters the held
+  * rows on their `reject_reason`. After the sample, one count aggregation
+  * and one action per sink (JSON, CSV, silver) read the held rows; the
+  * reference re-executes its whole pipeline for each of five actions.
   *
   * Deliberate fixes over the reference (SURVEY §2.G):
   *  - Q1: delimiter fallback implements the intended "zero occurrences →
@@ -75,50 +75,45 @@ object BronzeToSilver {
     val finalHeaders = Headers.resolveHeader(
       Delimiters.splitKeepingEmpty(headerLine, delimiter))
 
-    // The count and the three sinks below read one cached parse: every
-    // distinct line is split, projected and timestamp-parsed once, and the
-    // routing filters read its `reject_reason` instead of re-deriving it.
-    val parsed = parse(clean, delimiter, headerLine,
-      Headers.indexMap(finalHeaders), conf).persist()
+    // The count and the three sinks below read one parse, held as row
+    // copies: every distinct line is split, projected and timestamp-parsed
+    // once, and the routing filters read its `reject_reason` instead of
+    // re-deriving it.
+    GraftSqlBridge.withRowCache(parse(clean, delimiter, headerLine,
+        Headers.indexMap(finalHeaders), conf)) { parsed =>
+      val (good, rejects) = route(parsed, conf)
 
-    try {
-    val (good, rejects) = route(parsed, conf)
+      // E4 as one aggregation pass over the held rows instead of five
+      // separate counts
+      val counts = parsed.filter(col("sink_rows") > 0)
+        .groupBy("reject_reason").agg(sum("sink_rows"))
+        .collect()
+        .map(r => Option(r.getString(0)).getOrElse("GOOD") -> r.getLong(1))
+        .toMap
+      val goodCount = counts.getOrElse("GOOD", 0L)
+      val rejectCounts = counts.removed("GOOD")
 
-    // E4 as one aggregation pass over the cache instead of five separate
-    // counts
-    val counts = parsed.filter(col("sink_rows") > 0)
-      .groupBy("reject_reason").agg(sum("sink_rows"))
-      .collect()
-      .map(r => Option(r.getString(0)).getOrElse("GOOD") -> r.getLong(1))
-      .toMap
-    val goodCount = counts.getOrElse("GOOD", 0L)
-    val rejectCounts = counts.removed("GOOD")
+      // A5/A6: reject sinks (machine JSON + single-file analyst CSV)
+      if (rejectCounts.values.sum > 0) {
+        rejects.write.mode("append").json(conf.layout.rejectedDqJson)
+        rejects.coalesce(1).write.mode("append")
+          .option("header", true).csv(conf.layout.rejectedDqCsv)
+      }
 
-    // A5/A6: reject sinks (machine JSON + single-file analyst CSV)
-    if (rejectCounts.values.sum > 0) {
-      rejects.write.mode("append").json(conf.layout.rejectedDqJson)
-      rejects.coalesce(1).write.mode("append")
-        .option("header", true).csv(conf.layout.rejectedDqCsv)
-    }
+      // A3 via staging commit (Q6): partitioned silver append
+      val staging = s"${conf.layout.processed}/_staging_${conf.ingestRunId}"
+      val fileOps = new FileOps(spark.sparkContext.hadoopConfiguration)
+      val dates =
+        try {
+          good.write.mode("overwrite").partitionBy("date").parquet(staging)
+          val written = fileOps.listPartitionDates(staging)
+          written.foreach { d =>
+            fileOps.moveChildrenInto(s"$staging/date=$d", conf.layout.processedDate(d))
+          }
+          written
+        } finally fileOps.delete(staging)
 
-    // A3 via staging commit (Q6): partitioned silver append
-    val staging = s"${conf.layout.processed}/_staging_${conf.ingestRunId}"
-    val fileOps = new FileOps(spark.sparkContext.hadoopConfiguration)
-    val dates =
-      try {
-        good.write.mode("overwrite").partitionBy("date").parquet(staging)
-        val written = fileOps.listPartitionDates(staging)
-        written.foreach { d =>
-          fileOps.moveChildrenInto(s"$staging/date=$d", conf.layout.processedDate(d))
-        }
-        written
-      } finally fileOps.delete(staging)
-
-    Result(goodCount + rejectCounts.values.sum, goodCount, rejectCounts, dates)
-
-    } finally {
-      parsed.unpersist()
-      ()
+      Result(goodCount + rejectCounts.values.sum, goodCount, rejectCounts, dates)
     }
   }
 

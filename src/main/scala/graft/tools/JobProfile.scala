@@ -32,10 +32,13 @@ object JobProfile {
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
+        // a batch job's description is often blank: fall back to its
+        // call site, then to its first stage's name, so every row names it
+        def prop(k: String) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(k))).filter(_.trim.nonEmpty)
+        val desc = prop("spark.job.description")
+          .orElse(prop("callSite.short"))
+          .orElse(e.stageInfos.minByOption(_.stageId).map(_.name))
           .getOrElse("")
           // a micro-batch's description spans lines (`\nid = …\nrunId =
           // …\nbatch = N`): fold them so each job prints on one line

@@ -29,6 +29,30 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `body` over `df` held as copied rows: one persisted (MEMORY_AND_DISK)
+    * RDD of `df`'s rows, wrapped back as a frame (`LogicalRDD`, the shape
+    * `Dataset.checkpoint` returns), released when `body` returns or throws.
+    * For a small frame that several sinks read whole: `persist()` would
+    * build Spark's compressed columnar cache, whose encoding (dictionary
+    * statistics over per-row-unique strings, column builders) costs more
+    * there than the sinks' reads. The RDD keeps its lineage, so a lost
+    * block is recomputed, not a failed job. Upstream shuffle stages run
+    * here (AQE plans them when the RDD is built); the rows are computed
+    * by the first action of `body`. */
+  def withRowCache[A](df: DataFrame)(body: DataFrame => A): A = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val qe = ds.queryExecution
+    // one SQL execution, as `Dataset.checkpoint` runs: the upstream jobs
+    // carry the caller's call site. `toRdd` reuses one row object per
+    // partition: copy before holding.
+    val rows = execution.SQLExecution.withNewExecutionId(qe, Some("withRowCache"))(
+      qe.toRdd).map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rows, ds, ds.isStreaming)))
+    finally { rows.unpersist(blocking = false); () }
+  }
+
   /** Block until every event posted so far has reached `sc`'s
     * listeners (`LiveListenerBus.waitUntilEmpty`, `private[spark]`):
     * what a job count read right after an action needs, in place of a

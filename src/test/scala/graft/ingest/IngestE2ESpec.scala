@@ -17,8 +17,8 @@ import graft.lake.{FileOps, LakeLayout}
   * The golden tests need that corpus (`ReferenceCorpus.dir`), which the
   * repo does not hold: each starts with `ReferenceCorpus.assumePresent()`
   * and is cancelled where the corpus is absent. The two system-failure
-  * tests need only a file that passes preflight, so they run on small
-  * inline files with the corpus's header shapes.
+  * tests and the release test need only a file that passes preflight, so
+  * they run on small inline files with the corpus's header shapes.
   */
 class IngestE2ESpec extends SparkTestBase with BeforeAndAfterAll {
 
@@ -198,14 +198,17 @@ class IngestE2ESpec extends SparkTestBase with BeforeAndAfterAll {
     assert(dups == 0L)
   }
 
+  /** One good row under the header shape of `sales_2024-10-16.csv`. */
+  private val inlineFile =
+    "transaction_id,store_id,timestamp,item_id,item_category,quantity,unit_price,revenue,payment_method,customer_id\n" +
+      "T1,S1,2024-10-16 10:00:00,I1,Grocery,2,1.50,3.00,Cash,C1\n"
+
   test("B3 failure half: ETL exception routes file to rejected/system with sidecar + alert") {
     val root = Files.createTempDirectory("graft_sysrej_").toString
     val l2 = LakeLayout(root)
     Files.createDirectories(Paths.get(l2.raw))
     val f = "sales_2024-10-16.csv"
-    Files.writeString(Paths.get(s"${l2.raw}/$f"),
-      "transaction_id,store_id,timestamp,item_id,item_category,quantity,unit_price,revenue,payment_method,customer_id\n" +
-        "T1,S1,2024-10-16 10:00:00,I1,Grocery,2,1.50,3.00,Cash,C1\n")
+    Files.writeString(Paths.get(s"${l2.raw}/$f"), inlineFile)
     // inject a mid-job failure: the processed zone is an unwritable plain
     // file, so the silver staging write throws after preflight passed
     Files.writeString(Paths.get(l2.processed), "not a directory")
@@ -258,6 +261,37 @@ class IngestE2ESpec extends SparkTestBase with BeforeAndAfterAll {
     // exactly one SYSTEM FAILURE alert (from ingestFile), no structural echo
     assert(notifier.sent.map(_._1) == Seq("SYSTEM FAILURE"))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
+  test("the per-file path holds no rows after an accepted and a failed file") {
+    import org.apache.spark.sql.classic
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+    spark.catalog.clearCache()
+    val persisted = sc.getPersistentRDDs.size
+    val root = Files.createTempDirectory("graft_release_").toString
+    try {
+      // an accepted file through the watcher and gold
+      val ok = LakeLayout(s"$root/ok")
+      Files.createDirectories(Paths.get(ok.raw))
+      Files.writeString(Paths.get(s"${ok.raw}/sales_2024-10-16.csv"), inlineFile)
+      val tick = graft.streaming.StreamingIngest.pollOnce(spark, ok,
+        notifier = new graft.lake.Notifier.Buffering)
+      assert(tick.ingested.size == 1 && tick.rejected.isEmpty)
+      val gold = GoldCompaction.run(spark,
+        GoldCompaction.Conf(ok, refreshTable = None))
+      assert(gold.results.map(_.status) == Seq("written"))
+      assert(sc.getPersistentRDDs.size == persisted && cache.isEmpty)
+      // the same file failing mid-job (an unwritable processed zone)
+      val bad = LakeLayout(s"$root/bad")
+      Files.createDirectories(Paths.get(bad.raw))
+      Files.writeString(Paths.get(s"${bad.raw}/sales_2024-10-16.csv"), inlineFile)
+      Files.writeString(Paths.get(bad.processed), "not a directory")
+      val res = BronzeToSilver.ingestFile(spark, s"${bad.raw}/sales_2024-10-16.csv",
+        bad, notifier = new graft.lake.Notifier.Buffering)
+      assert(res.left.map(_.kind) == Left("SYSTEM"))
+      assert(sc.getPersistentRDDs.size == persisted && cache.isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
   }
 
   test("gold reads as the typed Dataset[FactSale] boundary") {

@@ -137,6 +137,21 @@ class IngestRoutingSpec extends SparkTestBase {
         "BUSINESS_LOGIC_FAIL").sorted)
   }
 
+  test("job budget: one file's bronze-to-silver run is at most 7 Spark jobs") {
+    val root = Files.createTempDirectory("graft_ingestjobs_").toString
+    try {
+      val f = s"$root/sales.csv"
+      Files.writeString(Paths.get(f), commaFile.mkString("\n") + "\n")
+      val (r, jobs) = jobsDuring(BronzeToSilver.run(spark, f,
+        BronzeToSilver.Conf(LakeLayout(root), "jobs0001", "sales.csv")))
+      // every sink runs: silver, and the JSON and CSV rejects. The jobs:
+      // the header sample, the line-dedup exchange, the counts' exchange
+      // and result, one per sink.
+      assert(r.goodRows == 5 && r.rejectsByReason.values.sum == 8)
+      assert(jobs <= 7, s"one file's ingest ran $jobs Spark jobs")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+  }
+
   test("reference null-DQ mode drops the N/A-quantity row and nothing else") {
     val got = ingest(commaFile, strictNullDq = false)
     assert(got.result.totalRows == 12 && got.result.goodRows == 5)
